@@ -24,6 +24,7 @@ Three tiers, matching how you'd actually run this at increasing scale:
 
 from __future__ import annotations
 
+import types
 from collections.abc import Iterator
 
 import numpy as np
@@ -706,20 +707,23 @@ def _cluster_for_partitioned_write(
     small-files trap), so at scale one exchange of the 8-byte
     (vec_id, cell) pairs buys exactly one right-sized file per
     (batch_id, cell) directory. A SERIAL input (the fixture's
-    single-row-group scan) already yields one file per directory, and
-    the exchange would be pure overhead — measured round 15: +1.5 s warm
-    per save at sf0.01 for zero file-count change — so narrow inputs
-    pass through. Parallelism is probed on ``source`` (the vector
-    table): the assignment is a 1:1 mapInPandas over it, which preserves
-    partitioning but hides ``inputFiles()``. Same analysis-only probe as
-    operators/spread (never plans physically, never compiles)."""
+    single-row-group scan: one scan task) already yields one file per
+    directory, and the exchange would be pure overhead — measured round
+    15: +1.5 s warm per save at sf0.01 for zero file-count change — so
+    one-task inputs pass through. Every other width clusters, including
+    an UNKNOWN one (probe result 0: an in-memory or post-shuffle frame
+    has no input files to count). Parallelism is probed on ``source``
+    (the vector table): the assignment is a 1:1 mapInPandas over it,
+    which preserves partitioning but hides ``inputFiles()``. Same
+    analysis-only probe as operators/spread (never plans physically,
+    never compiles)."""
     from sql4pandas_spark.operators.spread import planned_scan_tasks
 
     try:
-        if planned_scan_tasks(source) <= 4:
+        if planned_scan_tasks(source) == 1:
             return assigned
     except Exception:  # pragma: no cover - probe is best-effort
-        return assigned
+        pass  # unknown width: cluster, the safe write shape
     return assigned.repartition("batch_id", "cell")
 
 
@@ -847,6 +851,34 @@ def lsh_bucket_key(vec_col, planes: np.ndarray, table_id: int):
     return key
 
 
+def _matrix_rows(
+    idx: pd.Index, ids_a: np.ndarray, ids_b: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Matrix rows of two candidate id columns, by one lookup and one
+    vectorised check per batch. ``get_indexer`` answers -1 for an id the
+    broadcast lacks, and ``mat[-1]`` would silently score the last row, so
+    a missing id raises naming the ids instead."""
+    ids = np.concatenate([ids_a, ids_b])
+    rows = idx.get_indexer(ids)
+    if rows.min(initial=0) < 0:
+        missing = np.unique(ids[rows < 0])
+        raise KeyError(
+            f"candidate ids missing from the broadcast embedding matrix: "
+            f"{missing[:10].tolist()} ({len(missing)} in all)"
+        )
+    return rows[: len(ids_a)], rows[len(ids_a) :]
+
+
+def _by_value(fn):
+    """A copy of module-level ``fn`` that cloudpickle ships by value (its
+    qualified name no longer resolves to it), so the Python workers that
+    run it need not import this package: a caller may have put the
+    package on ``sys.path`` by hand, where the workers cannot see it."""
+    return types.FunctionType(
+        fn.__code__, fn.__globals__, fn.__name__, fn.__defaults__, fn.__closure__
+    )
+
+
 def ann_lsh_topk(
     emb: DataFrame,
     k: int = 20,
@@ -913,14 +945,15 @@ def ann_lsh_topk(
     try:
         b_ids, b_mat = _broadcast_embedding_matrix(emb, id_col)
 
+        matrix_rows = _by_value(_matrix_rows)
+
         def score_lookup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             idx = pd.Index(b_ids.value)  # once per task (guide §4.5)
             mat = b_mat.value
             for pdf in batches:
                 if pdf.empty:
                     continue
-                ia = idx.get_indexer(pdf["id_a"].to_numpy())
-                ib = idx.get_indexer(pdf["id_b"].to_numpy())
+                ia, ib = matrix_rows(idx, pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy())
                 yield pd.DataFrame(
                     {
                         "id_a": pdf["id_a"],

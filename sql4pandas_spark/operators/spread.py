@@ -27,7 +27,6 @@ other exchange uses, not a local constant.
 
 from __future__ import annotations
 
-import math
 import os
 from urllib.parse import unquote, urlparse
 
@@ -44,52 +43,74 @@ def compute_width(spark) -> int:
 
 
 def _size_bytes(conf_val: str) -> int:
-    """Parse a Spark byte-size conf value ('128m', '1g', '134217728')."""
-    v = conf_val.strip().lower()
+    """Parse a Spark byte-size conf value ('128m', '1g', '134217728b')."""
+    v = conf_val.strip().lower().removesuffix("b")
     units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if v and v[-1] == "b" and len(v) > 1 and v[-2] in units:
-        v = v[:-1]
     if v and v[-1] in units:
         return int(float(v[:-1]) * units[v[-1]])
     return int(v)
 
 
 def planned_scan_tasks(df: DataFrame) -> int:
-    """Estimated scan-task parallelism of a frame's INPUT FILES —
-    ``sum(ceil(file_size / maxPartitionBytes))`` over ``df.inputFiles()``.
+    """Estimated scan-task parallelism of a frame's INPUT FILES, by the
+    packing Spark's ``FilePartition`` applies to them: each file is split
+    at ``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
+    padded total / minPartitionNum))`` (``minPartitionNum`` defaulting to
+    the leaf-node parallelism), every split is padded by
+    ``openCostInBytes``, and the splits, largest first, fill tasks of up
+    to ``maxSplitBytes``. So a directory of many tiny files counts as the
+    few tasks Spark packs it into, not one task per file.
+    (``spark.sql.files.maxPartitionNum`` is not mirrored.)
 
     Deliberately an ANALYSIS-ONLY probe: ``inputFiles()`` walks the
     analyzed plan's leaf relations and never runs the optimizer, the
     physical planner, or codegen. The previous guard read
     ``df.rdd.getNumPartitions()``, whose ``doExecute`` janino-compiles
-    the whole-stage source of the ENTIRE upstream plan on the driver —
-    and because generated source embeds fresh expression IDs per build,
-    the codegen cache never hits: profiled round 15, dedup_near_minhash
-    paid 30-40 s PER RUN at sf0.01 planning its MinHash signature
-    expression just to count partitions. File sizes come from local
-    stat; non-local URIs conservatively count 1 task per file.
+    the whole-stage source of the ENTIRE upstream plan on the driver on
+    every cold build: profiled round 15, dedup_near_minhash paid 30-40 s
+    PER RUN at sf0.01 planning its MinHash signature expression just to
+    count partitions. Warm rebuilds recompiled too, but only because
+    Spark's default 100-entry codegen cache evicted their classes:
+    replayed back to back at sf0.01, the entry recompiled 25-26 classes
+    per repeat at 100 entries, and 8, 2, then 0 once the cache held its
+    working set (session.CODEGEN_CACHE_ENTRIES).
 
-    Returns 0 (= unknown, callers should assume serial) for frames with
-    no file inputs (in-memory ranges, post-shuffle frames)."""
+    Returns 0 (= unknown, callers should take their safe branch) for
+    frames with no file inputs (in-memory ranges, post-shuffle frames)
+    and for files whose size local stat cannot read (non-local URIs)."""
     files = df.inputFiles()
     if not files:
         return 0
-    try:
-        mpb = _size_bytes(
-            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        )
-    except Exception:  # pragma: no cover - conf parse is best-effort
-        mpb = 128 << 20
-    tasks = 0
+    sizes = []
     for f in files:
         parsed = urlparse(f)
-        path = unquote(parsed.path) if parsed.scheme in ("", "file") else None
+        if parsed.scheme not in ("", "file"):
+            return 0
         try:
-            size = os.stat(path).st_size if path else None
+            sizes.append(os.stat(unquote(parsed.path)).st_size)
         except OSError:
-            size = None
-        tasks += max(1, math.ceil((size or 1) / mpb))
-    return tasks
+            return 0
+    spark = df.sparkSession
+    conf = spark.conf
+    mpb = _size_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    open_cost = _size_bytes(conf.get("spark.sql.files.openCostInBytes", "4m"))
+    min_parts = int(
+        conf.get("spark.sql.files.minPartitionNum", None)
+        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    padded = sum(size + open_cost for size in sizes)
+    max_split = min(mpb, max(open_cost, padded // min_parts))
+    splits = sorted(
+        (min(max_split, size - off) for size in sizes for off in range(0, size, max_split)),
+        reverse=True,
+    )
+    tasks, current = 0, 0
+    for length in splits:
+        if current and current + length > max_split:
+            tasks, current = tasks + 1, 0
+        current += length + open_cost
+    return tasks + (1 if current else 0)
 
 
 def spread_for_compute(df: DataFrame) -> DataFrame:

@@ -17,6 +17,15 @@ Design notes (scale):
   conversions happen in sources/parquet.py (FIXTURES.md).
 - Arrow on for the pandas interop path (the reference's identity is pandas in
   / pandas out).
+- ``spark.sql.codegen.cache.maxEntries`` (:data:`CODEGEN_CACHE_ENTRIES`) sizes
+  the JVM-wide LRU cache of janino-compiled classes. Spark's default of 100 is
+  smaller than the engine's working set (one pass of the five curation
+  entries generates ~200 classes): at 100, classes are evicted before their
+  plan shape runs again, and every warm query recompiles. The conf is
+  STATIC: only :func:`get_spark` can set it, on the builder, before the
+  JVM's first compile. Sessions built outside ``get_spark`` (the correctness driver's,
+  ``tools/driver_sim.py``) keep Spark's 100 — :func:`configure_session`
+  cannot change it on a running session.
 """
 
 from __future__ import annotations
@@ -39,6 +48,15 @@ SESSION_CONFS: dict[str, str] = {
     # Spark refuses to plan them unless pushdown is explicitly enabled
     "spark.sql.python.filterPushdown.enabled": "true",
 }
+
+
+#: Entries of Spark's codegen class cache, one per distinct generated source.
+#: The smallest power of two at which a second pass of each perfbench workload
+#: recompiles only shapes it has not run before: a JVM running one workload
+#: compiles ~210-250 classes in all, and the cache's LRU is kept per segment
+#: (4 by default), so at 256 a second curation pass still recompiled 65
+#: evicted classes. Bounded, since each entry pins a loaded class.
+CODEGEN_CACHE_ENTRIES = 512
 
 
 def default_parallelism() -> int:
@@ -66,6 +84,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in SESSION_CONFS.items():
         builder = builder.config(key, value)

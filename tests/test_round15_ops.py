@@ -31,10 +31,16 @@ def test_spread_skips_already_parallel_input(spark, tmp_path):
     width = compute_width(spark)
     out_dir = str(tmp_path / "wide_parquet")
     spark.range(0, 10_000, 1, width + 4).toDF("doc_id").write.parquet(out_dir)
-    wide = spark.read.parquet(out_dir)
-    assert planned_scan_tasks(wide) >= width  # one task per part file
-    out = spread_for_compute(wide)
-    assert out is wide  # identical object: no exchange was added
+    # Spark packs tiny files into about one task per core; asking for at
+    # least one scan task per file makes this layout genuinely wide
+    spark.conf.set("spark.sql.files.minPartitionNum", str(width + 4))
+    try:
+        wide = spark.read.parquet(out_dir)
+        assert planned_scan_tasks(wide) >= width  # one task per part file
+        out = spread_for_compute(wide)
+        assert out is wide  # identical object: no exchange was added
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
 
 
 def test_spread_still_spreads_serial_input(spark):
@@ -187,8 +193,8 @@ def test_near_dedup_store_files_bounded(spark, tmp_path):
 
 def test_ivf_save_clusters_wide_assignments_only(spark, tmp_path):
     """save_ivf_index's partitioned write must cluster by (batch_id, cell)
-    ONLY when the assignment pass scans wide (else a tasks x cells file
-    explosion at scale), and pass narrow fixture-scale inputs through
+    unless the assignment pass scans as one task (else a tasks x cells file
+    explosion at scale), and pass serial fixture-scale inputs through
     untouched (the exchange measured +1.5 s/save for zero file-count
     change at sf0.01). Wide case: one file per (batch_id, cell) dir."""
     import glob
@@ -201,11 +207,13 @@ def test_ivf_save_clusters_wide_assignments_only(spark, tmp_path):
         save_ivf_index,
     )
 
-    # serial source (in-memory frame -> no file inputs -> probe says 0):
-    # identical object back, no exchange
-    narrow = spark.createDataFrame(
+    # serial source (one small parquet file -> one scan task): identical
+    # object back, no exchange
+    serial_dir = str(tmp_path / "serial")
+    spark.createDataFrame(
         [(i, i % 4, 0) for i in range(16)], ["vec_id", "cell", "batch_id"]
-    )
+    ).coalesce(1).write.parquet(serial_dir)
+    narrow = spark.read.parquet(serial_dir)
     assert _cluster_for_partitioned_write(narrow, narrow) is narrow
 
     # wide input: a many-file parquet-backed vector table must yield ONE

@@ -435,3 +435,60 @@ def test_sq8_persistent_lifecycle_roundtrip(spark, tmp_path):
     ).collect()
     assert [r["vec_id"] for r in got] == [r["vec_id"] for r in direct]
     assert [r["sim_q8"] for r in got] == [r["sim_q8"] for r in direct]
+
+
+def test_matrix_rows_raises_naming_missing_ids():
+    """A candidate id absent from the broadcast ids must raise, naming it:
+    get_indexer's -1 would otherwise score against the matrix's last row."""
+    import pandas as pd
+
+    from sql4pandas_spark.operators.similarity import _matrix_rows
+
+    idx = pd.Index(np.array([10, 20, 30]))
+    ia, ib = _matrix_rows(idx, np.array([10, 30]), np.array([20, 20]))
+    assert ia.tolist() == [0, 2] and ib.tolist() == [1, 1]
+    with pytest.raises(KeyError, match=r"missing .*\[40, 50\]"):
+        _matrix_rows(idx, np.array([10, 50]), np.array([40, 20]))
+
+
+def test_partitioned_write_clusters_unknown_width(spark):
+    """An in-memory vector frame has no input files, so its scan width is
+    unknown; the IVF write must then take the clustering branch (one file
+    per cell directory), not the tasks x cells small-files one."""
+    from sql4pandas_spark.operators.similarity import _cluster_for_partitioned_write
+
+    source = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(64)], "vec_id long, embedding array<double>"
+    ).repartition(8)
+    assigned = source.selectExpr("vec_id", "CAST(vec_id % 4 AS INT) AS cell", "0 AS batch_id")
+    out = _cluster_for_partitioned_write(assigned, source)
+    assert out is not assigned
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "RepartitionByExpression" in plan and "batch_id" in plan
+
+
+def test_matrix_rows_ships_to_workers_without_the_package(tmp_path):
+    """ann_lsh_topk's per-batch lookup must unpickle in a Python worker that
+    cannot import this package (its caller may have put the package on
+    sys.path by hand), so it ships by value."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from sql4pandas_spark.operators.similarity import _by_value, _matrix_rows
+
+    blob = cloudpickle.dumps(_by_value(_matrix_rows))
+    code = (
+        "import pickle, sys, numpy as np, pandas as pd\n"
+        "rows = pickle.loads(sys.stdin.buffer.read())\n"
+        "ia, ib = rows(pd.Index([7, 8]), np.array([8]), np.array([7]))\n"
+        "print(ia.tolist(), ib.tolist())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], input=blob, cwd=tmp_path, env=env,
+        capture_output=True, check=True,
+    )
+    assert out.stdout.decode().strip() == "[1] [0]"

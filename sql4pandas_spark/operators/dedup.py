@@ -6,11 +6,12 @@ Scale design:
   `dropDuplicates` on the raw text column at scale — group on sha2(text,256)
   so the shuffle key is 32 bytes, not document bodies.
 - MinHash-LSH is the standard shingle → minhash signature → band → bucket
-  self-join pipeline. Signatures are computed with JVM higher-order functions
-  (xxhash64 + affine permutations mod a Mersenne prime) — no Python in the
-  row path. Candidate generation explodes b band keys per doc and self-joins
-  on the band key: the only shuffle is on those 8-byte keys. Verification
-  re-checks true shingle Jaccard on candidates only.
+  self-join pipeline. Every signature (and every sketch probe) comes from
+  one kernel: :func:`minhash` over the affine map :func:`affine_hash`, as
+  JVM higher-order functions — no Python in the row path; callers differ
+  only in base hash and seed. Candidate generation explodes b band keys per
+  doc and self-joins on the band key: the only shuffle is on those 8-byte
+  keys. Verification re-checks true shingle Jaccard on candidates only.
 - Duplicate clusters come from iterative smallest-id label propagation
   (converges in O(graph diameter) rounds on the candidate-pair graph); each
   round is a join+groupBy, checkpointed to keep the plan from growing
@@ -69,6 +70,41 @@ def _affine_params(n_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     return params
 
 
+def affine_hash(h, a: int, b: int):
+    """``(a·h + b) mod 2^31-1`` for a base hash ``h`` in [0, 2^31-1): a·h
+    stays < 2^62, so the product cannot overflow ANSI int64. The DuckDB
+    oracles in ``queries/pipeline.py`` spell the same map in SQL."""
+    return F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE31))
+
+
+def affine_hashes(h, n: int, seed: int = 7) -> list:
+    """The ``n`` seeded permutations of one base-hash column."""
+    return [affine_hash(h, a, b) for a, b in _affine_params(n, seed)]
+
+
+def minhash(base, n_hashes: int, seed: int = 7) -> list:
+    """The MinHash kernel: the ``n_hashes`` minima ``array_min(transform(
+    base, affine_hash_i))`` over ``base``, an ``array<long>`` column of base
+    hashes in [0, 2^31-1) that callers bind once per row."""
+
+    def _perm(a: int, b: int):
+        # closure factory (HOF lambdas must be single-parameter)
+        return lambda h: affine_hash(h, a, b)
+
+    return [
+        F.array_min(F.transform(base, _perm(a, b)))
+        for a, b in _affine_params(n_hashes, seed)
+    ]
+
+
+def _rows_per_band(n_hashes: int, n_bands: int) -> int:
+    """Signature rows per LSH band; every banding path calls this, so an
+    uneven split raises instead of silently dropping the tail minima."""
+    if n_bands < 1 or n_hashes % n_bands:
+        raise ValueError(f"n_hashes {n_hashes} not divisible by n_bands {n_bands}")
+    return n_hashes // n_bands
+
+
 def shingles(text_col, n: int = 3):
     """Word n-gram shingles (n≥3 — token-set Jaccard is degenerate on the
     fixture's ~30-word vocabulary, FIXTURES.md). Token array bound once per
@@ -96,7 +132,7 @@ def portable_minhash_bands(
     n_bands: int = 4,
 ) -> DataFrame:
     """(id, words, band_keys) — the CALIBRATION variant of the MinHash-LSH
-    station: identical affine-permutation/banding structure to
+    station: the same :func:`minhash` kernel and banding structure as
     :func:`minhash_signatures` + :func:`band_keys`, but every hash is the
     md5-based :func:`portable_hash60` instead of xxhash64, so the ENTIRE
     pipeline — base hashes, signature minima, band keys — replays
@@ -105,23 +141,16 @@ def portable_minhash_bands(
     is ground-truthed by the exact-Jaccard oracle instead). Shingles are
     distinct lowercase whitespace words (1-gram) — the calibration
     entry's planted pairs control Jaccard through shared word counts, so
-    word-granularity keeps the planted level exact. ``rows_per_band`` is
-    ``n_hashes // n_bands``. Row-local, zero UDFs, zero shuffles."""
-    rows_per_band = n_hashes // n_bands
+    word-granularity keeps the planted level exact. ``n_hashes`` must
+    split evenly into ``n_bands``. Row-local, zero UDFs, zero shuffles."""
+    rows_per_band = _rows_per_band(n_hashes, n_bands)
     words = F.array_distinct(
         F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
     )
     base = F.transform(
         F.col("words"), lambda s: F.pmod(portable_hash60(s), F.lit(MERSENNE31))
     )
-
-    def _perm(a: int, b: int):
-        return lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE31))
-
-    sig = [
-        F.array_min(F.transform(F.col("base"), _perm(a, b)))
-        for a, b in _affine_params(n_hashes)
-    ]
+    sig = minhash(F.col("base"), n_hashes)
     bands = F.array(
         *[
             portable_hash60(
@@ -150,27 +179,15 @@ def minhash_signatures(
     n_hashes: int = 64,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """(id, shingles, sig: array<int>[n_hashes]) — signature entirely JVM-side.
-
-    Base hash: xxhash64(shingle) folded into [0, 2^31-1); permutations are
-    affine maps mod the Mersenne prime 2^31-1. a*x stays < 2^62 so the mult
-    cannot overflow ANSI int64.
+    """(id, shingles, sig: array<long>[n_hashes]) — signature entirely
+    JVM-side: the :func:`minhash` kernel over xxhash64(shingle) folded
+    into [0, 2^31-1).
     """
     from sql4pandas_spark.operators.spread import spread_for_compute
 
     sh = shingles(text_col, shingle_n).alias("shingles")
     base = F.transform(F.col("shingles"), lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE31)))
-
-    def _perm(a: int, b: int):
-        # closure factory (HOF lambdas must be single-parameter)
-        return lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE31))
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("base_hashes"), _perm(a, b)))
-            for a, b in _affine_params(n_hashes)
-        ]
-    )
+    sig = F.array(*minhash(F.col("base_hashes"), n_hashes))
     # project to the two needed columns, then spread: the n_hashes
     # affine-min passes per document dwarf one exchange of (id, text)
     # rows, and without the spread a single-row-group scan serializes
@@ -185,12 +202,13 @@ def minhash_signatures(
 
 
 def band_keys(
-    sigs: DataFrame, n_bands: int = 16, rows_per_band: int = 4
+    sigs: DataFrame, n_bands: int = 16, *, n_hashes: int = 64
 ) -> DataFrame:
-    """(doc_id, band_key) — one row per band per doc. The band key is
-    xxhash64(band_index, sig-slice): an 8-byte join/shuffle key, the unit
-    both the self-join (:func:`lsh_candidate_pairs`) and the cross-batch
-    store join (:func:`incremental_near_dedup`) bucket on."""
+    """(doc_id, band_key) — one row per band per doc of an
+    ``n_hashes``-long ``sig``. The band key is xxhash64(band_index,
+    sig-slice): the 8-byte join/shuffle key that the self-join, the
+    cross-batch store join and the fuzzy key join bucket on."""
+    rows_per_band = _rows_per_band(n_hashes, n_bands)
     bands = F.array(
         *[
             F.xxhash64(F.lit(i), F.slice("sig", i * rows_per_band + 1, rows_per_band))
@@ -201,14 +219,14 @@ def band_keys(
 
 
 def lsh_candidate_pairs(
-    sigs: DataFrame, n_bands: int = 16, rows_per_band: int = 4
+    sigs: DataFrame, n_bands: int = 16, *, n_hashes: int = 64
 ) -> DataFrame:
     """Band the signature and self-join on band keys → candidate (a, b) pairs.
 
     Output: distinct (id_a < id_b) candidate pairs. The band key is
     xxhash64(band_index, sig-slice), so the join/shuffle key is 8 bytes.
     """
-    banded = band_keys(sigs, n_bands, rows_per_band)
+    banded = band_keys(sigs, n_bands, n_hashes=n_hashes)
     left = banded.select(F.col("band_key"), F.col("doc_id").alias("id_a"))
     right = banded.select(F.col("band_key").alias("bk2"), F.col("doc_id").alias("id_b"))
     return (
@@ -400,7 +418,7 @@ def near_dedup_minhash(
     """
     sigs = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n).persist()
     try:
-        cands = lsh_candidate_pairs(sigs, n_bands, n_hashes // n_bands)
+        cands = lsh_candidate_pairs(sigs, n_bands, n_hashes=n_hashes)
         verified = verified_near_pairs(sigs, cands, threshold)
         components = connected_components(verified)
     finally:
@@ -1005,7 +1023,6 @@ def incremental_near_dedup(
     import os as _os
 
     spark = batch.sparkSession
-    rows_per_band = n_hashes // n_bands
     sigs = minhash_signatures(batch, text_col, id_col, n_hashes, shingle_n).persist()
     try:
         bands_dir = _os.path.join(store_dir, "bands")
@@ -1015,7 +1032,7 @@ def incremental_near_dedup(
         if store_bands is not None:
             store_sh = spark.read.parquet(sh_dir)
             cand = (
-                band_keys(sigs, n_bands, rows_per_band)
+                band_keys(sigs, n_bands, n_hashes=n_hashes)
                 .join(
                     store_bands.withColumnRenamed("doc_id", "adm_id"),
                     "band_key",
@@ -1037,7 +1054,7 @@ def incremental_near_dedup(
                 .distinct()
             )
             survivors = sigs.join(rejected, "doc_id", "left_anti")
-        pairs = lsh_candidate_pairs(survivors, n_bands, rows_per_band)
+        pairs = lsh_candidate_pairs(survivors, n_bands, n_hashes=n_hashes)
         verified = verified_near_pairs(survivors, pairs, threshold)
         components = connected_components(verified)
         # min-label components => the cluster label IS the representative;
@@ -1086,7 +1103,7 @@ def incremental_near_dedup(
                 adm_sigs.select("doc_id", "shingles").coalesce(
                     sh_files
                 ).write.mode("append").parquet(sh_dir)
-                band_keys(adm_sigs, n_bands, rows_per_band).coalesce(
+                band_keys(adm_sigs, n_bands, n_hashes=n_hashes).coalesce(
                     band_files
                 ).write.mode("append").parquet(bands_dir)
         finally:

@@ -422,9 +422,10 @@ def fuzzy_key_pairs(
     Pipeline: normalize (lower/trim) -> DISTINCT key values per side (the
     match is a property of the key VALUE, so a billion-row table with a
     million distinct names does LSH work on the million) -> char-n-gram
-    MinHash signatures (same affine permutations as the near-dedup
-    machinery, operators/dedup.minhash_signatures) -> 8-byte band-key
-    equi-join for candidates -> exact ``levenshtein() <= max_distance``
+    MinHash signatures (the shared kernel, operators/dedup.minhash, over
+    xxhash64 gram hashes) -> 8-byte band-key (operators/dedup.band_keys;
+    ``n_hashes`` must split evenly into ``n_bands``) equi-join for
+    candidates -> exact ``levenshtein() <= max_distance``
     verify, JVM-side. Output: one row per matched ORIGINAL value pair
     ``(left_key, right_key, key_distance)``, for equi-joining back to
     either table (:func:`fuzzy_key_join`).
@@ -446,38 +447,24 @@ def fuzzy_key_pairs(
     right rows replicated per salt), spreading each hot band over that
     many tasks with a row-identical result.
     """
-    from sql4pandas_spark.operators.dedup import (
-        MERSENNE31,
-        _affine_params,
-        band_keys,
-    )
-
-    if n_hashes % n_bands:
-        raise ValueError(f"n_hashes {n_hashes} not divisible by n_bands {n_bands}")
-    rows_per_band = n_hashes // n_bands
+    from sql4pandas_spark.operators.dedup import MERSENNE31, band_keys, minhash
+    from sql4pandas_spark.operators.spread import compute_width
 
     def _norm(c: str):
         return F.lower(F.trim(F.col(c)))
 
-    def _sigs(keys: DataFrame, col: str) -> DataFrame:
+    def _bands(keys: DataFrame, col: str) -> DataFrame:
         base = F.transform(
             F.col("_grams"), lambda g: F.pmod(F.xxhash64(g), F.lit(MERSENNE31))
         )
-
-        def _perm(a: int, b: int):
-            return lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE31))
-
-        sig = F.array(
-            *[
-                F.array_min(F.transform(F.col("_bh"), _perm(a, b)))
-                for a, b in _affine_params(n_hashes)
-            ]
-        )
-        return (
+        sigs = (
             keys.withColumn("_grams", _char_ngrams(col, ngram))
             .withColumn("_bh", base)
-            .withColumn("sig", sig)
+            .withColumn("sig", F.array(*minhash(F.col("_bh"), n_hashes)))
             .select(F.col(col).alias("doc_id"), "sig")
+        )
+        return band_keys(sigs, n_bands, n_hashes=n_hashes).select(
+            F.col("doc_id").alias(col), "band_key"
         )
 
     # explicit ROUND-ROBIN spread of the distinct key frames, BEFORE the
@@ -506,12 +493,7 @@ def fuzzy_key_pairs(
     #   too-big-to-broadcast regime the planner inserts its own band_key
     #   exchange for the sort-merge join (8-byte keys — cheap), where
     #   hot bands are ``salt_hot_bands``'s job instead.
-    try:
-        n_spread = int(
-            left.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    except ValueError:  # e.g. "auto" under some AQE configurations
-        n_spread = 32
+    n_spread = compute_width(left.sparkSession)
     lnorm = (
         left.select(_norm(left_key).alias("_lnorm"))
         .filter(F.col("_lnorm").isNotNull())
@@ -524,12 +506,8 @@ def fuzzy_key_pairs(
         .distinct()
         .repartition(n_spread)
     )
-    lb = band_keys(_sigs(lnorm, "_lnorm"), n_bands, rows_per_band).select(
-        F.col("doc_id").alias("_lnorm"), "band_key"
-    )
-    rb = band_keys(_sigs(rnorm, "_rnorm"), n_bands, rows_per_band).select(
-        F.col("doc_id").alias("_rnorm"), "band_key"
-    )
+    lb = _bands(lnorm, "_lnorm")
+    rb = _bands(rnorm, "_rnorm")
     if salt_hot_bands:
         # the salted path consumes each band frame twice (hot-band counts
         # + the split join); checkpoint so the MinHash signatures compute

@@ -207,6 +207,16 @@ def heavy_hitter_state(
 BLOOM_WORD_BITS = 63
 
 
+def _bloom_positions(item, n_bits: int, k: int) -> list:
+    """The ``k`` probe bit positions of ``item``: seed-43 affine
+    permutations of portable_hash60 reduced mod 2^31-1, then mod n_bits."""
+    from sql4pandas_spark.operators.dedup import MERSENNE31, affine_hashes
+    from sql4pandas_spark.operators.text import portable_hash60
+
+    hm = F.pmod(portable_hash60(item.cast("string")), F.lit(MERSENNE31))
+    return [F.pmod(p, F.lit(n_bits)) for p in affine_hashes(hm, k, seed=43)]
+
+
 def bloom_build(
     items: DataFrame, item_col: str, n_bits: int = 63 * 1024, k: int = 7
 ) -> list[int]:
@@ -224,20 +234,14 @@ def bloom_build(
     default, never data-sized; the IVF-centroid justification class), so
     the filter rides query plans as an array literal and the membership
     test is pure JVM expression — zero shuffles, zero broadcast of the
-    underlying strings. Bits come from k affine permutations of
-    portable_hash60 (seed 43): fully deterministic and DuckDB-replayable.
-    Merge law: filters over the same (n_bits, k) grid OR together.
+    underlying strings. Bits come from the MinHash kernel's k affine
+    permutations of portable_hash60 (operators/dedup.affine_hashes, seed
+    43): fully deterministic and DuckDB-replayable. Merge law: filters
+    over the same (n_bits, k) grid OR together.
     """
-    from sql4pandas_spark.operators.dedup import MERSENNE31, _affine_params
-    from sql4pandas_spark.operators.text import portable_hash60
-
     if n_bits % BLOOM_WORD_BITS:
         raise ValueError(f"n_bits must be a multiple of {BLOOM_WORD_BITS}")
-    hm = F.pmod(portable_hash60(F.col(item_col).cast("string")), F.lit(MERSENNE31))
-    pos = [
-        F.pmod(F.pmod(F.lit(a) * hm + F.lit(b), F.lit(MERSENNE31)), F.lit(n_bits))
-        for a, b in _affine_params(k, seed=43)
-    ]
+    pos = _bloom_positions(F.col(item_col), n_bits, k)
     cells = F.explode(
         F.array(
             *[
@@ -270,20 +274,14 @@ def bloom_contains(
 ):
     """JVM membership predicate against a :func:`bloom_build` word list:
     TRUE iff all ``k`` probe bits are set (possibly-present; definitely
-    absent on FALSE). The word list rides the plan as an array literal —
+    absent on FALSE). Probes the same affine bit positions as
+    :func:`bloom_build`. The word list rides the plan as an array literal —
     whole-stage-codegen-friendly, no shuffle, no UDF."""
-    from sql4pandas_spark.operators.dedup import MERSENNE31, _affine_params
-    from sql4pandas_spark.operators.text import portable_hash60
-
     item = F.col(item) if isinstance(item, str) else item
     arr = F.array(*[F.lit(w) for w in words])
     pow2 = F.array(*[F.lit(1 << i) for i in range(BLOOM_WORD_BITS)])
-    hm = F.pmod(portable_hash60(item.cast("string")), F.lit(MERSENNE31))
     cond = F.lit(True)
-    for a, b in _affine_params(k, seed=43):
-        p = F.pmod(
-            F.pmod(F.lit(a) * hm + F.lit(b), F.lit(MERSENNE31)), F.lit(n_bits)
-        )
+    for p in _bloom_positions(item, n_bits, k):
         w = F.element_at(arr, (p / BLOOM_WORD_BITS).cast("int") + 1)
         bit = F.element_at(pow2, F.pmod(p, F.lit(BLOOM_WORD_BITS)).cast("int") + 1)
         cond = cond & (w.bitwiseAND(bit) != 0)
@@ -305,18 +303,19 @@ def minhash_set_signatures(
     sets per key pair and comparing two 64-long arrays
     (:func:`estimated_jaccard_pairs`). Standard error ~ sqrt(J(1-J)/n).
 
-    Deterministic end-to-end (portable_hash60 + the same affine-param
-    scheme as near-dedup, seed 17) so a DuckDB oracle replays every
+    Deterministic end-to-end (portable_hash60 + the MinHash kernel's
+    affine map, operators/dedup.affine_hashes, seed 17; items arrive as
+    rows, so the min is an aggregate) so a DuckDB oracle replays every
     signature component bit-for-bit. Scale shape: one map-combined
     groupBy(key) carrying n_hashes longs — items never meet each other.
     """
-    from sql4pandas_spark.operators.dedup import MERSENNE31, _affine_params
+    from sql4pandas_spark.operators.dedup import MERSENNE31, affine_hashes
     from sql4pandas_spark.operators.text import portable_hash60
 
     hm = F.pmod(portable_hash60(F.col(item_col).cast("string")), F.lit(MERSENNE31))
     mins = [
-        F.min(F.pmod(F.lit(a) * hm + F.lit(b), F.lit(MERSENNE31))).alias(f"_h{i}")
-        for i, (a, b) in enumerate(_affine_params(n_hashes, seed=17))
+        F.min(p).alias(f"_h{i}")
+        for i, p in enumerate(affine_hashes(hm, n_hashes, seed=17))
     ]
     return (
         df.filter(F.col(item_col).isNotNull())
@@ -377,24 +376,22 @@ def estimated_jaccard_pairs(sigs: DataFrame, n_hashes: int) -> DataFrame:
 
 def _cms_cols(item_col: str, depth: int, width: int):
     """The ``depth`` deterministic cell columns of a count-min sketch:
-    ``col_r(x) = ((a_r·(h60(x) mod M31) + b_r) mod M31) mod width`` —
-    portable_hash60 reduced below 2^31 FIRST so every product stays under
-    2^62 (int64-exact in Spark AND DuckDB; the same overflow discipline as
-    the MinHash affine permutations). Returns a list of (row, col) structs.
+    ``col_r(x) = ((a_r·(h60(x) mod M31) + b_r) mod M31) mod width`` — the
+    seed-29 affine permutations of the MinHash kernel
+    (operators/dedup.affine_hashes) over portable_hash60 reduced below 2^31
+    FIRST, so every product stays under 2^62 (int64-exact in Spark AND
+    DuckDB). Returns a list of (row, col) structs.
     """
-    from sql4pandas_spark.operators.dedup import MERSENNE31, _affine_params
+    from sql4pandas_spark.operators.dedup import MERSENNE31, affine_hashes
     from sql4pandas_spark.operators.text import portable_hash60
 
     hm = F.pmod(portable_hash60(F.col(item_col)), F.lit(MERSENNE31))
     return [
         F.struct(
             F.lit(r).cast("int").alias("row"),
-            F.pmod(
-                F.pmod(F.lit(a) * hm + F.lit(b), F.lit(MERSENNE31)),
-                F.lit(width),
-            ).cast("int").alias("col"),
+            F.pmod(p, F.lit(width)).cast("int").alias("col"),
         )
-        for r, (a, b) in enumerate(_affine_params(depth, seed=29))
+        for r, p in enumerate(affine_hashes(hm, depth, seed=29))
     ]
 
 

@@ -4976,7 +4976,7 @@ def incremental_pipeline_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves the five stages compose without semantic drift.
 
     Scale shape: every stage is the same operator its standalone entry
-    declares (scale probes: dedup_scale_probe, passage_skew_probe); the
+    declares (574fe30:tools/dedup_scale_probe.py, passage_skew_probe.py); the
     composition adds NO new shuffle — stage outputs hand off as narrow
     (doc_id, text) frames, stores stay digest/gram-sized, and the report
     is bounded driver-side metadata assembled from observations.

@@ -101,8 +101,9 @@ def sessionize_stateful(
                 # close time, so by the delivery contract its timeout is
                 # due NOW. Emit directly — setTimeoutTimestamp would raise
                 # INVALID_TIMEOUT_TIMESTAMP on a below-watermark instant
-                # (found by tools/streaming_scale_probe.py's multi-batch
-                # out-of-order drain; pinned in tests/test_stateful_sessions.py)
+                # (found by the deleted streaming scale probe's multi-batch
+                # out-of-order drain, 574fe30:tools/streaming_scale_probe.py;
+                # pinned in tests/test_stateful_sessions.py)
                 closed.append((uid, s, e, c))
                 state.remove()
             else:

@@ -69,7 +69,7 @@ def pinned_stream_width(spark: SparkSession):
 def _stream_dir(sf_dir: str) -> str:
     """The file stream source watches a directory of data FILES; the fixture
     may be a single parquet file (the shipped testdata) or a Spark-written
-    directory of part files (e.g. tools/scale_probe.py output). Stage a
+    directory of part files (e.g. 574fe30:tools/scale_probe.py output). Stage a
     stable symlink dir per source (cheap, idempotent; mirrors how a real
     stream would watch a landing directory). Part files are linked
     individually — a symlink to a directory is invisible to the file stream

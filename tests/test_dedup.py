@@ -4,7 +4,10 @@ SimHash guarantees, connected-component sanity."""
 
 from __future__ import annotations
 
+import ast
+import hashlib
 import itertools
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -264,3 +267,146 @@ def test_split_leakage_audit_counts(spark):
         1,
         1,
     )
+
+
+# ---------------------------------------------------------------------------
+# The MinHash kernel: values pinned against a pure-Python replay
+# ---------------------------------------------------------------------------
+
+
+def _py_hash60(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _py_minhash(base: list[int], n_hashes: int, seed: int) -> list[int]:
+    return [
+        min((a * x + b) % dedup.MERSENNE31 for x in base)
+        for a, b in dedup._affine_params(n_hashes, seed)
+    ]
+
+
+@pytest.mark.parametrize("seed", [7, 17, 29, 43])
+def test_minhash_kernel_matches_python_replay(spark, seed):
+    from pyspark.sql import functions as F
+
+    m31 = dedup.MERSENNE31
+    bases = [
+        [0],
+        [m31 - 1],
+        [5, 1, 5, 2_000_000_000],
+        [(i * 2_654_435_761) % m31 for i in range(1, 40)],
+        [123_456_789, 987_654_321, m31 - 2, 1],
+    ]
+    df = spark.createDataFrame(list(enumerate(bases)), "id long, base array<long>")
+    n = 64 if seed == 7 else 8
+    rows = df.select(
+        "id",
+        F.array(*dedup.minhash(F.col("base"), n, seed)).alias("sig"),
+        F.array(*dedup.affine_hashes(F.col("base")[0], n, seed)).alias("first"),
+    ).collect()
+    for r in rows:
+        assert list(r.sig) == _py_minhash(bases[r.id], n, seed)
+        assert list(r.first) == _py_minhash(bases[r.id][:1], n, seed)
+
+
+@pytest.mark.parametrize("n_hashes,n_bands", [(16, 4), (12, 6)])
+def test_portable_minhash_bands_replay_in_python(spark, n_hashes, n_bands):
+    """Base hashes, signature minima and band keys of the md5 calibration
+    variant, replayed end to end from hashlib."""
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "The quick  brown fox jumps over a lazy cat",
+        "spark   duckdb parquet arrow",
+        "single",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {
+        r.doc_id: list(r.band_keys)
+        for r in dedup.portable_minhash_bands(
+            df, n_hashes=n_hashes, n_bands=n_bands
+        ).collect()
+    }
+    rows = n_hashes // n_bands
+    for i, t in enumerate(texts):
+        words = dict.fromkeys(t.lower().split())
+        sig = _py_minhash(
+            [_py_hash60(w) % dedup.MERSENNE31 for w in words], n_hashes, 7
+        )
+        want = [
+            _py_hash60(",".join(str(v) for v in sig[b * rows : (b + 1) * rows]))
+            for b in range(n_bands)
+        ]
+        assert got[i] == want, t
+
+
+def test_banding_rejects_uneven_hash_split(spark, tmp_path):
+    """64 hashes do not split into 20 bands: every banding path raises
+    instead of silently banding only 60 of the 64 minima."""
+    from sql4pandas_spark.operators.joins import fuzzy_key_pairs
+
+    df = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id long, text string")
+    sigs = dedup.minhash_signatures(df)
+    store = tmp_path / "store"
+    calls = [
+        lambda: dedup.near_dedup_minhash(df, n_hashes=64, n_bands=20),
+        lambda: dedup.incremental_near_dedup(df, str(store), n_hashes=64, n_bands=20),
+        lambda: dedup.portable_minhash_bands(df, n_hashes=64, n_bands=20),
+        lambda: fuzzy_key_pairs(df, df, "text", "text", n_hashes=64, n_bands=20),
+        lambda: dedup.band_keys(sigs, 20, n_hashes=64),
+        lambda: dedup.lsh_candidate_pairs(sigs, 20, n_hashes=64),
+        lambda: dedup.band_keys(sigs, 0, n_hashes=64),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="not divisible"):
+            call()
+    assert not store.exists()
+
+
+# ---------------------------------------------------------------------------
+# Lint-style guard: one affine map
+# ---------------------------------------------------------------------------
+
+#: The only places allowed to read the affine params directly: the kernel
+#: module and the DuckDB oracle builders that spell the map in SQL.
+_AFFINE_PARAM_READERS = {
+    "sql4pandas_spark/operators/dedup.py": None,
+    "sql4pandas_spark/queries/pipeline.py": {
+        "_lsh_cal_oracle",
+        "_cms_oracle_sql",
+        "_set_sig_oracle_sql",
+    },
+}
+
+
+def _affine_param_uses(tree: ast.AST):
+    """(enclosing top-level function, line) of each reference to
+    ``_affine_params`` — imports, names and attributes alike."""
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        for node in ast.walk(top):
+            names = []
+            if isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            if "_affine_params" in names:
+                yield owner, node.lineno
+
+
+def test_affine_params_read_only_by_kernel_and_oracles():
+    """Engine code reaches the affine map through operators/dedup's kernel
+    (affine_hash / affine_hashes / minhash); only the DuckDB oracle
+    builders may read the raw params. Tests are exempt (Python replays)."""
+    root = Path(__file__).resolve().parents[1]
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel.startswith(("tests/", ".")):
+            continue
+        allowed = _AFFINE_PARAM_READERS.get(rel, set())
+        for owner, line in _affine_param_uses(ast.parse(path.read_text())):
+            if allowed is not None and owner not in allowed:
+                offenders.append(f"{rel}:{line} ({owner})")
+    assert not offenders, f"_affine_params read outside the kernel: {offenders}"

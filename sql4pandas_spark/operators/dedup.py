@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sql4pandas_spark.operators.text import let_col, portable_hash60, tokens
+from sql4pandas_spark.stores import read_batches, write_batch
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1
 
@@ -776,25 +777,6 @@ def bloom_prefiltered_contamination(
     )
 
 
-def _read_digest_store(spark, store_dir: str) -> DataFrame | None:
-    """Read the digest store, returning None ONLY when the path does not
-    exist (genuine first batch). Any other failure — corrupt files,
-    permissions, FS errors — raises: silently treating a broken store as
-    'first batch' would disable cross-batch dedup and re-admit seen
-    content (silent corruption in a correctness primitive)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(store_dir)
-    except AnalysisException as exc:
-        cond = (
-            exc.getCondition() if hasattr(exc, "getCondition") else exc.getErrorClass()
-        )
-        if cond == "PATH_NOT_FOUND":
-            return None
-        raise
-
-
 #: Store-write file sizing for :func:`incremental_near_dedup` (guide §6:
 #: aim for output files in the 128 MB - 1 GB range). Records-per-file
 #: targets are scale-INDEPENDENT — they cap file size whether the batch
@@ -837,9 +819,9 @@ def incremental_exact_dedup(
     through a never-matching NULL join key.
 
     Delivery semantics: with ``batch_id`` (foreachBatch's argument) the
-    store is partitioned by batch and each batch's digests are written via
-    dynamic partition OVERWRITE, and the anti-join excludes the current
-    batch_id's own digests — so a crash-replayed batch reproduces exactly
+    digests live in the batch-keyed store of sql4pandas_spark/stores.py —
+    each batch overwrites its own partition and the anti-join reads the
+    store without it — so a crash-replayed batch reproduces exactly
     its original output and the store never accumulates duplicate digests
     (exactly-once store semantics on top of foreachBatch's at-least-once
     replay). Without ``batch_id`` the store is a flat append: idempotent
@@ -858,11 +840,9 @@ def incremental_exact_dedup(
             F.sha2(F.col(text_col).cast("binary"), 256), F.lit(NULL_TEXT_DIGEST)
         ).alias("content_hash"),
     )
-    store = _read_digest_store(spark, store_dir)
-    if store is not None and batch_id is not None:
-        # a replay of batch_id must see the store as it was BEFORE its
-        # original (possibly half-committed) run
-        store = store.filter(F.col("batch_id") != F.lit(batch_id))
+    # a replay of batch_id must see the store as it was BEFORE its
+    # original (possibly half-committed) run
+    store = read_batches(spark, store_dir, exclude_batch=batch_id)
     seen = store.select("content_hash") if store is not None else None
     fresh = (
         hashed.join(seen, "content_hash", "left_anti") if seen is not None else hashed
@@ -881,17 +861,7 @@ def incremental_exact_dedup(
     # defect the round-8 property differential caught in the passage
     # store; an absent partition is replay-equivalent to an empty one)
     if not winners.isEmpty():
-        if batch_id is None:
-            winners.select("content_hash").write.mode("append").parquet(store_dir)
-        else:
-            (
-                winners.select("content_hash")
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(store_dir)
-            )
+        write_batch(winners.select("content_hash"), store_dir, batch_id)
     return batch.join(winners.select(id_col), id_col, "left_semi")
 
 
@@ -1015,8 +985,8 @@ def incremental_near_dedup(
     Delivery: plain store append — idempotent against FULL replays (a
     replayed batch's docs all reject against their own admitted rows), but
     a crash between the two store writes needs the batch re-run; wrap in
-    foreachBatch with the :func:`incremental_exact_dedup` batch_id pattern
-    for exactly-once at scale.
+    foreachBatch with the batch-keyed store of sql4pandas_spark/stores.py
+    (as :func:`incremental_exact_dedup` does) for exactly-once at scale.
 
     Returns the admitted subset of ``batch`` (original columns).
     """
@@ -1027,7 +997,7 @@ def incremental_near_dedup(
     try:
         bands_dir = _os.path.join(store_dir, "bands")
         sh_dir = _os.path.join(store_dir, "shingles")
-        store_bands = _read_digest_store(spark, bands_dir)
+        store_bands = read_batches(spark, bands_dir)
         survivors = sigs
         if store_bands is not None:
             store_sh = spark.read.parquet(sh_dir)
@@ -1346,9 +1316,9 @@ def incremental_passage_scrub(
     every engine/partitioning.
 
     Delivery semantics mirror :func:`incremental_exact_dedup`: with
-    ``batch_id`` the store partitions by batch and writes via dynamic
-    partition OVERWRITE, and the read excludes the current batch_id —
-    crash-replaying a batch reproduces its original output byte-for-byte
+    ``batch_id`` the gram store is the batch-keyed store of
+    sql4pandas_spark/stores.py (own partition overwritten, read without
+    it) — crash-replaying a batch reproduces its original output byte-for-byte
     (exactly-once store on top of foreachBatch's at-least-once replay).
     The removal sets are materialized (localCheckpoint) BEFORE the store
     append so the lazy plan can never read its own appended grams (which
@@ -1360,9 +1330,7 @@ def incremental_passage_scrub(
     L = min_tokens
     spark = batch.sparkSession
     sites = _kgram_sites(batch, min_tokens, text_col, id_col)
-    store = _read_digest_store(spark, store_dir)
-    if store is not None and batch_id is not None:
-        store = store.filter(F.col("batch_id") != F.lit(batch_id))
+    store = read_batches(spark, store_dir, exclude_batch=batch_id)
     seen = store.select("gram").distinct() if store is not None else None
     if seen is not None:
         sites = sites.join(
@@ -1402,16 +1370,7 @@ def incremental_passage_scrub(
     # differential). An absent partition is replay-equivalent to an empty
     # one, so skipping preserves the exactly-once semantics.
     if not new_grams.isEmpty():
-        if batch_id is None:
-            new_grams.write.mode("append").parquet(store_dir)
-        else:
-            (
-                new_grams.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(store_dir)
-            )
+        write_batch(new_grams, store_dir, batch_id)
     return _apply_removals(batch, removals, text_col, id_col)
 
 

@@ -4,19 +4,11 @@ keyed snapshot (SURVEY.md §2 merge_upsert, streaming form).
 This is the write-side composition the batch pieces were built for:
 ``readStream`` over a changeset landing directory → ``foreachBatch`` →
 :func:`sql4pandas_spark.operators.maintenance.merge_upsert` into a
-VERSIONED parquet snapshot. Versioning is what makes it exactly-once
-without an ACID table format:
-
-- micro-batch ``k`` reads ``v{k}`` and OVERWRITES ``v{k+1}`` — never the
-  directory it is reading;
-- after a crash, foreachBatch re-delivers the last uncommitted batch
-  with the SAME batch_id, which rewrites the same ``v{k+1}`` from the
-  same (unchanged) ``v{k}`` — byte-identical, so at-least-once delivery
-  becomes exactly-once application (the same idempotency shape as
-  streaming/windows.parquet_batch_writer's batch_id partitions and the
-  incremental dedup stores);
-- retained versions double as time travel: ``v{k}`` IS the snapshot as
-  of batch k (snapshot_diff between two versions gives the audit trail).
+VERSIONED parquet snapshot. The version chain (sql4pandas_spark/stores.py)
+is what makes it exactly-once without an ACID table format: batch ``k``
+reads ``v{k}`` and overwrites ``v{k+1}``, so a crash-replayed batch
+rewrites the same version byte-identically, and retained versions are time
+travel (snapshot_diff between two versions gives the audit trail).
 
 Scale shape: merge_upsert itself is one left-anti join on the narrow key
 (AQE broadcasts the CDC batch, the snapshot never shuffles) — but this
@@ -33,102 +25,21 @@ Delta jars are available (SURVEY §2 deliberate-exclusions note).
 
 from __future__ import annotations
 
-import os
-import re
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
+from sql4pandas_spark import stores
 from sql4pandas_spark.operators.maintenance import merge_upsert
 
-_V_RE = re.compile(r"^v(\d+)$")
-
-
-def seed_snapshot(snapshot: DataFrame, snapshot_root: str) -> str:
-    """Write the initial keyed snapshot as version 0."""
-    dst = os.path.join(snapshot_root, "v0")
-    snapshot.write.mode("overwrite").parquet(dst)
-    return dst
-
-
-def _versions(snapshot_root: str) -> list[int]:
-    try:
-        names = os.listdir(snapshot_root)
-    except FileNotFoundError:
-        return []
-    return sorted(int(m.group(1)) for n in names if (m := _V_RE.match(n)))
-
-
-def latest_snapshot(spark: SparkSession, snapshot_root: str) -> DataFrame:
-    """Read the highest committed version of the snapshot."""
-    vs = _versions(snapshot_root)
-    if not vs:
-        raise FileNotFoundError(f"no snapshot versions under {snapshot_root}")
-    return spark.read.parquet(os.path.join(snapshot_root, f"v{vs[-1]}"))
-
-
-def snapshot_at(spark: SparkSession, snapshot_root: str, version: int) -> DataFrame:
-    """Time-travel read: the snapshot exactly as of committed version
-    ``version``. Raises (naming the retained versions) when the version
-    was never written or has been vacuumed — a silent fallback to a
-    neighboring version would be a wrong-answer bug for any audit diff."""
-    vs = _versions(snapshot_root)
-    if version not in vs:
-        raise FileNotFoundError(
-            f"version v{version} is not present under {snapshot_root} "
-            f"(retained: {[f'v{v}' for v in vs]}) — it was never committed "
-            "or was removed by vacuum_versions; raise keep_last if time "
-            "travel must reach further back"
-        )
-    return spark.read.parquet(os.path.join(snapshot_root, f"v{version}"))
-
-
-def vacuum_versions(store_root: str, keep_last: int = 2) -> list[int]:
-    """Retention sweep for a versioned store (CDC snapshot or sketch
-    state — same ``v{k}`` layout): delete every committed version except
-    the newest ``keep_last``; returns the version numbers removed.
-
-    This completes the exactly-once story's storage side: the version
-    chain is what makes replay idempotent, but without retention it
-    rewrites the full state forever. The chain's FORWARD guarantees
-    survive any ``keep_last >= 1`` — the next batch reads only
-    ``v{latest}``, and the misalignment guard keys off the latest
-    version, which a vacuum never touches. ``keep_last=2`` (the default)
-    additionally preserves CRASH-REPLAY of an in-flight batch: a batch
-    replayed after a crash rewrites ``v{latest}`` from ``v{latest-1}``,
-    so vacuum down to 1 version only between drains you know completed.
-    Time travel reaches exactly the retained versions
-    (:func:`snapshot_at` raises for vacuumed ones).
-    """
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (the chain head must survive)")
-    import shutil
-
-    vs = _versions(store_root)
-    drop = vs[:-keep_last]
-    for v in drop:
-        shutil.rmtree(os.path.join(store_root, f"v{v}"))
-    return drop
-
-
-def require_replay_source(store_root: str, batch_id: int, vs: list[int]) -> None:
-    """The vacuum/crash-replay interlock: a batch replayed after a crash
-    reads source version ``v{batch_id}`` — legal per the misalignment
-    guard (batch_id == latest - 1), but if ``vacuum_versions(keep_last=1)``
-    ran BETWEEN the crash and the replayed drain, that source is gone and
-    the replay must fail with the interlock named, not with a bare
-    path-not-found (and never by silently merging onto the wrong base).
-    ``keep_last >= 2`` makes this unreachable — the documented contract."""
-    if batch_id not in vs:
-        raise RuntimeError(
-            f"vacuum/replay interlock violated: crash-replay of batch "
-            f"{batch_id} needs source version v{batch_id} under "
-            f"{store_root}, but it was removed "
-            f"(retained: {[f'v{v}' for v in vs]}). vacuum_versions("
-            f"keep_last=1) ran between a crash and its replayed drain — "
-            f"vacuum down to 1 version only between drains known to have "
-            f"completed; keep_last>=2 always preserves crash-replay."
-        )
+#: Write the initial keyed snapshot as version 0.
+seed_snapshot = stores.seed
+#: Read the latest committed version (``latest_snapshot(spark, root)``) or,
+#: time travel, exactly committed ``version`` (``snapshot_at(spark, root,
+#: version)``, which raises for a version never written or vacuumed).
+latest_snapshot = snapshot_at = stores.read_version
+#: Retention sweep for a versioned store (CDC snapshot or sketch state).
+vacuum_versions = stores.vacuum
 
 
 def cdc_apply_batch(
@@ -140,41 +51,17 @@ def cdc_apply_batch(
     seq_col: str | None = None,
 ) -> str:
     """Apply ONE CDC micro-batch: ``v{batch_id}`` + changes →
-    ``v{batch_id + 1}``. Replay-idempotent by construction (same input
-    version, same changes, overwrite write). Returns the new version
-    path.
-
-    Guards against checkpoint/version misalignment: a drain restarted
-    with a FRESH checkpoint re-numbers batches from 0, which would
-    silently re-apply changes onto stale ``v0`` while ``latest_snapshot``
-    keeps serving the newer version (lost updates). The only legal
-    inputs are batch_id == latest (normal advance) and
-    batch_id == latest - 1 (crash replay of the last uncommitted batch,
-    which rewrites the same dst from the same unchanged src); anything
-    else raises instead of corrupting the chain.
-    """
-    spark = changes.sparkSession
-    vs = _versions(snapshot_root)
-    if not vs:
-        raise FileNotFoundError(
-            f"no snapshot versions under {snapshot_root}; seed_snapshot first"
-        )
-    latest = vs[-1]
-    if batch_id not in (latest, latest - 1):
-        raise RuntimeError(
-            f"CDC checkpoint/version misalignment: batch_id={batch_id} but "
-            f"latest committed version is v{latest} (expected batch_id "
-            f"{latest} to advance or {latest - 1} to replay). A fresh "
-            f"checkpoint restarts numbering at 0 — reuse the original "
-            f"checkpoint directory, or reseed the snapshot root."
-        )
-    require_replay_source(snapshot_root, batch_id, vs)
-    src = os.path.join(snapshot_root, f"v{batch_id}")
-    dst = os.path.join(snapshot_root, f"v{batch_id + 1}")
-    snap = spark.read.parquet(src)
-    post = merge_upsert(snap, changes, key_cols, op_col=op_col, seq_col=seq_col)
-    post.write.mode("overwrite").parquet(dst)
-    return dst
+    ``v{batch_id + 1}``, replay-idempotent and guarded against
+    checkpoint/version misalignment by :func:`stores.advance`. Returns the
+    new version path."""
+    return stores.advance(
+        changes.sparkSession,
+        snapshot_root,
+        batch_id,
+        lambda snap: merge_upsert(
+            snap, changes, key_cols, op_col=op_col, seq_col=seq_col
+        ),
+    )
 
 
 def run_cdc_stream(
@@ -186,11 +73,11 @@ def run_cdc_stream(
     seq_col: str | None = None,
     timeout_sec: int = 120,
 ) -> str:
-    """Drain a changeset stream into the versioned snapshot with
-    ``trigger(availableNow=True)``. Reusing the same ``checkpoint``
-    across calls resumes batch numbering where the last drain stopped —
-    the periodic-ingest production shape (and what the version chain
-    relies on). Returns the checkpoint path for the next drain."""
+    """Drain a changeset stream into the versioned snapshot
+    (:func:`stores.drain`). Reusing the same ``checkpoint`` across calls
+    resumes batch numbering where the last drain stopped — the
+    periodic-ingest production shape (and what the version chain relies
+    on). Returns the checkpoint path for the next drain."""
     ckpt = checkpoint or tempfile.mkdtemp(prefix="s4ps_cdc_ckpt_")
 
     def apply_batch(df: DataFrame, batch_id: int) -> None:
@@ -198,16 +85,10 @@ def run_cdc_stream(
             df, snapshot_root, key_cols, batch_id, op_col=op_col, seq_col=seq_col
         )
 
-    from sql4pandas_spark.streaming.windows import pinned_stream_width
-
-    with pinned_stream_width(changes_stream.sparkSession):
-        q = (
-            changes_stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:  # pragma: no cover - defensive stop on hang
-            q.stop()
+    stores.drain(
+        changes_stream.writeStream.foreachBatch(apply_batch),
+        changes_stream.sparkSession,
+        ckpt,
+        timeout_sec,
+    )
     return ckpt

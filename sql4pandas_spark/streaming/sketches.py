@@ -5,21 +5,14 @@ incr_quantile, streaming form).
 The streaming sibling of streaming/cdc.py, for the read-side incremental
 family (operators/sketches.py): ``readStream`` over a landing directory →
 ``foreachBatch`` → per-batch state (heavy-hitter candidates, fixed-grid
-histogram) merged into a VERSIONED parquet store. The same versioning
-makes it exactly-once without an ACID format — and exactly-once is
-LOAD-BEARING here, more than for CDC: merge_heavy_hitter_states /
-merge_histograms ADD counts, so a replayed batch that re-merged would
-double-count (the merge_agg_states idempotence warning,
-operators/maintenance.py). The version chain turns at-least-once delivery
-into exactly-once application:
-
-- micro-batch ``k`` reads state ``v{k}`` and OVERWRITES ``v{k+1}`` —
-  never the directory it is reading;
-- after a crash, foreachBatch re-delivers the last uncommitted batch with
-  the SAME batch_id, which rewrites the same ``v{k+1}`` from the same
-  (unchanged) ``v{k}`` — byte-identical, no double count;
-- retained versions double as sketch time travel: ``v{k}`` answers
-  "what were the top tokens / p99 as of batch k".
+histogram) merged into a VERSIONED parquet store (sql4pandas_spark/stores.py).
+Exactly-once is LOAD-BEARING here, more than for CDC:
+merge_heavy_hitter_states / merge_histograms ADD counts, so a replayed
+batch that re-merged would double-count (the merge_agg_states idempotence
+warning, operators/maintenance.py). The version chain rewrites a replayed
+batch's ``v{k+1}`` from the same unchanged ``v{k}`` — no double count —
+and retained versions answer "what were the top tokens / p99 as of batch
+k".
 
 Scale shape: each micro-batch does one map-side-combined aggregate over
 its OWN rows (the per-batch state), then merges against a state of
@@ -31,36 +24,21 @@ the state summarizes. The raw stream is never re-scanned.
 
 from __future__ import annotations
 
-import os
 import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# The version-directory mechanics are shared with the CDC store — one
-# implementation of "what is the latest committed v{k}" for both write-side
-# (snapshot) and read-side (sketch state) incremental maintenance.
-from sql4pandas_spark.streaming.cdc import (
-    _versions,
-    latest_snapshot,
-    require_replay_source,
-)
+from sql4pandas_spark import stores
 
-#: read the highest committed state version (alias: the store layout is
-#: identical to the CDC snapshot store).
-latest_state = latest_snapshot
+#: Read the highest committed state version.
+latest_state = stores.read_version
+#: Write the initial sketch state as version 0 (usually empty — the merge
+#: functions treat an empty side as the identity).
+seed_state = stores.seed
 
 MergeFn = Callable[[DataFrame, DataFrame], DataFrame]
 BatchStateFn = Callable[[DataFrame], DataFrame]
-
-
-def seed_state(state: DataFrame, store_root: str) -> str:
-    """Write the initial sketch state as version 0 (usually empty:
-    ``spark.createDataFrame([], schema)`` — the merge functions treat an
-    empty side as the identity)."""
-    dst = os.path.join(store_root, "v0")
-    state.write.mode("overwrite").parquet(dst)
-    return dst
 
 
 def empty_state(spark: SparkSession, schema: str, store_root: str) -> str:
@@ -75,39 +53,15 @@ def sketch_apply_batch(
     batch_id: int,
 ) -> str:
     """Merge ONE micro-batch's state: ``v{batch_id}`` ∪ batch-state →
-    ``v{batch_id + 1}``. Replay-idempotent by construction (same input
-    version, same batch rows, overwrite write). Returns the new version
-    path.
-
-    Same checkpoint/version alignment guard as cdc_apply_batch: a drain
-    restarted with a FRESH checkpoint renumbers batches from 0, which
-    would re-merge history onto stale ``v0`` — for additive sketch
-    states that silently double-counts, so misalignment raises instead.
-    Legal inputs: batch_id == latest (advance) or latest - 1 (crash
-    replay of the last uncommitted batch).
-    """
-    spark = batch_state.sparkSession
-    vs = _versions(store_root)
-    if not vs:
-        raise FileNotFoundError(
-            f"no state versions under {store_root}; seed_state first"
-        )
-    latest = vs[-1]
-    if batch_id not in (latest, latest - 1):
-        raise RuntimeError(
-            f"sketch checkpoint/version misalignment: batch_id={batch_id} "
-            f"but latest committed version is v{latest} (expected "
-            f"{latest} to advance or {latest - 1} to replay). Additive "
-            f"states double-count under renumbered replay — reuse the "
-            f"original checkpoint directory, or reseed the store root."
-        )
-    require_replay_source(store_root, batch_id, vs)
-    src = os.path.join(store_root, f"v{batch_id}")
-    dst = os.path.join(store_root, f"v{batch_id + 1}")
-    prev = spark.read.parquet(src)
-    post = merge_fn(prev, batch_state)
-    post.write.mode("overwrite").parquet(dst)
-    return dst
+    ``v{batch_id + 1}``, replay-idempotent and guarded against
+    checkpoint/version misalignment (which would double-count an additive
+    state) by :func:`stores.advance`. Returns the new version path."""
+    return stores.advance(
+        batch_state.sparkSession,
+        store_root,
+        batch_id,
+        lambda prev: merge_fn(prev, batch_state),
+    )
 
 
 def run_sketch_stream(
@@ -118,28 +72,22 @@ def run_sketch_stream(
     checkpoint: str | None = None,
     timeout_sec: int = 120,
 ) -> str:
-    """Drain a raw stream into the versioned sketch store with
-    ``trigger(availableNow=True)``. Reusing the same ``checkpoint``
-    across calls resumes batch numbering where the last drain stopped —
-    the periodic-ingest production shape the version chain relies on.
+    """Drain a raw stream into the versioned sketch store
+    (:func:`stores.drain`). Reusing the same ``checkpoint`` across calls
+    resumes batch numbering where the last drain stopped — the
+    periodic-ingest production shape the version chain relies on.
     Returns the checkpoint path for the next drain."""
     ckpt = checkpoint or tempfile.mkdtemp(prefix="s4ps_sketch_ckpt_")
 
     def apply_batch(df: DataFrame, batch_id: int) -> None:
         sketch_apply_batch(batch_state_fn(df), store_root, merge_fn, batch_id)
 
-    from sql4pandas_spark.streaming.windows import pinned_stream_width
-
-    with pinned_stream_width(stream.sparkSession):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:  # pragma: no cover - defensive stop on hang
-            q.stop()
+    stores.drain(
+        stream.writeStream.foreachBatch(apply_batch),
+        stream.sparkSession,
+        ckpt,
+        timeout_sec,
+    )
     return ckpt
 
 

@@ -1,16 +1,19 @@
 """Structured Streaming over the `events` table (SURVEY.md §2.10).
 
 Testable-by-construction streaming: every stream here reads the fixture
-parquet with `readStream` and drains it with `trigger(availableNow=True)`, so
-the stream terminates deterministically and its result can be compared to the
-batch form (which DuckDB can verify). That batch-equivalence IS the
-correctness contract for the streaming operators — no wall-clock tests.
+parquet with `readStream` and drains it with `trigger(availableNow=True)`
+(sql4pandas_spark/stores.drain), so the stream terminates deterministically
+and its result can be compared to the batch form (which DuckDB can verify).
+That batch-equivalence IS the correctness contract for the streaming
+operators — no wall-clock tests.
 
 Scale notes: file-source streams partition work by file; watermarks bound
 state store size (without one, a streaming agg keeps every window in state
 forever — fine for a drained fixture, fatal for a real unbounded stream, so
 the watermarked variant is the production form). State lives in the
 executor-local StateStore and survives micro-batches via the checkpoint dir.
+The exactly-once foreachBatch sink writes the batch-keyed store layout of
+sql4pandas_spark/stores.py.
 """
 
 from __future__ import annotations
@@ -18,52 +21,19 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql4pandas_spark.session import configure_session
 from sql4pandas_spark.sources.parquet import table
-
-#: Streaming state width (conf key / local default). A stateful streaming
-#: operator creates ONE state-store instance per shuffle partition, and the
-#: count is frozen into the checkpoint at the first micro-batch — in
-#: production it is a deliberate day-0 sizing decision (expected state
-#: bytes / 100-500 MB per partition; e.g. 200 GB of join state → 512-2048
-#: partitions, set via this conf), NOT the batch shuffle width. Inheriting
-#: the session's batch width makes every bounded drain pay width-many
-#: state-store commits + maintenance tasks per micro-batch for state that
-#: fits in one: profiled at sf0.01, a stateful drain at width 64 took
-#: 2.1-2.6 s vs 0.73-0.89 s at width 8 (2.7x) with identical results —
-#: the extra 56 instances were pure floor. The default 8 sizes the
-#: fixture-scale drains; any caller with real state sets the conf.
-STATE_PARTITIONS_CONF = "spark.s4ps.streaming.statePartitions"
-_DEFAULT_STATE_PARTITIONS = 8
-
-
-@contextmanager
-def pinned_stream_width(spark: SparkSession):
-    """Pin ``spark.sql.shuffle.partitions`` to the streaming state width
-    for the duration of a synchronous availableNow drain, restoring the
-    batch width after. The drains in this package (and cdc/sketches) are
-    single-threaded start→awaitTermination blocks, so the pin cannot leak
-    into a concurrent batch query; a resumed checkpoint keeps its own
-    frozen width regardless (Spark reads it from the offset metadata)."""
-    try:
-        width = int(
-            spark.conf.get(
-                STATE_PARTITIONS_CONF, str(_DEFAULT_STATE_PARTITIONS)
-            )
-        )
-    except ValueError:
-        width = _DEFAULT_STATE_PARTITIONS
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+from sql4pandas_spark.stores import (  # noqa: F401 - re-exported
+    _DEFAULT_STATE_PARTITIONS,
+    STATE_PARTITIONS_CONF,
+    drain,
+    pinned_stream_width,
+    write_batch,
+)
 
 
 def _stream_dir(sf_dir: str) -> str:
@@ -120,21 +90,11 @@ def run_available_now(
 ) -> DataFrame:
     """Drain a streaming DataFrame into a memory sink and return the final
     table. availableNow processes everything currently on disk, then stops —
-    the deterministic trigger for batch-equivalence testing."""
+    the deterministic trigger for batch-equivalence testing. Raises
+    TimeoutError rather than return a partial table."""
     name = f"s4ps_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="s4ps_ckpt_")
-    with pinned_stream_width(result.sparkSession):
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:  # pragma: no cover - defensive stop on hang
-            q.stop()
+    writer = result.writeStream.format("memory").queryName(name)
+    drain(writer.outputMode(mode), result.sparkSession, timeout_sec=timeout_sec)
     return result.sparkSession.table(name)
 
 
@@ -194,25 +154,19 @@ def parquet_batch_writer(out_dir: str, exactly_once: bool = False):
     ``exactly_once=True``: each batch dynamically OVERWRITES its own
     ``batch_id=`` partition — a replayed batch replaces exactly the rows
     its crashed attempt may have half-written, never duplicating and never
-    touching other batches' partitions. This is the same idempotency shape
-    as operators/dedup.incremental_exact_dedup's digest store; both are
-    crash-replay property-tested (tests/test_streaming_recovery.py,
-    tests/test_incremental_store.py).
+    touching other batches' partitions: the batch-keyed store of
+    sql4pandas_spark/stores.py (:func:`write_batch`), shared with the
+    incremental dedup stores; both are crash-replay property-tested
+    (tests/test_streaming_recovery.py, tests/test_incremental_store.py).
     """
 
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        staged = df.withColumn("batch_id", F.lit(batch_id))
+    def write(df: DataFrame, batch_id: int) -> None:
         if exactly_once:
-            (
-                staged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
+            write_batch(df, out_dir, batch_id)
         else:
-            staged.write.mode("append").parquet(out_dir)
+            write_batch(df.withColumn("batch_id", F.lit(batch_id)), out_dir)
 
-    return write_batch
+    return write
 
 
 def run_foreach_batch_parquet(
@@ -234,18 +188,11 @@ def run_foreach_batch_parquet(
     import shutil
 
     shutil.rmtree(out_dir, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="s4ps_ckpt_")
-
-    with pinned_stream_width(result.sparkSession):
-        q = (
-            result.writeStream.foreachBatch(
-                parquet_batch_writer(out_dir, exactly_once=exactly_once)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:  # pragma: no cover - defensive stop on hang
-            q.stop()
-    return result.sparkSession.read.parquet(out_dir)
+    writer = result.writeStream.foreachBatch(
+        parquet_batch_writer(out_dir, exactly_once=exactly_once)
+    )
+    drain(writer, result.sparkSession, timeout_sec=timeout_sec)
+    # read with the written schema: an all-empty exactly-once drain leaves
+    # no file to infer one from
+    schema = result.withColumn("batch_id", F.lit(0)).schema
+    return result.sparkSession.read.schema(schema).parquet(out_dir)

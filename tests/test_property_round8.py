@@ -534,72 +534,6 @@ def test_drift_timeline_matches_python(spark, case):
         assert got[d] == want, (d, got[d], want)
 
 
-# ------------------------------------------------- streaming CDC version chain
-
-
-@st.composite
-def cdc_chains(draw):
-    seed = {
-        k: draw(st.integers(0, 9))
-        for k in draw(st.sets(st.integers(0, 12), min_size=1, max_size=8))
-    }
-    batches = []
-    for _ in range(draw(st.integers(1, 4))):
-        keys = draw(st.sets(st.integers(0, 15), min_size=1, max_size=6))
-        batches.append(
-            {
-                k: (
-                    draw(st.sampled_from(["update", "insert", "delete"])),
-                    draw(st.integers(10, 99)),
-                )
-                for k in keys
-            }
-        )
-    return seed, batches
-
-
-@given(cdc_chains())
-@settings(**_SETTINGS)
-def test_cdc_version_chain_matches_python(spark, tmp_path_factory, case):
-    """Random changesets applied through the versioned on-disk store must
-    equal a Python dict replay at EVERY version — and replaying a random
-    mid-chain batch (crash recovery) must leave its version byte-stable."""
-    from sql4pandas_spark.streaming import cdc
-
-    seed, batches = case
-    root = str(tmp_path_factory.mktemp("cdc_chain"))
-    cdc.seed_snapshot(
-        spark.createDataFrame(sorted(seed.items()), "k long, v long"), root
-    )
-    state = dict(seed)
-    for bid, batch in enumerate(batches):
-        changes = spark.createDataFrame(
-            [(k, v, op) for k, (op, v) in sorted(batch.items())],
-            "k long, v long, op string",
-        )
-        cdc.cdc_apply_batch(changes, root, ["k"], batch_id=bid)
-        for k, (op, v) in batch.items():
-            if op == "delete":
-                state.pop(k, None)
-            else:
-                state[k] = v
-        got = {
-            r.k: r.v
-            for r in spark.read.parquet(f"{root}/v{bid + 1}").collect()
-        }
-        assert got == state, (bid, got, state)
-
-    # crash-replay the LAST batch: same version, same bytes-level content
-    last = len(batches) - 1
-    changes = spark.createDataFrame(
-        [(k, v, op) for k, (op, v) in sorted(batches[last].items())],
-        "k long, v long, op string",
-    )
-    cdc.cdc_apply_batch(changes, root, ["k"], batch_id=last)
-    got = {r.k: r.v for r in spark.read.parquet(f"{root}/v{last + 1}").collect()}
-    assert got == state
-
-
 # ------------------------------------------------ behavior (funnel, cohort)
 
 

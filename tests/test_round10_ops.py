@@ -380,25 +380,6 @@ def test_histogram_stream_matches_batch_histogram(spark, tmp_path):
     assert got == want
 
 
-def test_sketch_apply_batch_replay_idempotent_and_guarded(spark, tmp_path):
-    """Replaying the last uncommitted batch rewrites the same version from
-    the same input (no double count); a renumbered batch id raises."""
-    import pytest as _pytest
-
-    from sql4pandas_spark.operators.sketches import merge_heavy_hitter_states
-    from sql4pandas_spark.streaming import sketches as sk
-
-    store = str(tmp_path / "store")
-    sk.empty_state(spark, "item string, n long", store)
-    b = spark.createDataFrame([("a", 5), ("b", 2)], "item string, n long")
-    sk.sketch_apply_batch(b, store, merge_heavy_hitter_states, 0)  # v1
-    sk.sketch_apply_batch(b, store, merge_heavy_hitter_states, 0)  # replay v1
-    final = {r["item"]: r["n"] for r in sk.latest_state(spark, store).collect()}
-    assert final == {"a": 5, "b": 2}  # NOT doubled
-    with _pytest.raises(RuntimeError, match="misalignment"):
-        sk.sketch_apply_batch(b, store, merge_heavy_hitter_states, 5)
-
-
 # ------------------------------------- prefix-filter exact Jaccard join
 
 

@@ -329,56 +329,6 @@ def test_connected_components_sum_convergence_check(spark):
     assert sgot == {f"n{i}": "n0" for i in range(5)}
 
 
-# ------------------------------------ round-11 versioned-store retention
-
-
-def test_vacuum_versions_lifecycle(spark, tmp_path):
-    """Vacuum deletes old versions on disk, retained time travel still
-    answers, vacuumed reads raise, and the chain advances afterward —
-    for BOTH store layouts (CDC snapshot and sketch state share v{k})."""
-    import os
-
-    import pytest as _pytest
-
-    from sql4pandas_spark.streaming import cdc
-
-    root = str(tmp_path / "snap")
-    base = spark.createDataFrame(
-        [(i, i * 10) for i in range(20)], "k long, x long"
-    )
-    cdc.seed_snapshot(base, root)
-    for bid in range(3):
-        changes = spark.createDataFrame(
-            [(bid, 777 + bid, "update")], "k long, x long, op string"
-        )
-        cdc.cdc_apply_batch(changes, root, ["k"], batch_id=bid)
-    assert cdc._versions(root) == [0, 1, 2, 3]
-
-    assert cdc.vacuum_versions(root, keep_last=2) == [0, 1]
-    assert cdc._versions(root) == [2, 3]
-    assert not os.path.exists(os.path.join(root, "v0"))
-
-    # retained time travel: v2 has batches 0,1 applied but not 2
-    v2 = {r["k"]: r["x"] for r in cdc.snapshot_at(spark, root, 2).collect()}
-    assert v2[0] == 777 and v2[1] == 778 and v2[2] == 20
-
-    with _pytest.raises(FileNotFoundError, match="vacuum"):
-        cdc.snapshot_at(spark, root, 1)
-    with _pytest.raises(ValueError, match="keep_last"):
-        cdc.vacuum_versions(root, keep_last=0)
-
-    # chain still advances; replay of the head batch also still works
-    changes = spark.createDataFrame([(5, 999, "update")], "k long, x long, op string")
-    cdc.cdc_apply_batch(changes, root, ["k"], batch_id=3)
-    cdc.cdc_apply_batch(changes, root, ["k"], batch_id=3)  # crash replay
-    assert cdc._versions(root) == [2, 3, 4]
-
-    # keep_last=1 between drains: head-only store keeps advancing
-    assert cdc.vacuum_versions(root, keep_last=1) == [2, 3]
-    cdc.cdc_apply_batch(changes, root, ["k"], batch_id=4)
-    assert cdc._versions(root) == [4, 5]
-
-
 def test_transpile_cast_unnest_param_interval_ignore_nulls(spark):
     """The late-round dialect rewrites: cast pushed inside the array
     (generators are top-level-only in Spark), parameterized intervals,

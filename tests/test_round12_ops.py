@@ -232,91 +232,6 @@ def test_bigram_gate_keeps_about_p75_per_language(spark):
     assert len({r["threshold_e6x4"] for r in rows}) > 1
 
 
-# -------------------------- vacuum / crash-replay interlock (round 12)
-
-def _seed_kv12(spark, root):
-    spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k long, s string, v long"
-    ).write.mode("overwrite").parquet(root + "/v0")
-
-
-def test_vacuum_between_crash_and_replay_raises_interlock(spark, tmp_path):
-    """vacuum_versions(keep_last=1) between a crash and its replayed drain
-    removes the replay's SOURCE version; the replay must fail with the
-    interlock named (cdc.py documents keep_last>=2 as the crash-replay
-    floor), never merge onto the wrong base or die with a bare
-    path-not-found."""
-    import pytest as _pytest
-
-    from sql4pandas_spark.streaming import cdc
-
-    root = str(tmp_path / "snap")
-    _seed_kv12(spark, root)
-    changes = spark.createDataFrame(
-        [(2, "b", 99, "update")], "k long, s string, v long, op string"
-    )
-    cdc.cdc_apply_batch(changes, root, ["k"], batch_id=0)   # commits v1
-    # crash happens AFTER v1 is on disk but BEFORE the checkpoint commits;
-    # an ill-timed retention sweep then drops v0
-    assert cdc.vacuum_versions(root, keep_last=1) == [0]
-    with _pytest.raises(RuntimeError, match="vacuum/replay interlock"):
-        cdc.cdc_apply_batch(changes, root, ["k"], batch_id=0)  # the replay
-    # the chain is still advanceable off the retained head
-    cdc.cdc_apply_batch(
-        spark.createDataFrame([(4, "d", 40, "insert")],
-                              "k long, s string, v long, op string"),
-        root, ["k"], batch_id=1,
-    )
-    assert sorted(
-        tuple(r) for r in cdc.latest_snapshot(spark, root).collect()
-    ) == [(1, "a", 10), (2, "b", 99), (3, "c", 30), (4, "d", 40)]
-
-
-def test_vacuum_keep2_preserves_crash_replay(spark, tmp_path):
-    """The documented contract: with keep_last=2 a post-crash replay still
-    succeeds and is byte-identical to the first application."""
-    from sql4pandas_spark.streaming import cdc
-
-    root = str(tmp_path / "snap")
-    _seed_kv12(spark, root)
-    changes = spark.createDataFrame(
-        [(2, "b", 99, "update")], "k long, s string, v long, op string"
-    )
-    cdc.cdc_apply_batch(changes, root, ["k"], batch_id=0)
-    cdc.cdc_apply_batch(changes, root, ["k"], batch_id=1)  # v2
-    assert cdc.vacuum_versions(root, keep_last=2) == [0]
-    first = sorted(tuple(r) for r in spark.read.parquet(root + "/v2").collect())
-    cdc.cdc_apply_batch(changes, root, ["k"], batch_id=1)  # replay of v1->v2
-    again = sorted(tuple(r) for r in spark.read.parquet(root + "/v2").collect())
-    assert first == again
-
-
-def test_sketch_store_vacuum_replay_interlock(spark, tmp_path):
-    """Same interlock on the additive sketch store, where a wrong-base
-    merge would silently double-count."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.streaming import sketches
-    from sql4pandas_spark.streaming.cdc import vacuum_versions
-
-    root = str(tmp_path / "hist")
-    state = spark.createDataFrame([(0, 5), (1, 7)], "bin long, n long")
-    sketches.seed_state(state, root)
-    batch = spark.createDataFrame([(0, 2)], "bin long, n long")
-
-    def merge(prev, cur):
-        return (
-            prev.unionByName(cur).groupBy("bin")
-            .agg(F.sum("n").alias("n"))
-        )
-
-    sketches.sketch_apply_batch(batch, root, merge, batch_id=0)  # v1
-    assert vacuum_versions(root, keep_last=1) == [0]
-    with _pytest.raises(RuntimeError, match="vacuum/replay interlock"):
-        sketches.sketch_apply_batch(batch, root, merge, batch_id=0)
-
-
 # ------------------------------- asof NULL contract (round 12)
 
 def _asof_fixture(spark):

@@ -12,10 +12,14 @@ Scale design:
   only in base hash and seed. Candidate generation explodes b band keys per
   doc and self-joins on the band key: the only shuffle is on those 8-byte
   keys. Verification re-checks true shingle Jaccard on candidates only.
-- Duplicate clusters come from iterative smallest-id label propagation
-  (converges in O(graph diameter) rounds on the candidate-pair graph); each
-  round is a join+groupBy, checkpointed to keep the plan from growing
-  unboundedly, and non-convergence raises instead of returning wrong labels.
+- Duplicate clusters are connected components of the verified-pair graph,
+  each labeled by its smallest id, on one of two paths. A graph of at most
+  ``DRIVER_GRAPH_MAX_EDGES`` pairs is collected once and labeled on the
+  driver by vectorised hook-and-jump (no Spark job per round). A larger one
+  runs distributed smallest-id label propagation: O(graph diameter) rounds,
+  each a join+groupBy checkpointed to keep the plan bounded, and
+  non-convergence within ``max_iter`` rounds raises instead of returning
+  wrong labels. ``max_iter`` bounds only that distributed path.
 - SimHash: 60-bit signature via per-bit weighted sums; near-dup candidates by
   banding the bits into 4 chunks of (16, 16, 16, 12) meaningful bits —
   Hamming ≤ 3 guarantees a shared chunk by pigeonhole — verified with
@@ -26,6 +30,8 @@ Scale design:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -258,10 +264,85 @@ def verified_near_pairs(
     )
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Smallest-id label propagation over an undirected pair graph.
+#: Largest pair graph, in pairs, that :func:`connected_components` labels
+#: on the driver; a larger one runs the distributed label propagation.
+#: Read at call time. Set by measurement (CHANGES.md): at this size the
+#: driver path still takes no longer than the distributed one.
+DRIVER_GRAPH_MAX_EDGES = 1_000_000
 
-    Returns (doc_id, cluster_id). Each iteration: labels flow across edges via
+
+def min_id_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, labels) of the undirected graph with edges ``a[i]–b[i]``:
+    every id once, ascending, and its component's smallest id.
+
+    Vectorised hook-and-jump: ids become ranks in ascending order, each
+    round hooks the larger root of every edge whose ends still differ
+    under the smaller one (``np.minimum.at``), then pointer jumping
+    compresses every node onto its root. A parent is never larger than
+    its node, so each root is its tree's smallest rank, and the rounds
+    stop when every edge's ends share one root. ``np.unique`` sorts
+    strings by code point, the order of Spark's UTF-8 byte comparison,
+    so the labels keep their meaning for numeric, decimal and string ids.
+    """
+    nodes, ranks = np.unique(np.concatenate([a, b]), return_inverse=True)
+    src, dst = ranks[: len(a)], ranks[len(a) :]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[src], parent[dst]
+        if (ra == rb).all():
+            return nodes, nodes[parent]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            grand = parent[parent]
+            if (grand == parent).all():
+                break
+            parent = grand
+
+
+def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
+    """Smallest-id labels over an undirected pair graph: (doc_id,
+    cluster_id) for every id in a pair, cluster_id being the smallest id in
+    its connected component.
+
+    Two paths, one answer:
+
+    - **Driver.** A graph of at most :data:`DRIVER_GRAPH_MAX_EDGES` pairs
+      is collected once through Arrow, behind a ``limit(cap + 1)`` guard
+      that costs no extra job, and labeled by :func:`min_id_labels`. The
+      result is a local relation; no propagation round runs, so
+      ``max_iter`` does not apply and a chain of any length labels.
+    - **Distributed.** A larger graph runs :func:`_propagate_labels`,
+      min-label propagation that raises after ``max_iter`` rounds. The
+      guard's partial collect is dropped, so the pairs are evaluated
+      again there.
+
+    A NULL id is no node and links nothing, on both paths: a pair with one
+    NULL end keeps its other end as a self-loop, and a pair of two NULLs
+    drops.
+    """
+    closed = pairs.select(
+        F.coalesce("id_a", "id_b").alias("id_a"),
+        F.coalesce("id_b", "id_a").alias("id_b"),
+    ).filter(F.col("id_a").isNotNull())
+    cap = DRIVER_GRAPH_MAX_EDGES
+    local = closed.limit(cap + 1).toPandas()
+    if len(local) > cap:
+        return _propagate_labels(closed, max_iter)
+    nodes, labels = min_id_labels(local["id_a"].to_numpy(), local["id_b"].to_numpy())
+    id_type = closed.schema["id_a"].dataType
+    return pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": nodes, "cluster_id": labels}),
+        T.StructType(
+            [T.StructField("doc_id", id_type), T.StructField("cluster_id", id_type)]
+        ),
+    )
+
+
+def _propagate_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
+    """Smallest-id label propagation over a NULL-free pair graph — the
+    distributed path of :func:`connected_components`.
+
+    Each iteration: labels flow across edges via
     join + min-aggregate; min-label propagation converges in O(graph diameter)
     rounds (NOT O(log n) — a chain of d near-dups needs d rounds; use
     pointer-doubling/large-star if log-round convergence is ever needed).
@@ -380,15 +461,16 @@ def label_components(
     node in ``nodes`` with its connected component's smallest member id —
     (doc_id, cluster_id), singletons keeping their own id.
 
-    This is :func:`connected_components` (smallest-id label propagation,
-    O(diameter) rounds, lineage-checkpointed, non-convergence raises)
-    plus the singleton coalesce every caller needs: nodes that appear in
-    no pair never enter the propagation joins — the edge frame, not the
-    node frame, bounds per-round work — and re-join as their own
-    1-clusters at the end. near_dedup_minhash is exactly this operator
-    applied to verified MinHash pairs; exposing it separately lets any
-    pair source (fuzzy joins, embedding near-pairs, explicit entity
-    matches) reuse the labeler without re-deriving the pattern.
+    This is :func:`connected_components` (labels on the driver for a
+    graph of at most ``DRIVER_GRAPH_MAX_EDGES`` pairs; beyond that,
+    distributed smallest-id label propagation, whose non-convergence
+    within ``max_iter`` rounds raises) plus the singleton coalesce every
+    caller needs: nodes that appear in no pair never enter the labeling —
+    the edge frame, not the node frame, bounds its work — and re-join as
+    their own 1-clusters at the end. near_dedup_minhash is exactly this
+    operator applied to verified MinHash pairs; exposing it separately
+    lets any pair source (fuzzy joins, embedding near-pairs, explicit
+    entity matches) reuse the labeler without re-deriving the pattern.
     """
     components = connected_components(pairs, max_iter=max_iter)
     all_ids = nodes.select(F.col(id_col).alias("doc_id")).distinct()
@@ -413,9 +495,12 @@ def near_dedup_minhash(
     verify join), so it is persisted for the duration of the pipeline —
     33% faster end-to-end (measured at sf0.01). At 100 TB the equivalent is
     writing signatures to storage once and reusing them across the banding
-    and verification stages. connected_components materializes its result
-    (eager localCheckpoint), so the persist can be released before returning
-    the (lazy) final join.
+    and verification stages. Clustering is :func:`connected_components`
+    on the verified pairs: labeled on the driver up to
+    ``DRIVER_GRAPH_MAX_EDGES`` pairs, else by distributed label propagation
+    within its default ``max_iter`` rounds. Either way it materializes its
+    result (a local relation, or an eager localCheckpoint), so the persist
+    can be released before returning the (lazy) final join.
     """
     sigs = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n).persist()
     try:

@@ -1,9 +1,12 @@
 """Graph operators over edge frames (SURVEY.md §2.9).
 
-Iterative algorithms follow the `dedup.label_components` discipline:
-per-round work bounded by the edge frame, lineage truncated with
+Iterative algorithms follow the discipline of the distributed path of
+`dedup.label_components` (its label propagation beyond the driver-graph
+cap): per-round work bounded by the edge frame, lineage truncated with
 localCheckpoint so 10 rounds don't build a 10-deep plan, and NO
-driver-side data structures beyond scalar metadata (node count).
+driver-side data structures beyond scalar metadata (node count). Small
+component graphs are labeled on the driver instead; these operators keep
+every round in Spark.
 """
 
 from __future__ import annotations

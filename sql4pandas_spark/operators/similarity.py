@@ -16,10 +16,14 @@ Three tiers, matching how you'd actually run this at increasing scale:
    each batch's top-k under the FINAL ordering (rounded sim desc, id_a, id_b)
    so per-partition top-k ∪ global top-k is exact, not approximate.
 
-3. `ann_lsh_topk` — when neither side fits: random-hyperplane LSH buckets
-   (sign-bit sketch over d fixed hyperplanes), candidates only within a
-   bucket, exact re-scoring inside buckets. Approximate recall, all
-   joins/shuffles; the bucket key is an 8-byte hash.
+3. `ann_lsh_topk` — when all-pairs scoring is too much work: random-hyperplane
+   LSH buckets (sign-bit sketch over d fixed hyperplanes), candidates only
+   within a bucket, exact re-scoring of the candidates. Approximate recall;
+   candidates come from joins/shuffles on an 8-byte bucket hash. Under the
+   broadcast cap the re-scoring reads the matrix broadcast from the driver,
+   like tier 2, so the matrix IS collected there; only beyond the cap does
+   it join the vectors onto the candidate pairs and keep both sides off the
+   driver.
 """
 
 from __future__ import annotations
@@ -898,13 +902,35 @@ def ann_lsh_topk(
 
     Scale: bucket keys are 8-byte longs (table-id offset keeps tables
     disjoint); the only shuffle is the explode + self-join on those keys.
+
+    Candidates are scored against the broadcast (ids, matrix) of
+    :func:`_broadcast_embedding_matrix`, so under its cap the matrix is
+    collected on the driver — once, and the dimension is read off it.
+    Precondition: ids are unique. The broadcast path checks it on the
+    driver and raises, since a repeated id has no one row to score.
+    Beyond the cap the embeddings are joined onto the candidate pairs
+    instead (``score_attached``): fully distributed, with one ``first()``
+    job to learn the dimension, and the same rows as the broadcast path
+    (tests/test_similarity.py).
     """
-    first = emb.select("embedding").first()
-    if first is None:  # empty input: empty pair set, standard schema
-        return emb.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, sim double"
-        )
-    dim = len(first[0])
+    try:
+        b_ids, b_mat = _broadcast_embedding_matrix(emb, id_col)
+    except ValueError:  # beyond the broadcast cap: stay fully distributed
+        b_ids = b_mat = None
+        dim = len(emb.select("embedding").first()[0])  # over the cap: nonempty
+    else:
+        ids = b_ids.value
+        if len(ids) == 0:  # empty input: empty pair set, standard schema
+            return emb.sparkSession.createDataFrame(
+                [], "id_a long, id_b long, sim double"
+            )
+        dup = pd.Index(ids).duplicated()
+        if dup.any():
+            raise ValueError(
+                f"ann_lsh_topk needs unique {id_col} values; repeated: "
+                f"{np.unique(ids[dup])[:10].tolist()} ({dup.sum()} extra rows)"
+            )
+        dim = b_mat.value.shape[1]
     keys = F.array(
         *[
             lsh_bucket_key(
@@ -939,12 +965,10 @@ def ann_lsh_topk(
     # pairs to Python, scoring each Arrow batch as one rowwise NumPy dot
     # (§8: move ids, not payloads). Beyond the broadcast cap the
     # attach-join + per-batch dot fallback below keeps the path fully
-    # distributed (tests/test_edge_inputs.py pins that contract). float64
-    # like the fold it replaces; tests pin the rounded values against the
-    # NumPy brute-force scorer.
-    try:
-        b_ids, b_mat = _broadcast_embedding_matrix(emb, id_col)
-
+    # distributed (tests/test_similarity.py pins that both give the same
+    # rows). float64 like the fold it replaces; tests pin the rounded
+    # values against the NumPy brute-force scorer.
+    if b_ids is not None:
         matrix_rows = _by_value(_matrix_rows)
 
         def score_lookup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -967,7 +991,7 @@ def ann_lsh_topk(
         scored = cand.mapInPandas(
             score_lookup, schema="id_a long, id_b long, sim double"
         )
-    except ValueError:  # beyond broadcast cap: stay fully distributed
+    else:
 
         def score_attached(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:

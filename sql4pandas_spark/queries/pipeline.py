@@ -450,7 +450,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 bands × 4 rows, verify-then-cluster at jaccard ≥ 0.7). The oracle is
     the exact ground truth: brute-force Jaccard pairs + transitive closure —
     a hash match proves the banded candidate generation lost no pair AND the
-    label-propagation clustering equals true connected components."""
+    smallest-id clustering equals true connected components."""
     t = register_tables(spark, sf_dir, ("documents",))
     return dedup.near_dedup_minhash(t["documents"]).orderBy("doc_id")
 
@@ -7205,12 +7205,12 @@ def dedup_components_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph — each doc links to the doc at rank rn DIV 2 within its
     (lang, doc_id % 7) group — is labeled directly, with no dedup
     pipeline in front. The forest's depth is log2 of the largest group,
-    so min-label propagation (O(diameter) rounds, lineage-checkpointed)
-    converges quickly at every scale factor while still exercising
-    multi-round merging; singletons (groups of one) must coalesce to
-    their own id. The oracle recomputes true components as a recursive
-    transitive closure over the identical edge set — a hash match proves
-    the iterative Spark labeler equals the declarative fixpoint,
+    so the distributed path's min-label propagation (O(diameter) rounds)
+    would converge quickly at every scale factor; under the driver-graph
+    cap it is labeled on the driver. Singletons (groups of one) must
+    coalesce to their own id. The oracle recomputes true components as a
+    recursive transitive closure over the identical edge set — a hash
+    match proves the Spark labeler equals the declarative fixpoint,
     independent of any upstream candidate generation (the labeler was
     previously driver-proven only THROUGH near_dedup_minhash)."""
     from pyspark.sql import Window

@@ -1,14 +1,19 @@
 """Invariant tests for the non-SQL dedup operators (SURVEY.md §5.3 #3):
 MinHash-LSH recall against brute-force Jaccard on planted near-duplicates,
-SimHash guarantees, connected-component sanity."""
+SimHash guarantees, and connected components on both of their paths (the
+driver labeler and the distributed label propagation) against a Python
+union-find."""
 
 from __future__ import annotations
 
 import ast
 import hashlib
 import itertools
+import random
+from decimal import Decimal
 from pathlib import Path
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -360,6 +365,223 @@ def test_banding_rejects_uneven_hash_split(spark, tmp_path):
         with pytest.raises(ValueError, match="not divisible"):
             call()
     assert not store.exists()
+
+
+# ---------------------------------------------------------------------------
+# Connected components: the driver labeler and the distributed propagation
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def cc_path(request, monkeypatch):
+    """Runs a test once per connected_components path: the driver labeler
+    under the default cap, and the distributed label propagation with the
+    cap lowered to -1, which even the empty graph exceeds."""
+    if request.param == "distributed":
+        monkeypatch.setattr(dedup, "DRIVER_GRAPH_MAX_EDGES", -1)
+    return request.param
+
+
+def _labels(frame) -> dict:
+    return {r["doc_id"]: r["cluster_id"] for r in frame.collect()}
+
+
+def test_label_components_singletons_and_chains(spark, cc_path):
+    """label_components: chain {1-2-3} merges to min id, pair {10-11}
+    likewise, and node 99 (no edges) keeps its own id — the singleton
+    coalesce that bare connected_components does not do."""
+    nodes = spark.createDataFrame(
+        [(i,) for i in (1, 2, 3, 10, 11, 99)], "doc_id long"
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    )
+    got = _labels(dedup.label_components(nodes, pairs))
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
+
+
+def test_label_components_nonconvergence_raises(spark, monkeypatch):
+    """A chain longer than max_iter must raise on the distributed path,
+    never silently under-merge. (The driver path has no rounds.)"""
+    monkeypatch.setattr(dedup, "DRIVER_GRAPH_MAX_EDGES", -1)
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.label_components(nodes, chain, max_iter=2)
+
+
+def test_connected_components_sum_convergence_check(spark, cc_path):
+    """The r14 convergence check compares exact decimal label sums across
+    rounds (min-propagation is elementwise monotone non-increasing, so an
+    unchanged sum proves a fixpoint). Pin the cases the check must not
+    confuse: an empty pair set terminates immediately with empty labels,
+    and a deep chain (diameter > 1) still fully merges — a premature
+    'converged' would leave mid-chain labels unmerged. The driver path
+    must give the same labels."""
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    assert dedup.connected_components(empty).count() == 0
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    assert _labels(dedup.connected_components(chain)) == {i: 0 for i in range(10)}
+
+    # non-numeric ids take the join-based fallback — same labels
+    schain = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(4)], "id_a string, id_b string"
+    )
+    sgot = _labels(dedup.connected_components(schain))
+    assert sgot == {f"n{i}": "n0" for i in range(5)}
+
+
+def test_cc_self_loop_only_graph_converges_in_one_round(spark, cc_path):
+    """A pair graph whose first propagation round is already a fixpoint
+    (every pair is a self-loop) must converge with max_iter=1 — the
+    sentinel start previously forced a spurious extra round and a
+    RuntimeError under a tight max_iter (ADVICE r14)."""
+    pairs = spark.createDataFrame(
+        [(1, 1), (2, 2), (7, 7)], ["id_a", "id_b"]
+    )
+    out = _labels(dedup.connected_components(pairs, max_iter=1))
+    assert out == {1: 1, 2: 2, 7: 7}
+
+
+def test_cc_empty_pair_graph_returns_empty(spark, cc_path):
+    """The empty pair graph converges immediately (None sums come from
+    emptiness, not overflow — the guard must not fire)."""
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    assert dedup.connected_components(pairs, max_iter=1).count() == 0
+
+
+def test_cc_chain_still_merges_to_min_label(spark, cc_path):
+    """Regression pin for the reworked numeric check: a 4-chain merges to
+    one cluster labeled by its smallest id, in diameter rounds."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], ["id_a", "id_b"]
+    )
+    out = _labels(dedup.connected_components(pairs))
+    assert out == {1: 1, 2: 1, 3: 1, 4: 1}
+
+
+def test_cc_null_ids_are_no_nodes(spark, cc_path):
+    """A NULL id is no node and links nothing: (1, NULL) leaves 1 as a
+    singleton, (NULL, NULL) drops, and NULL never joins 1 and 7 into one
+    component. label_components keeps a NULL node as its own NULL row."""
+    pairs = spark.createDataFrame(
+        [(1, None), (None, None), (None, 7), (3, 4)], "id_a long, id_b long"
+    )
+    rows = sorted(tuple(r) for r in dedup.connected_components(pairs).collect())
+    assert rows == [(1, 1), (3, 3), (4, 3), (7, 7)]
+    nodes = spark.createDataFrame([(1,), (None,), (4,), (7,)], "doc_id long")
+    got = dedup.label_components(nodes, pairs).collect()
+    assert sorted(got, key=lambda r: (r[0] is not None, r[0] or 0)) == [
+        (None, None), (1, 1), (4, 3), (7, 7),
+    ]
+
+
+def _union_find_labels(pairs) -> dict:
+    """Reference labels: plain-Python union-find with the smaller root
+    winning, so every node maps to its component's smallest id."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _random_ids(rng: random.Random, kind: str, n: int) -> list:
+    raw = rng.sample(range(-(10**6), 10**6), n)
+    if kind == "string":
+        # shared prefixes and non-ASCII code points: Spark compares UTF-8
+        # bytes, NumPy and Python compare code points — the same order
+        return [f"{'äz'[v % 2]}{v:+08d}" for v in raw]
+    if kind == "decimal":
+        return [Decimal(v) * 10**12 for v in raw]
+    return [v * 2**40 for v in raw]
+
+
+def _random_graph(seed: int, kind: str) -> list:
+    """Seeded pair list mixing a chain (within the default max_iter),
+    random small clusters and self-loops, over ids of ``kind``, in
+    shuffled order and orientation."""
+    rng = random.Random(seed)
+    ids = _random_ids(rng, kind, 120)
+    pairs = [(ids[i], ids[i + 1]) for i in range(11)]
+    pairs += [(rng.choice(ids[12:]), rng.choice(ids[12:])) for _ in range(40)]
+    pairs += [(v, v) for v in rng.sample(ids, 8)]
+    rng.shuffle(pairs)
+    return [(b, a) if rng.random() < 0.5 else (a, b) for a, b in pairs]
+
+
+_ID_TYPES = {"long": "long", "decimal": "decimal(25,0)", "string": "string"}
+
+
+@pytest.mark.parametrize("kind", sorted(_ID_TYPES))
+def test_cc_paths_match_union_find_reference(spark, monkeypatch, kind):
+    """Both paths and a Python union-find give identical smallest-id labels
+    on seeded graphs (chains, clusters, self-loops, the empty graph) for
+    numeric, decimal and string ids; and on the driver path a chain far
+    longer than max_iter still labels, since no rounds run there."""
+    schema = f"id_a {_ID_TYPES[kind]}, id_b {_ID_TYPES[kind]}"
+    for pair_list in (_random_graph(1, kind), _random_graph(2, kind), []):
+        pairs = spark.createDataFrame(pair_list, schema)
+        want = _union_find_labels(pair_list)
+        assert _labels(dedup.connected_components(pairs)) == want
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "DRIVER_GRAPH_MAX_EDGES", -1)
+            assert _labels(dedup.connected_components(pairs)) == want
+
+    ids = _random_ids(random.Random(3), kind, 201)
+    chain = [(ids[i], ids[i + 1]) for i in range(200)]
+    long_chain = spark.createDataFrame(chain, schema)
+    got = _labels(dedup.connected_components(long_chain, max_iter=2))
+    assert got == _union_find_labels(chain)
+    assert len(set(got.values())) == 1
+
+
+def test_min_id_labels_hooks_across_rounds():
+    """The NumPy labeler on its own: a shuffled 2,000-node chain needs
+    several hook rounds and still lands every node on the smallest id."""
+    rng = np.random.default_rng(5)
+    order = rng.permutation(2000)
+    a, b = order[:-1], order[1:]
+    nodes, labels = dedup.min_id_labels(a, b)
+    assert nodes.tolist() == list(range(2000))
+    assert set(labels.tolist()) == {0}
+
+
+#: Spark jobs one near_dedup_minhash build + collect runs on the sf0.001
+#: documents (statusTracker, its own job group). A change that adds jobs
+#: must raise this budget in its own diff and give the reason in
+#: CHANGES.md.
+NEAR_DEDUP_JOB_BUDGET = 12
+
+
+def test_near_dedup_minhash_job_budget(spark):
+    """The clustering step labels the small verified-pair graph on the
+    driver: building and collecting near_dedup_minhash stays within its
+    job budget (label propagation ran about 37 jobs here)."""
+    sc = spark.sparkContext
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    group = "test_near_dedup_minhash_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        dedup.near_dedup_minhash(docs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= NEAR_DEDUP_JOB_BUDGET, len(jobs)
 
 
 # ---------------------------------------------------------------------------

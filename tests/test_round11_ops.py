@@ -269,66 +269,6 @@ def test_ivf_cache_is_lru_bounded(spark):
     assert _storage_frames(spark) == base
 
 
-# ------------------------------- round-11 public components labeler
-
-
-def test_label_components_singletons_and_chains(spark):
-    """label_components: chain {1-2-3} merges to min id, pair {10-11}
-    likewise, and node 99 (no edges) keeps its own id — the singleton
-    coalesce that bare connected_components does not do."""
-    from sql4pandas_spark.operators.dedup import label_components
-
-    nodes = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 99)], "doc_id long"
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    got = {r["doc_id"]: r["cluster_id"] for r in label_components(nodes, pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
-
-
-def test_label_components_nonconvergence_raises(spark):
-    """A chain longer than max_iter must raise, never silently
-    under-merge."""
-    import pytest as _pytest
-
-    from sql4pandas_spark.operators.dedup import label_components
-
-    nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(7)], "id_a long, id_b long"
-    )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        label_components(nodes, chain, max_iter=2)
-
-
-def test_connected_components_sum_convergence_check(spark):
-    """The r14 convergence check compares exact decimal label sums across
-    rounds (min-propagation is elementwise monotone non-increasing, so an
-    unchanged sum proves a fixpoint). Pin the cases the check must not
-    confuse: an empty pair set terminates immediately with empty labels,
-    and a deep chain (diameter > 1) still fully merges — a premature
-    'converged' would leave mid-chain labels unmerged."""
-    from sql4pandas_spark.operators.dedup import connected_components
-
-    empty = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components(empty).count() == 0
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
-    )
-    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(chain).collect()}
-    assert got == {i: 0 for i in range(10)}
-
-    # non-numeric ids take the join-based fallback — same labels
-    schain = spark.createDataFrame(
-        [(f"n{i}", f"n{i + 1}") for i in range(4)], "id_a string, id_b string"
-    )
-    sgot = {r["doc_id"]: r["cluster_id"] for r in connected_components(schain).collect()}
-    assert sgot == {f"n{i}": "n0" for i in range(5)}
-
-
 def test_transpile_cast_unnest_param_interval_ignore_nulls(spark):
     """The late-round dialect rewrites: cast pushed inside the array
     (generators are top-level-only in Spark), parameterized intervals,

@@ -1,7 +1,7 @@
 """Round-15 optimization-phase focused tests: the spread_for_compute
-parallelism guard, the connected_components convergence-check hardening
-(identity-sum round-1 baseline + loud decimal-overflow guard), and the
-gopher_rules extra_cols collision validation."""
+parallelism guard and the gopher_rules extra_cols collision validation.
+(The connected_components convergence-check tests live in
+tests/test_dedup.py, run on both components paths.)"""
 
 from __future__ import annotations
 
@@ -57,50 +57,6 @@ def test_spread_still_spreads_serial_input(spark):
     # round-robin repartition: same rows, exactly once
     assert out.count() == 1000
     assert out.agg(F.sum("doc_id")).collect()[0][0] == 999 * 1000 // 2
-
-
-# ---------------------- connected_components convergence check
-
-
-def test_cc_self_loop_only_graph_converges_in_one_round(spark):
-    """A pair graph whose first propagation round is already a fixpoint
-    (every pair is a self-loop) must converge with max_iter=1 — the
-    sentinel start previously forced a spurious extra round and a
-    RuntimeError under a tight max_iter (ADVICE r14)."""
-    from sql4pandas_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(1, 1), (2, 2), (7, 7)], ["id_a", "id_b"]
-    )
-    out = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs, max_iter=1).collect()
-    }
-    assert out == {1: 1, 2: 2, 7: 7}
-
-
-def test_cc_empty_pair_graph_returns_empty(spark):
-    """The empty pair graph converges immediately (None sums come from
-    emptiness, not overflow — the guard must not fire)."""
-    from sql4pandas_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components(pairs, max_iter=1).count() == 0
-
-
-def test_cc_chain_still_merges_to_min_label(spark):
-    """Regression pin for the reworked numeric check: a 4-chain merges to
-    one cluster labeled by its smallest id, in diameter rounds."""
-    from sql4pandas_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], ["id_a", "id_b"]
-    )
-    out = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs).collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1}
 
 
 # ---------------------- gopher_rules extra_cols validation

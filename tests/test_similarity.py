@@ -109,8 +109,9 @@ def test_broadcast_cap_raises_cleanly_and_lsh_path_survives(spark):
     """The declared beyond-broadcast contract (round-5 verdict praised the
     guard; this pins it): past BROADCAST_MAX_ROWS the matmul plan must
     refuse with an actionable error — not OOM the driver — and the
-    LSH-bucketed path must keep working on the very same table, because it
-    never collects the matrix driver-side."""
+    LSH-bucketed path must keep working on the very same table. (Under
+    the cap LSH also scores against the broadcast matrix; its beyond-cap
+    fallback is pinned by test_ann_lsh_fallback_matches_broadcast_path.)"""
     import pytest as _pytest
 
     from sql4pandas_spark.operators.similarity import (
@@ -126,6 +127,36 @@ def test_broadcast_cap_raises_cleanly_and_lsh_path_survives(spark):
     # the scale path: bucketed candidates, no driver-side matrix
     out = ann_lsh_topk(emb, k=5)
     assert 0 < out.count() <= 5
+
+
+def test_ann_lsh_fallback_matches_broadcast_path(spark, emb, monkeypatch):
+    """Beyond the broadcast cap ann_lsh_topk joins the embeddings onto the
+    candidate pairs (score_attached) instead of looking them up in the
+    broadcast matrix; both paths return identical (id_a, id_b, sim) rows."""
+    broadcast_rows = similarity.ann_lsh_topk(emb, k=40).collect()
+
+    calls = []
+
+    def over_cap(*args, **kwargs):
+        calls.append(args)
+        raise ValueError("embedding table exceeds broadcast cap 0 rows")
+
+    monkeypatch.setattr(similarity, "_broadcast_embedding_matrix", over_cap)
+    fallback_rows = similarity.ann_lsh_topk(emb, k=40).collect()
+    assert len(calls) == 1 and len(broadcast_rows) == 40
+    assert [tuple(r) for r in fallback_rows] == [tuple(r) for r in broadcast_rows]
+
+
+def test_ann_lsh_rejects_duplicate_ids_on_the_driver(spark):
+    """Scoring looks ids up in the broadcast matrix, which needs each id
+    once: a repeated id raises on the driver, naming it, instead of an
+    InvalidIndexError inside a Python worker."""
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (2, [0.6, 0.8]), (3, [0.8, 0.6])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match=r"unique vec_id values; repeated: \[2\]"):
+        similarity.ann_lsh_topk(emb, k=5)
 
 
 def test_centroid_outlier_stats_hand_case(spark):

@@ -19,6 +19,14 @@ Catalyst's analyzer rather than silently misbehaving; call shapes that
 cannot be made safe (a non-literal string_split separator, a non-'g'
 regexp flag) raise here.
 
+One lexer, :class:`_Lex`, is the only place that decides which characters
+are protected (string literals, quoted identifiers, comments) and which
+bracket closes which. Every rewrite builds it once per version of the text
+and asks it for protected spans, bracket partners, the enclosing
+parenthesis, keyword matches at the top of a range or at any depth, and
+top-level splits; plans/recursive.py parses WITH RECURSIVE with the same
+lexer.
+
 Statement-level parity is proven at catalog width by
 tools/transpile_sweep.py: every sql-oracled entry's own DuckDB oracle text
 runs through this module on Spark and value-hash-matches DuckDB's result
@@ -32,7 +40,8 @@ rewritten text — no UDFs, no wrapper nodes, zero runtime cost.
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from bisect import bisect_left, bisect_right
+from collections.abc import Callable, Iterator
 
 from sql4pandas_spark.functions import SPARK_TO_DUCKDB_FN
 
@@ -98,14 +107,140 @@ _PROTECTED_SRC = r"""
   | --[^\n]*                           # -- line comment
   | /\*(?:[^*]|\*(?!/))*\*/            # /* block comment */
 """
-_PROTECTED = re.compile(_PROTECTED_SRC, re.VERBOSE)
-_TOKEN = re.compile(
-    rf"""
-    (?P<protected>{_PROTECTED_SRC})
-  | (?P<fn>\b[A-Za-z_][A-Za-z0-9_]*\b)(?=\s*\()   # name followed by (
-    """,
-    re.VERBOSE,
-)
+_IDENT_CHARS = set("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789_")
+_OPENER = {")": "(", "]": "[", "}": "{"}
+
+
+class _Lex:
+    """One scan of one SQL text: its protected tokens and its brackets.
+
+    Built once per text version and handed to every rewrite that reads
+    that version. Outside protected tokens, each ``(``, ``[`` and ``{`` is
+    paired with the next closer of its own kind, innermost first. A closer
+    whose kind does not match the innermost open bracket pairs with
+    nothing and closes nothing, so an unmatched bracket never moves the
+    nesting of the text around it.
+
+    A position's *level* is its innermost open bracket of any kind (None
+    at the top). Matches "at the top" of a range ``[a, b)`` are those at
+    the level of ``a``: for a range inside one bracket group, exactly the
+    depth-0 matches of the substring.
+    """
+
+    _TOKENS = re.compile(
+        rf"(?P<protected>{_PROTECTED_SRC})|[()\[\]{{}}]", re.VERBOSE
+    )
+
+    def __init__(self, text: str):
+        self.text = text
+        self._starts: list[int] = []  # protected spans, in order
+        self._ends: list[int] = []
+        self._at: list[int] = []  # unprotected brackets, in order
+        self._level: list[int | None] = []  # innermost open bracket after each
+        self._paren: list[int | None] = []  # innermost open '(' after each
+        self._partner: dict[int, int] = {}
+        stack: list[int] = []
+        parens: list[int] = []
+        for m in self._TOKENS.finditer(text):
+            i = m.start()
+            if m.lastgroup:
+                self._starts.append(i)
+                self._ends.append(m.end())
+                continue
+            c = text[i]
+            if c in "([{":
+                stack.append(i)
+                if c == "(":
+                    parens.append(i)
+            elif stack and text[stack[-1]] == _OPENER[c]:
+                j = stack.pop()
+                self._partner[i], self._partner[j] = j, i
+                if c == ")":
+                    parens.pop()
+            self._at.append(i)
+            self._level.append(stack[-1] if stack else None)
+            self._paren.append(parens[-1] if parens else None)
+
+    def protected_at(self, i: int) -> tuple[int, int] | None:
+        """The (start, end) of the protected token holding ``i``, if any."""
+        k = bisect_right(self._starts, i) - 1
+        if k >= 0 and i < self._ends[k]:
+            return self._starts[k], self._ends[k]
+        return None
+
+    def partner(self, i: int, error: str | None = None) -> int | None:
+        """Index of the bracket paired with the one at ``i``. An unpaired
+        bracket gives None, or raises ``ValueError(error)`` when given."""
+        j = self._partner.get(i)
+        if j is None and error is not None:
+            raise ValueError(error)
+        return j
+
+    def _level_of(self, i: int) -> int | None:
+        k = bisect_left(self._at, i) - 1
+        return self._level[k] if k >= 0 else None
+
+    def enclosing(self, i: int) -> int | None:
+        """Index of the innermost ``(`` opened before ``i`` and still open."""
+        k = bisect_left(self._at, i) - 1
+        return self._paren[k] if k >= 0 else None
+
+    def matches(self, pattern: re.Pattern, a: int = 0, b: int | None = None,
+                *, top: bool = True) -> Iterator[re.Match]:
+        """Matches of ``pattern`` in ``[a, b)`` that start outside protected
+        tokens: at the top of the range, or at any depth if not ``top``."""
+        b = len(self.text) if b is None else b
+        level = self._level_of(a)
+        for m in pattern.finditer(self.text, a, b):
+            i = m.start()
+            if self.protected_at(i) is None and (
+                not top or self._level_of(i) == level
+            ):
+                yield m
+
+    def keywords(self, words: str, a: int = 0, b: int | None = None,
+                 *, top: bool = True) -> Iterator[re.Match]:
+        """:meth:`matches` of the case-insensitive keyword alternation
+        ``words``, bounded as whole words."""
+        pattern = re.compile(rf"(?<![0-9A-Za-z_])(?:{words})\b", re.IGNORECASE)
+        return self.matches(pattern, a, b, top=top)
+
+    def split(self, sep: str, a: int = 0, b: int | None = None) -> list[tuple[int, int]]:
+        """(start, end) of the pieces of ``[a, b)`` between the separators
+        at its top: ``sep`` is one punctuation character or a keyword."""
+        b = len(self.text) if b is None else b
+        if sep[0] in _IDENT_CHARS:
+            cuts = self.keywords(sep, a, b)
+        else:
+            cuts = self.matches(re.compile(re.escape(sep)), a, b)
+        edges = [a]
+        for m in cuts:
+            edges += m.span()
+        edges.append(b)
+        return list(zip(edges[::2], edges[1::2]))
+
+    def segments(self) -> list[str]:
+        """The text cut at its protected tokens: code at even indexes,
+        protected tokens at odd ones."""
+        out, pos = [], 0
+        for s, e in zip(self._starts, self._ends):
+            out += [self.text[pos:s], self.text[s:e]]
+            pos = e
+        out.append(self.text[pos:])
+        return out
+
+    def skip(self, i: int) -> int:
+        """First index at or after ``i`` that is neither whitespace nor in
+        a comment."""
+        while i < len(self.text):
+            if self.text[i].isspace():
+                i += 1
+                continue
+            span = self.protected_at(i)
+            if not span or self.text[span[0]] not in "-/":
+                break
+            i = span[1]
+        return i
 
 # ------------------------------------------------- argument-aware rewrites
 
@@ -520,47 +655,21 @@ def _rewrite_calls(statement: str, validate: bool = False) -> str:
     ')' or ',' inside a literal never splits args). ``validate`` runs the
     :data:`_SOURCE_SHAPE_VALIDATORS` too — set only for the first fixpoint
     pass, where every call site is still source text."""
-    spans = [t.span() for t in _PROTECTED.finditer(statement)]
-
-    def in_protected(i: int) -> tuple[bool, int]:
-        for s, e in spans:
-            if s <= i < e:
-                return True, e
-        return False, i
-
+    lex = _Lex(statement)
     edits: list[tuple[int, int, str]] = []  # (start, end, replacement)
     for m in _ARG_CALL.finditer(statement):
-        hit, _ = in_protected(m.start())
-        if hit:
+        if lex.protected_at(m.start()):
             continue
         name = m.group(1).lower()
         if name == "range" and _FROM_TAIL.search(statement[: m.start()]):
             continue  # table-function position: Spark range TVF matches
-        depth, i = 1, m.end()
-        arg_starts = [m.end()]
-        while i < len(statement) and depth:
-            hit, end = in_protected(i)
-            if hit:
-                i = end
-                continue
-            c = statement[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "," and depth == 1:
-                arg_starts.append(i + 1)
-            i += 1
-        if depth:
-            raise ValueError(
-                f"transpile_duckdb: unbalanced {name} call at: "
-                f"{statement[m.start():m.start() + 60]!r}"
-            )
-        bounds = arg_starts + [i]  # arg k spans bounds[k]..bounds[k+1]-1
-        args = [
-            statement[bounds[k] : bounds[k + 1] - 1]
-            for k in range(len(arg_starts))
-        ]
+        close = lex.partner(
+            m.end() - 1,
+            f"transpile_duckdb: unbalanced {name} call at: "
+            f"{statement[m.start():m.start() + 60]!r}",
+        )
+        i = close + 1
+        args = [statement[a:b] for a, b in lex.split(",", m.end(), close)]
         if args == [""]:
             args = []
         if validate and name in _SOURCE_SHAPE_VALIDATORS:
@@ -612,8 +721,6 @@ def _rewrite_calls_fixpoint(statement: str) -> str:
 # bounds (ansi-safe). DuckDB slice syntax xs[a:b] has no textual Spark
 # equivalent and raises.
 
-_IDENT_CHARS = set("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789_")
-
 #: words that can directly precede a LIST LITERAL — a bracket after one of
 #: these is never an element access on the keyword itself
 _KEYWORDS_BEFORE_LITERAL = {
@@ -621,6 +728,11 @@ _KEYWORDS_BEFORE_LITERAL = {
     "IN", "ON", "BY", "HAVING", "RETURN", "RETURNS", "UNION", "ALL",
     "DISTINCT", "AS", "CASE", "BETWEEN", "LIMIT", "OFFSET",
 }
+
+
+_LBRACKET = re.compile(r"\[")
+_LBRACE = re.compile(r"\{")
+_POWER = re.compile(r"\*\*")
 
 
 def _rewrite_brackets(statement: str) -> str:
@@ -634,29 +746,15 @@ def _rewrite_brackets(statement: str) -> str:
 
 
 def _rewrite_brackets_once(statement: str) -> str | None:
-    spans = [t.span() for t in _PROTECTED.finditer(statement)]
-
-    def span_at(i: int) -> tuple[int, int] | None:
-        for s, e in spans:
-            if s <= i < e:
-                return (s, e)
-        return None
-
-    i = 0
-    while i < len(statement):
-        pr = span_at(i)
-        if pr:
-            i = pr[1]
-            continue
-        if statement[i] != "[":
-            i += 1
-            continue
+    lex = _Lex(statement)
+    for mb in lex.matches(_LBRACKET, top=False):
+        i = mb.start()
         # classify by previous non-space character (protected span counts
         # as a token: string-literal or quoted-identifier base)
         j = i - 1
         while j >= 0 and statement[j].isspace():
             j -= 1
-        prev_span = span_at(j) if j >= 0 else None
+        prev_span = lex.protected_at(j) if j >= 0 else None
         is_access = j >= 0 and (
             prev_span is not None
             or statement[j] in ")]"
@@ -669,29 +767,12 @@ def _rewrite_brackets_once(statement: str) -> str | None:
                 w -= 1
             if statement[w + 1 : j + 1].upper() in _KEYWORDS_BEFORE_LITERAL:
                 is_access = False
-        # find the matching ']' (balanced, protected-opaque)
-        depth, k, top_colon = 1, i + 1, False
-        while k < len(statement) and depth:
-            pr = span_at(k)
-            if pr:
-                k = pr[1]
-                continue
-            c = statement[k]
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif c == ":" and depth == 1:
-                top_colon = True
-            k += 1
-        if depth:
-            raise ValueError(
-                "transpile_duckdb: unbalanced '[' at: "
-                f"{statement[i:i + 40]!r}"
-            )
+        k = 1 + lex.partner(
+            i, f"transpile_duckdb: unbalanced '[' at: {statement[i:i + 40]!r}"
+        )
         inner = statement[i + 1 : k - 1]
         if not is_access:
-            comp = _parse_comprehension(inner)
+            comp = _parse_comprehension(lex, i + 1, k - 1)
             if comp is not None:
                 expr, var, src, cond = comp
                 if cond is not None:
@@ -703,7 +784,7 @@ def _rewrite_brackets_once(statement: str) -> str | None:
                     repl = f"transform({src}, {var} -> {expr})"
                 return statement[:i] + repl + statement[k:]
             return statement[:i] + "array(" + inner + ")" + statement[k:]
-        if top_colon:
+        if len(lex.split(":", i + 1, k - 1)) > 1:
             raise ValueError(
                 "transpile_duckdb: list slice syntax xs[a:b] has no Spark "
                 f"equivalent at: {statement[i - 10 if i >= 10 else 0:k]!r}"
@@ -713,9 +794,8 @@ def _rewrite_brackets_once(statement: str) -> str | None:
             # BOTH structs (field access) and maps (NULL when missing,
             # matching DuckDB) — pass through verbatim. try_element_at
             # would reject structs.
-            i = k
             continue
-        base_start = _base_start(statement, j, spans)
+        base_start = _base_start(lex, j)
         base = statement[base_start : j + 1]
         if inner.strip() == "":
             # TYPE[] array-type suffix (an empty index is never valid SQL)
@@ -734,31 +814,6 @@ def _rewrite_brackets_once(statement: str) -> str | None:
     return None
 
 
-def _spans_of(statement: str) -> list[tuple[int, int]]:
-    return [t.span() for t in _PROTECTED.finditer(statement)]
-
-
-def _split_top(s: str, sep: str) -> list[str]:
-    """Split on depth-0 unprotected occurrences of the single char ``sep``."""
-    parts, depth, i, start = [], 0, 0, 0
-    while i < len(s):
-        m = _PROTECTED.match(s, i)
-        if m:
-            i = m.end()
-            continue
-        c = s[i]
-        if c in "([{":
-            depth += 1
-        elif c in ")]}":
-            depth -= 1
-        elif c == sep and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-        i += 1
-    parts.append(s[start:])
-    return parts
-
-
 def _rewrite_struct_literals(statement: str) -> str:
     """DuckDB ``{'k': v, …}`` struct literals → named_struct('k', v, …);
     a ``MAP {'k': v}`` prefix → map('k', v, …)."""
@@ -771,103 +826,59 @@ def _rewrite_struct_literals(statement: str) -> str:
 
 
 def _rewrite_struct_once(statement: str) -> str | None:
-    spans = _spans_of(statement)
-
-    def span_at(i: int) -> tuple[int, int] | None:
-        for s, e in spans:
-            if s <= i < e:
-                return (s, e)
+    lex = _Lex(statement)
+    m = next(lex.matches(_LBRACE, top=False), None)
+    if m is None:
         return None
-
-    i = 0
-    while i < len(statement):
-        pr = span_at(i)
-        if pr:
-            i = pr[1]
-            continue
-        if statement[i] != "{":
-            i += 1
-            continue
-        depth, k = 1, i + 1
-        while k < len(statement) and depth:
-            pr = span_at(k)
-            if pr:
-                k = pr[1]
-                continue
-            if statement[k] in "([{":
-                depth += 1
-            elif statement[k] in ")]}":
-                depth -= 1
-            k += 1
-        if depth:
+    i = m.start()
+    k = 1 + lex.partner(
+        i, f"transpile_duckdb: unbalanced '{{' at: {statement[i:i+40]!r}"
+    )
+    fields: list[str] = []
+    for a, b in lex.split(",", i + 1, k - 1):
+        kv = [statement[x:y].strip() for x, y in lex.split(":", a, b)]
+        if len(kv) != 2 or not re.fullmatch(r"'(?:[^']|'')*'", kv[0]):
             raise ValueError(
-                f"transpile_duckdb: unbalanced '{{' at: {statement[i:i+40]!r}"
+                "transpile_duckdb: struct literal field must be "
+                f"'key': value (got {statement[a:b].strip()!r})"
             )
-        inner = statement[i + 1 : k - 1]
-        fields: list[str] = []
-        for pair in _split_top(inner, ","):
-            kv = _split_top(pair, ":")
-            if len(kv) != 2 or not re.fullmatch(
-                r"'(?:[^']|'')*'", kv[0].strip()
-            ):
-                raise ValueError(
-                    "transpile_duckdb: struct literal field must be "
-                    f"'key': value (got {pair.strip()!r})"
-                )
-            fields.append(f"{kv[0].strip()}, {kv[1].strip()}")
-        # MAP {'k': v} prefix → a map, not a struct
-        j = i - 1
-        while j >= 0 and statement[j].isspace():
-            j -= 1
-        w = j
-        while w >= 0 and statement[w] in _IDENT_CHARS:
-            w -= 1
-        if statement[w + 1 : j + 1].upper() == "MAP":
-            return (
-                statement[: w + 1]
-                + f"map({', '.join(fields)})"
-                + statement[k:]
-            )
+        fields.append(f"{kv[0]}, {kv[1]}")
+    # MAP {'k': v} prefix → a map, not a struct
+    j = i - 1
+    while j >= 0 and statement[j].isspace():
+        j -= 1
+    w = j
+    while w >= 0 and statement[w] in _IDENT_CHARS:
+        w -= 1
+    if statement[w + 1 : j + 1].upper() == "MAP":
         return (
-            statement[:i]
-            + f"named_struct({', '.join(fields)})"
+            statement[: w + 1]
+            + f"map({', '.join(fields)})"
             + statement[k:]
         )
-    return None
+    return (
+        statement[:i]
+        + f"named_struct({', '.join(fields)})"
+        + statement[k:]
+    )
 
 
 def _rewrite_power(statement: str) -> str:
     """DuckDB's ``**`` operator → power(l, r) (Spark's ``^`` is xor)."""
     for _ in range(100):
-        spans = _spans_of(statement)
-
-        def span_at(i: int) -> tuple[int, int] | None:
-            for s, e in spans:
-                if s <= i < e:
-                    return (s, e)
-            return None
-
-        pos = None
-        i = 0
-        while i < len(statement) - 1:
-            pr = span_at(i)
-            if pr:
-                i = pr[1]
-                continue
-            if statement[i] == "*" and statement[i + 1] == "*":
-                pos = i
-                break
-            i += 1
-        if pos is None:
+        lex = _Lex(statement)
+        m = next(lex.matches(_POWER, top=False), None)
+        if m is None:
             return statement
+        pos = m.start()
         j = pos - 1
         while j >= 0 and statement[j].isspace():
             j -= 1
-        ls = _base_start(statement, j, spans)
+        ls = _base_start(lex, j)
         r0 = pos + 2
         while r0 < len(statement) and statement[r0].isspace():
             r0 += 1
-        re_ = _forward_primary(statement, r0, spans)
+        re_ = _forward_primary(lex, r0)
         left = statement[ls : j + 1]
         right = statement[r0:re_]
         statement = (
@@ -876,22 +887,16 @@ def _rewrite_power(statement: str) -> str:
     raise ValueError("transpile_duckdb: power rewriting did not stabilize")
 
 
-def _forward_primary(s: str, i: int, spans: list[tuple[int, int]]) -> int:
+def _forward_primary(lex: _Lex, i: int) -> int:
     """End index of the primary expression starting at ``i``: an optional
     sign, then a literal / identifier chain / call / parenthesized group,
     with trailing ``(…)``, ``[…]`` and ``.field`` links."""
-
-    def span_at(k: int) -> tuple[int, int] | None:
-        for a, b in spans:
-            if a <= k < b:
-                return (a, b)
-        return None
-
+    s = lex.text
     if i < len(s) and s[i] in "+-":
         i += 1
         while i < len(s) and s[i].isspace():
             i += 1
-    pr = span_at(i)
+    pr = lex.protected_at(i)
     if pr:
         i = pr[1]
     elif i < len(s) and (s[i].isdigit() or s[i] == "."):
@@ -908,18 +913,8 @@ def _forward_primary(s: str, i: int, spans: list[tuple[int, int]]) -> int:
         )
     while i < len(s):
         if s[i] in "([":
-            opener, closer = s[i], ")" if s[i] == "(" else "]"
-            depth, i = 1, i + 1
-            while i < len(s) and depth:
-                pr = span_at(i)
-                if pr:
-                    i = pr[1]
-                    continue
-                if s[i] == opener:
-                    depth += 1
-                elif s[i] == closer:
-                    depth -= 1
-                i += 1
+            close = lex.partner(i)
+            i = len(s) if close is None else close + 1
         elif s[i] == "." and i + 1 < len(s) and s[i + 1] in _IDENT_CHARS:
             i += 1
             while i < len(s) and s[i] in _IDENT_CHARS:
@@ -929,41 +924,25 @@ def _forward_primary(s: str, i: int, spans: list[tuple[int, int]]) -> int:
     return i
 
 
+_LATERAL_UNNEST = re.compile(r",\s*unnest\s*\(", re.IGNORECASE)
+
+
 def _rewrite_lateral_unnest(statement: str) -> str:
     """``FROM t, unnest(arr) AS u(x)`` → ``FROM t LATERAL VIEW
     explode(arr) u AS x`` (the comma-join lateral table function)."""
-    pat = re.compile(r",\s*unnest\s*\(", re.IGNORECASE)
     while True:
-        spans = _spans_of(statement)
-
-        def span_at(i: int) -> tuple[int, int] | None:
-            for a, b in spans:
-                if a <= i < b:
-                    return (a, b)
-            return None
-
-        m = None
-        for cand in pat.finditer(statement):
-            if span_at(cand.start()) is None:
-                m = cand
-                break
+        lex = _Lex(statement)
+        m = next(lex.matches(_LATERAL_UNNEST, top=False), None)
         if m is None:
             return statement
-        depth, k = 1, m.end()
-        while k < len(statement) and depth:
-            pr = span_at(k)
-            if pr:
-                k = pr[1]
-                continue
-            if statement[k] == "(":
-                depth += 1
-            elif statement[k] == ")":
-                depth -= 1
-            k += 1
+        close = lex.partner(m.end() - 1)
+        if close is None:
+            return statement  # not the narrow shape — leave for Catalyst
+        k = close + 1
         alias = re.match(
             r"\s+AS\s+(\w+)\s*\(\s*(\w+)\s*\)", statement[k:], re.IGNORECASE
         )
-        if depth or not alias:
+        if not alias:
             return statement  # not the narrow shape — leave for Catalyst
         args = statement[m.end() : k - 1]
         statement = (
@@ -980,25 +959,12 @@ _PARAM_INTERVAL = re.compile(r"\bINTERVAL\s*\(", re.IGNORECASE)
 _DT_INTERVAL_SLOT = {"DAY": 0, "HOUR": 1, "MINUTE": 2, "SECOND": 3}
 
 
-def _balanced_end(s: str, i: int, spans: list[tuple[int, int]]) -> int:
-    """Index just past the ')' matching the '(' that ``i`` points past."""
-    depth = 1
-    while i < len(s) and depth:
-        hit = False
-        for a, b in spans:
-            if a <= i < b:
-                i, hit = b, True
-                break
-        if hit:
-            continue
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        raise ValueError(f"transpile_duckdb: unbalanced '(' near: {s[i-40:i]!r}")
-    return i
+def _past_close(lex: _Lex, open_idx: int) -> int:
+    """Index just past the ')' paired with the '(' at ``open_idx``."""
+    n = len(lex.text)
+    return 1 + lex.partner(
+        open_idx, f"transpile_duckdb: unbalanced '(' near: {lex.text[n - 40:n]!r}"
+    )
 
 
 def _rewrite_cast_unnest(statement: str) -> str:
@@ -1007,18 +973,11 @@ def _rewrite_cast_unnest(statement: str) -> str:
     enclosing cast is pushed INSIDE the array instead — identical
     semantics, and the later rename pass turns unnest into explode."""
     while True:
-        spans = _spans_of(statement)
-        m = next(
-            (
-                c
-                for c in _CAST_UNNEST.finditer(statement)
-                if not any(a <= c.start() < b for a, b in spans)
-            ),
-            None,
-        )
+        lex = _Lex(statement)
+        m = next(lex.matches(_CAST_UNNEST, top=False), None)
         if m is None:
             return statement
-        inner_end = _balanced_end(statement, m.end(), spans)  # past unnest's ')'
+        inner_end = _past_close(lex, m.end() - 1)  # past unnest's ')'
         tail = re.match(
             r"\s*AS\s+(\w+(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)\s*\)",
             statement[inner_end:],
@@ -1045,18 +1004,11 @@ def _rewrite_param_interval(statement: str) -> str:
     MINUTE`` spellings (no parenthesis) are shared syntax and pass
     through untouched."""
     while True:
-        spans = _spans_of(statement)
-        m = next(
-            (
-                c
-                for c in _PARAM_INTERVAL.finditer(statement)
-                if not any(a <= c.start() < b for a, b in spans)
-            ),
-            None,
-        )
+        lex = _Lex(statement)
+        m = next(lex.matches(_PARAM_INTERVAL, top=False), None)
         if m is None:
             return statement
-        end = _balanced_end(statement, m.end(), spans)
+        end = _past_close(lex, m.end() - 1)
         unit = re.match(
             r"\s*(DAY|HOUR|MINUTE|SECOND)S?\b", statement[end:], re.IGNORECASE
         )
@@ -1084,7 +1036,7 @@ def _rewrite_exclude(statement: str) -> str:
     ``* EXCEPT (a, b)`` — same column-subtraction star, different
     keyword. Only the star-adjacent spelling rewrites; EXCLUDE as a
     plain identifier elsewhere is untouched."""
-    parts = re.split(rf"({_PROTECTED_SRC})", statement, flags=re.VERBOSE)
+    parts = _Lex(statement).segments()
     for i in range(0, len(parts), 2):
         p = _EXCLUDE_PARENS.sub(r"\1EXCEPT (", parts[i])
         parts[i] = _EXCLUDE_BARE.sub(r"\1EXCEPT (\2)", p)
@@ -1092,92 +1044,18 @@ def _rewrite_exclude(statement: str) -> str:
 
 
 #: clause keywords that terminate a QUALIFY predicate at depth 0.
-_QUALIFY_TERMINATORS = ("ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
+_QUALIFY_TERMINATORS = "ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT"
+_AS_ALIAS = re.compile(r"\bAS\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", re.IGNORECASE)
 
 
-def _any_depth_keyword(
-    s: str, kw: str, start: int = 0
-) -> tuple[int, int | None] | None:
-    """(pos, innermost enclosing '(' index) of the first unprotected,
-    word-bounded ``kw`` at ANY depth at or after ``start``; None when
-    absent. The paren stack is tracked from the string start so
-    ``start`` never desynchronizes scope depth."""
-    pat = re.compile(rf"{kw}\b", re.IGNORECASE)
-    stack: list[int] = []
-    i = 0
-    while i < len(s):
-        m = _PROTECTED.match(s, i)
-        if m:
-            i = m.end()
-            continue
-        c = s[i]
-        if c == "(":
-            stack.append(i)
-        elif c == ")":
-            if stack:
-                stack.pop()
-        elif i >= start and (i == 0 or s[i - 1] not in _IDENT_CHARS):
-            mm = pat.match(s, i)
-            if mm:
-                return i, (stack[-1] if stack else None)
-        i += 1
-    return None
-
-
-def _matching_paren(s: str, open_idx: int) -> int:
-    depth = 0
-    i = open_idx
-    while i < len(s):
-        m = _PROTECTED.match(s, i)
-        if m:
-            i = m.end()
-            continue
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("transpile_duckdb: unbalanced parentheses")
-
-
-def _top_keyword_positions(s: str, kw: str) -> list[int]:
-    """All depth-0 unprotected word-bounded positions of ``kw`` in ``s``."""
-    out: list[int] = []
-    pat = re.compile(rf"{kw}\b", re.IGNORECASE)
-    depth = 0
-    i = 0
-    while i < len(s):
-        m = _PROTECTED.match(s, i)
-        if m:
-            i = m.end()
-            continue
-        c = s[i]
-        if c in "([{":
-            depth += 1
-        elif c in ")]}":
-            depth -= 1
-        elif depth == 0 and (i == 0 or s[i - 1] not in _IDENT_CHARS):
-            if pat.match(s, i):
-                out.append(i)
-        i += 1
-    return out
-
-
-def _select_alias_map(select_list: str) -> dict[str, str]:
+def _select_alias_map(lex: _Lex, a: int, b: int) -> dict[str, str]:
     """alias (lowercased) -> defining expression, for explicit ``expr AS
-    alias`` items of a select list."""
+    alias`` items of the select list at ``[a, b)``."""
     out: dict[str, str] = {}
-    for item in _split_top(select_list, ","):
-        it = item.strip()
-        m = re.search(
-            r"\bAS\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", it, re.IGNORECASE
-        )
-        if m and not any(
-            a <= m.start() < b for a, b in _spans_of(it)
-        ):
-            out[m.group(1).lower()] = it[: m.start()].strip()
+    for x, y in lex.split(",", a, b):
+        m = _AS_ALIAS.search(lex.text, x, y)
+        if m and not lex.protected_at(m.start()):
+            out[m.group(1).lower()] = lex.text[x : m.start()].strip()
     return out
 
 
@@ -1194,7 +1072,7 @@ def _expand_aliases(pred: str, aliases: dict[str, str]) -> str:
         return pred
     for _ in range(5):
         changed = False
-        parts = re.split(rf"({_PROTECTED_SRC})", pred, flags=re.VERBOSE)
+        parts = _Lex(pred).segments()
         for i in range(0, len(parts), 2):
             def _sub(m: re.Match) -> str:
                 nonlocal changed
@@ -1217,9 +1095,10 @@ def _expand_aliases(pred: str, aliases: dict[str, str]) -> str:
     return pred
 
 
-def _rewrite_qualify_branch(s: str) -> str:
-    """Rewrite the first depth-0 QUALIFY in ``s`` (a SELECT statement or
-    set-operation branch) into the subquery-plus-WHERE form::
+def _rewrite_qualify_branch(lex: _Lex, a: int, b: int) -> str:
+    """Rewrite the first depth-0 QUALIFY in the text at ``[a, b)`` (a
+    SELECT statement or set-operation branch) into the subquery-plus-WHERE
+    form, and return the rewritten text of that range::
 
         SELECT <list> FROM … QUALIFY <pred> <tail>
         → SELECT * EXCEPT (__qualify) FROM
@@ -1232,54 +1111,46 @@ def _rewrite_qualify_branch(s: str) -> str:
     expressions, and base columns absent from the select list all work —
     the three QUALIFY idioms. Catalyst de-duplicates the repeated window
     spec, so expansion costs nothing at runtime."""
-    q = _find_top_keyword(s, "QUALIFY")
+    s = lex.text
+    q = next(lex.keywords("QUALIFY", a, b), None)
     assert q is not None
-    q_start, q_end = q
-    after = s[q_end:]
-    term_rel = [
-        pos
-        for kw in _QUALIFY_TERMINATORS
-        for pos in _top_keyword_positions(after, kw)[:1]
-    ]
-    pred_end_rel = min(term_rel) if term_rel else len(after)
-    pred = after[:pred_end_rel].strip()
-    tail = after[pred_end_rel:]
+    q_start = q.start()
+    term = next(lex.keywords(_QUALIFY_TERMINATORS, q.end(), b), None)
+    pred_end = term.start() if term else b
+    pred = s[q.end() : pred_end].strip()
+    tail = s[pred_end:b]
 
-    sel_positions = [p for p in _top_keyword_positions(s[:q_start], "SELECT")]
+    sel_positions = [m.start() for m in lex.keywords("SELECT", a, q_start)]
     if not sel_positions:
         raise ValueError("transpile_duckdb: QUALIFY without an owning SELECT")
     sp = sel_positions[-1]
-    body = s[sp:q_start]
-    if re.match(r"SELECT\s+DISTINCT\b", body, re.IGNORECASE):
+    if re.compile(r"SELECT\s+DISTINCT\b", re.IGNORECASE).match(s, sp, q_start):
         raise ValueError(
             "transpile_duckdb: QUALIFY combined with SELECT DISTINCT is "
             "not supported (DISTINCT applies after QUALIFY and the "
             "subquery rewrite cannot preserve that ordering) — "
             "deduplicate in an outer query instead"
         )
+    group_by_all = re.compile(r"GROUP\s+BY\s+ALL\b", re.IGNORECASE)
     if any(
-        re.match(r"GROUP\s+BY\s+ALL\b", body[p:], re.IGNORECASE)
-        for p in _top_keyword_positions(body, "GROUP")
+        group_by_all.match(s, m.start(), q_start)
+        for m in lex.keywords("GROUP", sp, q_start)
     ):
         raise ValueError(
             "transpile_duckdb: QUALIFY combined with GROUP BY ALL is not "
             "supported (the injected predicate column would change what "
             "ALL resolves to) — spell out the grouping keys"
         )
-    from_kw = _find_top_keyword(body, "FROM")
+    from_kw = next(lex.keywords("FROM", sp, q_start), None)
     if from_kw is None:
         raise ValueError(
             "transpile_duckdb: QUALIFY requires a FROM clause in its SELECT"
         )
-    select_list = body[len("SELECT") : from_kw[0]]
-    pred = _expand_aliases(pred, _select_alias_map(select_list))
-    extended = (
-        body[: from_kw[0]].rstrip()
-        + f", ({pred}) AS __qualify "
-        + body[from_kw[0] :]
-    )
+    fp = from_kw.start()
+    pred = _expand_aliases(pred, _select_alias_map(lex, sp + len("SELECT"), fp))
+    extended = s[sp:fp].rstrip() + f", ({pred}) AS __qualify " + s[fp:q_start]
     return (
-        s[:sp]
+        s[a:sp]
         + "SELECT * EXCEPT (__qualify) FROM ("
         + extended
         + ") WHERE __qualify"
@@ -1301,48 +1172,27 @@ _HOF_EXPANDING = (
 )
 
 _SELECT_CLAUSE_END = (
-    "WHERE", "GROUP", "HAVING", "WINDOW", "QUALIFY", "ORDER", "LIMIT",
-    "OFFSET", "UNION", "INTERSECT", "EXCEPT",
+    "WHERE|GROUP|HAVING|WINDOW|QUALIFY|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT"
 )
+_CALL_NAME = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(")
+_SUBQUERY = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
+_UNBALANCED = "transpile_duckdb: unbalanced parentheses"
 
 
-def _enclosing_paren_stack(s: str, pos: int) -> list[int]:
-    """Indices of the ``(`` characters enclosing ``pos``, outermost first."""
-    stack: list[int] = []
-    i = 0
-    while i < pos:
-        m = _PROTECTED.match(s, i)
-        if m:
-            i = m.end()
-            continue
-        if s[i] == "(":
-            stack.append(i)
-        elif s[i] == ")":
-            if stack:
-                stack.pop()
-        i += 1
-    return stack
-
-
-def _find_subq_in_hof(statement: str) -> tuple[int, int] | None:
+def _find_subq_in_hof(lex: _Lex) -> tuple[int, int] | None:
     """Span (start, end_exclusive) of the first ``(SELECT …)`` nested in
     the argument list of a HOF-expanding call; None when absent."""
-    for m in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", statement):
+    for m in _CALL_NAME.finditer(lex.text):
         if m.group(1).lower() not in _HOF_EXPANDING:
             continue
-        spans = _spans_of(statement)
-        if any(a <= m.start() < b for a, b in spans):
+        if lex.protected_at(m.start()):
             continue
         open_idx = m.end() - 1
-        close_idx = _find_balanced(statement, open_idx)
-        sm = re.compile(r"\(\s*SELECT\b", re.IGNORECASE).search(
-            statement, open_idx + 1, close_idx
-        )
+        close_idx = lex.partner(open_idx, _UNBALANCED)
+        sm = next(lex.matches(_SUBQUERY, open_idx + 1, close_idx, top=False), None)
         if sm is None:
             continue
-        if any(a <= sm.start() < b for a, b in spans):
-            continue
-        return sm.start(), _find_balanced(statement, sm.start()) + 1
+        return sm.start(), lex.partner(sm.start(), _UNBALANCED) + 1
     return None
 
 
@@ -1356,7 +1206,8 @@ def _hoist_hof_scalar_subqueries(statement: str) -> str:
     (DuckDB's in-lambda subqueries in this dialect are); a correlated one
     fails loudly at analysis as an unresolved column."""
     for n in range(16):
-        found = _find_subq_in_hof(statement)
+        lex = _Lex(statement)
+        found = _find_subq_in_hof(lex)
         if found is None:
             return statement
         sub_start, sub_end = found
@@ -1364,53 +1215,50 @@ def _hoist_hof_scalar_subqueries(statement: str) -> str:
         # owning SELECT scope: nearest enclosing paren group that opens
         # with SELECT (a subquery), else the whole statement
         scope_a, scope_b = 0, len(statement)
-        for open_idx in reversed(_enclosing_paren_stack(statement, sub_start)):
-            close_idx = _find_balanced(statement, open_idx)
+        open_idx = lex.enclosing(sub_start)
+        while open_idx is not None:
+            close_idx = lex.partner(open_idx, _UNBALANCED)
             inner_start = _ws(statement, open_idx + 1)
             if re.compile(r"SELECT\b", re.IGNORECASE).match(statement, inner_start):
                 scope_a, scope_b = open_idx + 1, close_idx
                 break
-        scope = statement[scope_a:scope_b]
-        rel_sub = sub_start - scope_a
-        sels = [p for p in _top_keyword_positions(scope, "SELECT") if p <= rel_sub]
+            open_idx = lex.enclosing(open_idx)
+        sels = [
+            m.start()
+            for m in lex.keywords("SELECT", scope_a, scope_b)
+            if m.start() <= sub_start
+        ]
         if not sels:
             raise ValueError(
                 "transpile_duckdb: cannot hoist subquery out of HOF — no "
                 "owning SELECT found"
             )
-        sel = sels[-1]
-        froms = [p for p in _top_keyword_positions(scope, "FROM") if p > sel]
-        if not froms:
+        from_kw = next(lex.keywords("FROM", sels[-1] + 1, scope_b), None)
+        if from_kw is None:
             raise ValueError(
                 "transpile_duckdb: cannot hoist subquery out of HOF — the "
                 "owning SELECT has no FROM clause to attach the 1-row join"
             )
-        terms = [
-            p
-            for kw in _SELECT_CLAUSE_END
-            for p in _top_keyword_positions(scope, kw)
-            if p > froms[0]
-        ]
-        inject = min(terms) if terms else len(scope)
+        end = next(lex.keywords(_SELECT_CLAUSE_END, from_kw.start() + 1, scope_b), None)
+        inject = end.start() if end else scope_b
         ref = f"__sqt{n}.__sq{n}"
         joined = f" CROSS JOIN (SELECT {subq} AS __sq{n}) __sqt{n} "
-        if inject <= rel_sub:  # subquery sits after FROM (e.g. in WHERE)
-            new_scope = (
-                scope[:inject]
+        if inject <= sub_start:  # subquery sits after FROM (e.g. in WHERE)
+            statement = (
+                statement[:inject]
                 + joined
-                + scope[inject:rel_sub]
+                + statement[inject:sub_start]
                 + ref
-                + scope[rel_sub + len(subq) :]
+                + statement[sub_end:]
             )
         else:  # subquery sits in the select list, before the join point
-            new_scope = (
-                scope[:rel_sub]
+            statement = (
+                statement[:sub_start]
                 + ref
-                + scope[rel_sub + len(subq) : inject]
+                + statement[sub_end:inject]
                 + joined
-                + scope[inject:]
+                + statement[inject:]
             )
-        statement = statement[:scope_a] + new_scope + statement[scope_b:]
     raise ValueError(
         "transpile_duckdb: more than 16 scalar subqueries inside "
         "higher-order-function arguments"
@@ -1419,42 +1267,14 @@ def _hoist_hof_scalar_subqueries(statement: str) -> str:
 
 #: clause keywords that terminate an ASOF ON condition at depth 0.
 _ASOF_COND_END = (
-    "WHERE", "GROUP", "ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT",
-    "EXCEPT", "HAVING", "WINDOW", "QUALIFY", "JOIN", "ASOF", "LEFT",
-    "RIGHT", "INNER", "CROSS", "FULL",
+    "WHERE|GROUP|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|HAVING|WINDOW|"
+    "QUALIFY|JOIN|ASOF|LEFT|RIGHT|INNER|CROSS|FULL"
 )
+#: the most ASOF JOINs one statement may hold
+_MAX_ASOF_JOINS = 64
 
 _INEQ = re.compile(r"(<=|>=|<|>)")
 _QUAL_COL = re.compile(r"^\s*([A-Za-z_][A-Za-z0-9_]*)\s*\.\s*([A-Za-z_][A-Za-z0-9_]*)\s*$")
-
-
-def _split_top_and(cond: str) -> list[str]:
-    """Split a boolean expression on depth-0 unprotected AND keywords."""
-    parts: list[str] = []
-    depth = 0
-    i = 0
-    start = 0
-    pat = re.compile(r"AND\b", re.IGNORECASE)
-    while i < len(cond):
-        m = _PROTECTED.match(cond, i)
-        if m:
-            i = m.end()
-            continue
-        c = cond[i]
-        if c in "([{":
-            depth += 1
-        elif c in ")]}":
-            depth -= 1
-        elif depth == 0 and (i == 0 or cond[i - 1] not in _IDENT_CHARS):
-            mm = pat.match(cond, i)
-            if mm:
-                parts.append(cond[start:i])
-                i = mm.end()
-                start = i
-                continue
-        i += 1
-    parts.append(cond[start:])
-    return parts
 
 
 def _rewrite_asof_join(statement: str) -> str:
@@ -1473,15 +1293,15 @@ def _rewrite_asof_join(statement: str) -> str:
     in the WHERE untouched. Left-side text before ASOF is untouched —
     outer references stay correlated into the lateral subquery.
     RIGHT/FULL ASOF variants and multi-inequality conditions raise."""
+    lex = _Lex(statement)
     scan_from = 0
-    for _ in range(64):
-        hit = _any_depth_keyword(statement, "ASOF", start=scan_from)
+    for _ in range(_MAX_ASOF_JOINS + 1):  # + the pass that finds none left
+        hit = next(lex.keywords("ASOF", scan_from, top=False), None)
         if hit is None:
             return statement
-        pos, _open = hit
+        pos = hit.start()
         s = statement
-        i = pos + len("ASOF")
-        i = _ws(s, i)
+        i = _ws(s, hit.end())
         left_kw = ""
         m = re.compile(r"(LEFT|RIGHT|FULL|INNER)\b", re.IGNORECASE).match(s, i)
         if m:
@@ -1500,7 +1320,7 @@ def _rewrite_asof_join(statement: str) -> str:
             continue
         i = _ws(s, mj.end())
         if s[i] == "(":
-            j = _find_balanced(s, i)
+            j = lex.partner(i, _UNBALANCED)
             rel = s[i : j + 1]
             i = _ws(s, j + 1)
         else:
@@ -1529,35 +1349,18 @@ def _rewrite_asof_join(statement: str) -> str:
             raise ValueError("transpile_duckdb: expected ON after ASOF JOIN relation")
         cond_start = mo.end()
         # condition runs to the next depth-0 clause keyword or scope end
-        ends = [
-            p
-            for kw in _ASOF_COND_END
-            for p in _top_keyword_positions(s[cond_start:], kw)[:1]
-        ]
-        cond_end = cond_start + (min(ends) if ends else len(s) - cond_start)
+        end = next(lex.keywords(_ASOF_COND_END, cond_start), None)
+        cond_end = end.start() if end else len(s)
         # ... but never past the enclosing scope's closing paren
-        close = len(s)
-        depth = 0
-        k = cond_start
-        while k < cond_end:
-            mm = _PROTECTED.match(s, k)
-            if mm:
-                k = mm.end()
-                continue
-            if s[k] == "(":
-                depth += 1
-            elif s[k] == ")":
-                depth -= 1
-                if depth < 0:
-                    close = k
-                    break
-            k += 1
-        cond_end = min(cond_end, close)
+        scope = lex.enclosing(cond_start)
+        close = None if scope is None else lex.partner(scope)
+        if close is not None:
+            cond_end = min(cond_end, close)
         cond = s[cond_start:cond_end].strip()
 
         ineq_conjs = []
-        for conj in _split_top_and(cond):
-            mi = _ineq_on_alias(conj, alias)
+        for x, y in lex.split("AND", cond_start, cond_end):
+            mi = _ineq_on_alias(s[x:y], alias)
             if mi is not None:
                 ineq_conjs.append(mi)
         if len(ineq_conjs) != 1:
@@ -1572,31 +1375,14 @@ def _rewrite_asof_join(statement: str) -> str:
             f"{alias} ON true "
         )
         statement = s[:pos] + replacement + s[cond_end:]
-    raise ValueError("transpile_duckdb: more than 16 ASOF JOINs")
+        lex = _Lex(statement)
+    raise ValueError(f"transpile_duckdb: more than {_MAX_ASOF_JOINS} ASOF JOINs")
 
 
 def _ws(s: str, i: int) -> int:
     while i < len(s) and s[i].isspace():
         i += 1
     return i
-
-
-def _find_balanced(s: str, i: int) -> int:
-    """Index of the ``)`` matching the ``(`` at ``i`` (protected-aware)."""
-    depth = 0
-    while i < len(s):
-        m = _PROTECTED.match(s, i)
-        if m:
-            i = m.end()
-            continue
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("transpile_duckdb: unbalanced parentheses")
 
 
 def _ineq_on_alias(conj: str, alias: str) -> tuple[str, str] | None:
@@ -1624,102 +1410,64 @@ def _rewrite_qualify(statement: str) -> str:
     """Rewrite every QUALIFY clause (any nesting depth, innermost scope
     first) into the subquery form — Spark has no QUALIFY spelling."""
     for _ in range(32):
-        hit = _any_depth_keyword(statement, "QUALIFY")
+        lex = _Lex(statement)
+        hit = next(lex.keywords("QUALIFY", top=False), None)
         if hit is None:
             return statement
-        pos, open_idx = hit
+        open_idx = lex.enclosing(hit.start())
         if open_idx is None:
-            statement = _rewrite_qualify_branch(statement)
+            statement = _rewrite_qualify_branch(lex, 0, len(statement))
         else:
-            close = _matching_paren(statement, open_idx)
-            inner = statement[open_idx + 1 : close]
+            close = lex.partner(open_idx, _UNBALANCED)
             statement = (
                 statement[: open_idx + 1]
-                + _rewrite_qualify_branch(inner)
+                + _rewrite_qualify_branch(lex, open_idx + 1, close)
                 + statement[close:]
             )
     raise ValueError("transpile_duckdb: more than 32 QUALIFY clauses")
 
 
-def _find_top_keyword(s: str, kw: str) -> tuple[int, int] | None:
-    """(start, end) of the first depth-0, unprotected, word-bounded ``kw``."""
-    pat = re.compile(rf"{kw}\b", re.IGNORECASE)
-    depth, i = 0, 0
-    while i < len(s):
-        m = _PROTECTED.match(s, i)
-        if m:
-            i = m.end()
-            continue
-        c = s[i]
-        if c in "([{":
-            depth += 1
-        elif c in ")]}":
-            depth -= 1
-        elif depth == 0 and (i == 0 or s[i - 1] not in _IDENT_CHARS):
-            mm = pat.match(s, i)
-            if mm:
-                return i, mm.end()
-        i += 1
-    return None
-
-
-def _parse_comprehension(inner: str) -> tuple[str, str, str, str | None] | None:
-    """DuckDB list comprehension ``[expr FOR var IN src [IF cond]]`` →
-    (expr, var, src, cond) — mapped to transform(+filter), which is its
-    exact semantics. Returns None when ``inner`` is a plain literal."""
-    f = _find_top_keyword(inner, "FOR")
+def _parse_comprehension(
+    lex: _Lex, a: int, b: int
+) -> tuple[str, str, str, str | None] | None:
+    """DuckDB list comprehension ``[expr FOR var IN src [IF cond]]`` at
+    ``[a, b)`` → (expr, var, src, cond) — mapped to transform(+filter),
+    which is its exact semantics. Returns None for a plain literal."""
+    s = lex.text
+    f = next(lex.keywords("FOR", a, b), None)
     if f is None:
         return None
-    expr = inner[: f[0]].strip()
-    rest = inner[f[1] :]
-    n = _find_top_keyword(rest, "IN")
+    expr = s[a : f.start()].strip()
+    n = next(lex.keywords("IN", f.end(), b), None)
     if n is None:
         raise ValueError(
-            f"transpile_duckdb: comprehension without IN: {inner[:60]!r}"
+            f"transpile_duckdb: comprehension without IN: {s[a:b][:60]!r}"
         )
-    var = rest[: n[0]].strip()
-    tail = rest[n[1] :]
+    var = s[f.end() : n.start()].strip()
     if not re.fullmatch(r"[A-Za-z_]\w*", var):
         raise ValueError(
             f"transpile_duckdb: comprehension variable {var!r} is not a "
             "plain identifier"
         )
-    cnd = _find_top_keyword(tail, "IF")
+    cnd = next(lex.keywords("IF", n.end(), b), None)
     if cnd is None:
-        return expr, var, tail.strip(), None
-    return expr, var, tail[: cnd[0]].strip(), tail[cnd[1] :].strip()
+        return expr, var, s[n.end() : b].strip(), None
+    return expr, var, s[n.end() : cnd.start()].strip(), s[cnd.end() : b].strip()
 
 
-def _base_start(statement: str, j: int, spans: list[tuple[int, int]]) -> int:
+def _base_start(lex: _Lex, j: int) -> int:
     """Start index of the expression ending at ``j`` (inclusive): an
     identifier chain (a.b.c), a call/paren group (f(x), (expr)), a prior
     bracket access (xs[1]), a quoted identifier or string literal, an
     ARRAY<...> type, or any dot-joined mix of these."""
-
-    def span_at(i: int) -> tuple[int, int] | None:
-        for s, e in spans:
-            if s <= i < e:
-                return (s, e)
-        return None
-
+    statement = lex.text
     while True:
-        pr = span_at(j)
+        pr = lex.protected_at(j)
         if pr:
             j = pr[0] - 1
         elif statement[j] in ")]":
-            close, opener = statement[j], "(" if statement[j] == ")" else "["
-            depth = 1
-            j -= 1
-            while j >= 0 and depth:
-                pr = span_at(j)
-                if pr:
-                    j = pr[0] - 1
-                    continue
-                if statement[j] == close:
-                    depth += 1
-                elif statement[j] == opener:
-                    depth -= 1
-                j -= 1
+            opener = lex.partner(j)
+            j = (0 if opener is None else opener) - 1
             # a call: include the function name before '('
             while j >= 0 and statement[j] in _IDENT_CHARS:
                 j -= 1
@@ -1762,6 +1510,7 @@ def _base_start(statement: str, j: int, spans: list[tuple[int, int]]) -> int:
 #: Dialect-isms that are neither renames nor call rewrites (kept tiny and
 #: explicit; anything not listed rides through to Catalyst unchanged).
 #: ``//`` is DuckDB integer division; Spark spells it the ANSI way.
+_FN_NAME = re.compile(r"\b[A-Za-z_][A-Za-z0-9_]*\b(?=\s*\()")  # name followed by (
 _INT_DIV = re.compile(r"//")
 _BARE_VARCHAR = re.compile(r"\bVARCHAR\b(?!\s*\()", re.IGNORECASE)
 # DuckDB CTE materialization hints (WITH x AS [NOT] MATERIALIZED (...)) are
@@ -1819,14 +1568,12 @@ def transpile_duckdb(statement: str) -> str:
     statement = _rewrite_exclude(statement)
     statement = _rewrite_calls_fixpoint(statement)
 
-    def _sub(m: re.Match) -> str:
-        if m.group("protected") is not None:
-            return m.group(0)
-        name = m.group("fn")
-        return DUCKDB_TO_SPARK_FN.get(name.lower(), name)
+    def _rename(m: re.Match) -> str:
+        return DUCKDB_TO_SPARK_FN.get(m.group(0).lower(), m.group(0))
 
-    out = _TOKEN.sub(_sub, statement)
-    parts = re.split(rf"({_PROTECTED_SRC})", out, flags=re.VERBOSE)
+    parts = _Lex(statement).segments()
+    for i in range(0, len(parts), 2):
+        parts[i] = _FN_NAME.sub(_rename, parts[i])
     # extract('minute' FROM ts) → extract(MINUTE FROM ts): the unit sits in
     # a protected literal, so the rewrite matches the (code, literal, code)
     # part triple around it.

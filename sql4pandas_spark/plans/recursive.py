@@ -15,8 +15,9 @@ round adds nothing.
 :func:`run_recursive_sql` reproduces those semantics with a
 driver-coordinated loop over plain DataFrame operations:
 
-- the statement's CTE chain is parsed (protected-token aware: string
-  literals, quoted identifiers and comments never confuse the scan);
+- the statement's CTE chain is parsed with the SQL front end's one lexer
+  (``functions/transpile._Lex``), so string literals, quoted identifiers
+  and comments never confuse the scan;
 - CTEs before the recursive one are registered as temp views in order, and
   the ones the recursive member actually reads are materialized ONCE with
   ``localCheckpoint`` — they are loop invariants, and hoisting them means
@@ -74,12 +75,13 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql4pandas_spark.functions.transpile import _PROTECTED
+from sql4pandas_spark.functions.transpile import _Lex
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 _WITH_RECURSIVE = re.compile(r"WITH\s+RECURSIVE\b", re.IGNORECASE)
 _AS = re.compile(r"AS\b", re.IGNORECASE)
-_UNION = re.compile(r"UNION\b(\s+ALL\b)?", re.IGNORECASE)
+_UNION = r"UNION(\s+ALL)?"
+_UNBALANCED = "recursive CTE: unbalanced parentheses in statement"
 
 #: default round cap — generous for log-depth closures (a 2^100-node forest
 #: would converge first) while bounding a genuinely divergent recursion.
@@ -104,51 +106,6 @@ class _Parsed:
     rest: str
 
 
-def _skip_ws_comments(s: str, i: int) -> int:
-    """Advance past whitespace and comments (never past literals)."""
-    while i < len(s):
-        if s[i].isspace():
-            i += 1
-            continue
-        if s.startswith("--", i) or s.startswith("/*", i):
-            m = _PROTECTED.match(s, i)
-            if m:
-                i = m.end()
-                continue
-        break
-    return i
-
-
-def _match_paren(s: str, i: int) -> int:
-    """Index of the ``)`` closing the ``(`` at ``i`` (protected-span aware)."""
-    assert s[i] == "("
-    depth = 0
-    while i < len(s):
-        m = _PROTECTED.match(s, i)
-        if m:
-            i = m.end()
-            continue
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("recursive CTE: unbalanced parentheses in statement")
-
-
-def _code_segments(s: str):
-    """Yield (start, text) for the unprotected code segments of ``s``."""
-    pos = 0
-    for m in _PROTECTED.finditer(s):
-        if m.start() > pos:
-            yield pos, s[pos : m.start()]
-        pos = m.end()
-    if pos < len(s):
-        yield pos, s[pos:]
-
-
 def _references(sql: str, name: str) -> bool:
     """True when ``sql`` mentions ``name`` as a word outside literals,
     quoted identifiers and comments (the same token discipline the
@@ -156,7 +113,7 @@ def _references(sql: str, name: str) -> bool:
     documented false positive, as it is in every token-level dialect
     tool)."""
     pat = re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE)
-    return any(pat.search(text) for _, text in _code_segments(sql))
+    return any(pat.search(text) for text in _Lex(sql).segments()[::2])
 
 
 def parse_with_recursive(statement: str) -> _Parsed | None:
@@ -165,78 +122,45 @@ def parse_with_recursive(statement: str) -> _Parsed | None:
     Returns None when the statement does not start with ``WITH RECURSIVE``
     (after whitespace/comments) — the caller then runs it natively.
     """
-    i = _skip_ws_comments(statement, 0)
+    lex = _Lex(statement)
+    i = lex.skip(0)
     m = _WITH_RECURSIVE.match(statement, i)
     if not m:
         return None
     i = m.end()
     ctes: list[_Cte] = []
     while True:
-        i = _skip_ws_comments(statement, i)
+        i = lex.skip(i)
         mi = _IDENT.match(statement, i)
         if not mi:
             raise ValueError(
                 f"recursive CTE: expected a CTE name at offset {i}"
             )
         name = mi.group(0)
-        i = _skip_ws_comments(statement, mi.end())
+        i = lex.skip(mi.end())
         cols: tuple[str, ...] | None = None
         if i < len(statement) and statement[i] == "(":
-            j = _match_paren(statement, i)
+            j = lex.partner(i, _UNBALANCED)
             cols = tuple(c.strip() for c in statement[i + 1 : j].split(","))
-            i = _skip_ws_comments(statement, j + 1)
+            i = lex.skip(j + 1)
         ma = _AS.match(statement, i)
         if not ma:
             raise ValueError(
                 f"recursive CTE: expected AS after CTE name {name!r}"
             )
-        i = _skip_ws_comments(statement, ma.end())
+        i = lex.skip(ma.end())
         if i >= len(statement) or statement[i] != "(":
             raise ValueError(
                 f"recursive CTE: expected ( after {name!r} AS"
             )
-        j = _match_paren(statement, i)
+        j = lex.partner(i, _UNBALANCED)
         ctes.append(_Cte(name=name, cols=cols, body=statement[i + 1 : j]))
-        i = _skip_ws_comments(statement, j + 1)
+        i = lex.skip(j + 1)
         if i < len(statement) and statement[i] == ",":
             i += 1
             continue
         break
     return _Parsed(ctes=tuple(ctes), rest=statement[i:])
-
-
-def _split_union(body: str) -> tuple[list[str], list[str]]:
-    """Split a CTE body on depth-0 UNION / UNION ALL.
-
-    Returns (parts, seps) with len(seps) == len(parts) - 1; each sep is
-    'UNION' or 'UNION ALL' (normalized upper-case).
-    """
-    parts: list[str] = []
-    seps: list[str] = []
-    depth = 0
-    i = 0
-    start = 0
-    while i < len(body):
-        m = _PROTECTED.match(body, i)
-        if m:
-            i = m.end()
-            continue
-        c = body[i]
-        if c in "([{":
-            depth += 1
-        elif c in ")]}":
-            depth -= 1
-        elif depth == 0 and (i == 0 or not (body[i - 1].isalnum() or body[i - 1] == "_")):
-            mu = _UNION.match(body, i)
-            if mu:
-                parts.append(body[start : i])
-                seps.append("UNION ALL" if mu.group(1) else "UNION")
-                i = mu.end()
-                start = i
-                continue
-        i += 1
-    parts.append(body[start:])
-    return parts, seps
 
 
 class RecursionLimitExceeded(RuntimeError):
@@ -302,7 +226,9 @@ def run_recursive_sql(
     for i, c in enumerate(parsed.ctes):
         if not _references(c.body, c.name):
             continue
-        parts, seps = _split_union(c.body)
+        lex = _Lex(c.body)
+        parts = [c.body[a:b] for a, b in lex.split(_UNION)]
+        seps = ["UNION ALL" if m.group(1) else "UNION" for m in lex.keywords(_UNION)]
         is_rec_part = [_references(p, c.name) for p in parts]
         n_seed = is_rec_part.index(True)
         if n_seed == 0:

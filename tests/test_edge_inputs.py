@@ -282,9 +282,3 @@ def test_psi_from_histograms_empty_states(spark):
     assert all(r.n_old == 0 and r.n_new == 0 and r.psi == 0.0 for r in rows)
 
 
-def test_transpile_empty_and_no_op_statements(spark):
-    from sql4pandas_spark.functions.transpile import transpile_duckdb
-
-    assert transpile_duckdb("") == ""
-    s = "SELECT a, b FROM t WHERE a > 1 ORDER BY b"
-    assert transpile_duckdb(s) == s  # nothing to rename -> byte-identical

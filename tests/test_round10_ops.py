@@ -182,44 +182,6 @@ def test_value_histogram_drops_nan_keeps_infinity_clamped(spark):
 # ------------------------------------- SQL front-end (reference dialect)
 
 
-def test_transpile_renames_call_position_only():
-    from sql4pandas_spark.functions.transpile import transpile_duckdb
-
-    out = transpile_duckdb(
-        "SELECT len(xs) AS n, substr(s, 1, 2) AS p FROM t "
-        "WHERE regexp_matches(s, 'a+') AND power(x, 2) > sign(y)"
-    )
-    assert out == (
-        "SELECT size(xs) AS n, substring(s, 1, 2) AS p FROM t "
-        "WHERE rlike(s, 'a+') AND pow(x, 2) > signum(y)"
-    )
-
-
-def test_transpile_protects_literals_identifiers_and_bare_names():
-    from sql4pandas_spark.functions.transpile import transpile_duckdb
-
-    # 'len(x)' is a string; "len" a quoted identifier; bare `len` a column
-    out = transpile_duckdb(
-        """SELECT 'len(x)' AS lit, "len", len FROM t WHERE a // b > 2"""
-    )
-    assert "'len(x)'" in out and "`len`" in out  # ident → Spark backticks
-    assert " size" not in out  # no call position, no rename
-    assert " DIV " in out and "//" not in out
-    # '//' inside a literal survives
-    out2 = transpile_duckdb("SELECT 'a//b' AS s, x // 3 AS d FROM t")
-    assert "'a//b'" in out2 and " DIV 3" in out2.replace("  ", " ")
-
-
-def test_transpile_unknown_dialect_rejected():
-    import pytest as _pytest
-
-    from sql4pandas_spark.functions.transpile import to_spark_sql
-
-    with _pytest.raises(ValueError, match="unknown dialect"):
-        to_spark_sql("SELECT 1", dialect="oracle11g")
-    assert to_spark_sql("SELECT len(x) FROM t") == "SELECT len(x) FROM t"
-
-
 def test_engine_runs_reference_dialect_sql(spark):
     """The SAME statement text runs on DuckDB (reference dialect) and on
     the Engine with dialect='duckdb' — SQL strings in, frames out."""
@@ -445,28 +407,6 @@ def test_prefix_filter_exact_boundary_pair(spark):
     assert len(hi) == 0
 
 
-def test_transpile_bare_varchar_cast(spark):
-    """DuckDB CAST(x AS VARCHAR) is legal without a length; Spark demands
-    one — the transpiler rewrites the bare type to STRING (VARCHAR(n)
-    passes through, both engines accept it)."""
-    from sql4pandas_spark.functions.transpile import transpile_duckdb
-
-    out = transpile_duckdb(
-        "SELECT CAST(x AS VARCHAR) AS s, CAST(y AS VARCHAR(10)) AS v, "
-        "'VARCHAR' AS lit FROM t"
-    )
-    assert "CAST(x AS STRING)" in out
-    assert "VARCHAR(10)" in out
-    assert "'VARCHAR'" in out
-    got = [
-        tuple(r)
-        for r in spark.sql(
-            transpile_duckdb("SELECT CAST(42 AS VARCHAR) AS s")
-        ).collect()
-    ]
-    assert got == [("42",)]
-
-
 def test_psi_from_histograms_equals_distribution_drift(spark):
     """The histogram-state PSI read-out must reproduce the raw-row drift
     gate on the same fixed grid (streaming monitoring == batch gate)."""
@@ -683,21 +623,6 @@ def test_cms_stream_matches_batch_build(spark, tmp_path):
         for r in count_min_state(full, "item", depth=3, width=32).collect()
     }
     assert got == want
-
-
-def test_transpile_protects_quoted_identifiers_in_second_pass():
-    """'//' and bare VARCHAR inside double-quoted identifiers must
-    survive (the rename pass already protected them; the operator/type
-    pass must too)."""
-    from sql4pandas_spark.functions.transpile import transpile_duckdb
-
-    out = transpile_duckdb(
-        'SELECT "a//b", "VARCHAR", x // 2 AS d, CAST(y AS VARCHAR) AS s FROM t'
-    )
-    # identifiers convert to Spark backticks (Spark reads "..." as a
-    # string literal) with their contents byte-preserved
-    assert "`a//b`" in out and "`VARCHAR`" in out
-    assert " DIV " in out and "AS STRING" in out and "x //" not in out
 
 
 # ------------------------------------- Bloom-prefiltered decontamination

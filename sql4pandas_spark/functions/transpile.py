@@ -1196,6 +1196,11 @@ def _find_subq_in_hof(lex: _Lex) -> tuple[int, int] | None:
     return None
 
 
+#: the most scalar subqueries one statement may hold inside
+#: higher-order-function arguments
+_MAX_HOF_SUBQUERIES = 16
+
+
 def _hoist_hof_scalar_subqueries(statement: str) -> str:
     """Hoist scalar subqueries out of HOF-expanding call arguments:
     ``list_cosine_similarity(a, (SELECT …))`` becomes a 1-row
@@ -1205,7 +1210,7 @@ def _hoist_hof_scalar_subqueries(statement: str) -> str:
     contains a subquery expression. Assumes the subquery is uncorrelated
     (DuckDB's in-lambda subqueries in this dialect are); a correlated one
     fails loudly at analysis as an unresolved column."""
-    for n in range(16):
+    for n in range(_MAX_HOF_SUBQUERIES + 1):  # + the pass that finds none left
         lex = _Lex(statement)
         found = _find_subq_in_hof(lex)
         if found is None:
@@ -1260,8 +1265,8 @@ def _hoist_hof_scalar_subqueries(statement: str) -> str:
                 + statement[inject:]
             )
     raise ValueError(
-        "transpile_duckdb: more than 16 scalar subqueries inside "
-        "higher-order-function arguments"
+        f"transpile_duckdb: more than {_MAX_HOF_SUBQUERIES} scalar subqueries "
+        "inside higher-order-function arguments"
     )
 
 
@@ -1319,7 +1324,7 @@ def _rewrite_asof_join(statement: str) -> str:
             scan_from = pos + 1
             continue
         i = _ws(s, mj.end())
-        if s[i] == "(":
+        if s.startswith("(", i):
             j = lex.partner(i, _UNBALANCED)
             rel = s[i : j + 1]
             i = _ws(s, j + 1)
@@ -1406,10 +1411,14 @@ def _ineq_on_alias(conj: str, alias: str) -> tuple[str, str] | None:
     return col, ("DESC" if op in ("<", "<=") else "ASC")
 
 
+#: the most QUALIFY clauses one statement may hold
+_MAX_QUALIFY_CLAUSES = 32
+
+
 def _rewrite_qualify(statement: str) -> str:
     """Rewrite every QUALIFY clause (any nesting depth, innermost scope
     first) into the subquery form — Spark has no QUALIFY spelling."""
-    for _ in range(32):
+    for _ in range(_MAX_QUALIFY_CLAUSES + 1):  # + the pass that finds none left
         lex = _Lex(statement)
         hit = next(lex.keywords("QUALIFY", top=False), None)
         if hit is None:
@@ -1424,7 +1433,9 @@ def _rewrite_qualify(statement: str) -> str:
                 + _rewrite_qualify_branch(lex, open_idx + 1, close)
                 + statement[close:]
             )
-    raise ValueError("transpile_duckdb: more than 32 QUALIFY clauses")
+    raise ValueError(
+        f"transpile_duckdb: more than {_MAX_QUALIFY_CLAUSES} QUALIFY clauses"
+    )
 
 
 def _parse_comprehension(

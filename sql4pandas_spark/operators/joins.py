@@ -448,7 +448,7 @@ def fuzzy_key_pairs(
     many tasks with a row-identical result.
     """
     from sql4pandas_spark.operators.dedup import MERSENNE31, band_keys, minhash
-    from sql4pandas_spark.operators.spread import compute_width
+    from sql4pandas_spark.operators.spread import spread_width
 
     def _norm(c: str):
         return F.lower(F.trim(F.col(c)))
@@ -468,7 +468,10 @@ def fuzzy_key_pairs(
         )
 
     # explicit ROUND-ROBIN spread of the distinct key frames, BEFORE the
-    # signature computation. Two reasons, both measured at sf0.1:
+    # signature computation, to the width the keys' INPUT FILES call for
+    # (operators/spread.spread_width: the session width capped at one
+    # task per SPREAD_TARGET_BYTES; unknown size keeps the session
+    # width). Two reasons, both measured at sf0.1:
     #
     # - the distinct's post-shuffle output is tiny (|distinct keys| short
     #   strings), so AQE's coalesce collapses it to one partition — and
@@ -478,9 +481,12 @@ def fuzzy_key_pairs(
     #   task (profiled: a 1.75 s serial signature stage while 31 cores
     #   idled). A user-specified repartition count is exempt from
     #   coalescing, and the narrow ops after it inherit the width, so
-    #   sigs/bands/the verify probe all run at n_spread tasks. (An
-    #   earlier form repartitioned AFTER banding — that spread only the
+    #   sigs/bands/the verify probe all run at that width. (An earlier
+    #   form repartitioned AFTER banding — that spread only the
     #   already-computed band rows and left the signature stage serial.)
+    #   Keys from a file under SPREAD_TARGET_BYTES (every fixture's
+    #   part table up to sf0.01) take width 1: one task is the right
+    #   size, so no exchange is added.
     #
     # - keyless, NOT hash(band_key): AQE turns the band join into a
     #   broadcast hash join whenever one side's band frame fits (always
@@ -493,19 +499,17 @@ def fuzzy_key_pairs(
     #   too-big-to-broadcast regime the planner inserts its own band_key
     #   exchange for the sort-merge join (8-byte keys — cheap), where
     #   hot bands are ``salt_hot_bands``'s job instead.
-    n_spread = compute_width(left.sparkSession)
-    lnorm = (
-        left.select(_norm(left_key).alias("_lnorm"))
-        .filter(F.col("_lnorm").isNotNull())
-        .distinct()
-        .repartition(n_spread)
-    )
-    rnorm = (
-        right.select(_norm(right_key).alias("_rnorm"))
-        .filter(F.col("_rnorm").isNotNull())
-        .distinct()
-        .repartition(n_spread)
-    )
+    def _distinct_keys(df: DataFrame, key: str, alias: str) -> DataFrame:
+        keys = (
+            df.select(_norm(key).alias(alias))
+            .filter(F.col(alias).isNotNull())
+            .distinct()
+        )
+        width = spread_width(df)[0]
+        return keys.repartition(width) if width > 1 else keys
+
+    lnorm = _distinct_keys(left, left_key, "_lnorm")
+    rnorm = _distinct_keys(right, right_key, "_rnorm")
     lb = _bands(lnorm, "_lnorm")
     rb = _bands(rnorm, "_rnorm")
     if salt_hot_bands:

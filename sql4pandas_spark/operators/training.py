@@ -177,8 +177,8 @@ def train_hashed_logreg(
     ints and an engine-side replay cannot drift."""
     # spread BEFORE the per-token feature pass (operators/spread.py): the
     # per-doc cost is one md5 hash per token plus the stopword filter —
-    # the SimHash class of CPU — and the documents fixture scans as ONE
-    # row-group task, serializing the checkpoint below on a single core.
+    # the SimHash class of CPU — and a corpus that scans as ONE row-group
+    # task would serialize the checkpoint below on a single core.
     # Projected to the two consumed columns first so the exchange carries
     # only (id, text).
     from sql4pandas_spark.operators.spread import spread_for_compute

@@ -9060,7 +9060,7 @@ def _crawl_chain_df(
     Shape (round-14): html_to_text is the chain's per-row CPU wall and
     strip_boilerplate references its input THREE times (line votes,
     domain counts, removal join) — so the extracted frame is spread to
-    the session width (the scan is single-row-group at fixture scale)
+    its input's byte width (operators/spread.py; 1 at fixture scale)
     and materialized ONCE via localCheckpoint instead of re-running the
     regex extractor per reference. The gate then rides the stripped
     frame directly (gopher_rules extra_cols) — the old 1:1 self-join on

@@ -10,6 +10,7 @@ import ast
 import hashlib
 import itertools
 import random
+import time
 from decimal import Decimal
 from pathlib import Path
 
@@ -566,22 +567,75 @@ def test_min_id_labels_hooks_across_rounds():
 #: CHANGES.md.
 NEAR_DEDUP_JOB_BUDGET = 12
 
+#: Tasks those jobs run (14 measured), under the same rule. Spreading the
+#: 65 KB documents file to the 16-wide session ran 135.
+NEAR_DEDUP_TASK_BUDGET = 16
 
-def test_near_dedup_minhash_job_budget(spark):
-    """The clustering step labels the small verified-pair graph on the
-    driver: building and collecting near_dedup_minhash stays within its
-    job budget (label propagation ran about 37 jobs here)."""
+#: (jobs, tasks) of one build + collect of each catalog entry at sf0.001,
+#: under the same rule. Measured: crawl_curation_chain 10 jobs / 10 tasks
+#: (86 tasks when spread to the session width), fuzzy_join_parts 13 / 13
+#: (46 tasks).
+ENTRY_BUDGETS = {
+    "crawl_curation_chain": (10, 12),
+    "fuzzy_join_parts": (13, 16),
+}
+
+
+def _group_counts(spark, group: str, action) -> tuple[int, int]:
+    """(jobs, tasks) that ``action()`` runs under its own job group, read
+    from ``statusTracker``. Waits for the status store to see every job
+    finish, since listener events land after the action returns."""
     sc = spark.sparkContext
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    group = "test_near_dedup_minhash_job_budget"
     sc.setJobGroup(group, group)
     try:
-        dedup.near_dedup_minhash(docs).collect()
+        action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= NEAR_DEDUP_JOB_BUDGET, len(jobs)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        done = all(j is not None and j.status != "RUNNING" for j in jobs)
+        if done or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    stage_ids = {s for j in jobs if j is not None for s in j.stageIds}
+    stages = [tracker.getStageInfo(s) for s in stage_ids]
+    return len(jobs), sum(s.numCompletedTasks for s in stages if s is not None)
+
+
+def test_near_dedup_minhash_job_budget(spark):
+    """The clustering step labels the small verified-pair graph on the
+    driver, and the one-file documents input is signed in one task:
+    building and collecting near_dedup_minhash stays within its job and
+    task budgets (label propagation ran about 37 jobs here)."""
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    jobs, tasks = _group_counts(
+        spark,
+        "test_near_dedup_minhash_job_budget",
+        lambda: dedup.near_dedup_minhash(docs).collect(),
+    )
+    assert 0 < jobs <= NEAR_DEDUP_JOB_BUDGET, jobs
+    assert 0 < tasks <= NEAR_DEDUP_TASK_BUDGET, tasks
+
+
+@pytest.mark.parametrize("name", sorted(ENTRY_BUDGETS))
+def test_curation_entry_count_budget(spark, name):
+    """The bench-heavy curation entries size their compute spread to the
+    input bytes (operators/spread.py), so a build + collect at sf0.001
+    stays within its job and task budgets."""
+    from sql4pandas_spark.queries import load_catalog
+
+    spec = load_catalog()[name]
+    jobs, tasks = _group_counts(
+        spark,
+        f"test_curation_entry_count_budget_{name}",
+        lambda: spec.build(spark, SF_SMALL).collect(),
+    )
+    job_budget, task_budget = ENTRY_BUDGETS[name]
+    assert 0 < jobs <= job_budget, jobs
+    assert 0 < tasks <= task_budget, tasks
 
 
 # ---------------------------------------------------------------------------

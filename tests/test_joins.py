@@ -3,6 +3,8 @@ eliminate the join exchange, sketch quantiles must be within their bound."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -203,3 +205,21 @@ def test_fuzzy_key_pairs_plan_never_all_pairs(spark, fuzzy_frames):
     )
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def test_fuzzy_key_pairs_spread_follows_key_input_bytes(spark, tables):
+    """The distinct key frames spread to the width their input files call
+    for: the one-file sf0.001 customer table is under SPREAD_TARGET_BYTES,
+    so no round-robin exchange is added; the same keys in memory have no
+    input files (unknown size) and spread to the session width."""
+    from sql4pandas_spark.operators.spread import compute_width
+
+    def spreads(df):
+        plan = joins.fuzzy_key_pairs(df, df, "c_name", "c_name")
+        text = plan._jdf.queryExecution().optimizedPlan().toString()
+        return sorted(set(re.findall(r"Repartition (\d+), true", text)))
+
+    names = tables["customer"].select("c_name")
+    assert spreads(names) == []
+    in_memory = spark.createDataFrame(names.collect(), "c_name string")
+    assert spreads(in_memory) == [str(compute_width(spark))]

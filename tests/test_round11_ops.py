@@ -1,103 +1,9 @@
-"""Round-11 operator tests: the three round-10 ADVICE fixes (string_split
-separator semantics, comment masking in the transpiler, deterministic
-weighted-sample merge) plus the round's new operators as they land."""
+"""Round-11 operator tests: the deterministic weighted-sample merge plus
+the round's new operators as they land. (The transpiler tests of this
+round, string_split separators and comment masking among them, live in
+tests/test_transpile.py.)"""
 
 from __future__ import annotations
-
-import duckdb
-import pytest
-
-from sql4pandas_spark.functions.transpile import transpile_duckdb
-
-# --------------------------------------------- ADVICE: string_split rewrite
-
-
-def test_string_split_regex_metachar_separator(spark):
-    """DuckDB string_split splits on a LITERAL separator; Spark split takes
-    a Java regex. A '.' or '|' separator must be regex-escaped or the
-    transpiled statement silently splits on everything."""
-    stmt = "SELECT string_split(s, '.') AS parts FROM (SELECT 'a.b.c' AS s)"
-    duck = duckdb.connect().execute(stmt).fetchone()[0]
-    got = spark.sql(transpile_duckdb(stmt)).collect()[0]["parts"]
-    assert list(got) == list(duck) == ["a", "b", "c"]
-
-    stmt2 = "SELECT string_split(s, '|') AS parts FROM (SELECT 'x|y' AS s)"
-    duck2 = duckdb.connect().execute(stmt2).fetchone()[0]
-    got2 = spark.sql(transpile_duckdb(stmt2)).collect()[0]["parts"]
-    assert list(got2) == list(duck2) == ["x", "y"]
-
-
-def test_string_split_quote_and_backslash_separators(spark):
-    """Separators containing the two escaping-scheme trouble chars (' and
-    backslash) round-trip: the emitted Spark literal uses '' doubling for
-    quotes (parseable by both Spark and this module's own tokenizer) and
-    doubled backslashes."""
-    stmt = (
-        "SELECT string_split(s, '''') AS parts, x // 2 AS d "
-        "FROM (SELECT 'a''b' AS s, 5 AS x)"
-    )
-    duck = duckdb.connect().execute(stmt).fetchone()[0]
-    out = transpile_duckdb(stmt)
-    assert " DIV " in out  # second pass stayed in sync after the literal
-    got = spark.sql(out).collect()[0]["parts"]
-    assert list(got) == list(duck) == ["a", "b"]
-
-    # data built via chr(92) because a backslash inside a plain literal
-    # parses differently in the two engines (Spark escape vs DuckDB raw)
-    stmt2 = (
-        r"SELECT string_split(s, '\') AS parts "
-        "FROM (SELECT concat('p', chr(92), 'q') AS s)"
-    )
-    duck2 = duckdb.connect().execute(stmt2).fetchone()[0]
-    got2 = spark.sql(transpile_duckdb(stmt2)).collect()[0]["parts"]
-    assert list(got2) == list(duck2) == ["p", "q"]
-
-
-def test_string_split_non_literal_separator_rejected():
-    with pytest.raises(ValueError, match="string_split separator"):
-        transpile_duckdb("SELECT string_split(s, sep_col) FROM t")
-    with pytest.raises(ValueError, match="string_split separator"):
-        transpile_duckdb("SELECT string_split(s, upper('.')) FROM t")
-
-
-def test_string_split_nested_and_protected_occurrences():
-    # nested in first arg: both calls rewritten, inner first
-    out = transpile_duckdb(
-        "SELECT string_split(array_to_string(string_split(s, '.'), '-'), '-') FROM t"
-    )
-    assert "string_split" not in out
-    assert out.count("split(") >= 2 and r"'\\.'" in out
-    # inside a comment / literal: untouched
-    out2 = transpile_duckdb(
-        "SELECT 'string_split(a, ''.'')' AS lit -- string_split(b, '.')\n FROM t"
-    )
-    assert "'string_split(a, ''.'')'" in out2
-    assert "-- string_split(b, '.')" in out2
-
-
-# --------------------------------------------- ADVICE: comment masking
-
-
-def test_transpile_comment_with_apostrophe_does_not_desync():
-    """An apostrophe inside a comment must not flip string-literal
-    tracking: renames and the second pass still apply after it, and real
-    literals after the comment stay protected."""
-    out = transpile_duckdb(
-        "SELECT len(xs) AS n -- it's a note\n"
-        ", power(x, 2) AS p, 'len(q)' AS lit, y // 3 AS d FROM t"
-    )
-    assert "size(xs)" in out and "pow(x, 2)" in out
-    assert "'len(q)'" in out and "DIV" in out and "// 3" not in out
-    assert "-- it's a note" in out  # comment text untouched
-
-
-def test_transpile_block_comment_masked():
-    out = transpile_duckdb(
-        "SELECT /* don't rename len(a) or a // b here */ len(b) AS n, "
-        "c // 2 AS d FROM t"
-    )
-    assert "/* don't rename len(a) or a // b here */" in out
-    assert "size(b)" in out and "DIV" in out and "// 2" not in out
 
 
 # ----------------------------------- ADVICE: deterministic weighted merge
@@ -269,66 +175,6 @@ def test_ivf_cache_is_lru_bounded(spark):
     assert _storage_frames(spark) == base
 
 
-def test_transpile_cast_unnest_param_interval_ignore_nulls(spark):
-    """The late-round dialect rewrites: cast pushed inside the array
-    (generators are top-level-only in Spark), parameterized intervals,
-    and in-parens IGNORE NULLS."""
-    out = transpile_duckdb("SELECT CAST(unnest(range(0, 3)) AS INT) AS b")
-    assert [r["b"] for r in spark.sql(out).collect()] == [0, 1, 2]
-
-    out2 = transpile_duckdb(
-        "SELECT TIMESTAMP '2024-01-01' + INTERVAL (7 % 4) MINUTE AS t"
-    )
-    assert "make_dt_interval(0, 0, (7 % 4), 0)" in out2
-    assert str(spark.sql(out2).collect()[0]["t"]) == "2024-01-01 00:03:00"
-    # literal intervals are shared syntax: untouched
-    assert "INTERVAL 15 MINUTE" in transpile_duckdb(
-        "SELECT ts + INTERVAL 15 MINUTE FROM t"
-    )
-
-    out3 = transpile_duckdb(
-        "SELECT last_value(x IGNORE NULLS) OVER (ORDER BY i) AS lv "
-        "FROM (SELECT 1 AS i, 10 AS x UNION ALL SELECT 2, NULL)"
-    )
-    assert "last_value(x) IGNORE NULLS" in out3
-    assert [r["lv"] for r in spark.sql(out3).collect()] == [10, 10]
-
-
-def test_transpile_string_literal_bracket_passthrough(spark):
-    """A string-literal key rides Spark's own bracket accessor — struct
-    field access AND map lookup (NULL on missing, like DuckDB); only
-    non-literal indexes become try_element_at."""
-    out = transpile_duckdb("SELECT ({'pos': 4, 'gram': 'g'})['pos'] AS p")
-    assert "try_element_at" not in out
-    assert spark.sql(out).collect()[0]["p"] == 4
-    out2 = transpile_duckdb("SELECT xs[i] FROM t")
-    assert "try_element_at(xs, i)" in out2
-
-
-def test_transpiled_statement_plans_like_native_sql(spark):
-    """A transpiled reference-dialect statement must optimize like
-    hand-written Spark SQL: q6's filters reach the parquet scan
-    (PushedFilters) and the scan reads only the four referenced columns
-    — no wrapper nodes, no pushdown loss through the front end."""
-    from sql4pandas_spark.queries.catalog import load_catalog
-    from sql4pandas_spark.sources.parquet import register_tables
-
-    register_tables(spark, "/root/testdata/sf0.001")
-    oracle = load_catalog()["q6_forecast_revenue"].oracle
-    plan = (
-        spark.sql(transpile_duckdb(oracle))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    scan = next(l for l in plan.splitlines() if "FileScan parquet" in l)
-    assert "PushedFilters: [" in plan and "l_shipdate" in plan
-    # column pruning: exactly the four referenced lineitem columns
-    for col in ("l_quantity", "l_extendedprice", "l_discount", "l_shipdate"):
-        assert col in scan
-    assert "l_orderkey" not in scan and "l_comment" not in scan
-
-
 def test_bigram_backoff_is_load_bearing(spark):
     """Held-out docs must hit the backoff path (n_backoff > 0 somewhere),
     reference docs scored on their own counts must not, and every
@@ -424,14 +270,3 @@ def test_pii_scrub_stagewise_attribution(spark):
     assert rows[3]["n_pii"] == 0 and rows[3]["text"] == "clean text, nothing to see"
 
 
-def test_transpile_comparison_against_list_rejected_loudly():
-    """`x > [1]` cannot be classified (a '>' before a bracket is only an
-    access base when it closes an ARRAY<...> type) — must raise, never
-    emit a garbled base expression."""
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="cannot determine the access base"):
-        transpile_duckdb("SELECT 1 FROM t WHERE x > [1, 2]")
-    # the legitimate '>' base still works: DOUBLE[][] nests fine
-    out = transpile_duckdb("SELECT CAST(e AS DOUBLE[][]) FROM t")
-    assert "ARRAY<ARRAY<DOUBLE>>" in out

@@ -8,9 +8,6 @@ small cross-cutting helpers.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 #: Spark↔DuckDB function-name divergences (SURVEY.md §2.12 #5) — kept as data
 #: so the test harness and future SQL transpilation share one table.
 SPARK_TO_DUCKDB_FN = {
@@ -38,20 +35,3 @@ SPARK_TO_DUCKDB_FN = {
     "hex": "to_hex",
 }
 
-
-def dot(a: Column, b: Column) -> Column:
-    """JVM-side dot product of two array<numeric> columns (double math)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; use `dot` directly when vectors are unit-norm."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))

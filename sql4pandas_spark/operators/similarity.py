@@ -24,6 +24,14 @@ Three tiers, matching how you'd actually run this at increasing scale:
    like tier 2, so the matrix IS collected there; only beyond the cap does
    it join the vectors onto the candidate pairs and keep both sides off the
    driver.
+
+Every float score here goes through one kernel. On the JVM side that is
+:func:`vec_lit` (a literal query vector), :func:`dot`, :func:`sq_norm` and
+:func:`cosine`, which all sum through the one ``_fold``. On the NumPy side
+it is ``_as_matrix`` (a column of vectors as a float64 matrix) and the
+chunked block scorer ``_sim_blocks``; a ``mapInPandas`` body calls them
+through ``_by_value``. ``random_projection_e6`` keeps its own integer
+fold, which is exact.
 """
 
 from __future__ import annotations
@@ -33,42 +41,92 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _dot_expr(vec_col, query_vec: list[float]):
-    """JVM-side dot(col, literal_query) with float32→double casts (§2.12 #9)."""
-    lit = F.array(*[F.lit(float(x)) for x in query_vec])
-    return F.aggregate(
-        F.zip_with(vec_col, lit, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+# -- the vector kernel ---------------------------------------------------------
 
 
-def cosine_cols(a, b):
-    """JVM-side cosine(similarity) between two ARRAY COLUMNS — the
-    column-vs-column sibling of :func:`_dot_expr` (which takes a literal
-    query): zip_with product fold for the dot, per-side self-folds for
-    the norms, float32→double casts per element (§2.12 #9). Normalizing
+def vec_lit(vec) -> Column:
+    """A literal ``array<double>`` of the Python numbers ``vec``."""
+    return F.array(*[F.lit(float(x)) for x in vec])
+
+
+def _fold(arr: Column) -> Column:
+    """The one double fold: a left-to-right sum of ``arr`` from 0.0."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def dot(a: Column, b) -> Column:
+    """JVM-side dot product of array column ``a`` with ``b``, an array
+    column or a list of floats (inlined by :func:`vec_lit`). Elements are
+    cast to double first (float32 embeddings, §2.12 #9); the optimizer
+    drops the cast where an element already is double. Pure
+    whole-stage-codegen expressions, no UDF."""
+    if not isinstance(b, Column):
+        b = vec_lit(b)
+    return _fold(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
+
+
+def sq_norm(a: Column) -> Column:
+    """Squared L2 norm of array column ``a`` in double math."""
+    return _fold(F.transform(a, lambda x: x.cast("double") * x.cast("double")))
+
+
+def cosine(a: Column, b) -> Column:
+    """JVM-side cosine similarity of array column ``a`` with ``b`` (an array
+    column or a list of floats, whose norm is taken in Python). Normalizing
     by both norms matches DuckDB's ``list_cosine_similarity`` even when
     vectors are only approximately unit — dot-only would diverge in the
-    4th decimal. Pure whole-stage-codegen expressions, no UDF.
+    4th decimal.
 
     Precondition: vectors must have non-zero norm — a zero vector makes
     the normalizing division 0/0, which is an ANSI DIVIDE_BY_ZERO abort
     on Spark but NaN in DuckDB's list_cosine_similarity, so no silent
     cross-engine answer exists to paper over; filter or re-embed zero
     vectors first (the fixture embeddings are unit-norm)."""
+    if isinstance(b, Column):
+        nb = F.sqrt(sq_norm(b))
+    else:
+        nb = F.lit(sum(float(x) * float(x) for x in b) ** 0.5)
+    return dot(a, b) / (F.sqrt(sq_norm(a)) * nb)
 
-    def _fold(arr):
-        return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
 
-    dot = _fold(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
-    na = F.sqrt(_fold(F.transform(a, lambda x: x.cast("double") * x.cast("double"))))
-    nb = F.sqrt(_fold(F.transform(b, lambda x: x.cast("double") * x.cast("double"))))
-    return dot / (na * nb)
+# -- the NumPy block scorer -----------------------------------------------------
+
+
+def _by_value(fn):
+    """A copy of module-level ``fn`` that cloudpickle ships by value (its
+    qualified name no longer resolves to it), so the Python workers that
+    run it need not import this package: a caller may have put the
+    package on ``sys.path`` by hand, where the workers cannot see it.
+    A ``mapInPandas`` body may therefore call only numpy, pandas and
+    helpers passed through here."""
+    return types.FunctionType(
+        fn.__code__, fn.__globals__, fn.__name__, fn.__defaults__, fn.__closure__
+    )
+
+
+def _as_matrix(vectors: pd.Series) -> np.ndarray:
+    """A column of array vectors as one float64 (rows, dim) matrix."""
+    return np.stack(vectors.to_numpy()).astype(np.float64)
+
+
+def _sim_blocks(
+    ids: np.ndarray, vecs: np.ndarray, mat: np.ndarray, normalize: bool
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """``(ids, vecs @ mat.T)`` in row chunks, so one sims block stays near
+    256 MB of doubles regardless of ``len(mat)`` — an Arrow batch is up to
+    10k rows, and 10k x N pairs materialized flat is O(batch*N) memory:
+    measured hang at N=20k in the 10x scale probe. ``normalize``
+    L2-normalizes the chunk's rows first."""
+    row_chunk = max(64, int(32_000_000 / max(len(mat), 1)))
+    for start in range(0, len(ids), row_chunk):
+        a = vecs[start : start + row_chunk]
+        if normalize:
+            a = a / np.linalg.norm(a, axis=1, keepdims=True)
+        yield ids[start : start + row_chunk], a @ mat.T
 
 
 def cosine_query_topk(
@@ -80,7 +138,7 @@ def cosine_query_topk(
     return (
         emb.select(
             F.col(id_col),
-            F.round(_dot_expr(F.col("embedding"), query_vec), 4).alias("sim"),
+            F.round(dot(F.col("embedding"), query_vec), 4).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)
@@ -124,7 +182,7 @@ def _broadcast_embedding_matrix(
         mat = np.zeros((0, 0), dtype=np.float64)
     else:
         ids = rows[id_col].to_numpy()
-        mat = np.stack(rows["embedding"].to_numpy()).astype(np.float64)
+        mat = _as_matrix(rows["embedding"])
         if normalize:
             mat /= np.linalg.norm(mat, axis=1, keepdims=True)
     spark = emb.sparkSession
@@ -140,26 +198,21 @@ def cosine_pairs_topk(emb: DataFrame, k: int = 20, id_col: str = "vec_id") -> Da
     top-k of a union of per-batch top-k's equals the true top-k.
     """
     b_ids, b_mat = _broadcast_embedding_matrix(emb, id_col)
+    as_matrix, sim_blocks = _by_value(_as_matrix), _by_value(_sim_blocks)
 
     def block_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         all_ids, all_mat = b_ids.value, b_mat.value
         n = len(all_ids)
-        # Bound the sims matrix to ~256 MB of doubles regardless of N — an
-        # Arrow batch is up to 10k rows, and 10k x N pairs materialized flat
-        # (the previous spelling) is O(batch*N) memory: measured hang at
-        # N=20k in the 10x scale probe.
-        row_chunk = max(64, int(32_000_000 / max(n, 1)))
+        kk = min(k, n)
         for pdf in batches:
             if pdf.empty:
                 continue
             best: pd.DataFrame | None = None
-            for start in range(0, len(pdf), row_chunk):
-                sub = pdf.iloc[start : start + row_chunk]
-                a_ids = sub[id_col].to_numpy()
-                a = np.stack(sub["embedding"].to_numpy()).astype(np.float64)
-                sims = np.round(a @ all_mat.T, 4)  # (chunk, N)
+            for a_ids, sims in sim_blocks(
+                pdf[id_col].to_numpy(), as_matrix(pdf["embedding"]), all_mat, False
+            ):
+                sims = np.round(sims, 4)  # (chunk, N)
                 sims[a_ids[:, None] >= all_ids[None, :]] = -np.inf  # id_a < id_b
-                kk = min(k, n)
                 # Per-row selection boundary: keep every pair whose sim ties
                 # or beats the row's kk-th largest. Ties at the boundary are
                 # ALL kept, so the later (sim desc, id_a, id_b) sort sees the
@@ -205,20 +258,16 @@ def cosine_near_pairs(
     keep this exact scorer for verification only.
     """
     b_ids, b_mat = _broadcast_embedding_matrix(emb, id_col, normalize=True)
+    as_matrix, sim_blocks = _by_value(_as_matrix), _by_value(_sim_blocks)
 
     def block_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         all_ids, all_mat = b_ids.value, b_mat.value
-        n = len(all_ids)
-        row_chunk = max(64, int(32_000_000 / max(n, 1)))  # ~256 MB sims cap
         for pdf in batches:
             if pdf.empty:
                 continue
-            for start in range(0, len(pdf), row_chunk):
-                sub = pdf.iloc[start : start + row_chunk]
-                a_ids = sub[id_col].to_numpy()
-                a = np.stack(sub["embedding"].to_numpy()).astype(np.float64)
-                a /= np.linalg.norm(a, axis=1, keepdims=True)
-                sims = a @ all_mat.T
+            for a_ids, sims in sim_blocks(
+                pdf[id_col].to_numpy(), as_matrix(pdf["embedding"]), all_mat, True
+            ):
                 mask = (a_ids[:, None] < all_ids[None, :]) & (sims >= threshold)
                 ai, bj = np.nonzero(mask)
                 if len(ai) == 0:
@@ -274,10 +323,9 @@ def sq8_code_col(vec_col, scales: list[float]):
     array<tinyint> — 1 byte/dim vs 4 (fp32) or 8 (fp64): the 4–8×
     memory/scan lever that lets a 100 TB embedding store fit hot
     storage tiers."""
-    sc = F.array(*[F.lit(float(s)) for s in scales])
     return F.zip_with(
         vec_col.cast("array<double>"),
-        sc,
+        vec_lit(scales),
         lambda v, s: F.when(
             s > 0,
             F.greatest(
@@ -330,57 +378,29 @@ def sq8_query_topk(
     ANN family. Row-local JVM higher-order expressions; top-k compiles to
     TakeOrderedAndProject. sim_exact rides along so quantization error is
     visible in the result, not hidden behind it."""
-    from sql4pandas_spark.operators.text import let_col
-
     if scales is None:
         scales = sq8_scales(emb, vec_col)
-    qdq = _sq8_quantize_py([float(x) for x in query_vec], scales)
-    qnorm = 0.0
-    for x in qdq:
-        qnorm += x * x
-    qnorm **= 0.5
-    sc = F.array(*[F.lit(float(s)) for s in scales])
-    qlit = F.array(*[F.lit(float(x)) for x in qdq])
-
-    def per_recon(da):
-        num = F.aggregate(
-            F.zip_with(da, qlit, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        den = F.sqrt(
-            F.aggregate(
-                F.transform(da, lambda a: a * a),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ) * F.lit(qnorm)
-        return F.round(num / den, 4)
-
-    recon = F.zip_with(
-        sq8_code_col(F.col(vec_col), scales),
-        sc,
-        lambda c, s: c.cast("double") * s / 127.0,
-    )
-    exact_num = _dot_expr(F.col(vec_col), query_vec)
-    exact_den = F.sqrt(
-        F.aggregate(
-            F.transform(
-                F.col(vec_col), lambda v: v.cast("double") * v.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    ) * F.lit(sum(float(x) * float(x) for x in query_vec) ** 0.5)
     return (
         emb.select(
             F.col(id_col),
-            let_col(recon, per_recon).alias("sim_q8"),
-            F.round(exact_num / exact_den, 4).alias("sim_exact"),
+            _sim_q8(sq8_code_col(F.col(vec_col), scales), scales, query_vec),
+            F.round(cosine(F.col(vec_col), query_vec), 4).alias("sim_exact"),
         )
         .orderBy(F.col("sim_q8").desc(), F.col(id_col))
         .limit(k)
     )
+
+
+def _sim_q8(codes, scales: list[float], query_vec: list[float]):
+    """``sim_q8``: rounded cosine of the int8 ``codes`` column's
+    reconstruction against the query's quantize→dequantize — one column
+    builder for the inline (raw-vector) and the stored-code read paths,
+    so both rank identically."""
+    from sql4pandas_spark.operators.text import let_col
+
+    qdq = _sq8_quantize_py([float(x) for x in query_vec], scales)
+    recon = F.zip_with(codes, vec_lit(scales), lambda c, s: c.cast("double") * s / 127.0)
+    return let_col(recon, lambda da: F.round(cosine(da, qdq), 4)).alias("sim_q8")
 
 
 def sq8_recon_topk(
@@ -395,38 +415,8 @@ def sq8_recon_topk(
     is 1 byte/dim. Same reconstruction arithmetic as
     :func:`sq8_query_topk` (which quantizes inline from raw vectors), so
     direct and persisted paths rank identically."""
-    from sql4pandas_spark.operators.text import let_col
-
-    qdq = _sq8_quantize_py([float(x) for x in query_vec], scales)
-    qnorm = 0.0
-    for x in qdq:
-        qnorm += x * x
-    qnorm **= 0.5
-    sc = F.array(*[F.lit(float(s)) for s in scales])
-    qlit = F.array(*[F.lit(float(x)) for x in qdq])
-
-    def per_recon(da):
-        num = F.aggregate(
-            F.zip_with(da, qlit, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        den = F.sqrt(
-            F.aggregate(
-                F.transform(da, lambda a: a * a),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ) * F.lit(qnorm)
-        return F.round(num / den, 4)
-
-    recon = F.zip_with(
-        F.col("codes"), sc, lambda c, s: c.cast("double") * s / 127.0
-    )
     return (
-        codes.select(
-            F.col(id_col), let_col(recon, per_recon).alias("sim_q8")
-        )
+        codes.select(F.col(id_col), _sim_q8(F.col("codes"), scales, query_vec))
         .orderBy(F.col("sim_q8").desc(), F.col(id_col))
         .limit(k)
     )
@@ -580,7 +570,7 @@ def drop_ivf_index(
     built for that key; ``drop_ivf_index()`` clears the whole cache (the
     engine-shutdown path). Returns the number of indexes dropped. After a
     drop, repeated build→drop cycles leave executor storage flat
-    (pinned in tests/test_round11_ops.py)."""
+    (pinned in tests/test_similarity.py)."""
     dropped = 0
     for key in list(_IVF_CACHE):
         sid, ck, nc = key
@@ -600,13 +590,14 @@ def _assign_to_cells(emb: DataFrame, id_col: str, cents: np.ndarray) -> DataFram
     broadcast, each Arrow batch is one NumPy matmul + argmax — the only
     Python in the IVF path, vectorized end-to-end."""
     b_cents = emb.sparkSession.sparkContext.broadcast(cents)
+    as_matrix = _by_value(_as_matrix)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = b_cents.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            m = as_matrix(pdf["embedding"])
             yield pd.DataFrame(
                 {"vec_id": pdf[id_col], "cell": np.argmax(m @ c.T, axis=1).astype("int32")}
             )
@@ -676,7 +667,7 @@ def ivf_query_topk(
         index.emb.join(cand_ids, index.emb[id_col] == cand_ids["vec_id"], "left_semi")
         .select(
             F.col(id_col),
-            F.round(_dot_expr(F.col("embedding"), query_vec), 4).alias("sim"),
+            F.round(dot(F.col("embedding"), query_vec), 4).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)
@@ -839,16 +830,13 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 13) -> np.ndarray:
 def lsh_bucket_key(vec_col, planes: np.ndarray, table_id: int):
     """Sign-bit sketch of one LSH table as a single long: bit_i = (v ·
     plane_i) > 0, offset by the table id so keys from different tables never
-    collide. Built from zip_with dot products per plane — JVM-side, no UDF."""
-    bits = []
-    for i, plane in enumerate(planes):
-        lit = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(vec_col, lit, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+    collide. Built from :func:`dot` per plane — JVM-side, no UDF."""
+    bits = [
+        F.when(dot(vec_col, plane) > 0, F.lit(2**i).cast("long")).otherwise(
+            F.lit(0).cast("long")
         )
-        bits.append(F.when(dot > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0).cast("long")))
+        for i, plane in enumerate(planes)
+    ]
     key = F.lit(table_id * (2 ** len(planes))).cast("long")
     for b in bits:
         key = key + b
@@ -871,16 +859,6 @@ def _matrix_rows(
             f"{missing[:10].tolist()} ({len(missing)} in all)"
         )
     return rows[: len(ids_a)], rows[len(ids_a) :]
-
-
-def _by_value(fn):
-    """A copy of module-level ``fn`` that cloudpickle ships by value (its
-    qualified name no longer resolves to it), so the Python workers that
-    run it need not import this package: a caller may have put the
-    package on ``sys.path`` by hand, where the workers cannot see it."""
-    return types.FunctionType(
-        fn.__code__, fn.__globals__, fn.__name__, fn.__defaults__, fn.__closure__
-    )
 
 
 def ann_lsh_topk(
@@ -992,13 +970,14 @@ def ann_lsh_topk(
             score_lookup, schema="id_a long, id_b long, sim double"
         )
     else:
+        as_matrix = _by_value(_as_matrix)
 
         def score_attached(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 if pdf.empty:
                     continue
-                av = np.stack(pdf["emb_a"].to_numpy()).astype(np.float64)
-                bv = np.stack(pdf["emb_b"].to_numpy()).astype(np.float64)
+                av = as_matrix(pdf["emb_a"])
+                bv = as_matrix(pdf["emb_b"])
                 yield pd.DataFrame(
                     {
                         "id_a": pdf["id_a"],
@@ -1045,15 +1024,13 @@ def centroid_outlier_stats(
        64× explode never hits the wire.
     2. The (|labels| × dims) centroid frame reassembles into arrays
        (array_sort over collected (pos, mean) structs — deterministic) and
-       BROADCASTS back; per-vector cosine is a fixed-order JVM fold
-       (zip_with + aggregate), then one map-combined groupBy(label).
+       BROADCASTS back; per-vector cosine is the kernel's fixed-order JVM
+       fold (:func:`dot`, :func:`sq_norm`), then one map-combined
+       groupBy(label).
     """
     ex = emb.select(
         label_col, F.posexplode(F.col(vec_col)).alias("pos", "val")
     )
-    def _fold(products):
-        return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
-
     cent = (
         ex.groupBy(label_col, "pos")
         .agg(F.avg(F.col("val").cast("double")).alias("m"))
@@ -1065,18 +1042,12 @@ def centroid_outlier_stats(
             ).alias("_centroid")
         )
         # ||c||² once per label here, not re-folded on every corpus row
-        .withColumn("_cnorm2", _fold(F.transform("_centroid", lambda y: y * y)))
+        .withColumn("_cnorm2", sq_norm(F.col("_centroid")))
     )
     joined = emb.join(F.broadcast(cent), label_col)
 
-    dot = _fold(
-        F.zip_with(
-            F.col(vec_col), F.col("_centroid"), lambda x, y: x.cast("double") * y
-        )
-    )
-    nv = _fold(
-        F.transform(F.col(vec_col), lambda x: x.cast("double") * x.cast("double"))
-    )
+    d = dot(F.col(vec_col), F.col("_centroid"))
+    nv = sq_norm(F.col(vec_col))
     # zero-norm guard: an all-zero vector (failed encode) or a degenerate
     # all-zero centroid has no defined cosine — under ANSI mode the bare
     # division would abort the whole audit with DIVIDE_BY_ZERO, exactly on
@@ -1084,7 +1055,7 @@ def centroid_outlier_stats(
     # an outlier below, excluded from sum/min/max.
     cos_e4 = F.when(
         (nv > 0) & (F.col("_cnorm2") > 0),
-        F.round(dot / (F.sqrt(nv) * F.sqrt(F.col("_cnorm2"))) * 10000).cast(
+        F.round(d / (F.sqrt(nv) * F.sqrt(F.col("_cnorm2"))) * 10000).cast(
             "long"
         ),
     )

@@ -1176,44 +1176,11 @@ def bpe_learn_merges(
     w0 = F.filter(
         tokens(text_col), lambda t: t.rlike(BPE_ALNUM_RE)
     )
-    docs = df.select(w0.alias("w")).localCheckpoint(eager=True)
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        pairs = docs.select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("w"), 1, F.greatest(F.size("w") - 1, F.lit(0))),
-                    F.slice(F.col("w"), 2, F.greatest(F.size("w") - 1, F.lit(0))),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                )
-            ).alias("pair")
-        )
-        best = (
-            pairs.groupBy("pair")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc(), F.col("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            # Corpus exhausted its adjacent pairs before n_merges rounds.
-            # The generated oracles unroll a FIXED n_merges rounds, so a
-            # short result would fail the differential confusingly — make
-            # the contract violation loud at the source instead. (The
-            # catalog entry's corpus keeps thousands of pairs alive at
-            # n_merges=3; this guards ad-hoc callers.)
-            raise ValueError(
-                f"bpe_learn_merges: corpus exhausted adjacent pairs after "
-                f"{len(merges)} merges (< n_merges={n_merges}); the "
-                f"fixed-round unrolled oracles require a corpus that "
-                f"survives all rounds"
-            )
-        left, right = best[0]["pair"].split(" ")
-        merges.append((left, right, int(best[0]["n"])))
-        docs = docs.select(
-            bpe_merge_tokens(F.col("w"), left, right).alias("w")
-        ).localCheckpoint(eager=True)
-    return merges
+    return _bpe_train(
+        df.select(w0.alias("w"), F.lit(1).alias("cnt")),
+        n_merges,
+        "bpe_learn_merges: corpus exhausted adjacent pairs",
+    )
 
 
 def bpe_learn_merges_chars(
@@ -1254,28 +1221,40 @@ def bpe_learn_merges_chars(
 def bpe_learn_merges_from_vocab(
     vocab_df: DataFrame,
     n_merges: int,
-    on_round=None,
 ) -> list[tuple[str, str, int]]:
     """The trainer loop of :func:`bpe_learn_merges_chars`, taking the
     (word, cnt) frequency frame DIRECTLY — the entry point for
-    pipelines that already maintain word counts (and for the
-    merge-depth probe, whose slope must be measured at a realistic
-    |vocab| the synthetic corpus's 31-word vocabulary can't provide).
-    ``on_round(k, seconds)``, when given, observes each merge's wall
-    time. Same contract as the corpus wrapper: per-round work is
-    |vocab|-bounded, one 1-row argmax collect per merge, loud
-    exhaustion error."""
-    import time as _time
+    pipelines that already maintain word counts. Same contract as the
+    corpus wrapper: per-round work is |vocab|-bounded, one 1-row argmax
+    collect per merge, loud exhaustion error."""
+    return _bpe_train(
+        vocab_df.select(
+            F.filter(F.split("word", ""), lambda c: c != "").alias("w"),
+            "cnt",
+        ),
+        n_merges,
+        "bpe_learn_merges_chars: vocabulary exhausted adjacent symbol pairs",
+    )
 
-    vocab = vocab_df.select(
-        F.filter(F.split("word", ""), lambda c: c != "").alias("w"),
-        "cnt",
-    ).localCheckpoint(eager=True)
+
+def _bpe_train(
+    words: DataFrame, n_merges: int, exhausted: str
+) -> list[tuple[str, str, int]]:
+    """The one BPE trainer loop over (w symbol array, cnt weight) rows:
+    each round sums ``cnt`` over every adjacent symbol pair, takes the
+    argmax (count desc, pair asc — deterministic across engines and
+    partitionings), and merges it everywhere with :func:`bpe_merge_tokens`.
+
+    A corpus that runs out of adjacent pairs before ``n_merges`` rounds
+    raises, with ``exhausted`` opening the message: the generated oracles
+    unroll a FIXED n_merges rounds, so a short result would fail the
+    differential confusingly (the catalog corpora keep thousands of pairs
+    alive at n_merges=3; this guards ad-hoc callers)."""
+    words = words.localCheckpoint(eager=True)
     merges: list[tuple[str, str, int]] = []
-    for _k in range(n_merges):
-        _t0 = _time.time()
+    for _ in range(n_merges):
         best = (
-            vocab.select(
+            words.select(
                 F.explode(
                     F.zip_with(
                         F.slice(F.col("w"), 1, F.greatest(F.size("w") - 1, F.lit(0))),
@@ -1293,18 +1272,15 @@ def bpe_learn_merges_from_vocab(
         )
         if not best:
             raise ValueError(
-                f"bpe_learn_merges_chars: vocabulary exhausted adjacent "
-                f"symbol pairs after {len(merges)} merges "
+                f"{exhausted} after {len(merges)} merges "
                 f"(< n_merges={n_merges}); the fixed-round unrolled "
                 f"oracles require a corpus that survives all rounds"
             )
         left, right = best[0]["pair"].split(" ")
         merges.append((left, right, int(best[0]["n"])))
-        vocab = vocab.select(
+        words = words.select(
             bpe_merge_tokens(F.col("w"), left, right).alias("w"), "cnt"
         ).localCheckpoint(eager=True)
-        if on_round is not None:
-            on_round(_k + 1, _time.time() - _t0)
     return merges
 
 

@@ -837,7 +837,7 @@ def ivf_recall_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     collects — even the centroids stay a broadcast frame."""
     from pyspark.sql import Window
 
-    from sql4pandas_spark.operators.similarity import cosine_cols
+    from sql4pandas_spark.operators.similarity import cosine
     from sql4pandas_spark.operators.text import portable_hash60
 
     t = register_tables(spark, sf_dir, ("embeddings",))
@@ -876,7 +876,7 @@ def ivf_recall_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "embedding",
             "cidx",
-            F.round(cosine_cols(F.col("embedding"), F.col("cemb")), 4).alias(
+            F.round(cosine(F.col("embedding"), F.col("cemb")), 4).alias(
                 "csim"
             ),
         )
@@ -891,7 +891,7 @@ def ivf_recall_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "qemb",
             "cidx",
-            F.round(cosine_cols(F.col("qemb"), F.col("cemb")), 4).alias(
+            F.round(cosine(F.col("qemb"), F.col("cemb")), 4).alias(
                 "qsim"
             ),
         )
@@ -905,7 +905,7 @@ def ivf_recall_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "vec_id",
-            F.round(cosine_cols(F.col("embedding"), F.col("qemb")), 4).alias(
+            F.round(cosine(F.col("embedding"), F.col("qemb")), 4).alias(
                 "sim"
             ),
         )
@@ -929,7 +929,7 @@ def ivf_recall_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "vec_id",
-            F.round(cosine_cols(F.col("embedding"), F.col("qemb")), 4).alias(
+            F.round(cosine(F.col("embedding"), F.col("qemb")), 4).alias(
                 "sim"
             ),
         )

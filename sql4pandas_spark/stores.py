@@ -34,7 +34,6 @@ import tempfile
 from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
@@ -168,13 +167,14 @@ def read_batches(
     """Read the store, without ``exclude_batch``'s own partition. Returns
     None ONLY when the path does not exist (a genuine first batch); any
     other failure raises — treating a broken store as empty would silently
-    re-admit content it has already seen."""
-    try:
-        store = spark.read.parquet(root)
-    except AnalysisException as exc:
-        if exc.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
+    re-admit content it has already seen. Existence is asked of the
+    path's Hadoop ``FileSystem`` (any URI, unlike ``os.path``) before the
+    read, so an empty store costs no failing query."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(root)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    if not jpath.getFileSystem(conf).exists(jpath):
+        return None
+    store = spark.read.parquet(root)
     if exclude_batch is not None:
         store = store.filter(F.col("batch_id") != F.lit(exclude_batch))
     return store

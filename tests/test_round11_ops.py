@@ -1,7 +1,8 @@
 """Round-11 operator tests: the deterministic weighted-sample merge plus
 the round's new operators as they land. (The transpiler tests of this
 round, string_split separators and comment masking among them, live in
-tests/test_transpile.py.)"""
+tests/test_transpile.py; the IVF cache lifecycle tests live in
+tests/test_similarity.py.)"""
 
 from __future__ import annotations
 
@@ -114,65 +115,6 @@ def test_top_movers_null_group_flows_through(spark):
     ev = _planted(spark)
     out = top_movers(ev, "event_type")
     assert out.filter(F.col("event_type").isNull()).count() > 0
-
-
-# ----------------------------------------- round-11 IVF cache lifecycle
-
-
-def _storage_frames(spark) -> int:
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-
-
-def test_ivf_cache_drop_releases_storage(spark):
-    """build -> drop cycles must leave executor storage flat: each cached
-    index persists one assignment frame, and drop_ivf_index unpersists."""
-    from sql4pandas_spark.operators.similarity import (
-        _IVF_CACHE,
-        build_ivf_index,
-        drop_ivf_index,
-    )
-    from sql4pandas_spark.sources.parquet import register_tables
-
-    t = register_tables(spark, "/root/testdata/sf0.001", ("embeddings",))
-    drop_ivf_index()  # clean slate
-    base = _storage_frames(spark)
-    for cycle in range(3):
-        idx = build_ivf_index(
-            t["embeddings"], n_cells=4, cache_key=f"r11_cycle_{cycle}"
-        )
-        idx.assigned.count()  # materialize the persist
-        assert _storage_frames(spark) >= base + 1
-        assert drop_ivf_index(cache_key=f"r11_cycle_{cycle}") == 1
-        assert _storage_frames(spark) == base
-    assert all(k[1] != "r11_cycle_2" for k in _IVF_CACHE)
-
-
-def test_ivf_cache_is_lru_bounded(spark):
-    """Entry max+1 evicts (and releases) the least recently used index."""
-    from sql4pandas_spark.operators import similarity as sim
-    from sql4pandas_spark.sources.parquet import register_tables
-
-    t = register_tables(spark, "/root/testdata/sf0.001", ("embeddings",))
-    sim.drop_ivf_index()
-    base = _storage_frames(spark)
-    keys = [f"r11_lru_{i}" for i in range(sim._IVF_CACHE_MAX + 2)]
-    built = {k: sim.build_ivf_index(t["embeddings"], n_cells=4, cache_key=k)
-             for k in keys}
-    for k in keys:
-        built[k].assigned.count()
-    assert len(sim._IVF_CACHE) == sim._IVF_CACHE_MAX
-    cached_keys = [k[1] for k in sim._IVF_CACHE]
-    assert keys[0] not in cached_keys and keys[1] not in cached_keys
-    assert keys[-1] in cached_keys
-    # a cache HIT refreshes recency: touch the oldest survivor, add one
-    # more, and the second-oldest (not the touched one) must evict
-    survivor = cached_keys[0]
-    sim.build_ivf_index(t["embeddings"], n_cells=4, cache_key=survivor)
-    sim.build_ivf_index(t["embeddings"], n_cells=4, cache_key="r11_lru_extra")
-    now = [k[1] for k in sim._IVF_CACHE]
-    assert survivor in now and cached_keys[1] not in now
-    assert sim.drop_ivf_index() == sim._IVF_CACHE_MAX
-    assert _storage_frames(spark) == base
 
 
 def test_bigram_backoff_is_load_bearing(spark):

@@ -3,6 +3,7 @@
 1. ``_sq8_quantize_py`` half-away-from-zero must match Spark round
    (BigDecimal HALF_UP) and DuckDB round at FP edge cases — the old
    ``floor(x+0.5)`` formulation ties-rounded 0.49999999999999994 UP.
+   (Those two pins live in tests/test_similarity.py.)
 2. ``bpe_learn_merges`` on a corpus that exhausts adjacent pairs before
    ``n_merges`` rounds must fail LOUDLY (the generated oracles unroll a
    fixed round count, so a silently-short result would fail the
@@ -20,46 +21,6 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-
-
-# ------------------------------------------------- 1. SQ8 rounding edge
-
-
-def test_sq8_quantize_py_half_up_matches_engines_at_fp_edge():
-    from sql4pandas_spark.operators.similarity import _sq8_quantize_py
-
-    # x + 0.5 ties-rounds to 1.0 in FP, so floor(x+0.5) gives 1; Spark
-    # round, DuckDB round, and Decimal HALF_UP all give 0.
-    x = 0.49999999999999994
-    assert _sq8_quantize_py([x], [127.0]) == [0.0]
-    assert _sq8_quantize_py([-x], [127.0]) == [-0.0]
-    assert duckdb.sql(f"SELECT round({x!r}::DOUBLE)").fetchone()[0] == 0.0
-    # ordinary halves still round away from zero (the documented rule):
-    # scale=127.0 makes code = round(v) and reconstruction = code
-    assert _sq8_quantize_py([0.5], [127.0]) == [1.0]
-    assert _sq8_quantize_py([-0.5], [127.0])[0] == -1.0
-    assert _sq8_quantize_py([2.5], [127.0]) == [3.0]
-
-
-def test_sq8_quantize_py_half_up_sign_aware(spark):
-    """The engine (Spark round) and the Python quantizer agree on a grid
-    of exact-half and near-half codes, both signs."""
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.similarity import _sq8_quantize_py
-
-    vals = [0.5, -0.5, 1.5, -1.5, 2.5, -2.5,
-            0.49999999999999994, -0.49999999999999994]
-    # scale=127.0 makes code = round(v); reconstruction = code * 1.0
-    py = [_sq8_quantize_py([v], [127.0])[0] for v in vals]
-    df = spark.createDataFrame([(v,) for v in vals], "v double")
-    jvm = [
-        r["c"]
-        for r in df.select(
-            (F.round(F.col("v") * 127.0 / 127.0) * 127.0 / 127.0).alias("c")
-        ).collect()
-    ]
-    assert py == jvm
 
 
 # ------------------------------------------- 2. BPE exhaustion is loud

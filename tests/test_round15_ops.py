@@ -1,7 +1,8 @@
 """Round-15 optimization-phase focused tests: the spread_for_compute
 parallelism guard and the gopher_rules extra_cols collision validation.
 (The connected_components convergence-check tests live in
-tests/test_dedup.py, run on both components paths.)"""
+tests/test_dedup.py, run on both components paths; the IVF save
+clustering test lives in tests/test_similarity.py.)"""
 
 from __future__ import annotations
 
@@ -145,53 +146,3 @@ def test_near_dedup_store_files_bounded(spark, tmp_path):
     for sub in ("shingles", "bands"):
         files = glob.glob(f"{store}/{sub}/part-*.parquet")
         assert len(files) == 1, (sub, files)
-
-
-def test_ivf_save_clusters_wide_assignments_only(spark, tmp_path):
-    """save_ivf_index's partitioned write must cluster by (batch_id, cell)
-    unless the assignment pass scans as one task (else a tasks x cells file
-    explosion at scale), and pass serial fixture-scale inputs through
-    untouched (the exchange measured +1.5 s/save for zero file-count
-    change at sf0.01). Wide case: one file per (batch_id, cell) dir."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.similarity import (
-        _cluster_for_partitioned_write,
-        build_ivf_index,
-        save_ivf_index,
-    )
-
-    # serial source (one small parquet file -> one scan task): identical
-    # object back, no exchange
-    serial_dir = str(tmp_path / "serial")
-    spark.createDataFrame(
-        [(i, i % 4, 0) for i in range(16)], ["vec_id", "cell", "batch_id"]
-    ).coalesce(1).write.parquet(serial_dir)
-    narrow = spark.read.parquet(serial_dir)
-    assert _cluster_for_partitioned_write(narrow, narrow) is narrow
-
-    # wide input: a many-file parquet-backed vector table must yield ONE
-    # file per (batch_id, cell) directory after save
-    src = str(tmp_path / "emb_src")
-    (
-        spark.range(0, 512, 1, 8)
-        .select(
-            F.col("id").alias("vec_id"),
-            F.array(
-                (F.col("id") % 7).cast("double"),
-                (F.col("id") % 5).cast("double"),
-                F.lit(1.0),
-            ).alias("embedding"),
-        )
-        .write.parquet(src)
-    )
-    emb = spark.read.parquet(src)
-    idx = build_ivf_index(emb, n_cells=4)
-    root = str(tmp_path / "ivf_root")
-    save_ivf_index(idx, root)
-    idx.assigned.unpersist()
-    for d in glob.glob(f"{root}/assigned/batch_id=0/cell=*"):
-        files = glob.glob(f"{d}/part-*.parquet")
-        assert len(files) == 1, (d, files)

@@ -1,6 +1,7 @@
 """Round-3 regression tests: driver-window ordering, the portable hash's
-Spark↔DuckDB equivalence, the no-equi-key range join, join-type alias
-handling, the broadcast-guard probe, and the IVF index lifecycle."""
+Spark↔DuckDB equivalence, the no-equi-key range join and join-type alias
+handling. (The broadcast-guard probe and the IVF index lifecycle tests
+live in tests/test_similarity.py.)"""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from sql4pandas_spark.operators import joins, similarity, text
+from sql4pandas_spark.operators import joins, text
 from sql4pandas_spark.plans import formatted_plan
 from sql4pandas_spark.queries import load_catalog
 from sql4pandas_spark.queries.catalog import DRIVER_PRIORITY
@@ -123,64 +124,6 @@ def test_salted_join_rejects_right_and_full_outer_aliases(spark):
     for how in ("right", "rightouter", "right_outer", "full", "fullouter", "full_outer"):
         with pytest.raises(ValueError, match="salted_join supports"):
             joins.salted_join(t["orders"], t["customer"], "o_custkey", "c_custkey", how=how)
-
-
-# ---------------------------------------------------------------------------
-# broadcast-matrix guard: bounded probe, no extra job
-# ---------------------------------------------------------------------------
-
-
-def test_broadcast_guard_raises_beyond_cap_and_names_scale_path(spark):
-    emb = register_tables(spark, SF_SMALL, ("embeddings",))["embeddings"]
-    with pytest.raises(ValueError, match="ann_lsh_topk"):
-        similarity._broadcast_embedding_matrix(emb, "vec_id", max_rows=10)
-
-
-# ---------------------------------------------------------------------------
-# IVF index lifecycle
-# ---------------------------------------------------------------------------
-
-
-def test_ivf_training_sample_is_topk_not_global_sort(spark):
-    emb = register_tables(spark, SF_SMALL, ("embeddings",))["embeddings"]
-    sample = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.xxhash64(F.col("vec_id").cast("long")), F.col("vec_id"))
-        .limit(2048)
-    )
-    plan = formatted_plan(sample)
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "Exchange rangepartitioning" not in plan, (
-        "training sample must be a per-partition top-k heap, not a range-"
-        "partitioned global sort:\n" + plan
-    )
-
-
-def test_ivf_index_is_cached_per_session_key(spark):
-    emb = register_tables(spark, SF_SMALL, ("embeddings",))["embeddings"]
-    a = similarity.build_ivf_index(emb, n_cells=4, cache_key="t_ivf_cache")
-    b = similarity.build_ivf_index(emb, n_cells=4, cache_key="t_ivf_cache")
-    assert a is b, "same cache_key must reuse the trained+assigned index"
-    c = similarity.build_ivf_index(emb, n_cells=4, cache_key="t_ivf_other")
-    assert c is not a
-
-
-def test_ivf_query_recall_via_cached_index(spark):
-    emb = register_tables(spark, SF_SMALL, ("embeddings",))["embeddings"]
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    rest = emb.filter(F.col("vec_id") != 0)
-    exact = {
-        r["vec_id"]
-        for r in similarity.cosine_query_topk(rest, qvec, k=10).collect()
-    }
-    index = similarity.build_ivf_index(rest, n_cells=16, cache_key="t_ivf_recall")
-    approx = {
-        r["vec_id"]
-        for r in similarity.ivf_query_topk(index, qvec, k=10, n_probe=4).collect()
-    }
-    # same floor as tests/test_similarity.py::test_ivf_query_recall (0.3),
-    # with headroom: observed 5/10 at these params on the sf0.001 fixture
-    assert len(exact & approx) >= 4, (exact, approx)
 
 
 # ---------------------------------------------------------------------------

@@ -537,64 +537,6 @@ def test_streaming_quantile_maintenance_exactly_once(spark, tmp_path):
     assert q50["n_total"] == 100 and q50["bin"] == 3
 
 
-# ---------------------------------------------------- random projection
-
-
-def test_random_projection_is_shuffle_free_and_deterministic(spark):
-    from sql4pandas_spark.operators.similarity import (
-        projection_signs,
-        random_projection_e6,
-    )
-
-    assert projection_signs(8, 4) == projection_signs(8, 4)
-    assert all(s in (-1, 1) for row in projection_signs(8, 4) for s in row)
-
-    df = spark.createDataFrame(
-        [(1, [0.5, -1.0, 2.0, 0.25]), (2, [0.0, 0.0, 0.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    out = random_projection_e6(df, in_dim=4, out_dim=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-
-    signs = projection_signs(4, 2)
-    q = [500000, -1000000, 2000000, 250000]
-    got = {r["vec_id"]: list(r["proj_e6"]) for r in out.collect()}
-    assert got[1] == [
-        sum(x * s for x, s in zip(q, signs[0])),
-        sum(x * s for x, s in zip(q, signs[1])),
-    ]
-    assert got[2] == [0, 0]
-
-
-def test_random_projection_roughly_preserves_relative_distances(spark):
-    """JL sanity at loose tolerance: for 40 random 64-dim vectors
-    projected to 16 dims, squared-distance ratios stay within a broad
-    band (the guarantee is statistical; this pins 'not garbage', the
-    exactness contract is the oracle's)."""
-    import numpy as np
-
-    from sql4pandas_spark.operators.similarity import random_projection_e6
-
-    rng = np.random.RandomState(7)
-    vecs = rng.normal(size=(40, 64))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    proj = {
-        r["vec_id"]: np.array(r["proj_e6"], dtype=float) / 1e6
-        for r in random_projection_e6(df, in_dim=64, out_dim=16).collect()
-    }
-    ratios = []
-    for i in range(0, 40, 5):
-        for j in range(i + 1, 40, 7):
-            d_orig = np.sum((vecs[i] - vecs[j]) ** 2)
-            d_proj = np.sum((proj[i] - proj[j]) ** 2) / 16.0  # JL scale
-            ratios.append(d_proj / d_orig)
-    assert 0.3 < min(ratios) and max(ratios) < 3.0, (min(ratios), max(ratios))
-
-
 # -------------------------------------------------- top movers + OHLC
 
 

@@ -1,7 +1,8 @@
 """The store module (sql4pandas_spark/stores.py): the versioned ``v{k}``
-store's guard, interlock and retention; the batch-keyed sink on an
-all-empty stream; the availableNow drain's timeout and checkpoint
-cleanup; and a guard that the protocol lives in that one module."""
+store's guard, interlock and retention; the batch-keyed store's read of
+a missing or unreadable root and its sink on an all-empty stream; the
+availableNow drain's timeout and checkpoint cleanup; and a guard that
+the protocol lives in that one module."""
 
 from __future__ import annotations
 
@@ -150,6 +151,39 @@ def test_store_protocol_lives_in_the_store_module():
             ):
                 offenders.append(f"{rel}:{line} {piece} ({owner})")
     assert not offenders, f"store/drain protocol outside stores.py: {offenders}"
+
+
+# ------------------------------------------ batch-keyed store: empty store
+
+
+def test_read_batches_missing_root_is_none_without_a_read(
+    spark, tmp_path, monkeypatch
+):
+    """A store that does not exist yet is found out by asking its file
+    system, not by a read that fails: no parquet read runs at all."""
+    from pyspark.sql import DataFrameReader
+
+    from sql4pandas_spark.stores import read_batches
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("read_batches read a store that does not exist")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    assert read_batches(spark, str(tmp_path / "missing")) is None
+    assert read_batches(spark, (tmp_path / "missing_uri").as_uri()) is None
+
+
+def test_read_batches_existing_unreadable_root_raises(spark, tmp_path):
+    """A root that exists but holds no readable store is not "empty": the
+    read error propagates instead of re-admitting seen content."""
+    from pyspark.errors import AnalysisException
+
+    from sql4pandas_spark.stores import read_batches
+
+    root = tmp_path / "store"
+    root.mkdir()
+    with pytest.raises(AnalysisException):
+        read_batches(spark, str(root))
 
 
 # ------------------------------------------ versioned store: guard, interlock

@@ -17,9 +17,11 @@ Scale design:
   ``DRIVER_GRAPH_MAX_EDGES`` pairs is collected once and labeled on the
   driver by vectorised hook-and-jump (no Spark job per round). A larger one
   runs distributed smallest-id label propagation: O(graph diameter) rounds,
-  each a join+groupBy checkpointed to keep the plan bounded, and
-  non-convergence within ``max_iter`` rounds raises instead of returning
-  wrong labels. ``max_iter`` bounds only that distributed path.
+  each a join+groupBy checkpointed to keep the plan bounded. Both paths
+  stop by one rule, for every id type: no edge has different labels at its
+  two ends. On the distributed path non-convergence within ``max_iter``
+  rounds raises instead of returning wrong labels; ``max_iter`` bounds only
+  that path.
 - SimHash: 60-bit signature via per-bit weighted sums; near-dup candidates by
   banding the bits into 4 chunks of (16, 16, 16, 12) meaningful bits —
   Hamming ≤ 3 guarantees a shared chunk by pigeonhole — verified with
@@ -342,15 +344,22 @@ def _propagate_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
     """Smallest-id label propagation over a NULL-free pair graph — the
     distributed path of :func:`connected_components`.
 
-    Each iteration: labels flow across edges via
-    join + min-aggregate; min-label propagation converges in O(graph diameter)
-    rounds (NOT O(log n) — a chain of d near-dups needs d rounds; use
+    Each round, labels flow across edges via join + min-aggregate;
+    min-label propagation converges in O(graph diameter) rounds (NOT
+    O(log n) — a chain of d near-dups needs d rounds; use
     pointer-doubling/large-star if log-round convergence is ever needed).
     localCheckpoint truncates lineage each round so the plan stays bounded —
     the standard iterative-algorithm pattern on Spark (GraphX/GraphFrames do
-    the same under the hood). Raises RuntimeError if labels are still moving
-    after `max_iter` rounds — silently returning partial clusters would
-    under-merge duplicates downstream.
+    the same under the hood).
+
+    The rounds stop by the driver path's rule: no edge has different
+    labels at its two ends, one ``limit(1).count()`` over edges ⋈ labels ⋈
+    labels, for every id type. That is enough: a label always names a
+    member of its node's component and is never larger than the node, so
+    once every edge agrees each component carries its smallest id. Raises
+    RuntimeError if an edge still disagrees after `max_iter` rounds —
+    silently returning partial clusters would under-merge duplicates
+    downstream.
     """
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -368,87 +377,31 @@ def _propagate_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
         .distinct()
         .withColumn("cluster_id", F.col("doc_id"))
     )
-
-    # Convergence check: min-propagation can only DECREASE labels (each
-    # round's label is the min over a set containing the old label), and
-    # the doc_id set is constant, so for NUMERIC ids sum(cluster_id) is
-    # strictly monotone until fixpoint — equal sums ⟺ identical labels.
-    # One cheap scalar aggregate over the just-checkpointed frame then
-    # replaces a new-vs-old join + filter + limit + count job per round
-    # (~30% off dedup_near_minhash's clustering stage at sf0.1). The sum
-    # is exact decimal(38) — int64 would overflow at ~1e9 rows of
-    # near-2^63 ids; 38 digits holds 1e9 * 9.2e18 with room to spare.
-    # Non-numeric ids (string nodes from the graph operators) have no
-    # order-isomorphic exact sum, so they keep the join-based check.
-    numeric_ids = isinstance(
-        labels.schema["cluster_id"].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType),
-    )
-
-    def _label_sums(frame: DataFrame):
-        """(sum(cluster_id), sum(doc_id)) as exact decimals, with a LOUD
-        overflow guard: under non-ANSI mode an overflowed decimal(38) sum
-        returns NULL, and silently comparing NULL == NULL would declare
-        convergence with under-merged clusters. A nonempty frame with a
-        NULL sum is therefore an error, never a fixpoint. (An EMPTY frame
-        legitimately sums to (None, None) — the empty-pair-graph case.)
-
-        sum(doc_id) rides the SAME aggregate job: the doc_id set is
-        constant across rounds, so it equals the IDENTITY-label sum —
-        giving round 1 a correct previous-sum to compare against without
-        a separate pre-loop aggregate (a sentinel would force one extra
-        round on graphs whose first propagation is already a fixpoint,
-        e.g. self-loop-only pair sets)."""
-        row = frame.agg(
-            F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s"),
-            F.sum(F.col("doc_id").cast("decimal(38,0)")).alias("ids"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        if row["n"] > 0 and (row["s"] is None or row["ids"] is None):
-            raise RuntimeError(
-                "connected_components: decimal(38) label sum overflowed — "
-                "the convergence check cannot be trusted; use the "
-                "join-based check for this id domain"
-            )
-        return row["s"], row["ids"]
-
-    prev_sum: object = None
-    changed = 1
-    for rnd in range(max_iter):
+    for _ in range(max_iter):
         # label of each node <- min(own label, min neighbor label)
         neighbor_labels = (
             edges.join(labels, edges.dst == labels.doc_id)
             .select(F.col("src").alias("doc_id"), F.col("cluster_id"))
         )
-        new_labels = (
+        labels = (
             labels.unionByName(neighbor_labels)
             .groupBy("doc_id")
             .agg(F.min("cluster_id").alias("cluster_id"))
         ).localCheckpoint(eager=True)
-        if numeric_ids:
-            cur_sum, identity_sum = _label_sums(new_labels)
-            if rnd == 0:
-                prev_sum = identity_sum  # labels started as the identity
-            changed = 0 if cur_sum == prev_sum else 1
-            prev_sum = cur_sum
-        else:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "doc_id")
-                .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-                .limit(1)
-                .count()
-            )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "the candidate-pair graph has a longer chain than expected; "
-            "raise max_iter or switch to pointer-doubling"
+        disagreeing = (
+            edges.join(labels.toDF("src", "src_label"), "src")
+            .join(labels.toDF("dst", "dst_label"), "dst")
+            .filter(F.col("src_label") != F.col("dst_label"))
+            .limit(1)
+            .count()
         )
-    return labels
+        if disagreeing == 0:
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds — "
+        "the candidate-pair graph has a longer chain than expected; "
+        "raise max_iter or switch to pointer-doubling"
+    )
 
 
 def label_components(

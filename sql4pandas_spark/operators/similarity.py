@@ -750,6 +750,21 @@ def save_ivf_index(index: IVFIndex, index_root: str) -> None:
     )
 
 
+def _read_centroids(spark, index_root: str) -> np.ndarray:
+    """A saved index's centroids as one float64 (n_cells, dim) matrix in
+    cell order; (0, 0) for an index built over an empty table."""
+    import os
+
+    crows = (
+        spark.read.parquet(os.path.join(index_root, "centroids"))
+        .orderBy("cell")
+        .collect()
+    )
+    if not crows:
+        return np.zeros((0, 0), dtype=np.float64)
+    return np.stack([np.asarray(r.centroid, dtype=np.float64) for r in crows])
+
+
 def add_to_ivf_index(
     new_emb: DataFrame, index_root: str, batch_id: int, id_col: str = "vec_id"
 ) -> None:
@@ -767,15 +782,9 @@ def add_to_ivf_index(
 
     if batch_id < 1:
         raise ValueError("batch_id 0 is the base build; adds start at 1")
-    spark = new_emb.sparkSession
-    crows = (
-        spark.read.parquet(os.path.join(index_root, "centroids"))
-        .orderBy("cell")
-        .collect()
-    )
-    if not crows:
+    cents = _read_centroids(new_emb.sparkSession, index_root)
+    if not len(cents):
         raise ValueError("cannot add to an index built over an empty table")
-    cents = np.stack([np.asarray(r.centroid, dtype=np.float64) for r in crows])
     (
         _cluster_for_partitioned_write(
             _assign_to_cells(new_emb, id_col, cents).withColumn(
@@ -801,16 +810,7 @@ def load_ivf_index(
     import os
 
     spark = emb.sparkSession
-    crows = (
-        spark.read.parquet(os.path.join(index_root, "centroids"))
-        .orderBy("cell")
-        .collect()
-    )
-    cents = (
-        np.stack([np.asarray(r.centroid, dtype=np.float64) for r in crows])
-        if crows
-        else np.zeros((0, 0), dtype=np.float64)
-    )
+    cents = _read_centroids(spark, index_root)
     assigned = spark.read.parquet(os.path.join(index_root, "assigned")).select(
         "vec_id", "cell"
     )
@@ -859,6 +859,18 @@ def _matrix_rows(
             f"{missing[:10].tolist()} ({len(missing)} in all)"
         )
     return rows[: len(ids_a)], rows[len(ids_a) :]
+
+
+def _pair_sims(pairs: pd.DataFrame, a: np.ndarray, b: np.ndarray) -> pd.DataFrame:
+    """(id_a, id_b, sim) of a candidate batch, ``sim`` the rowwise dot of
+    ``a`` and ``b`` (one row per pair) rounded to 4 places."""
+    return pd.DataFrame(
+        {
+            "id_a": pairs["id_a"],
+            "id_b": pairs["id_b"],
+            "sim": np.round(np.einsum("ij,ij->i", a, b), 4),
+        }
+    )
 
 
 def ann_lsh_topk(
@@ -948,6 +960,7 @@ def ann_lsh_topk(
     # values against the NumPy brute-force scorer.
     if b_ids is not None:
         matrix_rows = _by_value(_matrix_rows)
+        pair_sims = _by_value(_pair_sims)
 
         def score_lookup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             idx = pd.Index(b_ids.value)  # once per task (guide §4.5)
@@ -956,35 +969,20 @@ def ann_lsh_topk(
                 if pdf.empty:
                     continue
                 ia, ib = matrix_rows(idx, pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy())
-                yield pd.DataFrame(
-                    {
-                        "id_a": pdf["id_a"],
-                        "id_b": pdf["id_b"],
-                        "sim": np.round(
-                            np.einsum("ij,ij->i", mat[ia], mat[ib]), 4
-                        ),
-                    }
-                )
+                yield pair_sims(pdf, mat[ia], mat[ib])
 
         scored = cand.mapInPandas(
             score_lookup, schema="id_a long, id_b long, sim double"
         )
     else:
         as_matrix = _by_value(_as_matrix)
+        pair_sims = _by_value(_pair_sims)
 
         def score_attached(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 if pdf.empty:
                     continue
-                av = as_matrix(pdf["emb_a"])
-                bv = as_matrix(pdf["emb_b"])
-                yield pd.DataFrame(
-                    {
-                        "id_a": pdf["id_a"],
-                        "id_b": pdf["id_b"],
-                        "sim": np.round(np.einsum("ij,ij->i", av, bv), 4),
-                    }
-                )
+                yield pair_sims(pdf, as_matrix(pdf["emb_a"]), as_matrix(pdf["emb_b"]))
 
         scored = (
             cand.join(

@@ -16,11 +16,16 @@ import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql4pandas_spark.operators import dedup, joins, multimodal, similarity, text
 from sql4pandas_spark.queries.catalog import query
+from sql4pandas_spark.queries.relational import (
+    Q1_SUMMARY_SQL,
+    asof_click_to_purchase,
+    q1_summary,
+)
 from sql4pandas_spark.sources.parquet import register_tables
 
 #: process-scoped root for incremental-dedup digest stores; created lazily,
@@ -285,6 +290,48 @@ _TOKS_CTE = (
 )
 _HASH60 = text.DUCKDB_HASH60_SQL.format(expr="t")
 
+
+def _gopher_words_sql(carry: str, src: str) -> str:
+    """The words ``w`` and ``lines`` text.gopher_rules reads, per row of
+    ``src``, with the ``carry`` columns."""
+    return f"""SELECT {carry},
+             list_filter(regexp_split_to_array(text, '\\s+'),
+                         x -> x <> '') AS w,
+             string_split(text, chr(10)) AS lines
+      FROM {src}"""
+
+
+def _gopher_features_sql(carry: str, src: str) -> str:
+    """DuckDB replay of operators/text.gopher_rules' per-doc features over
+    ``src`` (a relation with ``w`` tokens and ``lines``), carrying the
+    ``carry`` columns through; the stopwords are text.GOPHER_STOPWORDS."""
+    stops = ", ".join(f"'{w}'" for w in text.GOPHER_STOPWORDS)
+    return f"""SELECT {carry},
+                 len(w) AS n,
+                 list_sum(list_transform(w, x -> length(x)))::BIGINT
+                   AS sum_len,
+                 len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]')))
+                   AS n_alpha,
+                 len(lines) AS n_lines,
+                 len(list_filter(lines, l -> starts_with(l, '- ')))
+                   AS n_bullet,
+                 len(list_filter(lines, l -> l LIKE '%...')) AS n_ell,
+                 len(list_filter([{stops}],
+                                 s -> list_contains(
+                                        list_transform(w, x -> lower(x)), s)))
+                   AS n_stop
+          FROM {src}"""
+
+
+def _gopher_keep_sql(min_words: int) -> str:
+    """The Gopher keep rule over those features: every threshold an exact
+    integer cross-multiplication, with the caller's word-count floor."""
+    return f"""(n >= {min_words} AND n <= 100000) AND (sum_len >= 3 * n AND
+             sum_len <= 10 * n) AND (5 * n_alpha > 4 * n) AND
+            (10 * n_bullet < 9 * n_lines) AND (10 * n_ell < 3 * n_lines)
+            AND (n_stop >= 2)"""
+
+
 _LANG_VALUES = ", ".join(
     "('{lang}', [{words}])".format(
         lang=lang, words=", ".join(f"'{w}'" for w in words)
@@ -401,6 +448,43 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.winnow_fingerprint(t["documents"]).orderBy("doc_id").limit(200)
 
 
+#: DuckDB replay of operators/dedup.shingles over a relation ``{src}``
+#: holding (doc_id, w): the distinct word-3-grams of each doc, where a doc
+#: shorter than 3 tokens falls back to one whole-text shingle instead of
+#: zero shingles. Every exact-Jaccard oracle reads its shingles here.
+_SHINGLES_SQL = """
+      SELECT DISTINCT doc_id, shingle
+      FROM (SELECT doc_id,
+                   unnest(CASE WHEN len(w) >= 3
+                          THEN [array_to_string(list_slice(w, i, i+2), ' ') FOR i IN range(1, len(w)-1)]
+                          ELSE [array_to_string(w, ' ')] END) AS shingle
+            FROM {src})"""
+
+#: exact Jaccard parts over ``sh``: shingles per doc and shared shingles
+#: per (id_a < id_b) pair
+_JACCARD_CTES = """
+    card AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2)"""
+
+#: the verified near-dup pairs (Jaccard >= 0.7 at 4dp, the operator's rule)
+_NEAR_PAIRS_CTE = """
+    pairs AS (
+      SELECT id_a, id_b
+      FROM inter JOIN card ca ON inter.id_a = ca.doc_id
+                 JOIN card cb ON inter.id_b = cb.doc_id
+      WHERE round(CAST(i AS DOUBLE) / (ca.c + cb.c - i), 4) >= 0.7)"""
+
+#: tokens → shingles → exact Jaccard → the near-dup pair graph, both
+#: edge directions
+_NEAR_EDGES_CTES = f"""
+    toks AS ({{toks}}),
+    sh AS ({_SHINGLES_SQL.format(src="toks")}),{_JACCARD_CTES},{_NEAR_PAIRS_CTE},
+    edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+              UNION SELECT id_b, id_a FROM pairs)"""
+
 # Exact-Jaccard ≥ 0.7 pairs (same shingle fallback as operators/dedup.shingles)
 # + recursive-CTE transitive closure → smallest-id cluster labels. This is the
 # ground-truth replay of the whole MinHash-LSH pipeline: banding at 16×4 has
@@ -411,37 +495,52 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: transitive closure. Three oracles build on it (cluster labels, best-copy
 #: representative, split-leakage audit) — the ground truth is computed once
 #: in SQL and each consumer adds only its final projection.
-_MINHASH_REACH_CTES = """
-    WITH RECURSIVE toks AS ({toks}),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle
-      FROM (SELECT doc_id,
-                   unnest(CASE WHEN len(w) >= 3
-                          THEN [array_to_string(list_slice(w, i, i+2), ' ') FOR i IN range(1, len(w)-1)]
-                          ELSE [array_to_string(w, ' ')] END) AS shingle
-            FROM toks)),
-    card AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b
-      FROM inter JOIN card ca ON inter.id_a = ca.doc_id
-                 JOIN card cb ON inter.id_b = cb.doc_id
-      WHERE round(CAST(i AS DOUBLE) / (ca.c + cb.c - i), 4) >= 0.7),
-    edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
+_MINHASH_REACH_CTES = (
+    "\n    WITH RECURSIVE"
+    + _NEAR_EDGES_CTES.format(toks=_TOKS_CTE)
+    + """,
     reach(src, dst) AS (
       SELECT doc_id, doc_id FROM documents
       UNION
       SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-""".format(toks=_TOKS_CTE)
+"""
+)
 
 _MINHASH_CLUSTER_ORACLE = _MINHASH_REACH_CTES + """
     SELECT src AS doc_id, min(dst) AS cluster_id
     FROM reach GROUP BY src ORDER BY doc_id
 """
+
+#: exact word-3-gram Jaccard pairs >= 0.5 from all shared shingles — the
+#: ground truth of both the inverted-index and the prefix-filter pair joins
+_NGRAM_JACCARD_ORACLE = f"""
+    WITH toks AS (
+      {_TOKS_CTE}),
+    sh AS ({_SHINGLES_SQL.format(src="toks")}),{_JACCARD_CTES}
+    SELECT id_a, id_b,
+           round(CAST(i AS DOUBLE) / (ca.c + cb.c - i), 4) AS jaccard
+    FROM inter JOIN card ca ON inter.id_a = ca.doc_id
+               JOIN card cb ON inter.id_b = cb.doc_id
+    WHERE CAST(i AS DOUBLE) / (ca.c + cb.c - i) >= 0.5
+    ORDER BY jaccard DESC, id_a, id_b
+    """
+
+#: benchmark decontamination ground truth: each doc's distinct-shingle
+#: overlap with the 20 lowest-id docs — the exact all-shingles check of
+#: both the broadcast and the Bloom-prefiltered contamination joins
+_DECONTAM_ORACLE = f"""
+    WITH toks AS ({_TOKS_CTE}),
+    sh AS ({_SHINGLES_SQL.format(src="toks")}),
+    bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id < 20),
+    ov AS (SELECT s.doc_id, count(*) AS n_overlap
+           FROM sh s JOIN bench b ON s.shingle = b.shingle
+           WHERE s.doc_id >= 20 GROUP BY 1)
+    SELECT d.doc_id,
+           CAST(COALESCE(ov.n_overlap, 0) AS BIGINT) AS n_overlap,
+           COALESCE(ov.n_overlap, 0) >= 5 AS contaminated
+    FROM documents d LEFT JOIN ov ON d.doc_id = ov.doc_id
+    WHERE d.doc_id >= 20 ORDER BY d.doc_id LIMIT 100
+    """
 
 
 @query("dedup_near_minhash", oracle=_MINHASH_CLUSTER_ORACLE, tags=("tier-c", "dedup_near", "bench-heavy"))
@@ -606,31 +705,7 @@ def lsh_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
-      FROM documents),
-    sh AS (
-      -- CASE mirrors operators/dedup.shingles(): docs shorter than n tokens
-      -- fall back to one whole-text shingle instead of zero shingles
-      SELECT DISTINCT doc_id, shingle
-      FROM (SELECT doc_id,
-                   unnest(CASE WHEN len(w) >= 3
-                          THEN [array_to_string(list_slice(w, i, i+2), ' ') FOR i IN range(1, len(w)-1)]
-                          ELSE [array_to_string(w, ' ')] END) AS shingle
-            FROM toks)),
-    card AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           round(CAST(i AS DOUBLE) / (ca.c + cb.c - i), 4) AS jaccard
-    FROM inter JOIN card ca ON inter.id_a = ca.doc_id
-               JOIN card cb ON inter.id_b = cb.doc_id
-    WHERE CAST(i AS DOUBLE) / (ca.c + cb.c - i) >= 0.5
-    ORDER BY jaccard DESC, id_a, id_b
-    """,
+    oracle=_NGRAM_JACCARD_ORACLE,
     tags=("tier-c", "dedup_near"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -682,6 +757,19 @@ def _query_vector(sf_dir: str, vec_id: int = 0) -> list[float]:
     return [float(x) for x in tbl.column("embedding")[0].as_py()]
 
 
+#: exact cosine top-10 of vec_id=0 over every other vector — the brute-force
+#: answer an exact scan, a full-probe IVF and a persistent IVF must all give
+_QUERY_TOP10_ORACLE = """
+    SELECT e.vec_id,
+           round(CAST(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0))
+                 AS DOUBLE), 4) AS sim
+    FROM embeddings e
+    WHERE e.vec_id <> 0
+    ORDER BY sim DESC, e.vec_id LIMIT 10
+    """
+
+
 @query(
     "ann_ivf_query_top10",
     oracle="SELECT CAST(10 AS BIGINT) AS n_ann, true AS recall_ok",
@@ -720,15 +808,7 @@ def ann_ivf_query_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_full_probe_top10",
-    oracle="""
-    SELECT e.vec_id,
-           round(CAST(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0))
-                 AS DOUBLE), 4) AS sim
-    FROM embeddings e
-    WHERE e.vec_id <> 0
-    ORDER BY sim DESC, e.vec_id LIMIT 10
-    """,
+    oracle=_QUERY_TOP10_ORACLE,
     tags=("tier-c", "sim_search_ann"),
 )
 def ivf_full_probe_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1020,15 +1100,7 @@ def cosine_top20_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_query_top10",
-    oracle="""
-    SELECT e.vec_id,
-           round(CAST(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0))
-                 AS DOUBLE), 4) AS sim
-    FROM embeddings e
-    WHERE e.vec_id <> 0
-    ORDER BY sim DESC, e.vec_id LIMIT 10
-    """,
+    oracle=_QUERY_TOP10_ORACLE,
     tags=("tier-c", "sim_search_query"),
 )
 def sim_query_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1364,33 +1436,11 @@ _ASSEMBLY_PLANTED_SQL = """
 _CORPUS_ASSEMBLY_ORACLE = f"""
     WITH pl AS ({{planted}}),
     toks AS (
-      SELECT doc_id, lang, source, text,
-             list_filter(regexp_split_to_array(text, '\\s+'),
-                         x -> x <> '') AS w,
-             string_split(text, chr(10)) AS lines
-      FROM pl),
-    m AS (SELECT doc_id, lang, source, text,
-                 len(w) AS n,
-                 list_sum(list_transform(w, x -> length(x)))::BIGINT
-                   AS sum_len,
-                 len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]')))
-                   AS n_alpha,
-                 len(lines) AS n_lines,
-                 len(list_filter(lines, l -> starts_with(l, '- ')))
-                   AS n_bullet,
-                 len(list_filter(lines, l -> l LIKE '%...')) AS n_ell,
-                 len(list_filter(['the', 'be', 'to', 'of', 'and', 'that',
-                                  'have', 'with'],
-                                 s -> list_contains(
-                                        list_transform(w, x -> lower(x)), s)))
-                   AS n_stop
-          FROM toks),
+      {_gopher_words_sql("doc_id, lang, source, text", "pl")}),
+    m AS ({_gopher_features_sql("doc_id, lang, source, text", "toks")}),
     gated AS (
       SELECT doc_id, lang, source, text, n FROM m
-      WHERE (n >= 20 AND n <= 100000) AND (sum_len >= 3 * n AND
-             sum_len <= 10 * n) AND (5 * n_alpha > 4 * n) AND
-            (10 * n_bullet < 9 * n_lines) AND (10 * n_ell < 3 * n_lines)
-            AND (n_stop >= 2)),
+      WHERE {_gopher_keep_sql(20)}),
     deduped AS (
       SELECT doc_id, lang, source, text, n
       FROM (SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id)
@@ -1580,6 +1630,16 @@ _SEG_JOIN_ORACLE = """
 """
 
 
+def _segment_totals(j: DataFrame) -> DataFrame:
+    """Orders and total price per market segment of an orders⋈customer
+    join — what _SEG_JOIN_ORACLE checks."""
+    return (
+        j.groupBy("c_mktsegment")
+        .agg(F.count(F.lit(1)).alias("n_orders"), F.round(F.sum("o_totalprice"), 2).alias("total"))
+        .orderBy("c_mktsegment")
+    )
+
+
 @query(
     "salted_join_segments",
     oracle=_SEG_JOIN_ORACLE,
@@ -1591,11 +1651,7 @@ def salted_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     join the oracle runs."""
     t = register_tables(spark, sf_dir, ("orders", "customer"))
     j = joins.salted_join(t["orders"], t["customer"], "o_custkey", "c_custkey")
-    return (
-        j.groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_orders"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .orderBy("c_mktsegment")
-    )
+    return _segment_totals(j)
 
 
 @query(
@@ -1618,11 +1674,7 @@ def bucketed_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = spark.table("b_orders").join(
         spark.table("b_customer"), F.col("o_custkey") == F.col("c_custkey")
     )
-    return (
-        j.groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_orders"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .orderBy("c_mktsegment")
-    )
+    return _segment_totals(j)
 
 
 @query(
@@ -1946,25 +1998,7 @@ def quality_repetition_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "decontaminate_documents",
-    oracle="""
-    WITH toks AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle
-      FROM (SELECT doc_id,
-                   unnest(CASE WHEN len(w) >= 3
-                          THEN [array_to_string(list_slice(w, i, i+2), ' ') FOR i IN range(1, len(w)-1)]
-                          ELSE [array_to_string(w, ' ')] END) AS shingle
-            FROM toks)),
-    bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id < 20),
-    ov AS (SELECT s.doc_id, count(*) AS n_overlap
-           FROM sh s JOIN bench b ON s.shingle = b.shingle
-           WHERE s.doc_id >= 20 GROUP BY 1)
-    SELECT d.doc_id,
-           CAST(COALESCE(ov.n_overlap, 0) AS BIGINT) AS n_overlap,
-           COALESCE(ov.n_overlap, 0) >= 5 AS contaminated
-    FROM documents d LEFT JOIN ov ON d.doc_id = ov.doc_id
-    WHERE d.doc_id >= 20 ORDER BY d.doc_id LIMIT 100
-    """,
+    oracle=_DECONTAM_ORACLE,
     tags=("tier-c", "decontamination", "dedup_ngram_jaccard"),
 )
 def decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2802,9 +2836,10 @@ def top_bigrams_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_ngrams(t["documents"], n=2, k=20)
 
 
-@query(
-    "weighted_sample_merged_docs",
-    oracle=f"""
+#: the 50 documents with the largest Efraimidis-Spirakis keys (6dp) over
+#: the portable hash, weighted by n_chars — the one-pass and the
+#: batch-merged weighted samples must both keep exactly these
+_WEIGHTED_SAMPLE_ORACLE = f"""
     WITH keyed AS (
       SELECT doc_id, text, lang, source, n_chars,
              round(ln((({_MIX_HASH_PRED}) + 1) / 1152921504606846976.0)
@@ -2813,7 +2848,12 @@ def top_bigrams_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents WHERE n_chars > 0)
     SELECT doc_id, text, lang, source, n_chars, skey
     FROM keyed ORDER BY skey DESC, tb, doc_id LIMIT 50
-    """,
+    """
+
+
+@query(
+    "weighted_sample_merged_docs",
+    oracle=_WEIGHTED_SAMPLE_ORACLE,
     tags=("tier-c", "weighted_sample", "incr_agg", "sample_hash"),
 )
 def weighted_sample_merged_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2987,6 +3027,22 @@ def _doremi_ctes(rounds: int) -> list[str]:
     return ctes
 
 
+def _doremi_domain_loss(docs: DataFrame) -> DataFrame:
+    """DoReMi's per-domain excess loss (e6 micro-nats per token): each
+    doc's cross-model surprisal against the 'en' reference, summed per
+    language."""
+    sc = text.crossmodel_surprisal(docs, F.col("lang") == "en")
+    return (
+        sc.join(docs.select("doc_id", "lang"), "doc_id")
+        .groupBy(F.col("lang").alias("domain"))
+        .agg(
+            F.expr("sum(surprisal_sum_e6) DIV sum(n_tokens)").alias(
+                "loss_e6"
+            )
+        )
+    )
+
+
 def _doremi_oracle(rounds: int) -> str:
     joined = ",\n    ".join(_doremi_ctes(rounds))
     return (
@@ -3021,20 +3077,9 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan (pagerank's dangling-mass shape), zero driver collects
     beyond the |domains| count."""
     from sql4pandas_spark.operators.sampling import doremi_reweight
-    from sql4pandas_spark.operators.text import crossmodel_surprisal
 
     t = register_tables(spark, sf_dir, ("documents",))
-    docs = t["documents"]
-    sc = crossmodel_surprisal(docs, F.col("lang") == "en")
-    dom = (
-        sc.join(docs.select("doc_id", "lang"), "doc_id")
-        .groupBy(F.col("lang").alias("domain"))
-        .agg(
-            F.expr("sum(surprisal_sum_e6) DIV sum(n_tokens)").alias(
-                "loss_e6"
-            )
-        )
-    )
+    dom = _doremi_domain_loss(t["documents"])
     return doremi_reweight(dom, rounds=10, eta_denom=1).orderBy("domain")
 
 
@@ -3132,21 +3177,11 @@ def doremi_mix_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from sql4pandas_spark.operators.sampling import doremi_reweight
-    from sql4pandas_spark.operators.text import crossmodel_surprisal, portable_hash60
+    from sql4pandas_spark.operators.text import portable_hash60
 
     t = register_tables(spark, sf_dir, ("documents",))
     docs = t["documents"]
-    sc = crossmodel_surprisal(docs, F.col("lang") == "en")
-    dom = (
-        sc.join(docs.select("doc_id", "lang"), "doc_id")
-        .groupBy(F.col("lang").alias("domain"))
-        .agg(
-            F.expr("sum(surprisal_sum_e6) DIV sum(n_tokens)").alias(
-                "loss_e6"
-            )
-        )
-    )
-    w = doremi_reweight(dom, rounds=10, eta_denom=1)
+    w = doremi_reweight(_doremi_domain_loss(docs), rounds=10, eta_denom=1)
     q = w.select(
         "domain", F.expr("weight_e9 * 100 DIV 1000000000").alias("quota")
     )
@@ -3178,16 +3213,7 @@ def doremi_mix_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weighted_sample_docs",
-    oracle=f"""
-    WITH keyed AS (
-      SELECT doc_id, text, lang, source, n_chars,
-             round(ln((({_MIX_HASH_PRED}) + 1) / 1152921504606846976.0)
-                   / n_chars, 6) AS skey,
-             ({_MIX_HASH_PRED}) AS tb
-      FROM documents WHERE n_chars > 0)
-    SELECT doc_id, text, lang, source, n_chars, skey
-    FROM keyed ORDER BY skey DESC, tb, doc_id LIMIT 50
-    """,
+    oracle=_WEIGHTED_SAMPLE_ORACLE,
     tags=("tier-c", "weighted_sample", "sample_hash", "limit"),
 )
 def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3211,30 +3237,12 @@ planted AS (
         ORDER BY doc_id LIMIT 30)),
 all_docs AS (
   SELECT doc_id, text, doc_id % 2 = 0 AS in_b1 FROM documents
-  UNION ALL SELECT doc_id, text, false FROM planted),
-toks AS (
+  UNION ALL SELECT doc_id, text, false FROM planted),""" + _NEAR_EDGES_CTES.format(
+    toks="""
   SELECT doc_id, in_b1,
          list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
-  FROM all_docs),
-sh AS (
-  SELECT DISTINCT doc_id, shingle
-  FROM (SELECT doc_id,
-               unnest(CASE WHEN len(w) >= 3
-                      THEN [array_to_string(list_slice(w, i, i+2), ' ') FOR i IN range(1, len(w)-1)]
-                      ELSE [array_to_string(w, ' ')] END) AS shingle
-        FROM toks)),
-card AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2),
-pairs AS (
-  SELECT id_a, id_b
-  FROM inter JOIN card ca ON inter.id_a = ca.doc_id
-             JOIN card cb ON inter.id_b = cb.doc_id
-  WHERE round(CAST(i AS DOUBLE) / (ca.c + cb.c - i), 4) >= 0.7),
-edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
+  FROM all_docs"""
+) + """,
 b1_edges AS (
   SELECT e.src, e.dst FROM edges e
   JOIN all_docs s ON e.src = s.doc_id AND s.in_b1
@@ -3612,18 +3620,8 @@ def scrub_passages_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem WHERE l_orderkey % 37 = 3),
     post AS (
       SELECT * FROM lineitem WHERE l_orderkey % 97 <> 0
-      UNION ALL SELECT * FROM ins)
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2)                         AS sum_qty,
-           round(sum(l_extendedprice), 2)                    AS sum_base,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           round(avg(l_quantity), 4)                         AS avg_qty,
-           count(*)                                          AS count_order
-    FROM post
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
-    """,
+      UNION ALL SELECT * FROM ins)"""
+    + Q1_SUMMARY_SQL.format(src="post"),
     tags=("tier-c", "merge_upsert", "pipeline", "agg_group"),
 )
 def fact_refresh_merge_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3661,20 +3659,7 @@ def fact_refresh_merge_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
         ins.withColumn("op", F.lit(None).cast("string"))
         .unionByName(dels.withColumn("op", F.lit("delete")))
     )
-    post = merge_upsert(li, changes, key_cols)
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        post.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
+    return q1_summary(merge_upsert(li, changes, key_cols))
 
 
 @query(
@@ -4153,9 +4138,9 @@ def cohort_retention_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "classifier_calibrated_gate",
-    oracle=f"""
+#: the hashed-logistic quality score (text.DUCKDB_CLF_SCORE_SQL) of every
+#: doc as the e6 integer ``score_e6`` both calibrated gates threshold
+_CLF_E6_CTES = f"""
     WITH toks AS (
       SELECT doc_id, lang,
              list_filter(regexp_split_to_array(lower(text), '\\s+'),
@@ -4167,7 +4152,37 @@ def cohort_retention_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM toks),
     se6 AS (
       SELECT doc_id, lang, CAST(round(score * 1000000) AS BIGINT) AS score_e6
-      FROM scored),
+      FROM scored),"""
+
+
+def _clf_scores_e6(docs: DataFrame) -> DataFrame:
+    """Spark side of :data:`_CLF_E6_CTES`: (doc_id, lang, score_e6)."""
+    return text.hashed_logistic_score(docs).select(
+        "doc_id",
+        "lang",
+        F.round(F.col("score") * 1e6).cast("long").alias("score_e6"),
+    )
+
+
+def _kept_per_lang(gated: DataFrame) -> DataFrame:
+    """Docs and kept docs (``score_e6 * 4 >= threshold_e6x4``) per
+    (lang, threshold) of a score frame joined to its thresholds."""
+    return (
+        gated.groupBy("lang", "threshold_e6x4")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(
+                (F.col("score_e6") * 4 >= F.col("threshold_e6x4")).cast("long")
+            ).alias("n_kept"),
+        )
+        .select("lang", "n_docs", "n_kept", "threshold_e6x4")
+        .orderBy("lang")
+    )
+
+
+@query(
+    "classifier_calibrated_gate",
+    oracle=_CLF_E6_CTES + """
     thresh AS (
       -- integer-space p25 (see classifier_gate_per_lang): exact, no
       -- 6dp rounding for a 1-ulp interpolation difference to flip
@@ -4196,31 +4211,14 @@ def classifier_calibrated_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one grouped count — per-language kept/total accounting. The
     oracle replays scores, quantile_cont interpolation, and the gate
     exactly."""
-    from sql4pandas_spark.operators.text import hashed_logistic_score
-
     t = register_tables(spark, sf_dir, ("documents",))
-    scored = hashed_logistic_score(t["documents"]).select(
-        "doc_id",
-        "lang",
-        F.round(F.col("score") * 1e6).cast("long").alias("score_e6"),
-    )
+    scored = _clf_scores_e6(t["documents"])
     thresh = scored.agg(
         (F.percentile("score_e6", F.lit(0.25)) * 4)
         .cast("long")
         .alias("threshold_e6x4")
     )
-    return (
-        scored.crossJoin(F.broadcast(thresh))
-        .groupBy("lang", "threshold_e6x4")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(
-                (F.col("score_e6") * 4 >= F.col("threshold_e6x4")).cast("long")
-            ).alias("n_kept"),
-        )
-        .select("lang", "n_docs", "n_kept", "threshold_e6x4")
-        .orderBy("lang")
-    )
+    return _kept_per_lang(scored.crossJoin(F.broadcast(thresh)))
 
 
 def _stage_changeset_file(df: DataFrame, landing_dir: str, fname: str) -> None:
@@ -4663,15 +4661,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_ivf_persistent_top10",
-    oracle="""
-    SELECT e.vec_id,
-           round(CAST(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0))
-                 AS DOUBLE), 4) AS sim
-    FROM embeddings e
-    WHERE e.vec_id <> 0
-    ORDER BY sim DESC, e.vec_id LIMIT 10
-    """,
+    oracle=_QUERY_TOP10_ORACLE,
     tags=("tier-c", "sim_search_ann", "incremental"),
 )
 def ann_ivf_persistent_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4703,19 +4693,7 @@ def ann_ivf_persistent_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "classifier_gate_per_lang",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, lang,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
-      FROM documents),
-    scored AS (
-      SELECT doc_id, lang,
-             {text.DUCKDB_CLF_SCORE_SQL.format(w="w", n=256)} AS score
-      FROM toks),
-    se6 AS (
-      SELECT doc_id, lang, CAST(round(score * 1000000) AS BIGINT) AS score_e6
-      FROM scored),
+    oracle=_CLF_E6_CTES + """
     th AS (
       -- integer-space p25: scores are 6dp-quantized, so interpolating
       -- their e6 integers at 0.25 (lo + (hi-lo)/4) is EXACTLY
@@ -4752,31 +4730,14 @@ def classifier_gate_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught by this round's sf0.1 rehearsal). Every language keeps ~75%
     of its own docs by construction; the oracle replays the integer
     interpolation and the gate exactly."""
-    from sql4pandas_spark.operators.text import hashed_logistic_score
-
     t = register_tables(spark, sf_dir, ("documents",))
-    scored = hashed_logistic_score(t["documents"]).select(
-        "doc_id",
-        "lang",
-        F.round(F.col("score") * 1e6).cast("long").alias("score_e6"),
-    )
+    scored = _clf_scores_e6(t["documents"])
     th = scored.groupBy("lang").agg(
         (F.percentile("score_e6", F.lit(0.25)) * 4)
         .cast("long")
         .alias("threshold_e6x4")
     )
-    return (
-        scored.join(F.broadcast(th), "lang")
-        .groupBy("lang", "threshold_e6x4")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(
-                (F.col("score_e6") * 4 >= F.col("threshold_e6x4")).cast("long")
-            ).alias("n_kept"),
-        )
-        .select("lang", "n_docs", "n_kept", "threshold_e6x4")
-        .orderBy("lang")
-    )
+    return _kept_per_lang(scored.join(F.broadcast(th), "lang"))
 
 
 _INCR_PIPE_ORACLE = f"""
@@ -4817,24 +4778,12 @@ ex2 AS (
     FROM gated
     WHERE b = 1 AND text NOT IN (SELECT text FROM ex_store1)) WHERE rn = 1),
 ex AS MATERIALIZED (SELECT * FROM ex1 UNION ALL SELECT * FROM ex2),
-sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle
-  FROM (SELECT doc_id,
-               unnest(CASE WHEN len(w) >= 3
-                      THEN [array_to_string(list_slice(w, i, i+2), ' ')
-                            FOR i IN range(1, len(w)-1)]
-                      ELSE [array_to_string(w, ' ')] END) AS shingle
-        FROM ex)),
+sh AS MATERIALIZED ({_SHINGLES_SQL.format(src="ex")}),
 card AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY doc_id),
 inter AS (
   SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS i
   FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-  GROUP BY 1, 2),
-pairs AS (
-  SELECT id_a, id_b
-  FROM inter JOIN card ca ON inter.id_a = ca.doc_id
-             JOIN card cb ON inter.id_b = cb.doc_id
-  WHERE round(CAST(i AS DOUBLE) / (ca.c + cb.c - i), 4) >= 0.7),
+  GROUP BY 1, 2),{_NEAR_PAIRS_CTE},
 edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
           UNION SELECT id_b, id_a FROM pairs),
 b1_edges AS (
@@ -5093,22 +5042,55 @@ def incremental_pipeline_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("batch_id", "metric")
 
 
-@query(
-    "fuzzy_join_parts",
-    oracle="""
-    WITH clean AS MATERIALIZED (
+def _part_entities(
+    spark: SparkSession, sf_dir: str, cohort: int, dirty_key: Column
+) -> tuple[DataFrame, DataFrame]:
+    """``(dirty, clean)`` part ENTITY strings (name + brand + type,
+    lowercased): ``clean`` is every part under ``clean_key``; ``dirty`` is
+    the ``p_partkey % 20 == cohort`` parts under ``dirty_key``, each with
+    ONE character deleted at a key-determined position."""
+    t = register_tables(spark, sf_dir, ("part",))
+    part = t["part"]
+    ent = F.lower(
+        F.trim(F.concat_ws(" ", F.col("p_name"), F.col("p_brand"), F.col("p_type")))
+    )
+    clean = part.select(
+        F.col("p_partkey").alias("clean_key"), ent.alias("clean_name")
+    )
+    pos = (F.col("p_partkey") % F.length(ent) + F.lit(1)).cast("int")
+    dirty = part.filter(F.col("p_partkey") % 20 == cohort).select(
+        dirty_key.alias("dirty_key"),
+        F.concat(
+            ent.substr(F.lit(1), pos - 1),
+            ent.substr(pos + 1, F.length(ent)),
+        ).alias("dirty_name"),
+    )
+    return dirty, clean
+
+
+def _part_entity_ctes(dirty_key: str, cohort: int) -> str:
+    """DuckDB replay of :func:`_part_entities` as the CTEs ``clean`` and
+    ``dirty`` (``dirty_key`` is the SQL for the dirty id)."""
+    return f"""clean AS MATERIALIZED (
       SELECT p_partkey AS clean_key,
              lower(trim(p_name || ' ' || p_brand || ' ' || p_type)) AS clean_name
       FROM part),
     dirty AS MATERIALIZED (
-      SELECT p_partkey AS dirty_key,
+      SELECT {dirty_key} AS dirty_key,
              substr(nm, 1, pos - 1) || substr(nm, pos + 1) AS dirty_name
       FROM (SELECT p_partkey, nm,
                    CAST(p_partkey % length(nm) AS INT) + 1 AS pos
             FROM (SELECT p_partkey,
                          lower(trim(p_name || ' ' || p_brand || ' ' || p_type)) AS nm
                   FROM part)
-            WHERE p_partkey % 20 = 3))
+            WHERE p_partkey % 20 = {cohort}))"""
+
+
+def _fuzzy_parts_oracle(cohort: int) -> str:
+    """The exact all-pairs edit-distance (<= 2) join of the cohort's
+    dirty entities to the clean parts, length-difference prefiltered."""
+    return f"""
+    WITH {_part_entity_ctes("p_partkey", cohort)}
     SELECT d.dirty_key, c.clean_key,
            CAST(levenshtein(d.dirty_name, c.clean_name) AS BIGINT)
              AS key_distance
@@ -5116,7 +5098,12 @@ def incremental_pipeline_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON abs(length(d.dirty_name) - length(c.clean_name)) <= 2
     WHERE levenshtein(d.dirty_name, c.clean_name) <= 2
     ORDER BY dirty_key, clean_key
-    """,
+    """
+
+
+@query(
+    "fuzzy_join_parts",
+    oracle=_fuzzy_parts_oracle(3),
     tags=("tier-c", "join_fuzzy", "entity_resolution", "lsh", "bench-heavy"),
 )
 def fuzzy_join_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5134,22 +5121,7 @@ def fuzzy_join_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     path achieves exact recall on this corpus; the entry runs 48 bands x
     1 row (per-pair miss probability ~1e-14 at the weakest J~0.5 match)
     while the Spark side still never materializes all-pairs."""
-    t = register_tables(spark, sf_dir, ("part",))
-    part = t["part"]
-    ent = F.lower(
-        F.trim(F.concat_ws(" ", F.col("p_name"), F.col("p_brand"), F.col("p_type")))
-    )
-    clean = part.select(
-        F.col("p_partkey").alias("clean_key"), ent.alias("clean_name")
-    )
-    pos = (F.col("p_partkey") % F.length(ent) + F.lit(1)).cast("int")
-    dirty = part.filter(F.col("p_partkey") % 20 == 3).select(
-        F.col("p_partkey").alias("dirty_key"),
-        F.concat(
-            ent.substr(F.lit(1), pos - 1),
-            ent.substr(pos + 1, F.length(ent)),
-        ).alias("dirty_name"),
-    )
+    dirty, clean = _part_entities(spark, sf_dir, 3, F.col("p_partkey"))
     j = joins.fuzzy_key_join(
         dirty, clean, "dirty_name", "clean_name",
         max_distance=2, n_hashes=48, n_bands=48,
@@ -5373,17 +5345,17 @@ def lm_surprisal_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_surprisal(t["documents"]).orderBy("doc_id")
 
 
-@query(
-    "sessionize_events",
-    oracle="""
-    WITH l AS (
+#: DuckDB replay of operators/behavior.sessionize over ``{src}``: a new
+#: session after > 30 idle minutes (exact epoch microseconds); the WHERE
+#: mirrors the operator's NULL drops (unstamped or anonymous events can't
+#: sessionize), so the contract is pinned, not coincidental
+_SESSIONIZE_SQL = """
+    l AS (
       SELECT user_id, ts,
              CASE WHEN lag(ts) OVER w IS NULL
                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
                   THEN 1 ELSE 0 END AS ns
-      -- mirror the operator's NULL drops (unstamped/anonymous events
-      -- can't sessionize) so the contract is pinned, not coincidental
-      FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
+      FROM {src} WHERE user_id IS NOT NULL AND ts IS NOT NULL
       WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
     s AS (
       SELECT user_id, ts,
@@ -5396,7 +5368,12 @@ def lm_surprisal_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
            (epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000
              AS duration_secs
     FROM s GROUP BY 1, 2 ORDER BY user_id, session_idx
-    """,
+    """
+
+
+@query(
+    "sessionize_events",
+    oracle="\n    WITH" + _SESSIONIZE_SQL.format(src="events"),
     tags=("tier-c", "sessionize", "win_lag", "behavior", "timeseries"),
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5541,9 +5518,10 @@ def source_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "incr_quantile_orders",
-    oracle="""
+#: p50/p95/p99 of o_totalprice off the fixed 1000-bin grid over
+#: [0, 600000], rebuilt from scratch over all of orders: what the batch-
+#: merged and the stream-maintained histogram states must both answer
+_ORDER_PCT_ORACLE = """
     WITH b AS (
       SELECT least(999, greatest(0, CAST(floor(
                (o_totalprice - 0.0) * 1000.0 / 600000.0) AS BIGINT)))
@@ -5562,7 +5540,12 @@ def source_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                      THEN bin END) * 600.0 AS est_value
     FROM c, (SELECT unnest([50, 95, 99]) AS pct) p
     GROUP BY p.pct ORDER BY pct
-    """,
+    """
+
+
+@query(
+    "incr_quantile_orders",
+    oracle=_ORDER_PCT_ORACLE,
     tags=("tier-c", "incr_agg", "quantile", "sketch", "agg_approx"),
 )
 def incr_quantile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5712,19 +5695,19 @@ def random_projection_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-@query(
-    "top_movers_events",
-    oracle="""
-    WITH c AS (
-      -- CAST: DuckDB date_trunc('week') yields DATE where Spark
-      -- yields TIMESTAMP; the driver's string hash sees the difference
+#: DuckDB replay of operators/behavior.top_movers over ``{src}``: weekly
+#: counts per event type (CAST: DuckDB date_trunc('week') yields DATE where
+#: Spark yields TIMESTAMP, and the driver's string hash sees the
+#: difference), and the previous week's count only when the previous
+#: OCCUPIED bucket is the calendar-adjacent one (growth after a silent gap
+#: is undefined)
+_TOP_MOVERS_SQL = """
+    c AS (
       SELECT event_type, CAST(date_trunc('week', ts) AS TIMESTAMP)
                AS bucket_ts,
              count(*) AS n_events
-      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
+      FROM {src} WHERE ts IS NOT NULL GROUP BY 1, 2),
     l AS (
-      -- prev only when the previous OCCUPIED bucket is the
-      -- calendar-adjacent one: growth after a silent gap is undefined
       SELECT event_type, bucket_ts, n_events,
              CASE WHEN lag(bucket_ts) OVER w = bucket_ts - INTERVAL 1 WEEK
                   THEN lag(n_events) OVER w END AS prev_events
@@ -5737,7 +5720,12 @@ def random_projection_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS growth_ppm
     FROM l WHERE prev_events >= 1
     ORDER BY event_type, bucket_ts
-    """,
+    """
+
+
+@query(
+    "top_movers_events",
+    oracle="\n    WITH" + _TOP_MOVERS_SQL.format(src="events"),
     tags=("tier-c", "trending", "timeseries", "win_lag", "behavior"),
 )
 def top_movers_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6141,15 +6129,16 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_report(dedup.near_dedup_minhash(t["documents"]))
 
 
-@query(
-    "event_transitions_matrix",
-    oracle="""
-    WITH p AS (
+#: DuckDB replay of operators/behavior.event_transitions over ``{src}``:
+#: adjacency by (ts, event_id) per user, counts, and row-normalized ppm
+#: shares; the WHERE mirrors the operator's NULL drops so the contract is
+#: pinned
+_TRANSITIONS_SQL = """
+    p AS (
       SELECT event_type AS from_type,
              lead(event_type) OVER (PARTITION BY user_id
                                     ORDER BY ts, event_id) AS to_type
-      -- mirror the operator's NULL drops so the contract is pinned
-      FROM events
+      FROM {src}
       WHERE user_id IS NOT NULL AND ts IS NOT NULL
         AND event_type IS NOT NULL),
     c AS (
@@ -6160,7 +6149,12 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 // sum(n_transitions) OVER (PARTITION BY from_type)
                 AS BIGINT) AS share_ppm
     FROM c ORDER BY from_type, to_type
-    """,
+    """
+
+
+@query(
+    "event_transitions_matrix",
+    oracle="\n    WITH" + _TRANSITIONS_SQL.format(src="events"),
     tags=("tier-c", "behavior", "transitions", "win_lag", "markov"),
 )
 def event_transitions_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6361,28 +6355,7 @@ def sql_frontend_duckdb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fuzzy_join_salted_parts",
-    oracle="""
-    WITH clean AS MATERIALIZED (
-      SELECT p_partkey AS clean_key,
-             lower(trim(p_name || ' ' || p_brand || ' ' || p_type)) AS clean_name
-      FROM part),
-    dirty AS MATERIALIZED (
-      SELECT p_partkey AS dirty_key,
-             substr(nm, 1, pos - 1) || substr(nm, pos + 1) AS dirty_name
-      FROM (SELECT p_partkey, nm,
-                   CAST(p_partkey % length(nm) AS INT) + 1 AS pos
-            FROM (SELECT p_partkey,
-                         lower(trim(p_name || ' ' || p_brand || ' ' || p_type)) AS nm
-                  FROM part)
-            WHERE p_partkey % 20 = 7))
-    SELECT d.dirty_key, c.clean_key,
-           CAST(levenshtein(d.dirty_name, c.clean_name) AS BIGINT)
-             AS key_distance
-    FROM dirty d JOIN clean c
-      ON abs(length(d.dirty_name) - length(c.clean_name)) <= 2
-    WHERE levenshtein(d.dirty_name, c.clean_name) <= 2
-    ORDER BY dirty_key, clean_key
-    """,
+    oracle=_fuzzy_parts_oracle(7),
     tags=("tier-c", "join_fuzzy", "join_salted", "entity_resolution", "lsh"),
 )
 def fuzzy_join_salted_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6396,22 +6369,7 @@ def fuzzy_join_salted_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves the salted rewrite is row-identical to the plain
     band join at full recall; mixed hot/cold equality is pinned in
     tests/test_round10_ops.py."""
-    t = register_tables(spark, sf_dir, ("part",))
-    part = t["part"]
-    ent = F.lower(
-        F.trim(F.concat_ws(" ", F.col("p_name"), F.col("p_brand"), F.col("p_type")))
-    )
-    clean = part.select(
-        F.col("p_partkey").alias("clean_key"), ent.alias("clean_name")
-    )
-    pos = (F.col("p_partkey") % F.length(ent) + F.lit(1)).cast("int")
-    dirty = part.filter(F.col("p_partkey") % 20 == 7).select(
-        F.col("p_partkey").alias("dirty_key"),
-        F.concat(
-            ent.substr(F.lit(1), pos - 1),
-            ent.substr(pos + 1, F.length(ent)),
-        ).alias("dirty_name"),
-    )
+    dirty, clean = _part_entities(spark, sf_dir, 7, F.col("p_partkey"))
     j = joins.fuzzy_key_join(
         dirty, clean, "dirty_name", "clean_name",
         max_distance=2, n_hashes=48, n_bands=48,
@@ -6485,26 +6443,7 @@ def stream_heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_quantile_orders",
-    oracle="""
-    WITH b AS (
-      SELECT least(999, greatest(0, CAST(floor(
-               (o_totalprice - 0.0) * 1000.0 / 600000.0) AS BIGINT)))
-               AS bin
-      FROM orders WHERE o_totalprice IS NOT NULL),
-    h AS (SELECT bin, count(*) AS n FROM b GROUP BY 1),
-    c AS (
-      SELECT bin,
-             sum(n) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum,
-             sum(n) OVER () AS tot
-      FROM h)
-    SELECT CAST(p.pct AS BIGINT) AS pct, CAST(max(tot) AS BIGINT) AS n_total,
-           min(CASE WHEN cum >= (p.pct * tot + 99) // 100 THEN bin END)
-             AS bin,
-           0.0 + min(CASE WHEN cum >= (p.pct * tot + 99) // 100
-                     THEN bin END) * 600.0 AS est_value
-    FROM c, (SELECT unnest([50, 95, 99]) AS pct) p
-    GROUP BY p.pct ORDER BY pct
-    """,
+    oracle=_ORDER_PCT_ORACLE,
     tags=("tier-c", "quantile", "scan_stream", "foreach_batch", "incr_agg"),
 )
 def stream_quantile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6647,29 +6586,7 @@ def sql_frontend_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "jaccard_prefix_pairs",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
-      FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle
-      FROM (SELECT doc_id,
-                   unnest(CASE WHEN len(w) >= 3
-                          THEN [array_to_string(list_slice(w, i, i+2), ' ') FOR i IN range(1, len(w)-1)]
-                          ELSE [array_to_string(w, ' ')] END) AS shingle
-            FROM toks)),
-    card AS (SELECT doc_id, count(*) AS c FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           round(CAST(i AS DOUBLE) / (ca.c + cb.c - i), 4) AS jaccard
-    FROM inter JOIN card ca ON inter.id_a = ca.doc_id
-               JOIN card cb ON inter.id_b = cb.doc_id
-    WHERE CAST(i AS DOUBLE) / (ca.c + cb.c - i) >= 0.5
-    ORDER BY jaccard DESC, id_a, id_b
-    """,
+    oracle=_NGRAM_JACCARD_ORACLE,
     tags=("tier-c", "dedup_near", "prefix_filter", "set_similarity"),
 )
 def jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6954,25 +6871,7 @@ def segment_overlap_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "decontaminate_bloom_documents",
-    oracle="""
-    WITH toks AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle
-      FROM (SELECT doc_id,
-                   unnest(CASE WHEN len(w) >= 3
-                          THEN [array_to_string(list_slice(w, i, i+2), ' ') FOR i IN range(1, len(w)-1)]
-                          ELSE [array_to_string(w, ' ')] END) AS shingle
-            FROM toks)),
-    bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id < 20),
-    ov AS (SELECT s.doc_id, count(*) AS n_overlap
-           FROM sh s JOIN bench b ON s.shingle = b.shingle
-           WHERE s.doc_id >= 20 GROUP BY 1)
-    SELECT d.doc_id,
-           CAST(COALESCE(ov.n_overlap, 0) AS BIGINT) AS n_overlap,
-           COALESCE(ov.n_overlap, 0) >= 5 AS contaminated
-    FROM documents d LEFT JOIN ov ON d.doc_id = ov.doc_id
-    WHERE d.doc_id >= 20 ORDER BY d.doc_id LIMIT 100
-    """,
+    oracle=_DECONTAM_ORACLE,
     tags=("tier-c", "decontamination", "bloom_filter", "sketch"),
 )
 def decontaminate_bloom_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7034,27 +6933,8 @@ def _events_with_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sessionize_events_nulls",
-    oracle=f"""
-    WITH ev AS ({_EVENTS_NULLS_SQL}),
-    l AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                  OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                  THEN 1 ELSE 0 END AS ns
-      FROM ev WHERE user_id IS NOT NULL AND ts IS NOT NULL
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-    s AS (
-      SELECT user_id, ts,
-             sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-                           ROWS UNBOUNDED PRECEDING) AS sid
-      FROM l)
-    SELECT user_id, CAST(sid AS BIGINT) AS session_idx,
-           min(ts) AS session_start, max(ts) AS session_end,
-           count(*) AS n_events,
-           (epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000
-             AS duration_secs
-    FROM s GROUP BY 1, 2 ORDER BY user_id, session_idx
-    """,
+    oracle=f"\n    WITH ev AS ({_EVENTS_NULLS_SQL}),"
+    + _SESSIONIZE_SQL.format(src="ev"),
     tags=("tier-c", "sessionize", "null_contract", "win_lag", "behavior"),
 )
 def sessionize_events_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7073,27 +6953,8 @@ def sessionize_events_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "top_movers_events_nulls",
-    oracle=f"""
-    WITH ev AS ({_EVENTS_NULLS_SQL}),
-    c AS (
-      SELECT event_type, CAST(date_trunc('week', ts) AS TIMESTAMP)
-               AS bucket_ts,
-             count(*) AS n_events
-      FROM ev WHERE ts IS NOT NULL GROUP BY 1, 2),
-    l AS (
-      SELECT event_type, bucket_ts, n_events,
-             CASE WHEN lag(bucket_ts) OVER w = bucket_ts - INTERVAL 1 WEEK
-                  THEN lag(n_events) OVER w END AS prev_events
-      FROM c WINDOW w AS (PARTITION BY event_type ORDER BY bucket_ts))
-    SELECT event_type, bucket_ts, n_events, prev_events,
-           CASE WHEN n_events >= prev_events THEN
-             (n_events - prev_events) * 1000000 // prev_events
-           ELSE
-             -((prev_events - n_events) * 1000000 // prev_events)
-           END AS growth_ppm
-    FROM l WHERE prev_events >= 1
-    ORDER BY event_type, bucket_ts
-    """,
+    oracle=f"\n    WITH ev AS ({_EVENTS_NULLS_SQL}),"
+    + _TOP_MOVERS_SQL.format(src="ev"),
     tags=("tier-c", "trending", "null_contract", "win_lag", "behavior"),
 )
 def top_movers_events_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7111,24 +6972,8 @@ def top_movers_events_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "event_transitions_nulls",
-    oracle=f"""
-    WITH ev AS ({_EVENTS_NULLS_SQL}),
-    p AS (
-      SELECT event_type AS from_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS to_type
-      FROM ev
-      WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        AND event_type IS NOT NULL),
-    c AS (
-      SELECT from_type, to_type, count(*) AS n_transitions
-      FROM p WHERE to_type IS NOT NULL GROUP BY 1, 2)
-    SELECT from_type, to_type, n_transitions,
-           CAST(n_transitions * 1000000
-                // sum(n_transitions) OVER (PARTITION BY from_type)
-                AS BIGINT) AS share_ppm
-    FROM c ORDER BY from_type, to_type
-    """,
+    oracle=f"\n    WITH ev AS ({_EVENTS_NULLS_SQL}),"
+    + _TRANSITIONS_SQL.format(src="ev"),
     tags=("tier-c", "behavior", "null_contract", "win_lag", "markov"),
 )
 def event_transitions_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7771,19 +7616,7 @@ _ER_OFFSET = 10_000_000  # dirty-entity id space, disjoint from part keys
 @query(
     "entity_resolution_parts",
     oracle=f"""
-    WITH RECURSIVE clean AS MATERIALIZED (
-      SELECT p_partkey AS clean_key,
-             lower(trim(p_name || ' ' || p_brand || ' ' || p_type)) AS clean_name
-      FROM part),
-    dirty AS MATERIALIZED (
-      SELECT p_partkey + {_ER_OFFSET} AS dirty_key,
-             substr(nm, 1, pos - 1) || substr(nm, pos + 1) AS dirty_name
-      FROM (SELECT p_partkey, nm,
-                   CAST(p_partkey % length(nm) AS INT) + 1 AS pos
-            FROM (SELECT p_partkey,
-                         lower(trim(p_name || ' ' || p_brand || ' ' || p_type)) AS nm
-                  FROM part)
-            WHERE p_partkey % 20 = 3)),
+    WITH RECURSIVE {_part_entity_ctes(f"p_partkey + {_ER_OFFSET}", 3)},
     m AS MATERIALIZED (
       -- MATERIALIZED is load-bearing for runtime, not correctness: inside
       -- a WITH RECURSIVE chain DuckDB otherwise inlines the all-pairs
@@ -7833,21 +7666,8 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     choice simultaneously."""
     from sql4pandas_spark.operators.dedup import label_components
 
-    t = register_tables(spark, sf_dir, ("part",))
-    part = t["part"]
-    ent = F.lower(
-        F.trim(F.concat_ws(" ", F.col("p_name"), F.col("p_brand"), F.col("p_type")))
-    )
-    clean = part.select(
-        F.col("p_partkey").alias("clean_key"), ent.alias("clean_name")
-    )
-    pos = (F.col("p_partkey") % F.length(ent) + F.lit(1)).cast("int")
-    dirty = part.filter(F.col("p_partkey") % 20 == 3).select(
-        (F.col("p_partkey") + F.lit(_ER_OFFSET)).alias("dirty_key"),
-        F.concat(
-            ent.substr(F.lit(1), pos - 1),
-            ent.substr(pos + 1, F.length(ent)),
-        ).alias("dirty_name"),
+    dirty, clean = _part_entities(
+        spark, sf_dir, 3, F.col("p_partkey") + F.lit(_ER_OFFSET)
     )
     pairs = joins.fuzzy_key_join(
         dirty, clean, "dirty_name", "clean_name",
@@ -7911,21 +7731,7 @@ def asof_join_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same one-shuffle union+window plan and exact-microsecond tolerance
     as asof_join_tolerance."""
     ev = _events_with_nulls(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("ts").alias("click_ts")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    return (
-        joins.asof_join(
-            purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-            value_cols=["click_ts"], tolerance_seconds=3600,
-        )
-        .select("event_id", "user_id", "click_ts")
-        .orderBy("event_id")
-        .limit(300)
-    )
+    return asof_click_to_purchase(ev, "click_ts", 300, tolerance_seconds=3600)
 
 
 @query(
@@ -8026,9 +7832,11 @@ def _psl_domain_oracle_cte(url_src: str) -> str:
     )
 
 
-@query(
-    "domain_blocklist_documents",
-    oracle="""
+def _domain_blocklist_oracle(planted: str, blocklist: tuple[str, ...]) -> str:
+    """Per-domain doc counts over the ``planted`` URLs (the
+    registered_domain replay), each flagged by a left join to
+    ``blocklist`` spelled as VALUES."""
+    return """
     WITH u AS ({planted}),
     {psl_ctes},
     b (domain) AS (VALUES {blocked})
@@ -8038,10 +7846,38 @@ def _psl_domain_oracle_cte(url_src: str) -> str:
     FROM d LEFT JOIN b USING (domain)
     GROUP BY d.domain, blocked ORDER BY d.domain
     """.format(
-        planted=_URL_PLANTED_SQL,
+        planted=planted,
         psl_ctes=_psl_domain_oracle_cte("u"),
-        blocked=", ".join(f"('{b}')" for b in _DOMAIN_BLOCKLIST),
-    ),
+        blocked=", ".join(f"('{b}')" for b in blocklist),
+    )
+
+
+def _domain_blocklist(
+    spark: SparkSession, sf_dir: str, planted: str, blocklist: tuple[str, ...]
+) -> DataFrame:
+    """The domain-blocklist station: ``registered_domain`` over the
+    ``planted`` URLs, a left join to ``blocklist`` riding the plan as one
+    broadcast frame, and a per-domain doc count with the blocked flag."""
+    register_tables(spark, sf_dir, ("documents",))
+    u = spark.sql(planted)
+    d = u.select("doc_id", text.registered_domain(F.col("url")).alias("domain"))
+    bl = F.broadcast(
+        spark.createDataFrame(
+            [(b,) for b in blocklist], "domain string"
+        ).withColumn("_blocked", F.lit(True))
+    )
+    return (
+        d.join(bl, "domain", "left")
+        .groupBy("domain", F.coalesce("_blocked", F.lit(False)).alias("blocked"))
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .select("domain", "n_docs", "blocked")
+        .orderBy("domain")
+    )
+
+
+@query(
+    "domain_blocklist_documents",
+    oracle=_domain_blocklist_oracle(_URL_PLANTED_SQL, _DOMAIN_BLOCKLIST),
     tags=("tier-c", "domain_filter", "blocklist", "quality", "text_analysis"),
 )
 def domain_blocklist_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8059,23 +7895,7 @@ def domain_blocklist_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl pipeline — never a shuffle); extraction is two shared-subset
     regexes replayed verbatim by the oracle. Output is
     |domains|-bounded."""
-    from sql4pandas_spark.operators.text import registered_domain
-
-    register_tables(spark, sf_dir, ("documents",))
-    u = spark.sql(_URL_PLANTED_SQL)
-    d = u.select("doc_id", registered_domain(F.col("url")).alias("domain"))
-    bl = F.broadcast(
-        spark.createDataFrame(
-            [(b,) for b in _DOMAIN_BLOCKLIST], "domain string"
-        ).withColumn("_blocked", F.lit(True))
-    )
-    return (
-        d.join(bl, "domain", "left")
-        .groupBy("domain", F.coalesce("_blocked", F.lit(False)).alias("blocked"))
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .select("domain", "n_docs", "blocked")
-        .orderBy("domain")
-    )
+    return _domain_blocklist(spark, sf_dir, _URL_PLANTED_SQL, _DOMAIN_BLOCKLIST)
 
 
 #: URL planting for the PSL-load-bearing entry: every case keys
@@ -8106,20 +7926,7 @@ _PSL_BLOCKLIST: tuple[str, ...] = ("tracker.co.uk", "myblog.blogspot.com")
 
 @query(
     "domain_blocklist_psl",
-    oracle="""
-    WITH u AS ({planted}),
-    {psl_ctes},
-    b (domain) AS (VALUES {blocked})
-    SELECT d.domain,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           (b.domain IS NOT NULL) AS blocked
-    FROM d LEFT JOIN b USING (domain)
-    GROUP BY d.domain, blocked ORDER BY d.domain
-    """.format(
-        planted=_URL_PSL_PLANTED_SQL,
-        psl_ctes=_psl_domain_oracle_cte("u"),
-        blocked=", ".join(f"('{b}')" for b in _PSL_BLOCKLIST),
-    ),
+    oracle=_domain_blocklist_oracle(_URL_PSL_PLANTED_SQL, _PSL_BLOCKLIST),
     tags=("tier-c", "domain_filter", "blocklist", "psl", "text_analysis"),
 )
 def domain_blocklist_psl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8140,23 +7947,7 @@ def domain_blocklist_psl(spark: SparkSession, sf_dir: str) -> DataFrame:
     longest-PSL / fallback CASE from the same module constants. This
     is the entry the round-12 verdict demanded: a last-two-labels
     extractor FAILS this hash."""
-    from sql4pandas_spark.operators.text import registered_domain
-
-    register_tables(spark, sf_dir, ("documents",))
-    u = spark.sql(_URL_PSL_PLANTED_SQL)
-    d = u.select("doc_id", registered_domain(F.col("url")).alias("domain"))
-    bl = F.broadcast(
-        spark.createDataFrame(
-            [(b,) for b in _PSL_BLOCKLIST], "domain string"
-        ).withColumn("_blocked", F.lit(True))
-    )
-    return (
-        d.join(bl, "domain", "left")
-        .groupBy("domain", F.coalesce("_blocked", F.lit(False)).alias("blocked"))
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .select("domain", "n_docs", "blocked")
-        .orderBy("domain")
-    )
+    return _domain_blocklist(spark, sf_dir, _URL_PSL_PLANTED_SQL, _PSL_BLOCKLIST)
 
 
 #: URL planting for the wildcard/exception entry (round-14): every case
@@ -8190,20 +7981,7 @@ _PSL_WILD_BLOCKLIST: tuple[str, ...] = ("city.kobe.jp", "store.shop.ck")
 
 @query(
     "psl_wildcard_exception_domains",
-    oracle="""
-    WITH u AS ({planted}),
-    {psl_ctes},
-    b (domain) AS (VALUES {blocked})
-    SELECT d.domain,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           (b.domain IS NOT NULL) AS blocked
-    FROM d LEFT JOIN b USING (domain)
-    GROUP BY d.domain, blocked ORDER BY d.domain
-    """.format(
-        planted=_URL_PSL_WILD_PLANTED_SQL,
-        psl_ctes=_psl_domain_oracle_cte("u"),
-        blocked=", ".join(f"('{b}')" for b in _PSL_WILD_BLOCKLIST),
-    ),
+    oracle=_domain_blocklist_oracle(_URL_PSL_WILD_PLANTED_SQL, _PSL_WILD_BLOCKLIST),
     tags=("tier-c", "domain_filter", "blocklist", "psl", "text_analysis"),
 )
 def psl_wildcard_exception_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8224,23 +8002,7 @@ def psl_wildcard_exception_domains(spark: SparkSession, sf_dir: str) -> DataFram
     group as domain_blocklist_psl; the oracle replays all six CASE
     arms from the same module constants in the same precedence
     order."""
-    from sql4pandas_spark.operators.text import registered_domain
-
-    register_tables(spark, sf_dir, ("documents",))
-    u = spark.sql(_URL_PSL_WILD_PLANTED_SQL)
-    d = u.select("doc_id", registered_domain(F.col("url")).alias("domain"))
-    bl = F.broadcast(
-        spark.createDataFrame(
-            [(b,) for b in _PSL_WILD_BLOCKLIST], "domain string"
-        ).withColumn("_blocked", F.lit(True))
-    )
-    return (
-        d.join(bl, "domain", "left")
-        .groupBy("domain", F.coalesce("_blocked", F.lit(False)).alias("blocked"))
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .select("domain", "n_docs", "blocked")
-        .orderBy("domain")
-    )
+    return _domain_blocklist(spark, sf_dir, _URL_PSL_WILD_PLANTED_SQL, _PSL_WILD_BLOCKLIST)
 
 
 #: boilerplate-under-PSL planting: two DISTINCT .co.uk shops plus a
@@ -8711,27 +8473,8 @@ _GOPHER_PLANTED_SQL = """
     "gopher_quality_gate",
     oracle=f"""
     WITH p AS ({_GOPHER_PLANTED_SQL}),
-    t AS (SELECT doc_id,
-                 list_filter(regexp_split_to_array(text, '\\s+'),
-                             x -> x <> '') AS w,
-                 string_split(text, chr(10)) AS lines
-          FROM p),
-    m AS (SELECT doc_id,
-                 len(w) AS n,
-                 list_sum(list_transform(w, x -> length(x)))::BIGINT
-                   AS sum_len,
-                 len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]')))
-                   AS n_alpha,
-                 len(lines) AS n_lines,
-                 len(list_filter(lines, l -> starts_with(l, '- ')))
-                   AS n_bullet,
-                 len(list_filter(lines, l -> l LIKE '%...')) AS n_ell,
-                 len(list_filter(['the', 'be', 'to', 'of', 'and', 'that',
-                                  'have', 'with'],
-                                 s -> list_contains(
-                                        list_transform(w, x -> lower(x)), s)))
-                   AS n_stop
-          FROM t)
+    t AS ({_gopher_words_sql("doc_id", "p")}),
+    m AS ({_gopher_features_sql("doc_id", "t")})
     SELECT doc_id,
            CAST(n AS BIGINT) AS n_words,
            (n >= 30 AND n <= 100000) AS r_word_count,
@@ -8740,10 +8483,7 @@ _GOPHER_PLANTED_SQL = """
            (10 * n_bullet < 9 * n_lines) AS r_bullet_lines,
            (10 * n_ell < 3 * n_lines) AS r_ellipsis_lines,
            (n_stop >= 2) AS r_stopwords,
-           ((n >= 30 AND n <= 100000) AND (sum_len >= 3 * n AND
-             sum_len <= 10 * n) AND (5 * n_alpha > 4 * n) AND
-            (10 * n_bullet < 9 * n_lines) AND (10 * n_ell < 3 * n_lines)
-            AND (n_stop >= 2)) AS keep
+           ({_gopher_keep_sql(30)}) AS keep
     FROM m ORDER BY doc_id
     """,
     tags=("tier-c", "quality", "gopher_rules", "text_analysis"),
@@ -9000,28 +8740,10 @@ def _crawl_chain_parts(p_sql: str | None = None) -> tuple[str, str]:
                              w -> w <> '') AS w,
                  string_split(clean_text, chr(10)) AS lines
           FROM s),
-    m AS (SELECT doc_id, domain, n_lines_removed,
-                 len(w) AS n,
-                 list_sum(list_transform(w, x -> length(x)))::BIGINT
-                   AS sum_len,
-                 len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]')))
-                   AS n_alpha,
-                 len(lines) AS n_lines,
-                 len(list_filter(lines, q -> starts_with(q, '- ')))
-                   AS n_bullet,
-                 len(list_filter(lines, q -> q LIKE '%...')) AS n_ell,
-                 len(list_filter(['the', 'be', 'to', 'of', 'and', 'that',
-                                  'have', 'with'],
-                                 s2 -> list_contains(
-                                         list_transform(w, x -> lower(x)),
-                                         s2))) AS n_stop
-          FROM t)"""
-    final = """SELECT doc_id, domain, n_lines_removed,
+    m AS ({_gopher_features_sql("doc_id, domain, n_lines_removed", "t")})"""
+    final = f"""SELECT doc_id, domain, n_lines_removed,
            CAST(n AS BIGINT) AS n_words,
-           ((n >= 30 AND n <= 100000) AND (sum_len >= 3 * n AND
-             sum_len <= 10 * n) AND (5 * n_alpha > 4 * n) AND
-            (10 * n_bullet < 9 * n_lines) AND (10 * n_ell < 3 * n_lines)
-            AND (n_stop >= 2)) AS keep
+           ({_gopher_keep_sql(30)}) AS keep
     FROM m"""
     return ctes, final
 
@@ -9790,6 +9512,61 @@ def crawl_curation_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
+def _merge_ranks(spark: SparkSession, merges: list) -> DataFrame:
+    """A learned BPE merge list as (merge_rank, pair, pair_count) rows."""
+    return spark.createDataFrame(
+        [
+            (k + 1, f"{left} {right}", int(n))
+            for k, (left, right, n) in enumerate(merges)
+        ],
+        "merge_rank int, pair string, pair_count long",
+    )
+
+
+def _bpe_census(docs: DataFrame, merges: list) -> DataFrame:
+    """Per-language compression census of ``merges`` applied in order to
+    the (lang, word, count) vocab of ``docs``: word occurrences, character
+    symbols before and merged symbols after, weighted by word count."""
+    vocab = (
+        docs.select("lang", F.explode(text.tokens("text")).alias("word"))
+        .filter(F.col("word").rlike(text.BPE_ALNUM_RE))
+        .groupBy("lang", "word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    applied = vocab.select(
+        "lang",
+        "word",
+        "cnt",
+        text.bpe_apply_merges(
+            F.filter(F.split("word", ""), lambda c: c != ""), merges
+        ).alias("w"),
+    )
+    return applied.groupBy("lang").agg(
+        F.sum("cnt").cast("long").alias("n_words"),
+        F.sum(F.length("word") * F.col("cnt")).cast("long")
+        .alias("n_symbols_before"),
+        F.sum(F.size("w") * F.col("cnt")).cast("long")
+        .alias("n_symbols_after"),
+    )
+
+
+#: every adjacent symbol pair of ``w``, as "left right" — the pairs each
+#: BPE round counts
+_BPE_PAIRS_SQL = """SELECT unnest([w[i] || ' ' || w[i + 1] FOR i IN range(1, len(w))])
+               AS pair"""
+
+
+def _bpe_merge_sql(k: int) -> str:
+    """DuckDB replay of text.bpe_merge_tokens: round ``k``'s winning pair
+    (CTE ``b{k}``) merged everywhere in ``w`` by one double-space regexp
+    pass, whose global replace is BPE's greedy left-to-right rule."""
+    return f"""trim(regexp_replace(' ' || array_to_string(w, '  ') || ' ',
+                  (SELECT ' ' || replace(pair, ' ', '  ') || ' '
+                   FROM b{k}),
+                  (SELECT ' ' || replace(pair, ' ', '') || ' '
+                   FROM b{k}), 'g'))"""
+
+
 def _bpe_oracle(n_merges: int = 3) -> str:
     """DuckDB replay of operators/text.bpe_learn_merges, rounds UNROLLED:
     per round a pair-count CTE, a deterministic argmax CTE, and the
@@ -9804,8 +9581,7 @@ def _bpe_oracle(n_merges: int = 3) -> str:
         prev = f"t{k - 1}"
         ctes.append(
             f"""p{k} AS (
-      SELECT unnest([w[i] || ' ' || w[i + 1] FOR i IN range(1, len(w))])
-               AS pair
+      {_BPE_PAIRS_SQL}
       FROM {prev})"""
         )
         ctes.append(
@@ -9815,11 +9591,7 @@ def _bpe_oracle(n_merges: int = 3) -> str:
         if k < n_merges:
             ctes.append(
                 f"""s{k} AS (
-      SELECT trim(regexp_replace(' ' || array_to_string(w, '  ') || ' ',
-                  (SELECT ' ' || replace(pair, ' ', '  ') || ' '
-                   FROM b{k}),
-                  (SELECT ' ' || replace(pair, ' ', '') || ' '
-                   FROM b{k}), 'g')) AS s
+      SELECT {_bpe_merge_sql(k)} AS s
       FROM {prev})"""
             )
             ctes.append(
@@ -9861,13 +9633,20 @@ def bpe_merges_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = register_tables(spark, sf_dir, ("documents",))
     merges = bpe_learn_merges(t["documents"], n_merges=3)
-    return spark.createDataFrame(
-        [
-            (k + 1, f"{left} {right}", int(n))
-            for k, (left, right, n) in enumerate(merges)
-        ],
-        "merge_rank int, pair string, pair_count long",
-    )
+    return _merge_ranks(spark, merges)
+
+
+def _bpe_weighted_argmax_ctes(k: int, prev: str) -> list[str]:
+    """Round ``k`` of char-level BPE over the (w, cnt) vocab ``prev``: the
+    count-weighted pair census ``p{k}`` and its deterministic argmax
+    ``b{k}`` (count desc, pair asc)."""
+    return [
+        f"""p{k} AS (
+      {_BPE_PAIRS_SQL}, cnt
+      FROM {prev})""",
+        f"b{k} AS (SELECT pair, CAST(sum(cnt) AS BIGINT) AS n"
+        f" FROM p{k} GROUP BY pair ORDER BY n DESC, pair LIMIT 1)",
+    ]
 
 
 def _bpe_chars_oracle(n_merges: int = 3) -> str:
@@ -9891,24 +9670,11 @@ def _bpe_chars_oracle(n_merges: int = 3) -> str:
     ]
     for k in range(1, n_merges + 1):
         prev = f"c{k - 1}"
-        ctes.append(
-            f"""p{k} AS (
-      SELECT unnest([w[i] || ' ' || w[i + 1] FOR i IN range(1, len(w))])
-               AS pair, cnt
-      FROM {prev})"""
-        )
-        ctes.append(
-            f"b{k} AS (SELECT pair, CAST(sum(cnt) AS BIGINT) AS n"
-            f" FROM p{k} GROUP BY pair ORDER BY n DESC, pair LIMIT 1)"
-        )
+        ctes += _bpe_weighted_argmax_ctes(k, prev)
         if k < n_merges:
             ctes.append(
                 f"""s{k} AS (
-      SELECT trim(regexp_replace(' ' || array_to_string(w, '  ') || ' ',
-                  (SELECT ' ' || replace(pair, ' ', '  ') || ' '
-                   FROM b{k}),
-                  (SELECT ' ' || replace(pair, ' ', '') || ' '
-                   FROM b{k}), 'g')) AS s, cnt
+      SELECT {_bpe_merge_sql(k)} AS s, cnt
       FROM {prev})"""
             )
             ctes.append(
@@ -9952,13 +9718,7 @@ def bpe_char_merges_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = register_tables(spark, sf_dir, ("documents",))
     merges = bpe_learn_merges_chars(t["documents"], n_merges=3)
-    return spark.createDataFrame(
-        [
-            (k + 1, f"{left} {right}", int(n))
-            for k, (left, right, n) in enumerate(merges)
-        ],
-        "merge_rank int, pair string, pair_count long",
-    )
+    return _merge_ranks(spark, merges)
 
 
 def _bpe_compression_oracle(n_merges: int = 3) -> str:
@@ -9979,24 +9739,11 @@ def _bpe_compression_oracle(n_merges: int = 3) -> str:
     ]
     for k in range(1, n_merges + 1):
         prev = f"c{k - 1}"
-        ctes.append(
-            f"""p{k} AS (
-      SELECT unnest([w[i] || ' ' || w[i + 1] FOR i IN range(1, len(w))])
-               AS pair, cnt
-      FROM {prev})"""
-        )
-        ctes.append(
-            f"b{k} AS (SELECT pair, CAST(sum(cnt) AS BIGINT) AS n"
-            f" FROM p{k} GROUP BY pair ORDER BY n DESC, pair LIMIT 1)"
-        )
+        ctes += _bpe_weighted_argmax_ctes(k, prev)
         ctes.append(
             f"""s{k} AS (
       SELECT lang, word,
-             trim(regexp_replace(' ' || array_to_string(w, '  ') || ' ',
-                  (SELECT ' ' || replace(pair, ' ', '  ') || ' '
-                   FROM b{k}),
-                  (SELECT ' ' || replace(pair, ' ', '') || ' '
-                   FROM b{k}), 'g')) AS s, cnt
+             {_bpe_merge_sql(k)} AS s, cnt
       FROM {prev})"""
         )
         ctes.append(
@@ -10037,41 +9784,12 @@ def bpe_compression_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the corpus is touched once, in the word count). The oracle
     carries (lang, word) through the same unrolled rounds and applies
     ALL merges including the last."""
-    from sql4pandas_spark.operators.text import (
-        BPE_ALNUM_RE,
-        bpe_apply_merges,
-        bpe_learn_merges_chars,
-        tokens,
-    )
+    from sql4pandas_spark.operators.text import bpe_learn_merges_chars
 
     t = register_tables(spark, sf_dir, ("documents",))
     docs = t["documents"]
     merges = bpe_learn_merges_chars(docs, n_merges=3)
-    vocab = (
-        docs.select("lang", F.explode(tokens("text")).alias("word"))
-        .filter(F.col("word").rlike(BPE_ALNUM_RE))
-        .groupBy("lang", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    applied = vocab.select(
-        "lang",
-        "word",
-        "cnt",
-        bpe_apply_merges(
-            F.filter(F.split("word", ""), lambda c: c != ""), merges
-        ).alias("w"),
-    )
-    return (
-        applied.groupBy("lang")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_words"),
-            F.sum(F.length("word") * F.col("cnt")).cast("long")
-            .alias("n_symbols_before"),
-            F.sum(F.size("w") * F.col("cnt")).cast("long")
-            .alias("n_symbols_after"),
-        )
-        .orderBy("lang")
-    )
+    return _bpe_census(docs, merges).orderBy("lang")
 
 
 @query(
@@ -10096,12 +9814,7 @@ def bpe_artifact_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled replay plus the applied-merge count, so a lossy artifact
     round-trip (dropped merge, shuffled rank, truncated pair) flips
     the hash. Reload-order corruption is additionally pytest-pinned."""
-    from sql4pandas_spark.operators.text import (
-        BPE_ALNUM_RE,
-        bpe_apply_merges,
-        bpe_learn_merges_chars,
-        tokens,
-    )
+    from sql4pandas_spark.operators.text import bpe_learn_merges_chars
 
     t = register_tables(spark, sf_dir, ("documents",))
     docs = t["documents"]
@@ -10115,29 +9828,8 @@ def bpe_artifact_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["left"], r["right"], r["weighted_count"])
         for r in spark.read.parquet(store).orderBy("rank").collect()
     ]
-    vocab = (
-        docs.select("lang", F.explode(tokens("text")).alias("word"))
-        .filter(F.col("word").rlike(BPE_ALNUM_RE))
-        .groupBy("lang", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    applied = vocab.select(
-        "lang",
-        "word",
-        "cnt",
-        bpe_apply_merges(
-            F.filter(F.split("word", ""), lambda c: c != ""), reloaded
-        ).alias("w"),
-    )
     return (
-        applied.groupBy("lang")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_words"),
-            F.sum(F.length("word") * F.col("cnt")).cast("long")
-            .alias("n_symbols_before"),
-            F.sum(F.size("w") * F.col("cnt")).cast("long")
-            .alias("n_symbols_after"),
-        )
+        _bpe_census(docs, reloaded)
         .withColumn("n_merges_applied", F.lit(len(reloaded)).cast("long"))
         .orderBy("lang")
     )
@@ -10229,33 +9921,11 @@ _DATA_CARD_PLANTED_SQL = """
 _DATA_CARD_ORACLE = f"""
     WITH pl AS ({_DATA_CARD_PLANTED_SQL}),
     toks AS (
-      SELECT doc_id, lang, source, text,
-             list_filter(regexp_split_to_array(text, '\\s+'),
-                         x -> x <> '') AS w,
-             string_split(text, chr(10)) AS lines
-      FROM pl),
-    m AS (SELECT doc_id, lang, source, text,
-                 len(w) AS n,
-                 list_sum(list_transform(w, x -> length(x)))::BIGINT
-                   AS sum_len,
-                 len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]')))
-                   AS n_alpha,
-                 len(lines) AS n_lines,
-                 len(list_filter(lines, l -> starts_with(l, '- ')))
-                   AS n_bullet,
-                 len(list_filter(lines, l -> l LIKE '%...')) AS n_ell,
-                 len(list_filter(['the', 'be', 'to', 'of', 'and', 'that',
-                                  'have', 'with'],
-                                 s -> list_contains(
-                                        list_transform(w, x -> lower(x)), s)))
-                   AS n_stop
-          FROM toks),
+      {_gopher_words_sql("doc_id, lang, source, text", "pl")}),
+    m AS ({_gopher_features_sql("doc_id, lang, source, text", "toks")}),
     flags AS (
       SELECT source, lang, n,
-             CASE WHEN (n >= 20 AND n <= 100000) AND (sum_len >= 3 * n AND
-                  sum_len <= 10 * n) AND (5 * n_alpha > 4 * n) AND
-                  (10 * n_bullet < 9 * n_lines) AND (10 * n_ell < 3 * n_lines)
-                  AND (n_stop >= 2) THEN 1 ELSE 0 END AS keep,
+             CASE WHEN {_gopher_keep_sql(20)} THEN 1 ELSE 0 END AS keep,
              CASE WHEN row_number() OVER (PARTITION BY text ORDER BY doc_id)
                   > 1 THEN 1 ELSE 0 END AS is_dup
       FROM m),

@@ -30,34 +30,24 @@ def _ts(lit: str) -> F.Column:
 # scan_parquet / project / filter_cmp / agg_group / order_by — the flagship
 # ---------------------------------------------------------------------------
 
-
-@query(
-    "q1_pricing_summary",
-    oracle="""
+#: Q1's pricing-summary aggregate over the lineitem-shaped relation
+#: ``{src}`` — the flagship's oracle and fact_refresh_merge_q1's check
+Q1_SUMMARY_SQL = """
     SELECT l_returnflag, l_linestatus,
            round(sum(l_quantity), 2)                         AS sum_qty,
            round(sum(l_extendedprice), 2)                    AS sum_base,
            round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
            round(avg(l_quantity), 4)                         AS avg_qty,
            count(*)                                          AS count_order
-    FROM lineitem
+    FROM {src}
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
-    """,
-    tags=("tier-a", "scan_parquet", "project", "filter_cmp", "agg_group", "order_by", "bench"),
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary.
-
-    Scale: single scan → partial/final HashAggregate on 6 groups; the shipdate
-    filter is pushed to parquet row-groups (asserted in tests/test_plans.py),
-    only 6 of 16 lineitem columns are read, and whole-stage codegen covers
-    scan→filter→project→partial-agg in one pipeline. No join, one shuffle of
-    6 tiny partial rows per task — this plan is shape-identical at 100 TB.
     """
-    t = register_tables(spark, sf_dir, ("lineitem",))
-    li = t["lineitem"]
+
+
+def q1_summary(li: DataFrame) -> DataFrame:
+    """Spark side of :data:`Q1_SUMMARY_SQL` over the lineitem-shaped ``li``."""
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= _ts("1998-09-02"))
@@ -71,6 +61,24 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("l_returnflag", "l_linestatus")
     )
+
+
+@query(
+    "q1_pricing_summary",
+    oracle=Q1_SUMMARY_SQL.format(src="lineitem"),
+    tags=("tier-a", "scan_parquet", "project", "filter_cmp", "agg_group", "order_by", "bench"),
+)
+def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q1-style pricing summary.
+
+    Scale: single scan → partial/final HashAggregate on 6 groups; the shipdate
+    filter is pushed to parquet row-groups (asserted in tests/test_plans.py),
+    only 6 of 16 lineitem columns are read, and whole-stage codegen covers
+    scan→filter→project→partial-agg in one pipeline. No join, one shuffle of
+    6 tiny partial rows per task — this plan is shape-identical at 100 TB.
+    """
+    t = register_tables(spark, sf_dir, ("lineitem",))
+    return q1_summary(t["lineitem"])
 
 
 @query(
@@ -363,15 +371,46 @@ def range_join_close_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "asof_join_purchase_click",
-    oracle="""
-    SELECT p.event_id, p.user_id, c.ts AS click_ts
+def asof_click_to_purchase(
+    events: DataFrame, click_col: str, limit: int, **asof_kw
+) -> DataFrame:
+    """The as-of entries' shape: each purchase of ``events`` matched to a
+    click of the same user by operators/joins.asof_join (``asof_kw``:
+    tolerance and direction), the click's ts carried as ``click_col``;
+    the first ``limit`` purchases by event_id."""
+    clicks = events.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", F.col("ts").alias(click_col)
+    )
+    purchases = events.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    return (
+        joins.asof_join(
+            purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
+            value_cols=[click_col], **asof_kw,
+        )
+        .select("event_id", "user_id", click_col)
+        .orderBy("event_id")
+        .limit(limit)
+    )
+
+
+def _asof_oracle(click: str, cmp: str) -> str:
+    """DuckDB's native ASOF LEFT JOIN of each purchase to the click of the
+    same user with ``p.ts {cmp} c.ts``, projecting ``click``; the first
+    200 purchases by event_id."""
+    return f"""
+    SELECT p.event_id, p.user_id, {click}
     FROM (SELECT * FROM events WHERE event_type = 'purchase') p
     ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id AND p.ts >= c.ts
+      ON p.user_id = c.user_id AND p.ts {cmp} c.ts
     ORDER BY p.event_id LIMIT 200
-    """,
+    """
+
+
+@query(
+    "asof_join_purchase_click",
+    oracle=_asof_oracle("c.ts AS click_ts", ">="),
     tags=("tier-c", "join_asof"),
 )
 def asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,35 +423,16 @@ def asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality and is exactly DuckDB's `ASOF JOIN ... ON p.ts >= c.ts`.
     """
     t = register_tables(spark, sf_dir, ("events",))
-    e = t["events"]
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("ts").alias("click_ts")
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    return (
-        joins.asof_join(
-            purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-            value_cols=["click_ts"],
-        )
-        .select("event_id", "user_id", "click_ts")
-        .orderBy("event_id")
-        .limit(200)
-    )
+    return asof_click_to_purchase(t["events"], "click_ts", 200)
 
 
 @query(
     "asof_join_tolerance",
-    oracle="""
-    SELECT p.event_id, p.user_id,
-           CASE WHEN epoch_us(p.ts) - epoch_us(c.ts) <= 3600000000::BIGINT
-                THEN c.ts END AS click_ts
-    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id AND p.ts >= c.ts
-    ORDER BY p.event_id LIMIT 200
-    """,
+    oracle=_asof_oracle(
+        "CASE WHEN epoch_us(p.ts) - epoch_us(c.ts) <= 3600000000::BIGINT"
+        " THEN c.ts END AS click_ts",
+        ">=",
+    ),
     tags=("tier-c", "join_asof"),
 )
 def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -429,35 +449,18 @@ def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cast; fixed via an intermediate LTZ cast) stays driver-watched.
     """
     t = register_tables(spark, sf_dir, ("events",))
-    e = t["events"]
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("ts").alias("click_ts")
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    return (
-        joins.asof_join(
-            purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-            value_cols=["click_ts"], tolerance_seconds=3600,
-        )
-        .select("event_id", "user_id", "click_ts")
-        .orderBy("event_id")
-        .limit(200)
+    return asof_click_to_purchase(
+        t["events"], "click_ts", 200, tolerance_seconds=3600
     )
 
 
 @query(
     "asof_join_forward",
-    oracle="""
-    SELECT p.event_id, p.user_id,
-           CASE WHEN epoch_us(c.ts) - epoch_us(p.ts) <= 3600000000::BIGINT
-                THEN c.ts END AS next_click_ts
-    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id AND p.ts <= c.ts
-    ORDER BY p.event_id LIMIT 200
-    """,
+    oracle=_asof_oracle(
+        "CASE WHEN epoch_us(c.ts) - epoch_us(p.ts) <= 3600000000::BIGINT"
+        " THEN c.ts END AS next_click_ts",
+        "<=",
+    ),
     tags=("tier-c", "join_asof"),
 )
 def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,22 +472,9 @@ def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows sort before right on timestamp ties and the carry runs
     first(ignorenulls) over the FOLLOWING frame."""
     t = register_tables(spark, sf_dir, ("events",))
-    e = t["events"]
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("ts").alias("next_click_ts")
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    return (
-        joins.asof_join(
-            purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-            value_cols=["next_click_ts"], tolerance_seconds=3600,
-            direction="forward",
-        )
-        .select("event_id", "user_id", "next_click_ts")
-        .orderBy("event_id")
-        .limit(200)
+    return asof_click_to_purchase(
+        t["events"], "next_click_ts", 200,
+        tolerance_seconds=3600, direction="forward",
     )
 
 
@@ -522,22 +512,9 @@ def asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no native nearest, so the oracle composes its backward and
     forward ASOF JOINs and replays the gap comparison."""
     t = register_tables(spark, sf_dir, ("events",))
-    e = t["events"]
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("ts").alias("nearest_click_ts")
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    return (
-        joins.asof_join(
-            purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-            value_cols=["nearest_click_ts"], tolerance_seconds=3600,
-            direction="nearest",
-        )
-        .select("event_id", "user_id", "nearest_click_ts")
-        .orderBy("event_id")
-        .limit(200)
+    return asof_click_to_purchase(
+        t["events"], "nearest_click_ts", 200,
+        tolerance_seconds=3600, direction="nearest",
     )
 
 
@@ -746,9 +723,8 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     return building.subtract(big).orderBy("c_custkey")
 
 
-@query(
-    "setop_union_counts",
-    oracle="""
+#: run verbatim by both engines
+_SETOP_UNION_SQL = """
     SELECT
       (SELECT count(*) FROM (
          SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -758,26 +734,19 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
          SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
          UNION ALL
          SELECT o_custkey FROM orders WHERE o_totalprice > 300000)) AS n_union_all
-    """,
+    """
+
+
+@query(
+    "setop_union_counts",
+    oracle=_SETOP_UNION_SQL,
     tags=("tier-b", "union_all", "union"),
 )
 def setop_union_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) vs UNION ALL — DataFrame forms are unionByName
     (+.distinct()); expressed via scalar subqueries to stay one lazy plan."""
     register_tables(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(
-        """
-        SELECT
-          (SELECT count(*) FROM (
-             SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-             UNION
-             SELECT o_custkey FROM orders WHERE o_totalprice > 300000)) AS n_union,
-          (SELECT count(*) FROM (
-             SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-             UNION ALL
-             SELECT o_custkey FROM orders WHERE o_totalprice > 300000)) AS n_union_all
-        """
-    )
+    return spark.sql(_SETOP_UNION_SQL)
 
 
 @query(
@@ -1047,9 +1016,8 @@ def tablesample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q4_order_priority",
-    oracle="""
+#: run verbatim by both engines
+_Q4_SQL = """
     SELECT o_orderpriority, count(*) AS order_count
     FROM orders o
     WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
@@ -1057,7 +1025,12 @@ def tablesample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND EXISTS (SELECT 1 FROM lineitem l
                   WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
     GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
+    """
+
+
+@query(
+    "q4_order_priority",
+    oracle=_Q4_SQL,
     tags=("tier-a", "join_semi", "agg_group"),
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1065,17 +1038,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a left-semi join on l_orderkey with the l_shipdate > o_orderdate
     residual; the date filter pushes into the orders scan."""
     register_tables(spark, sf_dir, ("orders", "lineitem"))
-    return spark.sql(
-        """
-        SELECT o_orderpriority, count(*) AS order_count
-        FROM orders o
-        WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o.o_orderdate < TIMESTAMP '1996-04-01'
-          AND EXISTS (SELECT 1 FROM lineitem l
-                      WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
-        GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """
-    )
+    return spark.sql(_Q4_SQL)
 
 
 @query(

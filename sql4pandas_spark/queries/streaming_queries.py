@@ -106,9 +106,9 @@ def events_sliding_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sliding_30m(t["events"]).orderBy("w_start", "event_type")
 
 
-@query(
-    "events_session_windows",
-    oracle="""
+#: gap-based sessions in SQL: a new session (``sid``) starts per user when
+#: the gap to the previous event is >= 10 min (lag + cumulative sum)
+_SESSIONS_CTES = """
     WITH g AS (
       SELECT user_id, ts,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -119,7 +119,12 @@ def events_sliding_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, ts,
              sum(brk) OVER (PARTITION BY user_id ORDER BY ts
                             ROWS UNBOUNDED PRECEDING) AS sid
-      FROM g)
+      FROM g)"""
+
+
+@query(
+    "events_session_windows",
+    oracle=_SESSIONS_CTES + """
     SELECT user_id, min(ts) AS s_start, max(ts) + INTERVAL 10 MINUTE AS s_end,
            count(*) AS n
     FROM s GROUP BY user_id, sid ORDER BY user_id, s_start
@@ -182,18 +187,7 @@ def stream_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_stateful_sessions",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR ts - lag(ts) OVER w >= INTERVAL 10 MINUTE
-                  THEN 1 ELSE 0 END AS brk
-      FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-    s AS (
-      SELECT user_id, ts,
-             sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                            ROWS UNBOUNDED PRECEDING) AS sid
-      FROM g),
+    oracle=_SESSIONS_CTES + """,
     agg AS (
       SELECT user_id, sid, min(ts) AS s_start,
              max(ts) + INTERVAL 10 MINUTE AS s_end, count(*) AS n
@@ -231,6 +225,18 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "s_start")
 
 
+def _time_spine(ev: DataFrame, step: str) -> DataFrame:
+    """Every ``step`` from the hour of the first event to the hour of the
+    last, as column ``w``: sequence()+explode, one row in, n out."""
+    bounds = ev.agg(
+        F.date_trunc("hour", F.min("ts")).alias("lo"),
+        F.date_trunc("hour", F.max("ts")).alias("hi"),
+    )
+    return bounds.select(
+        F.explode(F.sequence("lo", "hi", F.expr(step))).alias("w")
+    )
+
+
 @query(
     "gapfill_hourly_counts",
     oracle="""
@@ -252,13 +258,7 @@ def gapfill_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py."""
     t = register_tables(spark, sf_dir, ("events",))
     ev = t["events"]
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias("w")
-    )
+    spine = _time_spine(ev, "interval 1 hour")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("w")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -318,13 +318,7 @@ def gapfill_interpolate_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = register_tables(spark, sf_dir, ("events",))
     ev = t["events"]
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("interval 15 minutes"))).alias("w")
-    )
+    spine = _time_spine(ev, "interval 15 minutes")
     grid = ev.select("event_type").distinct().crossJoin(spine)
     bucket = F.expr(
         "date_trunc('minute', ts) - make_dt_interval(0, 0, minute(ts) % 15, 0)"
@@ -406,6 +400,26 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drained.agg(F.count(F.lit(1)).alias("n_distinct"))
 
 
+def _watermarked_clicks_purchases(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(clicks, purchases)`` of the event stream as (c_user, c_ts) and
+    (p_user, p_ts), each side watermarked 2 hours — with the join's time
+    constraint, what lets the state store evict rows."""
+    events = read_events_stream(spark, sf_dir)
+    clicks = (
+        events.filter(F.col("event_type") == "click")
+        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
+        .withWatermark("c_ts", "2 hours")
+    )
+    purchases = (
+        events.filter(F.col("event_type") == "purchase")
+        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
+        .withWatermark("p_ts", "2 hours")
+    )
+    return clicks, purchases
+
+
 @query(
     "stream_stream_join",
     oracle="""
@@ -424,17 +438,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     store evict matched rows instead of buffering both streams forever. On
     the drained fixture the emitted matches equal the batch join, which the
     oracle verifies."""
-    events = read_events_stream(spark, sf_dir)
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "2 hours")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "2 hours")
-    )
+    clicks, purchases = _watermarked_clicks_purchases(spark, sf_dir)
     joined = clicks.join(
         purchases,
         (F.col("c_user") == F.col("p_user"))
@@ -524,22 +528,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     data would emit them; hashing their absence pins that semantics. The
     census sums user ids and floor-epoch-seconds over the null-padded set (seconds, not micros: an e16-microsecond sum would overflow int64 within a few hundred thousand rows),
     so the hash pins the exact row set, not just counts."""
-    from sql4pandas_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-    )
-
-    events = read_events_stream(spark, sf_dir)
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "2 hours")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "2 hours")
-    )
+    clicks, purchases = _watermarked_clicks_purchases(spark, sf_dir)
     joined = clicks.join(
         purchases,
         (F.col("c_user") == F.col("p_user"))

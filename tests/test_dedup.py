@@ -414,13 +414,13 @@ def test_label_components_nonconvergence_raises(spark, monkeypatch):
 
 
 def test_connected_components_sum_convergence_check(spark, cc_path):
-    """The r14 convergence check compares exact decimal label sums across
-    rounds (min-propagation is elementwise monotone non-increasing, so an
-    unchanged sum proves a fixpoint). Pin the cases the check must not
-    confuse: an empty pair set terminates immediately with empty labels,
-    and a deep chain (diameter > 1) still fully merges — a premature
-    'converged' would leave mid-chain labels unmerged. The driver path
-    must give the same labels."""
+    """The convergence check stops when no edge has different labels at
+    its two ends (it used to compare exact decimal label sums across
+    rounds). Pin the cases the check must not confuse: an empty pair set
+    terminates immediately with empty labels, and a deep chain (diameter
+    > 1) still fully merges — a premature 'converged' would leave
+    mid-chain labels unmerged. The driver path must give the same
+    labels."""
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(empty).count() == 0
 
@@ -429,7 +429,7 @@ def test_connected_components_sum_convergence_check(spark, cc_path):
     )
     assert _labels(dedup.connected_components(chain)) == {i: 0 for i in range(10)}
 
-    # non-numeric ids take the join-based fallback — same labels
+    # string ids stop by the same edge rule — same labels
     schain = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(4)], "id_a string, id_b string"
     )
@@ -450,14 +450,28 @@ def test_cc_self_loop_only_graph_converges_in_one_round(spark, cc_path):
 
 
 def test_cc_empty_pair_graph_returns_empty(spark, cc_path):
-    """The empty pair graph converges immediately (None sums come from
-    emptiness, not overflow — the guard must not fire)."""
+    """The empty pair graph converges immediately: with no edge, no edge
+    can disagree."""
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(pairs, max_iter=1).count() == 0
 
 
+def test_cc_chain_converges_in_diameter_rounds(spark, monkeypatch):
+    """The distributed path stops in the round that makes every edge
+    agree, with no confirming round after it: a 10-node chain (diameter
+    9) converges with max_iter=9 and raises with max_iter=8."""
+    monkeypatch.setattr(dedup, "DRIVER_GRAPH_MAX_EDGES", -1)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    got = _labels(dedup.connected_components(chain, max_iter=9))
+    assert got == {i: 0 for i in range(10)}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(chain, max_iter=8)
+
+
 def test_cc_chain_still_merges_to_min_label(spark, cc_path):
-    """Regression pin for the reworked numeric check: a 4-chain merges to
+    """Regression pin for the edge-agreement check: a 4-chain merges to
     one cluster labeled by its smallest id, in diameter rounds."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], ["id_a", "id_b"]

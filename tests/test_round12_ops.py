@@ -7,7 +7,8 @@ list_reduce→aggregate mapping, the per-language bigram surprisal gate, the
 vacuum/crash-replay interlock on both versioned stores, the NULL
 contracts on the asof / range / interval joins, and the session-2 crawl
 stations: per-domain boilerplate strip, chr(N) string_split separators,
-the Gopher quality-rule gate, and line-preserving HTML extraction."""
+and line-preserving HTML extraction. The registered-domain and Gopher
+quality-rule pins live in tests/test_text.py."""
 
 from __future__ import annotations
 
@@ -318,36 +319,6 @@ def test_interval_overlap_join_drops_null_boundaries(spark):
     ) == [(1, 10)]
 
 
-# ----------------------------- domain blocklist station (round 12)
-
-def test_registered_domain_edge_cases(spark):
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.text import registered_domain
-
-    df = spark.createDataFrame(
-        [
-            (1, "https://News.Site.com/articles/9?id=2"),
-            (2, "http://spam.bad-ads.net:8080/click"),
-            (3, "blog.example.org/post"),          # schemeless
-            (4, "localhost/admin"),                 # no dot -> NULL
-            (5, "ftp://a.b.c.d.example.net/x"),    # deep subdomain
-            (6, None),
-        ],
-        "id long, url string",
-    )
-    rows = {
-        r["id"]: r["d"]
-        for r in df.select("id", registered_domain(F.col("url")).alias("d")).collect()
-    }
-    assert rows[1] == "site.com"
-    assert rows[2] == "bad-ads.net"
-    assert rows[3] == "example.org"
-    assert rows[4] is None
-    assert rows[5] == "example.net"
-    assert rows[6] is None
-
-
 # -------------------------------- token entropy + stream scrub (round 12)
 
 def test_token_entropy_known_values(spark):
@@ -495,93 +466,6 @@ def test_string_split_non_constant_separator_still_loud(spark):
         transpile_duckdb("SELECT string_split(a, b) FROM t")
     with _pytest.raises(ValueError, match="string_split separator"):
         transpile_duckdb("SELECT string_split(a, chr(n)) FROM t")
-
-
-# ------------------------------------------------ Gopher quality-rule gate
-
-
-def test_gopher_rules_known_values(spark):
-    """Hand-built docs hit each rule exactly: degenerate short text,
-    bullet-dominated, ellipsis-dominated, stopword-free, and one clean
-    passing doc."""
-    from sql4pandas_spark.operators.text import gopher_rules
-
-    clean = (
-        "the quick brown fox jumps over that lazy dog and then runs "
-        "to be with all of them again today because every good line "
-        "needs enough plain words to clear the floor easily in the end"
-    )
-    no_stop = " ".join(f"word{i:02d}" for i in range(40))
-    bullets = clean + "".join(f"\n- item {i}" for i in range(30))
-    ellipsis = clean + "\nwait...\nmore...\nsoon...\nlater...\nnever..."
-    df = spark.createDataFrame(
-        [
-            (1, clean),
-            (2, "aa bb"),
-            (3, no_stop),
-            (4, bullets),
-            (5, ellipsis),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in gopher_rules(df, min_words=30).collect()}
-    assert out[1]["keep"]
-    assert not out[2]["r_word_count"] and not out[2]["keep"]
-    assert not out[3]["r_stopwords"]
-    assert out[3]["r_word_count"] and out[3]["r_mean_word_len"]
-    assert out[3]["r_alpha_words"]          # digits allowed, alpha present
-    assert not out[4]["r_bullet_lines"] and out[4]["r_ellipsis_lines"]
-    assert not out[5]["r_ellipsis_lines"] and out[5]["r_bullet_lines"]
-
-
-def test_gopher_rules_extra_cols_passthrough(spark):
-    """extra_cols carries input columns through unchanged and yields
-    exactly what the old join-back formulation computed (the round-14
-    optimization replaced a 1:1 self-join on doc_id with the
-    passthrough; the gate columns themselves must not move)."""
-    from sql4pandas_spark.operators.text import gopher_rules
-
-    clean = (
-        "the quick brown fox jumps over that lazy dog and then runs "
-        "to be with all of them again today because every good line "
-        "needs enough plain words to clear the floor easily in the end"
-    )
-    df = spark.createDataFrame(
-        [(1, "en", clean), (2, "de", "aa bb"), (3, "fr", clean + " extra")],
-        "doc_id long, lang string, text string",
-    )
-    through = gopher_rules(df, min_words=30, extra_cols=("lang",))
-    joined = df.select("doc_id", "lang").join(
-        gopher_rules(df, min_words=30), "doc_id"
-    ).select(*through.columns)
-    assert through.columns[:3] == ["doc_id", "lang", "n_words"]
-    assert sorted(map(tuple, through.collect())) == sorted(
-        map(tuple, joined.collect())
-    )
-    # default stays column-identical to the pre-change contract
-    assert gopher_rules(df, min_words=30).columns[0:2] == [
-        "doc_id", "n_words",
-    ]
-
-
-def test_gopher_rules_integer_threshold_edges(spark):
-    """The exact cross-multiplied boundaries: mean word length exactly 3
-    and exactly 10 pass (inclusive); alpha fraction exactly 0.8 fails
-    (strict >)."""
-    from sql4pandas_spark.operators.text import gopher_rules
-
-    mean3 = " ".join(["abc"] * 40)           # mean exactly 3
-    mean10 = " ".join(["abcdefghij"] * 40)   # mean exactly 10
-    mean11 = " ".join(["abcdefghijk"] * 40)  # mean 11 -> fail
-    alpha45 = " ".join(["word"] * 32 + ["1234"] * 8)  # 32/40 = 0.8 exactly
-    df = spark.createDataFrame(
-        [(1, mean3), (2, mean10), (3, mean11), (4, alpha45)],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in gopher_rules(df, min_words=30).collect()}
-    assert out[1]["r_mean_word_len"] and out[2]["r_mean_word_len"]
-    assert not out[3]["r_mean_word_len"]
-    assert not out[4]["r_alpha_words"]  # exactly 80% is not > 80%
 
 
 # ---------------------------------------------------- HTML text extraction

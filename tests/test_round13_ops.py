@@ -67,89 +67,6 @@ def test_string_split_chr_out_of_range_is_descriptive():
     assert "split" in transpile_duckdb("SELECT string_split(x, chr(57344)) FROM t")
 
 
-# --------------------------------- PSL-aware registered_domain station
-
-
-def test_registered_domain_psl_cases(spark):
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.text import registered_domain
-
-    cases = [
-        (1, "https://Shop.Example.co.uk/basket?d=1", "example.co.uk"),
-        (2, "http://spam.tracker.co.uk:80/px", "tracker.co.uk"),
-        (3, "news.com.au/story/3", "news.com.au"),
-        # longest suffix wins: k12.ca.us, never ca.us
-        (4, "https://school.k12.ca.us/home", "school.k12.ca.us"),
-        (5, "https://district.ca.us/board", "district.ca.us"),
-        # private-section hosted platform: per-site key
-        (6, "myblog.blogspot.com/post", "myblog.blogspot.com"),
-        # a bare public suffix has no registrable part
-        (7, "co.uk", None),
-        (8, "https://k12.ca.us/", None),
-        # fallback arm unchanged for plain TLDs
-        (9, "https://docs.example.com/ref", "example.com"),
-        (10, "ftp://a.b.c.d.example.net/x", "example.net"),
-        (11, "localhost/admin", None),
-    ]
-    df = spark.createDataFrame(
-        [(i, u) for i, u, _ in cases], "id long, url string"
-    )
-    got = {
-        r["id"]: r["d"]
-        for r in df.select(
-            "id", registered_domain(F.col("url")).alias("d")
-        ).collect()
-    }
-    for i, _, want in cases:
-        assert got[i] == want, f"case {i}: {got[i]!r} != {want!r}"
-
-
-def test_psl_keying_differs_from_last_two_labels(spark):
-    """The load-bearing guarantee of domain_blocklist_psl: on its planted
-    hosts a last-two-labels extractor produces a DIFFERENT keying (pools
-    distinct co.uk sites, misses the blocklisted tracker), so that
-    implementation cannot pass the entry's hash."""
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.text import (
-        REGISTERED_DOMAIN_RE,
-        URL_HOST_RE,
-        registered_domain,
-    )
-
-    urls = [
-        "https://Shop.Example.co.uk/basket?d=0",
-        "http://spam.tracker.co.uk:80/px",
-        "news.com.au/story/2",
-        "https://school.k12.ca.us/home",
-        "myblog.blogspot.com/post",
-        "co.uk",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    host = F.lower(F.regexp_extract(F.trim(F.col("url")), URL_HOST_RE, 1))
-    last_two = F.regexp_extract(host, REGISTERED_DOMAIN_RE, 1)
-    rows = df.select(
-        registered_domain(F.col("url")).alias("psl"),
-        F.when(last_two != "", last_two).alias("naive"),
-    ).collect()
-    assert all(r["psl"] != r["naive"] for r in rows), rows
-    # and the naive keying pools the two distinct co.uk sites
-    naive = [r["naive"] for r in rows]
-    assert naive.count("co.uk") == 3
-
-
-def test_public_suffix_snapshot_shape():
-    """Every bundled suffix is multi-label, lowercase, and dedup'd —
-    single-label TLDs belong to the fallback arm, not the snapshot."""
-    from sql4pandas_spark.operators.text import PUBLIC_SUFFIXES_MULTI
-
-    assert len(set(PUBLIC_SUFFIXES_MULTI)) == len(PUBLIC_SUFFIXES_MULTI)
-    for s in PUBLIC_SUFFIXES_MULTI:
-        assert "." in s and s == s.lower() and not s.startswith(".")
-        assert all(lbl and lbl.replace("-", "").isalnum() for lbl in s.split("."))
-
-
 # ------------------------------ character-level BPE on (word, count)
 
 

@@ -1,129 +1,12 @@
-"""Round-14 operator pins: PSL wildcard/exception rules.
+"""Round-14 operator pins.
 
 Each test pins behavior the round-14 catalog entries rely on, in the
-same known-value style as the earlier round files."""
+same known-value style as the earlier round files. The PSL
+wildcard/exception pins live in tests/test_text.py."""
 
 from __future__ import annotations
 
 import pytest
-
-
-# ---------------------- PSL wildcard (`*.ck`) / exception (`!www.ck`)
-
-
-def test_registered_domain_wildcard_exception_cases(spark):
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.text import registered_domain
-
-    cases = [
-        # wildcard base: registration one level deeper
-        (1, "https://Store.Shop.ck/buy?x=1", "store.shop.ck"),
-        (2, "deep.sub.store.shop.ck", "store.shop.ck"),
-        # one label + base IS a wildcard-generated suffix → NULL
-        (3, "shop.ck", None),
-        # bare base: wildcard doesn't match, fallback needs two labels
-        (4, "ck", None),
-        # exception cancels the wildcard, for itself and subdomains
-        (5, "https://www.ck/home", "www.ck"),
-        (6, "foo.www.ck/page", "www.ck"),
-        (7, "a.b.www.ck", "www.ck"),
-        # NOT the exception (no label boundary): wildcard suffix → NULL
-        (8, "xwww.ck", None),
-        # Japanese geographic wildcards + the !city exceptions
-        (9, "www.city.kobe.jp/ward", "city.kobe.jp"),
-        (10, "city.kobe.jp", "city.kobe.jp"),
-        (11, "blog.foo.kobe.jp", "blog.foo.kobe.jp"),
-        (12, "foo.kobe.jp", None),
-        # the base itself has no wildcard match → plain fallback
-        (13, "kobe.jp", "kobe.jp"),
-        # other wildcard ccTLDs
-        (14, "https://example.gov.bd/forms", "example.gov.bd"),
-        (15, "deep.sub.example.mm", "sub.example.mm"),
-        # plain-snapshot and fallback arms unchanged
-        (16, "https://Shop.Example.co.uk/basket", "example.co.uk"),
-        (17, "https://docs.example.com/ref", "example.com"),
-    ]
-    df = spark.createDataFrame(
-        [(i, u) for i, u, _ in cases], "id long, url string"
-    )
-    got = {
-        r["id"]: r["d"]
-        for r in df.select(
-            "id", registered_domain(F.col("url")).alias("d")
-        ).collect()
-    }
-    for i, _, want in cases:
-        assert got[i] == want, f"case {i}: {got[i]!r} != {want!r}"
-
-
-def test_wildcard_keying_differs_from_plain_snapshot(spark):
-    """The load-bearing guarantee of psl_wildcard_exception_domains: on
-    its planted hosts the ROUND-13 implementation (plain snapshot +
-    fallback, no wildcard/exception arms) produces a DIFFERENT keying
-    for every case except the .com control, so that implementation
-    cannot pass the entry's hash."""
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.text import (
-        PSL_DOMAIN_RE,
-        PSL_SUFFIX_ONLY_RE,
-        REGISTERED_DOMAIN_RE,
-        URL_HOST_RE,
-        registered_domain,
-    )
-
-    urls = [
-        "https://Store.Shop.ck/buy?x=0",   # r13: shop.ck
-        "shop.ck",                          # r13: shop.ck (not NULL)
-        "foo.www.ck/page",                  # r13: www.ck — agrees, but
-        #   a wildcard-only impl says foo.www.ck (exception precedence)
-        "https://WWW.City.Kobe.jp:443/ward",  # r13: kobe.jp
-        "blog.foo.kobe.jp",                 # r13: kobe.jp
-        "https://example.gov.bd/forms",     # r13: gov.bd
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    host = F.lower(F.regexp_extract(F.trim(F.col("url")), URL_HOST_RE, 1))
-    psl = F.regexp_extract(host, PSL_DOMAIN_RE, 1)
-    fallback = F.regexp_extract(host, REGISTERED_DOMAIN_RE, 1)
-    r13 = (
-        F.when(host.rlike(PSL_SUFFIX_ONLY_RE), F.lit(None).cast("string"))
-        .when(psl != "", psl)
-        .when(fallback != "", fallback)
-    )
-    rows = df.select(
-        registered_domain(F.col("url")).alias("now"), r13.alias("r13")
-    ).collect()
-    diff = [r for r in rows if r["now"] != r["r13"]]
-    assert len(diff) == len(urls) - 1, rows  # all but foo.www.ck differ
-
-
-def test_psl_wildcard_exception_snapshot_shape():
-    """Wildcard bases and exceptions share the plain snapshot's
-    alphabet contract (the spliced-SQL safety pin); every exception
-    sits strictly under a wildcard base, and neither list overlaps the
-    plain multi-label snapshot."""
-    from sql4pandas_spark.operators.text import (
-        PSL_EXCEPTIONS,
-        PSL_WILDCARD_BASES,
-        PUBLIC_SUFFIXES_MULTI,
-    )
-
-    assert len(set(PSL_WILDCARD_BASES)) == len(PSL_WILDCARD_BASES)
-    assert len(set(PSL_EXCEPTIONS)) == len(PSL_EXCEPTIONS)
-    for s in (*PSL_WILDCARD_BASES, *PSL_EXCEPTIONS):
-        assert s == s.lower() and not s.startswith(".") and not s.endswith(".")
-        assert all(lbl and lbl.replace("-", "").isalnum() for lbl in s.split("."))
-    for exc in PSL_EXCEPTIONS:
-        assert any(exc.endswith("." + b) for b in PSL_WILDCARD_BASES), exc
-    plain = set(PUBLIC_SUFFIXES_MULTI)
-    assert not plain & set(PSL_WILDCARD_BASES)
-    assert not plain & set(PSL_EXCEPTIONS)
-    # no base is a suffix of another (the alternation-order-immaterial
-    # argument in text.py relies on it)
-    for a in PSL_WILDCARD_BASES:
-        for b in PSL_WILDCARD_BASES:
-            assert a == b or not a.endswith("." + b), (a, b)
 
 
 # ---------------------- percent-encoding normalization (RFC 3986 §6.2.2)

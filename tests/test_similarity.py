@@ -519,19 +519,22 @@ def test_matrix_rows_ships_to_workers_without_the_package(tmp_path):
         _as_matrix,
         _by_value,
         _matrix_rows,
+        _pair_sims,
         _sim_blocks,
     )
 
     blob = cloudpickle.dumps(
-        [_by_value(f) for f in (_matrix_rows, _as_matrix, _sim_blocks)]
+        [_by_value(f) for f in (_matrix_rows, _as_matrix, _sim_blocks, _pair_sims)]
     )
     code = (
         "import pickle, sys, numpy as np, pandas as pd\n"
-        "rows, as_matrix, blocks = pickle.loads(sys.stdin.buffer.read())\n"
+        "rows, as_matrix, blocks, pair_sims = pickle.loads(sys.stdin.buffer.read())\n"
         "ia, ib = rows(pd.Index([7, 8]), np.array([8]), np.array([7]))\n"
         "m = as_matrix(pd.Series([np.array([3, 4], 'float32'), [0.0, 2.0]]))\n"
         "[(ids, sims)] = blocks(np.array([5, 6]), m, m, False)\n"
-        "print(ia.tolist(), ib.tolist(), m.dtype, ids.tolist(), sims.tolist())\n"
+        "p = pair_sims(pd.DataFrame({'id_a': [5, 6], 'id_b': [6, 5]}), m, m / 3)\n"
+        "print(ia.tolist(), ib.tolist(), m.dtype, ids.tolist(), sims.tolist(),\n"
+        "      p.values.tolist())\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
@@ -539,7 +542,8 @@ def test_matrix_rows_ships_to_workers_without_the_package(tmp_path):
         capture_output=True, check=True,
     )
     assert out.stdout.decode().strip() == (
-        "[1] [0] float64 [5, 6] [[25.0, 8.0], [8.0, 4.0]]"
+        "[1] [0] float64 [5, 6] [[25.0, 8.0], [8.0, 4.0]] "
+        "[[5.0, 6.0, 8.3333], [6.0, 5.0, 1.3333]]"
     )
 
 # ------------------------------------------------------- the vector kernel

@@ -133,6 +133,13 @@ def shingles(text_col, n: int = 3):
     )
 
 
+def shingle_rows(df: DataFrame, text_col: str, n: int, *cols) -> DataFrame:
+    """One ``shingle`` row per (row, distinct word n-gram) of ``df``,
+    beside ``cols`` — the exploded shingle index every pair join and
+    overlap count starts from."""
+    return df.select(*cols, F.explode(shingles(F.col(text_col), n)).alias("shingle"))
+
+
 def portable_minhash_bands(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -153,9 +160,7 @@ def portable_minhash_bands(
     word-granularity keeps the planted level exact. ``n_hashes`` must
     split evenly into ``n_bands``. Row-local, zero UDFs, zero shuffles."""
     rows_per_band = _rows_per_band(n_hashes, n_bands)
-    words = F.array_distinct(
-        F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
-    )
+    words = F.array_distinct(tokens(text_col))
     base = F.transform(
         F.col("words"), lambda s: F.pmod(portable_hash60(s), F.lit(MERSENNE31))
     )
@@ -503,10 +508,7 @@ def ngram_jaccard_pairs(
     over-approximation (pinned in tests/test_dedup.py). Leave None for
     exact semantics (the oracle-checked mode).
     """
-    sh = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles(F.col(text_col), shingle_n)).alias("shingle"),
-    )
+    sh = shingle_rows(df, text_col, shingle_n, F.col(id_col).alias("doc_id"))
     if max_doc_freq is not None:
         hot = (
             sh.groupBy("shingle")
@@ -583,10 +585,7 @@ def prefix_filter_jaccard_pairs(
     stay as-is on purpose.
     """
     t_e6 = round(threshold * 1_000_000)
-    sh = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles(F.col(text_col), shingle_n)).alias("shingle"),
-    )
+    sh = shingle_rows(df, text_col, shingle_n, F.col(id_col).alias("doc_id"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
     docs = (
         sh.join(dfreq, "shingle")
@@ -731,27 +730,34 @@ def contamination_overlap(
     overlap are kept via a left join so the output is a complete audit
     table, not just the hits.
     """
-    doc_sh = docs.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), shingle_n)).alias("shingle")
-    ).distinct()
-    bench_sh = (
-        bench.select(F.explode(shingles(F.col(text_col), shingle_n)).alias("shingle"))
-        .distinct()
-    )
+    bench_sh = shingle_rows(bench, text_col, shingle_n).distinct()
+    doc_sh = shingle_rows(docs, text_col, shingle_n, id_col).distinct()
+    return _overlap_audit(docs, doc_sh, F.broadcast(bench_sh), id_col, min_overlap)
+
+
+def _overlap_audit(
+    docs: DataFrame,
+    doc_sh: DataFrame,
+    bench_sh: DataFrame,
+    id_col: str,
+    min_overlap: int,
+) -> DataFrame:
+    """(id, n_overlap, contaminated) for every row of ``docs``: its
+    distinct ``doc_sh`` shingles found in ``bench_sh``, zero-overlap
+    documents kept by a left join so the output is a complete audit."""
     overlap = (
-        doc_sh.join(F.broadcast(bench_sh), "shingle")
+        doc_sh.join(bench_sh, "shingle")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
+    n = F.coalesce(F.col("n_overlap"), F.lit(0))
     return (
         docs.select(id_col)
         .join(overlap, id_col, "left")
         .select(
             F.col(id_col),
-            F.coalesce(F.col("n_overlap"), F.lit(0)).cast("long").alias("n_overlap"),
-            (F.coalesce(F.col("n_overlap"), F.lit(0)) >= min_overlap).alias(
-                "contaminated"
-            ),
+            n.cast("long").alias("n_overlap"),
+            (n >= min_overlap).alias("contaminated"),
         )
     )
 
@@ -781,38 +787,20 @@ def bloom_prefiltered_contamination(
     (8 KB at the default), the corpus-side membership test is pure JVM
     expression, and only the surviving ~fp-rate fraction of shingles
     enters the (now tiny) exact join. Corpus text still never shuffles.
+    That join carries no broadcast hint on the benchmark side: AQE
+    broadcasts it when its measured size allows, and a holdout past the
+    broadcast limit takes a shuffle join of the surviving shingles.
     """
     from sql4pandas_spark.operators.sketches import bloom_build, bloom_contains
 
-    bench_sh = (
-        bench.select(F.explode(shingles(F.col(text_col), shingle_n)).alias("shingle"))
-        .distinct()
-    )
+    bench_sh = shingle_rows(bench, text_col, shingle_n).distinct()
     words = bloom_build(bench_sh, "shingle", n_bits=n_bits, k=k)
     doc_sh = (
-        docs.select(
-            F.col(id_col),
-            F.explode(shingles(F.col(text_col), shingle_n)).alias("shingle"),
-        )
+        shingle_rows(docs, text_col, shingle_n, id_col)
         .distinct()
         .filter(bloom_contains("shingle", words, n_bits=n_bits, k=k))
     )
-    overlap = (
-        doc_sh.join(F.broadcast(bench_sh), "shingle")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    return (
-        docs.select(id_col)
-        .join(overlap, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("n_overlap"), F.lit(0)).cast("long").alias("n_overlap"),
-            (F.coalesce(F.col("n_overlap"), F.lit(0)) >= min_overlap).alias(
-                "contaminated"
-            ),
-        )
-    )
+    return _overlap_audit(docs, doc_sh, bench_sh, id_col, min_overlap)
 
 
 #: Store-write file sizing for :func:`incremental_near_dedup` (guide §6:

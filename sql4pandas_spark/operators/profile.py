@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sql4pandas_spark.operators.sketches import grid_bin
+
 
 def profile_columns(
     df: DataFrame,
@@ -124,11 +126,10 @@ def distribution_drift(
     [lo, hi] defaults to the OLD snapshot's min/max (a 1-row aggregate —
     bounded metadata, like zorder's quantization bounds); out-of-range
     new-side values clamp into the edge bins so a drifted tail is
-    counted, not dropped. Bin assignment is the single expression
-    ``floor((x - lo) * n_bins / (hi - lo))`` clamped to [0, n_bins-1] —
-    identical arithmetic in Spark and DuckDB, so the oracle replays
-    bit-for-bit. NULLs are excluded from both sides (they are
-    profile_columns' n_nulls signal, not a distribution bin).
+    counted, not dropped. Bin assignment is
+    :func:`~sql4pandas_spark.operators.sketches.grid_bin` — identical
+    arithmetic in Spark and DuckDB, so the oracle replays bit-for-bit.
+    NULLs and NaNs are excluded from both sides (they have no bin).
 
     Scale shape: two map-combined groupBy(bin) count shuffles of
     |bins|-sized output, one broadcast-sized join of the two histograms —
@@ -136,8 +137,6 @@ def distribution_drift(
     (bin, n_old, n_new, p, q, psi) + ordering by bin; sum(psi) is the
     headline index.
     """
-    if n_bins < 1:
-        raise ValueError("n_bins must be positive")
     if lo is None or hi is None:
         b = old.agg(
             F.min(F.col(col).cast("double")).alias("mn"),
@@ -147,16 +146,13 @@ def distribution_drift(
             raise ValueError(f"column {col!r} is entirely NULL in the old snapshot")
         lo = b["mn"] if lo is None else lo
         hi = b["mx"] if hi is None else hi
-    if not hi > lo:
-        raise ValueError(f"need hi > lo, got [{lo}, {hi}]")
+    bin_ = grid_bin(col, lo, hi, n_bins).cast("int")
 
     def hist(df: DataFrame, out: str) -> DataFrame:
-        x = F.col(col).cast("double")
-        raw = F.floor((x - F.lit(lo)) * F.lit(float(n_bins)) / F.lit(hi - lo))
-        bin_ = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), raw)).cast("int")
         return (
-            df.filter(x.isNotNull())
-            .groupBy(bin_.alias("bin"))
+            df.select(bin_.alias("bin"))
+            .dropna()
+            .groupBy("bin")
             .agg(F.count(F.lit(1)).alias(out))
         )
 
@@ -211,7 +207,7 @@ def drift_timeline(
 
     [lo, hi] is explicit (SLA bounds, or profile_columns on the reference
     window) so every bucket bins identically; bin assignment is the same
-    clamped single expression as :func:`distribution_drift`. Per-bucket
+    ``grid_bin`` as :func:`distribution_drift`. Per-bucket
     PSI sums the per-bin contributions AS 1e-6-QUANTIZED INTEGERS — the
     contribution doubles are bit-identical across engines (identical
     arithmetic), and integer summation removes the floating-point
@@ -224,17 +220,13 @@ def drift_timeline(
     ``(bucket, n_rows, psi)`` ordered by bucket; the reference bucket
     scores 0 by construction.
     """
-    if n_bins < 1:
-        raise ValueError("n_bins must be positive")
-    if not hi > lo:
-        raise ValueError(f"need hi > lo, got [{lo}, {hi}]")
-    x = F.col(value_col).cast("double")
-    raw = F.floor((x - F.lit(lo)) * F.lit(float(n_bins)) / F.lit(hi - lo))
-    bin_ = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), raw)).cast("int")
-    b = F.date_trunc(bucket, F.col(time_col))
     counts = (
-        df.filter(x.isNotNull() & F.col(time_col).isNotNull())
-        .groupBy(b.alias("bucket"), bin_.alias("bin"))
+        df.select(
+            F.date_trunc(bucket, F.col(time_col)).alias("bucket"),
+            grid_bin(value_col, lo, hi, n_bins).cast("int").alias("bin"),
+        )
+        .dropna()
+        .groupBy("bucket", "bin")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     # densify row-locally: explode a 0..n_bins-1 sequence per distinct

@@ -35,7 +35,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sql4pandas_spark.operators.text import portable_hash60
+from sql4pandas_spark.operators.text import portable_hash60, tokens
 
 _HASH_SPAN = float(1 << 60)
 
@@ -495,9 +495,7 @@ def dsir_bucket_tokens(
     return df.select(
         F.col(id_col),
         is_target.alias("_is_t"),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), "\\s+"), lambda t: t != "")
-        ).alias("_w"),
+        F.explode(tokens(text_col)).alias("_w"),
     ).select(
         id_col,
         "_is_t",

@@ -32,7 +32,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -81,6 +81,27 @@ def heavy_hitters_topk(
     )
 
 
+def grid_bin(value_col: str, lo: float, hi: float, n_bins: int) -> Column:
+    """Bin of ``value_col`` on the fixed grid of ``n_bins`` equal bins over
+    [lo, hi): ``floor((x - lo) * n_bins / (hi - lo))`` clamped to
+    [0, n_bins - 1], float-exact arithmetic that DuckDB replays
+    bit-for-bit. Out-of-range values, +/-Infinity included, clamp into
+    the edge bins. NULL and NaN have no bin: the result is NULL, and
+    every histogram drops it (profile_columns' n_nulls is the NULL
+    signal). Unguarded, NaN passes isNotNull and floor(NaN) casts to 0,
+    so it would silently land in bin 0."""
+    if n_bins < 1 or not hi > lo:
+        raise ValueError(
+            f"need n_bins >= 1 and hi > lo, got {n_bins} over [{lo}, {hi}]"
+        )
+    x = F.col(value_col).cast("double")
+    raw = F.floor((x - F.lit(lo)) * F.lit(float(n_bins)) / F.lit(hi - lo))
+    return F.when(
+        x.isNotNull() & ~F.isnan(x),
+        F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), raw)),
+    )
+
+
 def value_histogram(
     df: DataFrame,
     value_col: str,
@@ -89,10 +110,8 @@ def value_histogram(
     n_bins: int,
 ) -> DataFrame:
     """Fixed-width MERGEABLE histogram of a numeric column: one row per
-    occupied bin ``(bin, n)``. Out-of-range values clamp into the edge
-    bins, NULLs are excluded (profile_columns' n_nulls signal). The bin
-    expression is the same float-exact arithmetic as distribution_drift's
-    PSI binning, so DuckDB replays it bit-for-bit.
+    occupied bin ``(bin, n)`` of :func:`grid_bin` — the same binning as
+    distribution_drift's PSI, so DuckDB replays it bit-for-bit.
 
     This is the mergeable-state form of a quantile sketch: histograms of
     DISJOINT batches over the SAME [lo, hi, n_bins] grid combine by pure
@@ -102,19 +121,10 @@ def value_histogram(
     knowledge), not derived per batch, or states stop being addable.
     Resolution contract: quantile answers are exact to one bin width.
     """
-    if n_bins < 1 or not hi > lo:
-        raise ValueError("need n_bins >= 1 and hi > lo")
-    x = F.col(value_col).cast("double")
-    raw = F.floor((x - F.lit(lo)) * F.lit(float(n_bins)) / F.lit(hi - lo))
-    bin_ = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), raw)).cast("long")
-    # NaN passes isNotNull, and greatest/least treat NaN as larger than
-    # any number — it would silently land in the TOP bin and read back as
-    # a max-range observation; drop it like NULL (no value to bin).
-    # +/-Infinity by contrast IS an ordered value: it clamps to the edge
-    # bins like any out-of-range observation.
     return (
-        df.filter(x.isNotNull() & ~F.isnan(x))
-        .groupBy(bin_.alias("bin"))
+        df.select(grid_bin(value_col, lo, hi, n_bins).cast("long").alias("bin"))
+        .dropna()
+        .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 

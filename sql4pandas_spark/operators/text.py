@@ -887,60 +887,17 @@ def strip_boilerplate(
     same frames, one co-partitioned shuffle of the hash arrays.
     Duplicate copies of a boilerplate line inside one doc are ALL
     removed; NULL-domain documents pass through untouched (they join
-    nothing). Zero UDFs."""
-    dom = F.col(domain_col)
-    votes = df.filter(dom.isNotNull()).select(
-        dom.alias("_bp_dom"),
-        F.explode(
-            F.transform(
-                F.array_distinct(F.split(F.col(text_col), "\n")),
-                lambda line: F.xxhash64(line),
-            )
-        ).alias("_bp_lh"),
-    )
-    line_counts = votes.groupBy("_bp_dom", "_bp_lh").agg(
-        F.count(F.lit(1)).alias("_bp_n")
-    )
-    dom_counts = (
-        df.filter(dom.isNotNull())
-        .groupBy(dom.alias("_bp_dom"))
-        .agg(F.count(F.lit(1)).alias("_bp_nd"))
-    )
-    frequent = (
-        line_counts.join(dom_counts, "_bp_dom")
-        .filter(
-            (F.col("_bp_nd") >= min_docs)
-            & (F.col("_bp_n") * 100 >= F.col("_bp_nd") * min_pct)
-        )
-        .groupBy("_bp_dom")
-        .agg(F.collect_set("_bp_lh").alias("_bp_bl"))
-    )
-    return _apply_boilerplate(df, frequent, domain_col, text_col)
+    nothing). Zero UDFs.
 
-
-def _apply_boilerplate(
-    df: DataFrame, frequent: DataFrame, domain_col: str, text_col: str
-) -> DataFrame:
-    """Apply a per-domain frequent-line-hash decision frame
-    (``_bp_dom``, ``_bp_bl`` array<bigint>) to ``df`` — the shared
-    row-local removal step of the batch and incremental strips."""
-    joined = df.join(
-        F.broadcast(frequent), F.col(domain_col) == F.col("_bp_dom"), "left"
-    ).drop("_bp_dom")
-    blcol = F.coalesce(F.col("_bp_bl"), F.array().cast("array<bigint>"))
-
-    def per_lines(arr):
-        kept = F.filter(
-            arr, lambda line: ~F.array_contains(blcol, F.xxhash64(line))
-        )
-        return F.struct(
-            F.array_join(kept, "\n").alias("clean_text"),
-            (F.size(arr) - F.size(kept)).cast("int").alias("n_lines_removed"),
-        )
-
-    out = let_col(F.split(F.col(text_col), "\n"), per_lines)
-    return joined.withColumn("_bp_out", out).drop("_bp_bl").select(
-        *df.columns, "_bp_out.clean_text", "_bp_out.n_lines_removed"
+    This is the incremental form applied once: the whole frame's
+    :func:`boilerplate_votes` fed to :func:`strip_boilerplate_with_state`."""
+    return strip_boilerplate_with_state(
+        df,
+        boilerplate_votes(df, domain_col, text_col),
+        domain_col,
+        text_col,
+        min_pct,
+        min_docs,
     )
 
 
@@ -1002,9 +959,9 @@ def strip_boilerplate_with_state(
     """Strip a batch using the CUMULATIVE vote state (the incremental
     deployment: votes accumulate across ingestion batches, so a nav bar
     that only becomes frequent in batch 3 starts being stripped from
-    batch 3's documents on — CCNet's periodic-recompute shape). Same
-    integer-percent threshold and row-local removal as
-    :func:`strip_boilerplate`."""
+    batch 3's documents on — CCNet's periodic-recompute shape). The one
+    body of the threshold and the row-local removal;
+    :func:`strip_boilerplate` applies it once to a frame's own votes."""
     dd = state.filter(F.col("line_hash").isNull()).select(
         F.col("domain").alias("_bp_dom"), F.col("n").alias("_bp_nd")
     )
@@ -1023,7 +980,24 @@ def strip_boilerplate_with_state(
         .groupBy("_bp_dom")
         .agg(F.collect_set("_bp_lh").alias("_bp_bl"))
     )
-    return _apply_boilerplate(batch, frequent, domain_col, text_col)
+    joined = batch.join(
+        F.broadcast(frequent), F.col(domain_col) == F.col("_bp_dom"), "left"
+    ).drop("_bp_dom")
+    blcol = F.coalesce(F.col("_bp_bl"), F.array().cast("array<bigint>"))
+
+    def per_lines(arr):
+        kept = F.filter(
+            arr, lambda line: ~F.array_contains(blcol, F.xxhash64(line))
+        )
+        return F.struct(
+            F.array_join(kept, "\n").alias("clean_text"),
+            (F.size(arr) - F.size(kept)).cast("int").alias("n_lines_removed"),
+        )
+
+    out = let_col(F.split(F.col(text_col), "\n"), per_lines)
+    return joined.withColumn("_bp_out", out).drop("_bp_bl").select(
+        *batch.columns, "_bp_out.clean_text", "_bp_out.n_lines_removed"
+    )
 
 
 #: HTML-strip stages, applied IN ORDER — each a (pattern, replacement)
@@ -1496,44 +1470,16 @@ def unigram_surprisal(
     joins once per document, not once per position, and AQE's skew join
     splits whatever hot vocab rows remain; (4) one groupBy(doc) of
     integer products. No raw-token-level join anywhere.
+
+    This is :func:`crossmodel_surprisal` with the whole corpus as the
+    model (no token is out of vocabulary), plus ``avg_surprisal_e6``.
     """
-    toks = df.select(id_col, tokens(text_col).alias("_w"))
-    ex = toks.select(id_col, F.explode("_w").alias("_t"))
-    counts = ex.groupBy("_t").agg(F.count(F.lit(1)).alias("_c"))
-    nv = counts.agg(
-        F.sum("_c").alias("_n"), F.count(F.lit(1)).alias("_v")
-    )
-    vocab = counts.crossJoin(F.broadcast(nv)).select(
-        "_t",
-        F.round(
-            F.log(
-                (F.col("_n") + F.col("_v")) / (F.col("_c") + F.lit(1.0))
-            )
-            * 1e6
-        )
-        .cast("long")
-        .alias("_s_e6"),
-    )
-    per_dt = ex.groupBy(id_col, "_t").agg(F.count(F.lit(1)).alias("_k"))
-    perdoc = (
-        per_dt.join(vocab, "_t")
-        .groupBy(id_col)
-        .agg(
-            F.sum("_k").alias("_nt"),
-            F.sum(F.col("_k") * F.col("_s_e6")).alias("_sum"),
-        )
-    )
-    return (
-        toks.select(id_col)
-        .join(perdoc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("_nt", F.lit(0)).alias("n_tokens"),
-            F.coalesce("_sum", F.lit(0)).alias("surprisal_sum_e6"),
-            F.expr(
-                "CASE WHEN coalesce(_nt, 0) > 0 THEN _sum DIV _nt END"
-            ).alias("avg_surprisal_e6"),
-        )
+    scored = crossmodel_surprisal(df, F.lit(True), text_col, id_col)
+    return scored.withColumn(
+        "avg_surprisal_e6",
+        F.expr(
+            "CASE WHEN n_tokens > 0 THEN surprisal_sum_e6 DIV n_tokens END"
+        ),
     )
 
 

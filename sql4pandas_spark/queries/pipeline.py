@@ -3229,39 +3229,31 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_sample_topk(t["documents"], "n_chars", k=50)
 
 
-_INCR_NEAR_ORACLE = """
-WITH RECURSIVE
-planted AS (
-  SELECT doc_id + 2000000 AS doc_id, text || ' near duplicate copy' AS text
-  FROM (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
-        ORDER BY doc_id LIMIT 30)),
-all_docs AS (
-  SELECT doc_id, text, doc_id % 2 = 0 AS in_b1 FROM documents
-  UNION ALL SELECT doc_id, text, false FROM planted),""" + _NEAR_EDGES_CTES.format(
-    toks="""
-  SELECT doc_id, in_b1,
-         list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
-  FROM all_docs"""
-) + """,
+#: Greedy-by-batch admission replay of incremental_near_dedup over the
+#: symmetric near-dup ``edges`` of a two-batch frame ``{docs}`` (doc_id,
+#: b = 0 | 1): batch 0 admits each component's smallest id (adm1); batch 1
+#: rejects docs adjacent to adm1, then admits the smallest id of each
+#: component of the survivors (adm2).
+_ADMISSION_CTES = """
 b1_edges AS (
   SELECT e.src, e.dst FROM edges e
-  JOIN all_docs s ON e.src = s.doc_id AND s.in_b1
-  JOIN all_docs d ON e.dst = d.doc_id AND d.in_b1),
+  JOIN {docs} s ON e.src = s.doc_id AND s.b = 0
+  JOIN {docs} d ON e.dst = d.doc_id AND d.b = 0),
 b1_reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM all_docs WHERE in_b1
+  SELECT doc_id, doc_id FROM {docs} WHERE b = 0
   UNION
   SELECT r.src, e.dst FROM b1_reach r JOIN b1_edges e ON r.dst = e.src),
-admitted1 AS (
+adm1 AS (
   SELECT DISTINCT rep AS doc_id
   FROM (SELECT src, min(dst) AS rep FROM b1_reach GROUP BY src)),
-rejected2 AS (
+rej2 AS (
   SELECT DISTINCT e.src AS doc_id
   FROM edges e
-  JOIN all_docs x ON e.src = x.doc_id AND NOT x.in_b1
-  JOIN admitted1 a ON e.dst = a.doc_id),
+  JOIN {docs} x ON e.src = x.doc_id AND x.b = 1
+  JOIN adm1 a ON e.dst = a.doc_id),
 surv2 AS (
-  SELECT doc_id FROM all_docs WHERE NOT in_b1
-  AND doc_id NOT IN (SELECT doc_id FROM rejected2)),
+  SELECT doc_id FROM {docs} WHERE b = 1
+  AND doc_id NOT IN (SELECT doc_id FROM rej2)),
 s2_edges AS (
   SELECT e.src, e.dst FROM edges e
   JOIN surv2 s ON e.src = s.doc_id
@@ -3270,13 +3262,30 @@ s2_reach(src, dst) AS (
   SELECT doc_id, doc_id FROM surv2
   UNION
   SELECT r.src, e.dst FROM s2_reach r JOIN s2_edges e ON r.dst = e.src),
-admitted2 AS (
+adm2 AS (
   SELECT DISTINCT rep AS doc_id
-  FROM (SELECT src, min(dst) AS rep FROM s2_reach GROUP BY src))
-SELECT CAST((SELECT count(*) FROM admitted1) AS BIGINT) AS batch1_admitted,
-       CAST((SELECT count(*) FROM admitted2) AS BIGINT) AS batch2_admitted,
-       CAST((SELECT count(*) FROM admitted1)
-            + (SELECT count(*) FROM admitted2) AS BIGINT) AS store_docs
+  FROM (SELECT src, min(dst) AS rep FROM s2_reach GROUP BY src))"""
+
+_INCR_NEAR_ORACLE = """
+WITH RECURSIVE
+planted AS (
+  SELECT doc_id + 2000000 AS doc_id, text || ' near duplicate copy' AS text
+  FROM (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
+        ORDER BY doc_id LIMIT 30)),
+all_docs AS (
+  SELECT doc_id, text, CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 END AS b
+  FROM documents
+  UNION ALL SELECT doc_id, text, 1 FROM planted),""" + _NEAR_EDGES_CTES.format(
+    toks="""
+  SELECT doc_id, b,
+         list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
+  FROM all_docs"""
+) + """,
+""" + _ADMISSION_CTES.format(docs="all_docs") + """
+SELECT CAST((SELECT count(*) FROM adm1) AS BIGINT) AS batch1_admitted,
+       CAST((SELECT count(*) FROM adm2) AS BIGINT) AS batch2_admitted,
+       CAST((SELECT count(*) FROM adm1)
+            + (SELECT count(*) FROM adm2) AS BIGINT) AS store_docs
 """
 
 
@@ -4786,36 +4795,7 @@ inter AS (
   GROUP BY 1, 2),{_NEAR_PAIRS_CTE},
 edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
           UNION SELECT id_b, id_a FROM pairs),
-b1_edges AS (
-  SELECT e.src, e.dst FROM edges e
-  JOIN ex s ON e.src = s.doc_id AND s.b = 0
-  JOIN ex d ON e.dst = d.doc_id AND d.b = 0),
-b1_reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM ex WHERE b = 0
-  UNION
-  SELECT r.src, e.dst FROM b1_reach r JOIN b1_edges e ON r.dst = e.src),
-adm1 AS (
-  SELECT DISTINCT rep AS doc_id
-  FROM (SELECT src, min(dst) AS rep FROM b1_reach GROUP BY src)),
-rej2 AS (
-  SELECT DISTINCT e.src AS doc_id
-  FROM edges e
-  JOIN ex x ON e.src = x.doc_id AND x.b = 1
-  JOIN adm1 a ON e.dst = a.doc_id),
-surv2 AS (
-  SELECT doc_id FROM ex WHERE b = 1
-  AND doc_id NOT IN (SELECT doc_id FROM rej2)),
-s2_edges AS (
-  SELECT e.src, e.dst FROM edges e
-  JOIN surv2 s ON e.src = s.doc_id
-  JOIN surv2 d ON e.dst = d.doc_id),
-s2_reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM surv2
-  UNION
-  SELECT r.src, e.dst FROM s2_reach r JOIN s2_edges e ON r.dst = e.src),
-adm2 AS (
-  SELECT DISTINCT rep AS doc_id
-  FROM (SELECT src, min(dst) AS rep FROM s2_reach GROUP BY src)),
+{_ADMISSION_CTES.format(docs="ex")},
 adm AS MATERIALIZED (
   SELECT e.b, e.doc_id, e.w FROM ex e JOIN adm1 a ON e.doc_id = a.doc_id
   UNION ALL

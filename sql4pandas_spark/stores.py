@@ -14,7 +14,9 @@ store layouts, both owned here:
   ``v{k}`` — byte-identical, so additive states never double-count.
   Retained versions double as time travel: ``v{k}`` IS the state as of
   batch k. :func:`advance` holds the misalignment guard and the
-  vacuum/replay interlock; :func:`vacuum` is the retention sweep.
+  vacuum/replay interlock; :func:`fold_batch` and :func:`fold_stream`
+  fold one micro-batch, or a whole stream, through it (the CDC and
+  sketch streams bind them); :func:`vacuum` is the retention sweep.
 - **Batch-keyed store** (``root/batch_id=N``): each batch dynamically
   overwrites its own partition (:func:`write_batch`) and reads the store
   without it (:func:`read_batches`), so a replay sees the store as it was
@@ -158,6 +160,52 @@ def advance(
     return dst
 
 
+def fold_batch(
+    batch_state: DataFrame,
+    root: str,
+    merge_fn: Callable[[DataFrame, DataFrame], DataFrame],
+    batch_id: int,
+) -> str:
+    """Fold ONE micro-batch into a versioned store: ``merge_fn(v{batch_id},
+    batch_state)`` overwrites ``v{batch_id + 1}``, replay-idempotent and
+    guarded against checkpoint/version misalignment (lost updates, or
+    double counts in additive states) by :func:`advance`. Returns the new
+    version path."""
+    return advance(
+        batch_state.sparkSession,
+        root,
+        batch_id,
+        lambda prev: merge_fn(prev, batch_state),
+    )
+
+
+def fold_stream(
+    stream: DataFrame,
+    root: str,
+    batch_state_fn: Callable[[DataFrame], DataFrame],
+    merge_fn: Callable[[DataFrame, DataFrame], DataFrame],
+    checkpoint: str | None = None,
+    timeout_sec: float = 120,
+) -> str:
+    """Drain ``stream`` into a versioned store, folding each micro-batch's
+    ``batch_state_fn(batch)`` with :func:`fold_batch`. Reusing the same
+    ``checkpoint`` across calls resumes batch numbering where the last
+    drain stopped — the periodic-ingest shape the version chain relies
+    on. Returns the checkpoint path for the next drain."""
+    ckpt = checkpoint or tempfile.mkdtemp(prefix="s4ps_stream_ckpt_")
+
+    def apply_batch(df: DataFrame, batch_id: int) -> None:
+        fold_batch(batch_state_fn(df), root, merge_fn, batch_id)
+
+    drain(
+        stream.writeStream.foreachBatch(apply_batch),
+        stream.sparkSession,
+        ckpt,
+        timeout_sec,
+    )
+    return ckpt
+
+
 # -- batch-keyed store -------------------------------------------------------
 
 
@@ -206,13 +254,18 @@ def pinned_stream_width(spark: SparkSession):
     for the duration of a synchronous drain, restoring the batch width
     after. :func:`drain` blocks until the query ends, so the pin cannot
     leak into a concurrent batch query; a resumed checkpoint keeps its own
-    frozen width regardless (Spark reads it from the offset metadata)."""
+    frozen width regardless (Spark reads it from the offset metadata).
+    A width that is not an integer >= 1 raises ValueError naming the conf:
+    the first micro-batch would freeze it into the checkpoint."""
+    raw = spark.conf.get(STATE_PARTITIONS_CONF, str(_DEFAULT_STATE_PARTITIONS))
     try:
-        width = int(
-            spark.conf.get(STATE_PARTITIONS_CONF, str(_DEFAULT_STATE_PARTITIONS))
-        )
+        width = int(raw)
+        if width < 1:
+            raise ValueError
     except ValueError:
-        width = _DEFAULT_STATE_PARTITIONS
+        raise ValueError(
+            f"{STATE_PARTITIONS_CONF} must be an integer >= 1, got {raw!r}"
+        ) from None
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:

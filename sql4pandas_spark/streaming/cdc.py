@@ -4,7 +4,10 @@ keyed snapshot (SURVEY.md §2 merge_upsert, streaming form).
 This is the write-side composition the batch pieces were built for:
 ``readStream`` over a changeset landing directory → ``foreachBatch`` →
 :func:`sql4pandas_spark.operators.maintenance.merge_upsert` into a
-VERSIONED parquet snapshot. The version chain (sql4pandas_spark/stores.py)
+VERSIONED parquet snapshot. It is the versioned stream fold of
+sql4pandas_spark/stores.py (``fold_batch`` / ``fold_stream``) with
+merge_upsert as the merge — the same fold the sketch streams
+(streaming/sketches.py) bind with an additive merge. The version chain
 is what makes it exactly-once without an ACID table format: batch ``k``
 reads ``v{k}`` and overwrites ``v{k+1}``, so a crash-replayed batch
 rewrites the same version byte-identically, and retained versions are time
@@ -25,7 +28,7 @@ Delta jars are available (SURVEY §2 deliberate-exclusions note).
 
 from __future__ import annotations
 
-import tempfile
+from functools import partial
 
 from pyspark.sql import DataFrame
 
@@ -51,17 +54,11 @@ def cdc_apply_batch(
     seq_col: str | None = None,
 ) -> str:
     """Apply ONE CDC micro-batch: ``v{batch_id}`` + changes →
-    ``v{batch_id + 1}``, replay-idempotent and guarded against
-    checkpoint/version misalignment by :func:`stores.advance`. Returns the
-    new version path."""
-    return stores.advance(
-        changes.sparkSession,
-        snapshot_root,
-        batch_id,
-        lambda snap: merge_upsert(
-            snap, changes, key_cols, op_col=op_col, seq_col=seq_col
-        ),
-    )
+    ``v{batch_id + 1}`` (:func:`stores.fold_batch`, replay-idempotent and
+    guarded against checkpoint/version misalignment). Returns the new
+    version path."""
+    upsert = partial(merge_upsert, key_cols=key_cols, op_col=op_col, seq_col=seq_col)
+    return stores.fold_batch(changes, snapshot_root, upsert, batch_id)
 
 
 def run_cdc_stream(
@@ -74,21 +71,12 @@ def run_cdc_stream(
     timeout_sec: int = 120,
 ) -> str:
     """Drain a changeset stream into the versioned snapshot
-    (:func:`stores.drain`). Reusing the same ``checkpoint`` across calls
-    resumes batch numbering where the last drain stopped — the
-    periodic-ingest production shape (and what the version chain relies
-    on). Returns the checkpoint path for the next drain."""
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="s4ps_cdc_ckpt_")
-
-    def apply_batch(df: DataFrame, batch_id: int) -> None:
-        cdc_apply_batch(
-            df, snapshot_root, key_cols, batch_id, op_col=op_col, seq_col=seq_col
-        )
-
-    stores.drain(
-        changes_stream.writeStream.foreachBatch(apply_batch),
-        changes_stream.sparkSession,
-        ckpt,
-        timeout_sec,
+    (:func:`stores.fold_stream`, each batch's changes as they arrive).
+    Reusing the same ``checkpoint`` across calls resumes batch numbering
+    where the last drain stopped — the periodic-ingest production shape
+    (and what the version chain relies on). Returns the checkpoint path
+    for the next drain."""
+    upsert = partial(merge_upsert, key_cols=key_cols, op_col=op_col, seq_col=seq_col)
+    return stores.fold_stream(
+        changes_stream, snapshot_root, lambda b: b, upsert, checkpoint, timeout_sec
     )
-    return ckpt

@@ -5,7 +5,10 @@ incr_quantile, streaming form).
 The streaming sibling of streaming/cdc.py, for the read-side incremental
 family (operators/sketches.py): ``readStream`` over a landing directory →
 ``foreachBatch`` → per-batch state (heavy-hitter candidates, fixed-grid
-histogram) merged into a VERSIONED parquet store (sql4pandas_spark/stores.py).
+histogram) merged into a VERSIONED parquet store. Both modules bind the
+one versioned stream fold of sql4pandas_spark/stores.py (``fold_batch`` /
+``fold_stream``): CDC with merge_upsert as the merge, the sketches here
+with their additive state merges.
 Exactly-once is LOAD-BEARING here, more than for CDC:
 merge_heavy_hitter_states / merge_histograms ADD counts, so a replayed
 batch that re-merged would double-count (the merge_agg_states idempotence
@@ -24,9 +27,6 @@ the state summarizes. The raw stream is never re-scanned.
 
 from __future__ import annotations
 
-import tempfile
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from sql4pandas_spark import stores
@@ -37,58 +37,20 @@ latest_state = stores.read_version
 #: functions treat an empty side as the identity).
 seed_state = stores.seed
 
-MergeFn = Callable[[DataFrame, DataFrame], DataFrame]
-BatchStateFn = Callable[[DataFrame], DataFrame]
+#: Fold ONE micro-batch's state into the store
+#: (``sketch_apply_batch(batch_state, store_root, merge_fn, batch_id)``):
+#: ``v{batch_id}`` ∪ batch-state → ``v{batch_id + 1}``, replay-idempotent
+#: and guarded against the misalignment that would double-count.
+sketch_apply_batch = stores.fold_batch
+#: Drain a raw stream into the store (``run_sketch_stream(stream,
+#: store_root, batch_state_fn, merge_fn, checkpoint, timeout_sec)``);
+#: returns the checkpoint path for the next drain.
+run_sketch_stream = stores.fold_stream
 
 
 def empty_state(spark: SparkSession, schema: str, store_root: str) -> str:
     """Seed version 0 with an empty state of the given DDL schema."""
     return seed_state(spark.createDataFrame([], schema), store_root)
-
-
-def sketch_apply_batch(
-    batch_state: DataFrame,
-    store_root: str,
-    merge_fn: MergeFn,
-    batch_id: int,
-) -> str:
-    """Merge ONE micro-batch's state: ``v{batch_id}`` ∪ batch-state →
-    ``v{batch_id + 1}``, replay-idempotent and guarded against
-    checkpoint/version misalignment (which would double-count an additive
-    state) by :func:`stores.advance`. Returns the new version path."""
-    return stores.advance(
-        batch_state.sparkSession,
-        store_root,
-        batch_id,
-        lambda prev: merge_fn(prev, batch_state),
-    )
-
-
-def run_sketch_stream(
-    stream: DataFrame,
-    store_root: str,
-    batch_state_fn: BatchStateFn,
-    merge_fn: MergeFn,
-    checkpoint: str | None = None,
-    timeout_sec: int = 120,
-) -> str:
-    """Drain a raw stream into the versioned sketch store
-    (:func:`stores.drain`). Reusing the same ``checkpoint`` across calls
-    resumes batch numbering where the last drain stopped — the
-    periodic-ingest production shape the version chain relies on.
-    Returns the checkpoint path for the next drain."""
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="s4ps_sketch_ckpt_")
-
-    def apply_batch(df: DataFrame, batch_id: int) -> None:
-        sketch_apply_batch(batch_state_fn(df), store_root, merge_fn, batch_id)
-
-    stores.drain(
-        stream.writeStream.foreachBatch(apply_batch),
-        stream.sparkSession,
-        ckpt,
-        timeout_sec,
-    )
-    return ckpt
 
 
 # -- concrete sketches -------------------------------------------------------
@@ -203,24 +165,16 @@ def run_dsir_stats_stream(
     renumbered replay. The read-out (`dsir_terms` → `dsir_score`) never
     re-scans ingested history; ``is_target`` is the unbound boolean
     Column defining the target slice (e.g. ``F.col("lang") == "en"``)."""
-    from pyspark.sql import functions as F
-
     from sql4pandas_spark.operators.sampling import (
         dsir_bucket_stats,
         dsir_bucket_tokens,
+        merge_dsir_stats,
     )
 
-    def batch_state(df: DataFrame) -> DataFrame:
-        return dsir_bucket_stats(dsir_bucket_tokens(df, is_target))
-
-    def merge(prev: DataFrame, cur: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(cur)
-            .groupBy("_b")
-            .agg(
-                F.sum("_t_cnt").alias("_t_cnt"),
-                F.sum("_r_cnt").alias("_r_cnt"),
-            )
-        )
-
-    return run_sketch_stream(stream, store_root, batch_state, merge, checkpoint)
+    return run_sketch_stream(
+        stream,
+        store_root,
+        lambda df: dsir_bucket_stats(dsir_bucket_tokens(df, is_target)),
+        lambda prev, cur: merge_dsir_stats([prev, cur]),
+        checkpoint,
+    )

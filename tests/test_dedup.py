@@ -700,3 +700,108 @@ def test_affine_params_read_only_by_kernel_and_oracles():
             if allowed is not None and owner not in allowed:
                 offenders.append(f"{rel}:{line} ({owner})")
     assert not offenders, f"_affine_params read outside the kernel: {offenders}"
+
+
+# ------------------------ prefix-filter Jaccard join, Bloom decontamination
+
+
+def test_prefix_filter_equals_allpairs_on_threshold_spanning_corpus(spark):
+    """Synthetic corpus whose pair similarities straddle the threshold,
+    including an exact-boundary pair — prefix filtering must lose
+    nothing (the globally-smallest shared shingle sits in both
+    prefixes)."""
+    from sql4pandas_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        prefix_filter_jaccard_pairs,
+    )
+
+    docs = [
+        # near-identical pair (J high)
+        (1, "alpha beta gamma delta epsilon zeta eta theta"),
+        (2, "alpha beta gamma delta epsilon zeta eta iota"),
+        # moderate-overlap pair
+        (3, "alpha beta gamma delta kappa lambda mu nu"),
+        # low-overlap docs
+        (4, "omicron pi rho sigma tau upsilon phi chi"),
+        (5, "omicron pi psi omega alef bet gimel dalet"),
+        # short-doc fallback (whole-text shingle)
+        (6, "he said"),
+        (7, "he said"),
+        # boilerplate-heavy docs (hot shingles land LAST in rare-first order)
+        (8, "the quick brown fox jumps over the lazy dog again today"),
+        (9, "the quick brown fox jumps over the lazy dog again tomorrow"),
+        (10, "the quick brown fox sleeps under the lazy dog again today"),
+    ]
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    for thr in (0.2, 0.5, 0.8):
+        base = {tuple(r) for r in ngram_jaccard_pairs(df, threshold=thr).collect()}
+        pf = {
+            tuple(r)
+            for r in prefix_filter_jaccard_pairs(df, threshold=thr).collect()
+        }
+        assert pf == base, f"threshold {thr}: {pf ^ base}"
+    # sanity: thresholds actually discriminate on this corpus
+    n_02 = len(ngram_jaccard_pairs(df, threshold=0.2).collect())
+    n_08 = len(ngram_jaccard_pairs(df, threshold=0.8).collect())
+    assert n_02 > n_08
+
+
+def test_prefix_filter_exact_boundary_pair(spark):
+    """A pair sitting EXACTLY at the threshold must survive (the
+    integer-exact ceil can't shorten a prefix past the safe bound)."""
+    from sql4pandas_spark.operators.dedup import prefix_filter_jaccard_pairs
+
+    # 3-gram shingle sets: doc1 has 4 shingles, doc2 has 4, overlap 2
+    # J = 2 / (4 + 4 - 2) = 1/3 — test at threshold exactly 1/3 (e6 334/3?)
+    # use t=0.3333 (below) and 0.3334 (above): the pair flips
+    d = spark.createDataFrame(
+        [
+            (1, "a b c d e f"),   # shingles: abc bcd cde def
+            (2, "a b c d x y"),   # shingles: abc bcd cdx dxy → overlap {abc,bcd}
+        ],
+        ["doc_id", "text"],
+    )
+    lo = prefix_filter_jaccard_pairs(d, threshold=0.3333).collect()
+    hi = prefix_filter_jaccard_pairs(d, threshold=0.3334).collect()
+    assert len(lo) == 1 and abs(lo[0]["jaccard"] - 0.3333) < 1e-9
+    assert len(hi) == 0
+
+
+def test_bloom_prefiltered_contamination_equals_exact(spark):
+    from pyspark.sql import functions as F
+
+    from sql4pandas_spark.operators.dedup import (
+        bloom_prefiltered_contamination,
+        contamination_overlap,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    bench = docs.filter(F.col("doc_id") < 20)
+    cand = docs.filter(F.col("doc_id") >= 20)
+    exact = {tuple(r) for r in contamination_overlap(cand, bench).collect()}
+    # deliberately TIGHT bits so false positives flow into the verify
+    # join and must be eliminated there
+    bloom = {
+        tuple(r)
+        for r in bloom_prefiltered_contamination(
+            cand, bench, n_bits=63 * 16, k=3
+        ).collect()
+    }
+    assert bloom == exact and exact
+
+
+def test_bloom_contamination_joins_benchmark_without_broadcast_hint(spark):
+    """The Bloom form exists for holdouts past the broadcast limit, so its
+    exact join must not force the benchmark shingles onto the wire; the
+    plain form keeps its broadcast hint."""
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    bench = docs.filter(F.col("doc_id") < 20)
+    cand = docs.filter(F.col("doc_id") >= 20)
+
+    def hinted(df):
+        return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+    assert hinted(dedup.contamination_overlap(cand, bench))
+    assert not hinted(dedup.bloom_prefiltered_contamination(cand, bench))

@@ -1,6 +1,7 @@
 """Round-10 fixes: join_fanout multi-column keys, cache-leak removal
 (ReusedExchange instead of persist), top_movers calendar adjacency, and
-value_histogram NaN handling."""
+value_histogram NaN handling. The prefix-filter Jaccard and Bloom
+decontamination pins live in tests/test_dedup.py."""
 
 from __future__ import annotations
 
@@ -342,71 +343,6 @@ def test_histogram_stream_matches_batch_histogram(spark, tmp_path):
     assert got == want
 
 
-# ------------------------------------- prefix-filter exact Jaccard join
-
-
-def test_prefix_filter_equals_allpairs_on_threshold_spanning_corpus(spark):
-    """Synthetic corpus whose pair similarities straddle the threshold,
-    including an exact-boundary pair — prefix filtering must lose
-    nothing (the globally-smallest shared shingle sits in both
-    prefixes)."""
-    from sql4pandas_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        prefix_filter_jaccard_pairs,
-    )
-
-    docs = [
-        # near-identical pair (J high)
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2, "alpha beta gamma delta epsilon zeta eta iota"),
-        # moderate-overlap pair
-        (3, "alpha beta gamma delta kappa lambda mu nu"),
-        # low-overlap docs
-        (4, "omicron pi rho sigma tau upsilon phi chi"),
-        (5, "omicron pi psi omega alef bet gimel dalet"),
-        # short-doc fallback (whole-text shingle)
-        (6, "he said"),
-        (7, "he said"),
-        # boilerplate-heavy docs (hot shingles land LAST in rare-first order)
-        (8, "the quick brown fox jumps over the lazy dog again today"),
-        (9, "the quick brown fox jumps over the lazy dog again tomorrow"),
-        (10, "the quick brown fox sleeps under the lazy dog again today"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    for thr in (0.2, 0.5, 0.8):
-        base = {tuple(r) for r in ngram_jaccard_pairs(df, threshold=thr).collect()}
-        pf = {
-            tuple(r)
-            for r in prefix_filter_jaccard_pairs(df, threshold=thr).collect()
-        }
-        assert pf == base, f"threshold {thr}: {pf ^ base}"
-    # sanity: thresholds actually discriminate on this corpus
-    n_02 = len(ngram_jaccard_pairs(df, threshold=0.2).collect())
-    n_08 = len(ngram_jaccard_pairs(df, threshold=0.8).collect())
-    assert n_02 > n_08
-
-
-def test_prefix_filter_exact_boundary_pair(spark):
-    """A pair sitting EXACTLY at the threshold must survive (the
-    integer-exact ceil can't shorten a prefix past the safe bound)."""
-    from sql4pandas_spark.operators.dedup import prefix_filter_jaccard_pairs
-
-    # 3-gram shingle sets: doc1 has 4 shingles, doc2 has 4, overlap 2
-    # J = 2 / (4 + 4 - 2) = 1/3 — test at threshold exactly 1/3 (e6 334/3?)
-    # use t=0.3333 (below) and 0.3334 (above): the pair flips
-    d = spark.createDataFrame(
-        [
-            (1, "a b c d e f"),   # shingles: abc bcd cde def
-            (2, "a b c d x y"),   # shingles: abc bcd cdx dxy → overlap {abc,bcd}
-        ],
-        ["doc_id", "text"],
-    )
-    lo = prefix_filter_jaccard_pairs(d, threshold=0.3333).collect()
-    hi = prefix_filter_jaccard_pairs(d, threshold=0.3334).collect()
-    assert len(lo) == 1 and abs(lo[0]["jaccard"] - 0.3333) < 1e-9
-    assert len(hi) == 0
-
-
 def test_psi_from_histograms_equals_distribution_drift(spark):
     """The histogram-state PSI read-out must reproduce the raw-row drift
     gate on the same fixed grid (streaming monitoring == batch gate)."""
@@ -422,20 +358,30 @@ def test_psi_from_histograms_equals_distribution_drift(spark):
         (F.col("id") % 37).cast("double").alias("v"),
         (F.col("id") % 2).alias("half"),
     )
-    old = full.filter("half = 0")
-    new = full.filter("half = 1")
-    raw = {
-        r["bin"]: (r["n_old"], r["n_new"], r["p"], r["q"], r["psi"])
-        for r in distribution_drift(old, new, "v", n_bins=8, lo=0.0, hi=40.0).collect()
-    }
-    grid = dict(value_col="v", lo=0.0, hi=40.0, n_bins=8)
-    st = {
-        r["bin"]: (r["n_old"], r["n_new"], r["p"], r["q"], r["psi"])
-        for r in psi_from_histograms(
-            value_histogram(old, **grid), value_histogram(new, **grid), 8
-        ).collect()
-    }
-    assert st == raw
+
+    def frame(values):
+        return spark.createDataFrame([(float(v),) for v in values], "v double")
+
+    cases = [
+        (full.filter("half = 0"), full.filter("half = 1"), 0.0, 40.0, 8),
+        # NaN has no bin on either path: both drop the four NaNs
+        (frame(range(1, 9)), frame([1, 2, 3, 4] + [float("nan")] * 4), 0.0, 10.0, 4),
+    ]
+    for old, new, lo, hi, n_bins in cases:
+        raw = {
+            r["bin"]: (r["n_old"], r["n_new"], r["p"], r["q"], r["psi"])
+            for r in distribution_drift(
+                old, new, "v", n_bins=n_bins, lo=lo, hi=hi
+            ).collect()
+        }
+        grid = dict(value_col="v", lo=lo, hi=hi, n_bins=n_bins)
+        st = {
+            r["bin"]: (r["n_old"], r["n_new"], r["p"], r["q"], r["psi"])
+            for r in psi_from_histograms(
+                value_histogram(old, **grid), value_histogram(new, **grid), n_bins
+            ).collect()
+        }
+        assert st == raw, (lo, hi, n_bins)
 
 
 # ------------------------------------- count-min sketch
@@ -657,26 +603,3 @@ def test_bloom_filters_merge_by_or(spark):
     h1 = bloom_build(items.filter(F.length("s") <= 2), "s", n_bits=63 * 32, k=4)
     h2 = bloom_build(items.filter(F.length("s") > 2), "s", n_bits=63 * 32, k=4)
     assert [a | b for a, b in zip(h1, h2)] == full
-
-
-def test_bloom_prefiltered_contamination_equals_exact(spark):
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.dedup import (
-        bloom_prefiltered_contamination,
-        contamination_overlap,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    bench = docs.filter(F.col("doc_id") < 20)
-    cand = docs.filter(F.col("doc_id") >= 20)
-    exact = {tuple(r) for r in contamination_overlap(cand, bench).collect()}
-    # deliberately TIGHT bits so false positives flow into the verify
-    # join and must be eliminated there
-    bloom = {
-        tuple(r)
-        for r in bloom_prefiltered_contamination(
-            cand, bench, n_bits=63 * 16, k=3
-        ).collect()
-    }
-    assert bloom == exact and exact

@@ -67,9 +67,10 @@ def test_planted_frame_actually_carries_nulls_and_nans(spark):
 
 
 def test_value_histogram_nan_guard_is_load_bearing(spark):
-    """Without ~isnan, every planted NaN would land in the TOP bin:
-    the histogram total must equal the count of non-null non-NaN values,
-    strictly less than the count of non-null values."""
+    """Without the NaN rule, every planted NaN would land in bin 0
+    (floor(NaN) casts to 0): the histogram total must equal the count of
+    non-null non-NaN values, strictly less than the count of non-null
+    values."""
     from pyspark.sql import functions as F
 
     from sql4pandas_spark.operators.sketches import value_histogram

@@ -7,8 +7,8 @@ list_reduce→aggregate mapping, the per-language bigram surprisal gate, the
 vacuum/crash-replay interlock on both versioned stores, the NULL
 contracts on the asof / range / interval joins, and the session-2 crawl
 stations: per-domain boilerplate strip, chr(N) string_split separators,
-and line-preserving HTML extraction. The registered-domain and Gopher
-quality-rule pins live in tests/test_text.py."""
+and line-preserving HTML extraction. The registered-domain, Gopher
+quality-rule and boilerplate-strip pins live in tests/test_text.py."""
 
 from __future__ import annotations
 
@@ -364,83 +364,6 @@ def test_stream_pii_totals_equal_batch_totals(spark):
     assert stream_row.asDict() == batch_row.asDict()
 
 
-# ------------------------------------------- per-domain boilerplate strip
-
-
-def _bp_frame(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, domain string, text string")
-
-
-def test_strip_boilerplate_frequency_threshold(spark):
-    """A line in 100% of a domain's docs goes; a line in 1/3 stays at
-    min_pct=50; domains are scoped independently."""
-    from sql4pandas_spark.operators.text import strip_boilerplate
-
-    rows = [
-        (1, "a.com", "NAV\nrare\nbody one"),
-        (2, "a.com", "NAV\nbody two"),
-        (3, "a.com", "NAV\nbody three"),
-        # same NAV text on b.org appears in only 1 of 3 docs (33% < 50,
-        # the threshold is >=) -> kept there; 'other' is 3/3 -> stripped
-        (4, "b.org", "NAV\nother"),
-        (5, "b.org", "footer\nother"),
-        (6, "b.org", "header\nother"),
-    ]
-    out = {
-        r["doc_id"]: r
-        for r in strip_boilerplate(
-            _bp_frame(spark, rows), min_pct=50, min_docs=2
-        ).collect()
-    }
-    assert out[1]["clean_text"] == "rare\nbody one"
-    assert out[1]["n_lines_removed"] == 1
-    assert out[4]["clean_text"] == "NAV"
-    assert out[4]["n_lines_removed"] == 1
-    assert out[5]["clean_text"] == "footer"
-    assert out[6]["clean_text"] == "header"
-
-
-def test_strip_boilerplate_within_doc_duplicates_all_removed(spark):
-    """Per-doc distinct voting: a line repeated 3x in one doc votes once
-    for the count, but once boilerplate, ALL copies are removed."""
-    from sql4pandas_spark.operators.text import strip_boilerplate
-
-    rows = [
-        (1, "a.com", "AD\nx\nAD\ny\nAD"),
-        (2, "a.com", "AD\nz"),
-    ]
-    out = {
-        r["doc_id"]: r
-        for r in strip_boilerplate(
-            _bp_frame(spark, rows), min_pct=100, min_docs=2
-        ).collect()
-    }
-    assert out[1]["clean_text"] == "x\ny"
-    assert out[1]["n_lines_removed"] == 3
-    assert out[2]["clean_text"] == "z"
-
-
-def test_strip_boilerplate_min_docs_and_null_domain(spark):
-    """A domain below min_docs is never stripped, and NULL-domain docs
-    pass through untouched (they join no decision row)."""
-    from sql4pandas_spark.operators.text import strip_boilerplate
-
-    rows = [
-        (1, "solo.net", "NAV\nbody"),
-        (2, None, "NAV\nbody"),
-    ]
-    out = {
-        r["doc_id"]: r
-        for r in strip_boilerplate(
-            _bp_frame(spark, rows), min_pct=10, min_docs=2
-        ).collect()
-    }
-    assert out[1]["clean_text"] == "NAV\nbody"
-    assert out[1]["n_lines_removed"] == 0
-    assert out[2]["clean_text"] == "NAV\nbody"
-    assert out[2]["n_lines_removed"] == 0
-
-
 # ------------------------------- string_split chr(N) constant separators
 
 
@@ -602,54 +525,3 @@ def test_bpe_tie_break_and_alphabet_filter(spark):
     )
     # one count each -> lexicographically smaller pair 'b a' wins
     assert bpe_learn_merges(df2, n_merges=1)[0][:2] == ("b", "a")
-
-
-def test_incremental_boilerplate_threshold_flip(spark):
-    """The cumulative vote state must FLIP a decision between batches: a
-    banner rare in batch 1 (kept there) crosses the frequency threshold
-    once batch 2's votes land, so batch 2's copies are stripped while
-    batch 1's documents keep theirs — frequencies, not fixed lists."""
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.text import (
-        BOILERPLATE_STATE_SCHEMA,
-        boilerplate_votes,
-        merge_boilerplate_votes,
-        strip_boilerplate_with_state,
-    )
-    from sql4pandas_spark.streaming import sketches
-
-    rows = (
-        # batch 1 (ids 0-9): banner only in doc 0 -> 10% < 50%
-        [(0, "a.com", "BANNER\nbody-0")]
-        + [(i, "a.com", f"body-{i}") for i in range(1, 10)]
-        # batch 2 (ids 10-19): banner in 9 of 10 -> cumulative 50% >= 50%
-        + [(i, "a.com", f"BANNER\nbody-{i}") for i in range(10, 19)]
-        + [(19, "a.com", "body-19")]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, domain string, text string")
-    b1 = df.filter(F.col("doc_id") < 10)
-    b2 = df.filter(F.col("doc_id") >= 10)
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="bp_flip_")
-    sketches.empty_state(spark, BOILERPLATE_STATE_SCHEMA, root)
-    sketches.sketch_apply_batch(
-        boilerplate_votes(b1), root, merge_boilerplate_votes, 0
-    )
-    s1 = spark.read.parquet(f"{root}/v1")
-    out1 = {
-        r["doc_id"]: r["clean_text"]
-        for r in strip_boilerplate_with_state(b1, s1, min_pct=50).collect()
-    }
-    assert out1[0] == "BANNER\nbody-0"  # 10% — kept in batch 1
-    sketches.sketch_apply_batch(
-        boilerplate_votes(b2), root, merge_boilerplate_votes, 1
-    )
-    s2 = spark.read.parquet(f"{root}/v2")
-    out2 = {
-        r["doc_id"]: r["clean_text"]
-        for r in strip_boilerplate_with_state(b2, s2, min_pct=50).collect()
-    }
-    assert out2[10] == "body-10"  # cumulative 50% — stripped in batch 2
-    assert out2[19] == "body-19"

@@ -429,54 +429,6 @@ def test_pagerank_no_dangling_redistribution_is_identity(spark):
     assert plain == fixed
 
 
-# ------------------------------ boilerplate voting under PSL grouping
-
-
-def test_boilerplate_psl_grouping_differs_from_pooled(spark):
-    """Per-PSL-site voting must strip each shop's 100% banner and
-    shopa's 60% delivery line; pooling the two co.uk shops into one
-    'domain' (the last-two-labels failure mode) dilutes both below the
-    threshold and strips NOTHING from those rows."""
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.text import (
-        REGISTERED_DOMAIN_RE,
-        URL_HOST_RE,
-        registered_domain,
-        strip_boilerplate,
-    )
-    from sql4pandas_spark.queries.catalog import load_catalog
-    from sql4pandas_spark.queries.pipeline import _BP_PSL_PLANTED_SQL
-    from sql4pandas_spark.sources.parquet import register_tables
-
-    rows = load_catalog()["boilerplate_psl_domains"].build(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    shopa = [r for r in rows if r["domain"] == "shopa.co.uk"]
-    shopb = [r for r in rows if r["domain"] == "shopb.co.uk"]
-    assert shopa and shopb
-    # PSL grouping: every banner stripped, delivery line stripped where
-    # planted (60% of shopa rows → those rows lose 2 lines, rest 1)
-    assert all("BannerA" not in r["clean_text"] for r in shopa)
-    assert all("BannerB" not in r["clean_text"] for r in shopb)
-    assert {r["n_lines_removed"] for r in shopa} == {1, 2}
-    assert all(r["n_lines_removed"] == 1 for r in shopb)
-    # the naive pooled grouping strips nothing from the co.uk shops
-    register_tables(spark, "/root/testdata/sf0.001", ("documents",))
-    u = spark.sql(_BP_PSL_PLANTED_SQL)
-    host = F.lower(F.regexp_extract(F.trim(F.col("url")), URL_HOST_RE, 1))
-    last_two = F.regexp_extract(host, REGISTERED_DOMAIN_RE, 1)
-    naive_docs = u.select(
-        "doc_id", F.when(last_two != "", last_two).alias("domain"), "text"
-    )
-    naive = {
-        r["doc_id"]: r["n_lines_removed"]
-        for r in strip_boilerplate(naive_docs, min_pct=60, min_docs=2).collect()
-        if r["domain"] == "co.uk"
-    }
-    assert naive and all(v == 0 for v in naive.values())
-
-
 # ----------------------------------- full corpus-assembly composition
 
 

@@ -2,7 +2,8 @@
 
 Each test pins behavior the round-14 catalog entries rely on, in the
 same known-value style as the earlier round files. The PSL
-wildcard/exception pins live in tests/test_text.py."""
+wildcard/exception and cross-model surprisal pins live in
+tests/test_text.py."""
 
 from __future__ import annotations
 
@@ -659,34 +660,6 @@ def test_doremi_reweight_contract(spark):
     )
     out2 = {r["domain"]: r["weight_e9"] for r in doremi_reweight(loss2, rounds=3).collect()}
     assert out2["c"] > DOREMI_SCALE // 3 > out2["a"] == out2["b"]
-
-
-def test_crossmodel_surprisal_oov_arm(spark):
-    """A token absent from the model slice prices at ln(N+V) — the OOV
-    arm; a model-slice token prices at ln((N+V)/(c+1))."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.text import crossmodel_surprisal
-
-    df = spark.createDataFrame(
-        [
-            (1, "alpha alpha beta", True),   # model slice: N=3, V=2
-            (2, "alpha gamma", False),        # gamma is OOV
-        ],
-        "doc_id long, text string, m boolean",
-    )
-    got = {
-        r["doc_id"]: r
-        for r in crossmodel_surprisal(df, F.col("m")).collect()
-    }
-    s_alpha = round(math.log((3 + 2) / (2 + 1.0)) * 1e6)
-    s_beta = round(math.log((3 + 2) / (1 + 1.0)) * 1e6)
-    s_oov = round(math.log(3 + 2) * 1e6)
-    assert got[1]["surprisal_sum_e6"] == 2 * s_alpha + s_beta
-    assert got[2]["surprisal_sum_e6"] == s_alpha + s_oov
-    assert got[1]["n_tokens"] == 3 and got[2]["n_tokens"] == 2
 
 
 # ---------------------- retrieval NDCG@10 audit

@@ -162,36 +162,6 @@ def test_fk_audit_clean_edge_is_all_zero(spark):
     )
 
 
-# ------------------------------------------------ unigram-LM surprisal
-
-
-def test_unigram_surprisal_rare_tokens_score_higher(spark):
-    """A doc of corpus-rare tokens must out-score a doc of corpus-common
-    tokens, empty docs survive with 0/NULL, and the per-token integer
-    surprisals must agree with a pure-Python replay of the model."""
-    import math
-
-    docs = [
-        (1, "the the the the the the"),
-        (2, "the the the zyzzyva"),
-        (3, "   "),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    from sql4pandas_spark.operators.text import unigram_surprisal
-
-    out = {r["doc_id"]: r for r in unigram_surprisal(df).collect()}
-    assert out[3]["n_tokens"] == 0
-    assert out[3]["avg_surprisal_e6"] is None
-    assert out[2]["avg_surprisal_e6"] > out[1]["avg_surprisal_e6"]
-
-    # replay: N=10 tokens, V=2 vocab; c(the)=9, c(zyzzyva)=1
-    s_the = round(math.log(12 / 10.0) * 1e6)
-    s_z = round(math.log(12 / 2.0) * 1e6)
-    assert out[1]["surprisal_sum_e6"] == 6 * s_the
-    assert out[2]["surprisal_sum_e6"] == 3 * s_the + s_z
-    assert out[2]["avg_surprisal_e6"] == (3 * s_the + s_z) // 4
-
-
 # ------------------------------------------------------ batch sessionize
 
 

@@ -94,6 +94,37 @@ def test_foreach_batch_sink_on_all_empty_stream(spark, tmp_path, exactly_once):
     assert out.count() == 0
 
 
+@pytest.mark.parametrize("width", ["eight", "4.5"])
+def test_stream_width_conf_not_an_integer_raises(spark, width):
+    """A malformed state width raises, naming the conf, before any drain
+    can freeze a fallback width into its checkpoint."""
+    from sql4pandas_spark.stores import STATE_PARTITIONS_CONF, pinned_stream_width
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(STATE_PARTITIONS_CONF, width)
+    try:
+        with pytest.raises(ValueError, match=STATE_PARTITIONS_CONF):
+            with pinned_stream_width(spark):
+                pass
+    finally:
+        spark.conf.unset(STATE_PARTITIONS_CONF)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+@pytest.mark.parametrize("width", ["0", "-3"])
+def test_stream_width_conf_below_one_raises(spark, width):
+    """A state width below 1 raises, naming the conf."""
+    from sql4pandas_spark.stores import STATE_PARTITIONS_CONF, pinned_stream_width
+
+    spark.conf.set(STATE_PARTITIONS_CONF, width)
+    try:
+        with pytest.raises(ValueError, match=STATE_PARTITIONS_CONF):
+            with pinned_stream_width(spark):
+                pass
+    finally:
+        spark.conf.unset(STATE_PARTITIONS_CONF)
+
+
 # --------------------------------------------- one module owns the protocol
 
 #: Files allowed to spell each piece of the store/drain protocol, and the

@@ -475,3 +475,265 @@ def test_queries_spell_each_text_replay_once():
     shingle = "array_to_string(list_slice(w, i, i+2)"
     spelled = [name for name, lit in literals if shingle in lit]
     assert len(spelled) == 1, f"shingle replay spelled in {spelled}"
+
+
+def _operator_calls():
+    """(file, top-level owner, position, unparsed call) of every call in
+    sql4pandas_spark/operators and sql4pandas_spark/streaming."""
+    root = Path(__file__).resolve().parents[1] / "sql4pandas_spark"
+    for path in sorted([*root.glob("operators/*.py"), *root.glob("streaming/*.py")]):
+        rel = path.relative_to(root).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    pos = (node.lineno, node.col_offset)
+                    yield rel, getattr(top, "name", None), pos, ast.unparse(node)
+
+
+def test_operators_spell_each_rule_once():
+    """One body per operator rule: the whitespace tokenizer is text.tokens,
+    the fixed-grid bin is one expression, shingle rows are exploded in
+    one place, and only the store module advances a versioned store."""
+    calls = list(_operator_calls())
+
+    def owners(prefix):
+        # a chained call (``f(...).alias(...)``) starts where f does: one site
+        sites = {(rel, owner, pos) for rel, owner, pos, c in calls if c.startswith(prefix)}
+        return [(rel, owner) for rel, owner, _ in sorted(sites)]
+
+    assert owners("F.split(F.lower(") == [("operators/text.py", "tokens")]
+    assert len(owners("F.floor((x - F.lit(lo))")) == 1, owners("F.floor(")
+    assert len(owners("F.explode(shingles(")) == 1, owners("F.explode(shingles(")
+    advances = owners("stores.advance(") + owners("advance(")
+    assert not advances, f"versioned store advanced outside stores.py: {advances}"
+
+
+# ------------------------------------------- per-domain boilerplate strip
+
+
+def _bp_frame(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, domain string, text string")
+
+
+def test_strip_boilerplate_frequency_threshold(spark):
+    """A line in 100% of a domain's docs goes; a line in 1/3 stays at
+    min_pct=50; domains are scoped independently."""
+    from sql4pandas_spark.operators.text import strip_boilerplate
+
+    rows = [
+        (1, "a.com", "NAV\nrare\nbody one"),
+        (2, "a.com", "NAV\nbody two"),
+        (3, "a.com", "NAV\nbody three"),
+        # same NAV text on b.org appears in only 1 of 3 docs (33% < 50,
+        # the threshold is >=) -> kept there; 'other' is 3/3 -> stripped
+        (4, "b.org", "NAV\nother"),
+        (5, "b.org", "footer\nother"),
+        (6, "b.org", "header\nother"),
+    ]
+    out = {
+        r["doc_id"]: r
+        for r in strip_boilerplate(
+            _bp_frame(spark, rows), min_pct=50, min_docs=2
+        ).collect()
+    }
+    assert out[1]["clean_text"] == "rare\nbody one"
+    assert out[1]["n_lines_removed"] == 1
+    assert out[4]["clean_text"] == "NAV"
+    assert out[4]["n_lines_removed"] == 1
+    assert out[5]["clean_text"] == "footer"
+    assert out[6]["clean_text"] == "header"
+
+
+def test_strip_boilerplate_within_doc_duplicates_all_removed(spark):
+    """Per-doc distinct voting: a line repeated 3x in one doc votes once
+    for the count, but once boilerplate, ALL copies are removed."""
+    from sql4pandas_spark.operators.text import strip_boilerplate
+
+    rows = [
+        (1, "a.com", "AD\nx\nAD\ny\nAD"),
+        (2, "a.com", "AD\nz"),
+    ]
+    out = {
+        r["doc_id"]: r
+        for r in strip_boilerplate(
+            _bp_frame(spark, rows), min_pct=100, min_docs=2
+        ).collect()
+    }
+    assert out[1]["clean_text"] == "x\ny"
+    assert out[1]["n_lines_removed"] == 3
+    assert out[2]["clean_text"] == "z"
+
+
+def test_strip_boilerplate_min_docs_and_null_domain(spark):
+    """A domain below min_docs is never stripped, and NULL-domain docs
+    pass through untouched (they join no decision row)."""
+    from sql4pandas_spark.operators.text import strip_boilerplate
+
+    rows = [
+        (1, "solo.net", "NAV\nbody"),
+        (2, None, "NAV\nbody"),
+    ]
+    out = {
+        r["doc_id"]: r
+        for r in strip_boilerplate(
+            _bp_frame(spark, rows), min_pct=10, min_docs=2
+        ).collect()
+    }
+    assert out[1]["clean_text"] == "NAV\nbody"
+    assert out[1]["n_lines_removed"] == 0
+    assert out[2]["clean_text"] == "NAV\nbody"
+    assert out[2]["n_lines_removed"] == 0
+
+
+def test_incremental_boilerplate_threshold_flip(spark):
+    """The cumulative vote state must FLIP a decision between batches: a
+    banner rare in batch 1 (kept there) crosses the frequency threshold
+    once batch 2's votes land, so batch 2's copies are stripped while
+    batch 1's documents keep theirs — frequencies, not fixed lists."""
+    from pyspark.sql import functions as F
+
+    from sql4pandas_spark.operators.text import (
+        BOILERPLATE_STATE_SCHEMA,
+        boilerplate_votes,
+        merge_boilerplate_votes,
+        strip_boilerplate_with_state,
+    )
+    from sql4pandas_spark.streaming import sketches
+
+    rows = (
+        # batch 1 (ids 0-9): banner only in doc 0 -> 10% < 50%
+        [(0, "a.com", "BANNER\nbody-0")]
+        + [(i, "a.com", f"body-{i}") for i in range(1, 10)]
+        # batch 2 (ids 10-19): banner in 9 of 10 -> cumulative 50% >= 50%
+        + [(i, "a.com", f"BANNER\nbody-{i}") for i in range(10, 19)]
+        + [(19, "a.com", "body-19")]
+    )
+    df = spark.createDataFrame(rows, "doc_id long, domain string, text string")
+    b1 = df.filter(F.col("doc_id") < 10)
+    b2 = df.filter(F.col("doc_id") >= 10)
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix="bp_flip_")
+    sketches.empty_state(spark, BOILERPLATE_STATE_SCHEMA, root)
+    sketches.sketch_apply_batch(
+        boilerplate_votes(b1), root, merge_boilerplate_votes, 0
+    )
+    s1 = spark.read.parquet(f"{root}/v1")
+    out1 = {
+        r["doc_id"]: r["clean_text"]
+        for r in strip_boilerplate_with_state(b1, s1, min_pct=50).collect()
+    }
+    assert out1[0] == "BANNER\nbody-0"  # 10% — kept in batch 1
+    sketches.sketch_apply_batch(
+        boilerplate_votes(b2), root, merge_boilerplate_votes, 1
+    )
+    s2 = spark.read.parquet(f"{root}/v2")
+    out2 = {
+        r["doc_id"]: r["clean_text"]
+        for r in strip_boilerplate_with_state(b2, s2, min_pct=50).collect()
+    }
+    assert out2[10] == "body-10"  # cumulative 50% — stripped in batch 2
+    assert out2[19] == "body-19"
+
+
+def test_boilerplate_psl_grouping_differs_from_pooled(spark):
+    """Per-PSL-site voting must strip each shop's 100% banner and
+    shopa's 60% delivery line; pooling the two co.uk shops into one
+    'domain' (the last-two-labels failure mode) dilutes both below the
+    threshold and strips NOTHING from those rows."""
+    from pyspark.sql import functions as F
+
+    from sql4pandas_spark.operators.text import (
+        REGISTERED_DOMAIN_RE,
+        URL_HOST_RE,
+        registered_domain,
+        strip_boilerplate,
+    )
+    from sql4pandas_spark.queries.catalog import load_catalog
+    from sql4pandas_spark.queries.pipeline import _BP_PSL_PLANTED_SQL
+    from sql4pandas_spark.sources.parquet import register_tables
+
+    rows = load_catalog()["boilerplate_psl_domains"].build(
+        spark, "/root/testdata/sf0.001"
+    ).collect()
+    shopa = [r for r in rows if r["domain"] == "shopa.co.uk"]
+    shopb = [r for r in rows if r["domain"] == "shopb.co.uk"]
+    assert shopa and shopb
+    # PSL grouping: every banner stripped, delivery line stripped where
+    # planted (60% of shopa rows → those rows lose 2 lines, rest 1)
+    assert all("BannerA" not in r["clean_text"] for r in shopa)
+    assert all("BannerB" not in r["clean_text"] for r in shopb)
+    assert {r["n_lines_removed"] for r in shopa} == {1, 2}
+    assert all(r["n_lines_removed"] == 1 for r in shopb)
+    # the naive pooled grouping strips nothing from the co.uk shops
+    register_tables(spark, "/root/testdata/sf0.001", ("documents",))
+    u = spark.sql(_BP_PSL_PLANTED_SQL)
+    host = F.lower(F.regexp_extract(F.trim(F.col("url")), URL_HOST_RE, 1))
+    last_two = F.regexp_extract(host, REGISTERED_DOMAIN_RE, 1)
+    naive_docs = u.select(
+        "doc_id", F.when(last_two != "", last_two).alias("domain"), "text"
+    )
+    naive = {
+        r["doc_id"]: r["n_lines_removed"]
+        for r in strip_boilerplate(naive_docs, min_pct=60, min_docs=2).collect()
+        if r["domain"] == "co.uk"
+    }
+    assert naive and all(v == 0 for v in naive.values())
+
+
+# ------------------------------------------------ unigram-LM surprisal
+
+
+def test_unigram_surprisal_rare_tokens_score_higher(spark):
+    """A doc of corpus-rare tokens must out-score a doc of corpus-common
+    tokens, empty docs survive with 0/NULL, and the per-token integer
+    surprisals must agree with a pure-Python replay of the model."""
+    import math
+
+    docs = [
+        (1, "the the the the the the"),
+        (2, "the the the zyzzyva"),
+        (3, "   "),
+    ]
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    from sql4pandas_spark.operators.text import unigram_surprisal
+
+    out = {r["doc_id"]: r for r in unigram_surprisal(df).collect()}
+    assert out[3]["n_tokens"] == 0
+    assert out[3]["avg_surprisal_e6"] is None
+    assert out[2]["avg_surprisal_e6"] > out[1]["avg_surprisal_e6"]
+
+    # replay: N=10 tokens, V=2 vocab; c(the)=9, c(zyzzyva)=1
+    s_the = round(math.log(12 / 10.0) * 1e6)
+    s_z = round(math.log(12 / 2.0) * 1e6)
+    assert out[1]["surprisal_sum_e6"] == 6 * s_the
+    assert out[2]["surprisal_sum_e6"] == 3 * s_the + s_z
+    assert out[2]["avg_surprisal_e6"] == (3 * s_the + s_z) // 4
+
+
+def test_crossmodel_surprisal_oov_arm(spark):
+    """A token absent from the model slice prices at ln(N+V) — the OOV
+    arm; a model-slice token prices at ln((N+V)/(c+1))."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from sql4pandas_spark.operators.text import crossmodel_surprisal
+
+    df = spark.createDataFrame(
+        [
+            (1, "alpha alpha beta", True),   # model slice: N=3, V=2
+            (2, "alpha gamma", False),        # gamma is OOV
+        ],
+        "doc_id long, text string, m boolean",
+    )
+    got = {
+        r["doc_id"]: r
+        for r in crossmodel_surprisal(df, F.col("m")).collect()
+    }
+    s_alpha = round(math.log((3 + 2) / (2 + 1.0)) * 1e6)
+    s_beta = round(math.log((3 + 2) / (1 + 1.0)) * 1e6)
+    s_oov = round(math.log(3 + 2) * 1e6)
+    assert got[1]["surprisal_sum_e6"] == 2 * s_alpha + s_beta
+    assert got[2]["surprisal_sum_e6"] == s_alpha + s_oov
+    assert got[1]["n_tokens"] == 3 and got[2]["n_tokens"] == 2

@@ -27,6 +27,16 @@ parenthesis, keyword matches at the top of a range or at any depth, and
 top-level splits; plans/recursive.py parses WITH RECURSIVE with the same
 lexer.
 
+One loop, :func:`_rewrite_each`, applies every rewrite pass. A pass is a
+step ``step(lex, n)`` that rewrites one occurrence of its construct (the
+call pass: one round over all call sites) and returns the new text, or
+None when none is left; ``n`` counts the step's rewrites so far. The
+ordered table :data:`_PASSES` gives each step its bound and the words of
+its one error, ``more than <bound> <what>``. Each step keeps its own rule
+for an occurrence it does not rewrite: the lateral-unnest step stops at
+one of another shape, the ASOF step skips an ``ASOF`` identifier, the
+bracket step skips a string-keyed access, and the others raise.
+
 Statement-level parity is proven at catalog width by
 tools/transpile_sweep.py: every sql-oracled entry's own DuckDB oracle text
 runs through this module on Spark and value-hash-matches DuckDB's result
@@ -649,13 +659,20 @@ _ARG_CALL = re.compile(
 _FROM_TAIL = re.compile(r"\b(?:FROM|JOIN)\s*$", re.IGNORECASE)
 
 
-def _rewrite_calls(statement: str, validate: bool = False) -> str:
-    """Apply :data:`_ARG_REWRITERS` to every unprotected call site, parsing
-    balanced top-level argument lists (protected regions are opaque, so a
-    ')' or ',' inside a literal never splits args). ``validate`` runs the
-    :data:`_SOURCE_SHAPE_VALIDATORS` too — set only for the first fixpoint
-    pass, where every call site is still source text."""
-    lex = _Lex(statement)
+def _rewrite_calls(lex: _Lex, n: int) -> str | None:
+    """One pass of :data:`_ARG_REWRITERS` over every unprotected call site,
+    parsing balanced top-level argument lists (protected regions are
+    opaque, so a ')' or ',' inside a literal never splits args). The first
+    pass (``n == 0``), where every call site is still source text, also
+    runs the :data:`_SOURCE_SHAPE_VALIDATORS`.
+
+    Passes repeat because an outer rewrite copies nested registered calls
+    verbatim. Pass-through rewriters (3-arg regexp_replace, 2-arg encode,
+    …) leave matching names in the output, so a pass that changes nothing
+    returns None: the passes stop on an unchanged text, not on match
+    absence."""
+    statement = lex.text
+    validate = n == 0
     edits: list[tuple[int, int, str]] = []  # (start, end, replacement)
     for m in _ARG_CALL.finditer(statement):
         if lex.protected_at(m.start()):
@@ -686,28 +703,13 @@ def _rewrite_calls(statement: str, validate: bool = False) -> str:
             edits.append((m.start(), i, text))
     # Apply right-to-left so earlier offsets stay valid; drop edits nested
     # inside another edit's span (the outer rewrite copied the inner text
-    # verbatim — the fixpoint loop in the caller rewrites it).
+    # verbatim — the next pass rewrites it).
     out = statement
     for start, end, text in sorted(edits, reverse=True):
         if any(s < start and end <= e for s, e, _ in edits if (s, e) != (start, end)):
             continue
         out = out[:start] + text + out[end:]
-    return out
-
-
-def _rewrite_calls_fixpoint(statement: str) -> str:
-    """Iterate :func:`_rewrite_calls` until the text stabilizes — needed
-    because an outer rewrite copies nested registered calls verbatim.
-    Pass-through rewriters (3-arg regexp_replace, 2-arg encode, …) leave
-    matching names in the output, so termination is on TEXT fixpoint, not
-    on match absence; the bound is belt-and-braces against a rewriter
-    that never stabilizes."""
-    for it in range(50):
-        nxt = _rewrite_calls(statement, validate=(it == 0))
-        if nxt == statement:
-            return nxt
-        statement = nxt
-    raise ValueError("transpile_duckdb: call rewriting did not stabilize")
+    return None if out == statement else out
 
 
 # ------------------------------------------------------- bracket rewrites
@@ -735,18 +737,10 @@ _LBRACE = re.compile(r"\{")
 _POWER = re.compile(r"\*\*")
 
 
-def _rewrite_brackets(statement: str) -> str:
-    """Rewrite the first unprotected ``[`` and recurse until none remain."""
-    for _ in range(200):
-        nxt = _rewrite_brackets_once(statement)
-        if nxt is None:
-            return statement
-        statement = nxt
-    raise ValueError("transpile_duckdb: bracket rewriting did not stabilize")
-
-
-def _rewrite_brackets_once(statement: str) -> str | None:
-    lex = _Lex(statement)
+def _rewrite_brackets(lex: _Lex, n: int) -> str | None:
+    """Rewrite the first unprotected ``[`` that is not a string-keyed
+    access (those pass through)."""
+    statement = lex.text
     for mb in lex.matches(_LBRACKET, top=False):
         i = mb.start()
         # classify by previous non-space character (protected span counts
@@ -814,19 +808,10 @@ def _rewrite_brackets_once(statement: str) -> str | None:
     return None
 
 
-def _rewrite_struct_literals(statement: str) -> str:
-    """DuckDB ``{'k': v, …}`` struct literals → named_struct('k', v, …);
-    a ``MAP {'k': v}`` prefix → map('k', v, …)."""
-    for _ in range(100):
-        nxt = _rewrite_struct_once(statement)
-        if nxt is None:
-            return statement
-        statement = nxt
-    raise ValueError("transpile_duckdb: struct rewriting did not stabilize")
-
-
-def _rewrite_struct_once(statement: str) -> str | None:
-    lex = _Lex(statement)
+def _rewrite_struct_literals(lex: _Lex, n: int) -> str | None:
+    """The first DuckDB ``{'k': v, …}`` struct literal → named_struct('k',
+    v, …); a ``MAP {'k': v}`` prefix → map('k', v, …)."""
+    statement = lex.text
     m = next(lex.matches(_LBRACE, top=False), None)
     if m is None:
         return None
@@ -863,28 +848,25 @@ def _rewrite_struct_once(statement: str) -> str | None:
     )
 
 
-def _rewrite_power(statement: str) -> str:
-    """DuckDB's ``**`` operator → power(l, r) (Spark's ``^`` is xor)."""
-    for _ in range(100):
-        lex = _Lex(statement)
-        m = next(lex.matches(_POWER, top=False), None)
-        if m is None:
-            return statement
-        pos = m.start()
-        j = pos - 1
-        while j >= 0 and statement[j].isspace():
-            j -= 1
-        ls = _base_start(lex, j)
-        r0 = pos + 2
-        while r0 < len(statement) and statement[r0].isspace():
-            r0 += 1
-        re_ = _forward_primary(lex, r0)
-        left = statement[ls : j + 1]
-        right = statement[r0:re_]
-        statement = (
-            statement[:ls] + f"power({left}, {right})" + statement[re_:]
-        )
-    raise ValueError("transpile_duckdb: power rewriting did not stabilize")
+def _rewrite_power(lex: _Lex, n: int) -> str | None:
+    """The first DuckDB ``**`` operator → power(l, r) (Spark's ``^`` is
+    xor)."""
+    statement = lex.text
+    m = next(lex.matches(_POWER, top=False), None)
+    if m is None:
+        return None
+    pos = m.start()
+    j = pos - 1
+    while j >= 0 and statement[j].isspace():
+        j -= 1
+    ls = _base_start(lex, j)
+    r0 = pos + 2
+    while r0 < len(statement) and statement[r0].isspace():
+        r0 += 1
+    re_ = _forward_primary(lex, r0)
+    left = statement[ls : j + 1]
+    right = statement[r0:re_]
+    return statement[:ls] + f"power({left}, {right})" + statement[re_:]
 
 
 def _forward_primary(lex: _Lex, i: int) -> int:
@@ -927,30 +909,31 @@ def _forward_primary(lex: _Lex, i: int) -> int:
 _LATERAL_UNNEST = re.compile(r",\s*unnest\s*\(", re.IGNORECASE)
 
 
-def _rewrite_lateral_unnest(statement: str) -> str:
-    """``FROM t, unnest(arr) AS u(x)`` → ``FROM t LATERAL VIEW
-    explode(arr) u AS x`` (the comma-join lateral table function)."""
-    while True:
-        lex = _Lex(statement)
-        m = next(lex.matches(_LATERAL_UNNEST, top=False), None)
-        if m is None:
-            return statement
-        close = lex.partner(m.end() - 1)
-        if close is None:
-            return statement  # not the narrow shape — leave for Catalyst
-        k = close + 1
-        alias = re.match(
-            r"\s+AS\s+(\w+)\s*\(\s*(\w+)\s*\)", statement[k:], re.IGNORECASE
-        )
-        if not alias:
-            return statement  # not the narrow shape — leave for Catalyst
-        args = statement[m.end() : k - 1]
-        statement = (
-            statement[: m.start()]
-            + f" LATERAL VIEW explode({args}) {alias.group(1)} "
-            + f"AS {alias.group(2)}"
-            + statement[k + alias.end() :]
-        )
+def _rewrite_lateral_unnest(lex: _Lex, n: int) -> str | None:
+    """The first ``FROM t, unnest(arr) AS u(x)`` → ``FROM t LATERAL VIEW
+    explode(arr) u AS x`` (the comma-join lateral table function). A first
+    comma ``unnest(`` of any other shape ends the pass: it is left for
+    Catalyst, and so is every later one."""
+    statement = lex.text
+    m = next(lex.matches(_LATERAL_UNNEST, top=False), None)
+    if m is None:
+        return None
+    close = lex.partner(m.end() - 1)
+    if close is None:
+        return None  # not the narrow shape — leave for Catalyst
+    k = close + 1
+    alias = re.match(
+        r"\s+AS\s+(\w+)\s*\(\s*(\w+)\s*\)", statement[k:], re.IGNORECASE
+    )
+    if not alias:
+        return None  # not the narrow shape — leave for Catalyst
+    args = statement[m.end() : k - 1]
+    return (
+        statement[: m.start()]
+        + f" LATERAL VIEW explode({args}) {alias.group(1)} "
+        + f"AS {alias.group(2)}"
+        + statement[k + alias.end() :]
+    )
 
 
 _CAST_UNNEST = re.compile(r"\bCAST\s*\(\s*unnest\s*\(", re.IGNORECASE)
@@ -967,64 +950,62 @@ def _past_close(lex: _Lex, open_idx: int) -> int:
     )
 
 
-def _rewrite_cast_unnest(statement: str) -> str:
-    """``CAST(unnest(X) AS T)`` → ``unnest(transform(X, v -> CAST(v AS
-    T)))``: Spark generators must be top-level select items, so the
-    enclosing cast is pushed INSIDE the array instead — identical
+def _rewrite_cast_unnest(lex: _Lex, n: int) -> str | None:
+    """The first ``CAST(unnest(X) AS T)`` → ``unnest(transform(X, v ->
+    CAST(v AS T)))``: Spark generators must be top-level select items, so
+    the enclosing cast is pushed INSIDE the array instead — identical
     semantics, and the later rename pass turns unnest into explode."""
-    while True:
-        lex = _Lex(statement)
-        m = next(lex.matches(_CAST_UNNEST, top=False), None)
-        if m is None:
-            return statement
-        inner_end = _past_close(lex, m.end() - 1)  # past unnest's ')'
-        tail = re.match(
-            r"\s*AS\s+(\w+(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)\s*\)",
-            statement[inner_end:],
-            re.IGNORECASE,
+    statement = lex.text
+    m = next(lex.matches(_CAST_UNNEST, top=False), None)
+    if m is None:
+        return None
+    inner_end = _past_close(lex, m.end() - 1)  # past unnest's ')'
+    tail = re.match(
+        r"\s*AS\s+(\w+(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)\s*\)",
+        statement[inner_end:],
+        re.IGNORECASE,
+    )
+    if not tail:
+        raise ValueError(
+            "transpile_duckdb: cannot parse CAST(unnest(...) AS T) at: "
+            f"{statement[m.start():m.start() + 60]!r}"
         )
-        if not tail:
-            raise ValueError(
-                "transpile_duckdb: cannot parse CAST(unnest(...) AS T) at: "
-                f"{statement[m.start():m.start() + 60]!r}"
-            )
-        x = statement[m.end() : inner_end - 1]
-        t = tail.group(1)
-        statement = (
-            statement[: m.start()]
-            + f"unnest(transform({x}, __v -> CAST(__v AS {t})))"
-            + statement[inner_end + tail.end() :]
-        )
+    x = statement[m.end() : inner_end - 1]
+    t = tail.group(1)
+    return (
+        statement[: m.start()]
+        + f"unnest(transform({x}, __v -> CAST(__v AS {t})))"
+        + statement[inner_end + tail.end() :]
+    )
 
 
-def _rewrite_param_interval(statement: str) -> str:
-    """``INTERVAL (expr) UNIT`` (DuckDB's parameterized interval) →
-    ``make_dt_interval(...)`` with ``expr`` in the unit's slot — Spark
-    interval literals take constants only. Literal ``INTERVAL 15
+def _rewrite_param_interval(lex: _Lex, n: int) -> str | None:
+    """The first ``INTERVAL (expr) UNIT`` (DuckDB's parameterized
+    interval) → ``make_dt_interval(...)`` with ``expr`` in the unit's slot
+    — Spark interval literals take constants only. Literal ``INTERVAL 15
     MINUTE`` spellings (no parenthesis) are shared syntax and pass
     through untouched."""
-    while True:
-        lex = _Lex(statement)
-        m = next(lex.matches(_PARAM_INTERVAL, top=False), None)
-        if m is None:
-            return statement
-        end = _past_close(lex, m.end() - 1)
-        unit = re.match(
-            r"\s*(DAY|HOUR|MINUTE|SECOND)S?\b", statement[end:], re.IGNORECASE
+    statement = lex.text
+    m = next(lex.matches(_PARAM_INTERVAL, top=False), None)
+    if m is None:
+        return None
+    end = _past_close(lex, m.end() - 1)
+    unit = re.match(
+        r"\s*(DAY|HOUR|MINUTE|SECOND)S?\b", statement[end:], re.IGNORECASE
+    )
+    if not unit:
+        raise ValueError(
+            "transpile_duckdb: INTERVAL (expr) must be followed by "
+            f"DAY/HOUR/MINUTE/SECOND at: {statement[m.start():m.start()+60]!r}"
         )
-        if not unit:
-            raise ValueError(
-                "transpile_duckdb: INTERVAL (expr) must be followed by "
-                f"DAY/HOUR/MINUTE/SECOND at: {statement[m.start():m.start()+60]!r}"
-            )
-        expr = statement[m.end() : end - 1]
-        args = ["0", "0", "0", "0"]
-        args[_DT_INTERVAL_SLOT[unit.group(1).upper()]] = f"({expr})"
-        statement = (
-            statement[: m.start()]
-            + f"make_dt_interval({', '.join(args)})"
-            + statement[end + unit.end() :]
-        )
+    expr = statement[m.end() : end - 1]
+    args = ["0", "0", "0", "0"]
+    args[_DT_INTERVAL_SLOT[unit.group(1).upper()]] = f"({expr})"
+    return (
+        statement[: m.start()]
+        + f"make_dt_interval({', '.join(args)})"
+        + statement[end + unit.end() :]
+    )
 
 
 _EXCLUDE_PARENS = re.compile(r"(\*\s*)EXCLUDE\s*\(", re.IGNORECASE)
@@ -1201,72 +1182,68 @@ def _find_subq_in_hof(lex: _Lex) -> tuple[int, int] | None:
 _MAX_HOF_SUBQUERIES = 16
 
 
-def _hoist_hof_scalar_subqueries(statement: str) -> str:
-    """Hoist scalar subqueries out of HOF-expanding call arguments:
-    ``list_cosine_similarity(a, (SELECT …))`` becomes a 1-row
+def _hoist_hof_scalar_subqueries(lex: _Lex, n: int) -> str | None:
+    """Hoist the first scalar subquery out of a HOF-expanding call's
+    arguments: ``list_cosine_similarity(a, (SELECT …))`` becomes a 1-row
     ``CROSS JOIN (SELECT (SELECT …) AS __sqN) __sqtN`` on the owning
     SELECT plus a plain column reference in the argument — Catalyst
     broadcasts the row, and the lambda the call expands into no longer
-    contains a subquery expression. Assumes the subquery is uncorrelated
-    (DuckDB's in-lambda subqueries in this dialect are); a correlated one
-    fails loudly at analysis as an unresolved column."""
-    for n in range(_MAX_HOF_SUBQUERIES + 1):  # + the pass that finds none left
-        lex = _Lex(statement)
-        found = _find_subq_in_hof(lex)
-        if found is None:
-            return statement
-        sub_start, sub_end = found
-        subq = statement[sub_start:sub_end]
-        # owning SELECT scope: nearest enclosing paren group that opens
-        # with SELECT (a subquery), else the whole statement
-        scope_a, scope_b = 0, len(statement)
-        open_idx = lex.enclosing(sub_start)
-        while open_idx is not None:
-            close_idx = lex.partner(open_idx, _UNBALANCED)
-            inner_start = _ws(statement, open_idx + 1)
-            if re.compile(r"SELECT\b", re.IGNORECASE).match(statement, inner_start):
-                scope_a, scope_b = open_idx + 1, close_idx
-                break
-            open_idx = lex.enclosing(open_idx)
-        sels = [
-            m.start()
-            for m in lex.keywords("SELECT", scope_a, scope_b)
-            if m.start() <= sub_start
-        ]
-        if not sels:
-            raise ValueError(
-                "transpile_duckdb: cannot hoist subquery out of HOF — no "
-                "owning SELECT found"
-            )
-        from_kw = next(lex.keywords("FROM", sels[-1] + 1, scope_b), None)
-        if from_kw is None:
-            raise ValueError(
-                "transpile_duckdb: cannot hoist subquery out of HOF — the "
-                "owning SELECT has no FROM clause to attach the 1-row join"
-            )
-        end = next(lex.keywords(_SELECT_CLAUSE_END, from_kw.start() + 1, scope_b), None)
-        inject = end.start() if end else scope_b
-        ref = f"__sqt{n}.__sq{n}"
-        joined = f" CROSS JOIN (SELECT {subq} AS __sq{n}) __sqt{n} "
-        if inject <= sub_start:  # subquery sits after FROM (e.g. in WHERE)
-            statement = (
-                statement[:inject]
-                + joined
-                + statement[inject:sub_start]
-                + ref
-                + statement[sub_end:]
-            )
-        else:  # subquery sits in the select list, before the join point
-            statement = (
-                statement[:sub_start]
-                + ref
-                + statement[sub_end:inject]
-                + joined
-                + statement[inject:]
-            )
-    raise ValueError(
-        f"transpile_duckdb: more than {_MAX_HOF_SUBQUERIES} scalar subqueries "
-        "inside higher-order-function arguments"
+    contains a subquery expression. ``n`` numbers the hoist. Assumes the
+    subquery is uncorrelated (DuckDB's in-lambda subqueries in this
+    dialect are); a correlated one fails loudly at analysis as an
+    unresolved column."""
+    statement = lex.text
+    found = _find_subq_in_hof(lex)
+    if found is None:
+        return None
+    sub_start, sub_end = found
+    subq = statement[sub_start:sub_end]
+    # owning SELECT scope: nearest enclosing paren group that opens
+    # with SELECT (a subquery), else the whole statement
+    scope_a, scope_b = 0, len(statement)
+    open_idx = lex.enclosing(sub_start)
+    while open_idx is not None:
+        close_idx = lex.partner(open_idx, _UNBALANCED)
+        inner_start = _ws(statement, open_idx + 1)
+        if re.compile(r"SELECT\b", re.IGNORECASE).match(statement, inner_start):
+            scope_a, scope_b = open_idx + 1, close_idx
+            break
+        open_idx = lex.enclosing(open_idx)
+    sels = [
+        m.start()
+        for m in lex.keywords("SELECT", scope_a, scope_b)
+        if m.start() <= sub_start
+    ]
+    if not sels:
+        raise ValueError(
+            "transpile_duckdb: cannot hoist subquery out of HOF — no "
+            "owning SELECT found"
+        )
+    from_kw = next(lex.keywords("FROM", sels[-1] + 1, scope_b), None)
+    if from_kw is None:
+        raise ValueError(
+            "transpile_duckdb: cannot hoist subquery out of HOF — the "
+            "owning SELECT has no FROM clause to attach the 1-row join"
+        )
+    end = next(lex.keywords(_SELECT_CLAUSE_END, from_kw.start() + 1, scope_b), None)
+    inject = end.start() if end else scope_b
+    ref = f"__sqt{n}.__sq{n}"
+    joined = f" CROSS JOIN (SELECT {subq} AS __sq{n}) __sqt{n} "
+    if inject <= sub_start:  # subquery sits after FROM (e.g. in WHERE)
+        return (
+            statement[:inject]
+            + joined
+            + statement[inject:sub_start]
+            + ref
+            + statement[sub_end:]
+        )
+    # subquery sits in the select list, before the join point
+    return (
+        statement[:sub_start]
+        + ref
+        + statement[sub_end:inject]
+        + joined
+        + statement[inject:]
     )
 
 
@@ -1282,10 +1259,10 @@ _INEQ = re.compile(r"(<=|>=|<|>)")
 _QUAL_COL = re.compile(r"^\s*([A-Za-z_][A-Za-z0-9_]*)\s*\.\s*([A-Za-z_][A-Za-z0-9_]*)\s*$")
 
 
-def _rewrite_asof_join(statement: str) -> str:
-    """DuckDB ``ASOF [LEFT] JOIN rel alias ON <eq-keys AND ineq>`` →
-    Spark ``[LEFT] JOIN LATERAL (SELECT * FROM rel alias WHERE <cond>
-    ORDER BY <asof col> <dir> LIMIT 1) alias ON true``.
+def _rewrite_asof_join(lex: _Lex, n: int) -> str | None:
+    """The first DuckDB ``ASOF [LEFT] JOIN rel alias ON <eq-keys AND
+    ineq>`` → Spark ``[LEFT] JOIN LATERAL (SELECT * FROM rel alias WHERE
+    <cond> ORDER BY <asof col> <dir> LIMIT 1) alias ON true``.
 
     The as-of match ("the single right row with the greatest/least
     timestamp satisfying the condition") is exactly a per-left-row
@@ -1298,14 +1275,9 @@ def _rewrite_asof_join(statement: str) -> str:
     in the WHERE untouched. Left-side text before ASOF is untouched —
     outer references stay correlated into the lateral subquery.
     RIGHT/FULL ASOF variants and multi-inequality conditions raise."""
-    lex = _Lex(statement)
-    scan_from = 0
-    for _ in range(_MAX_ASOF_JOINS + 1):  # + the pass that finds none left
-        hit = next(lex.keywords("ASOF", scan_from, top=False), None)
-        if hit is None:
-            return statement
+    s = lex.text
+    for hit in lex.keywords("ASOF", top=False):
         pos = hit.start()
-        s = statement
         i = _ws(s, hit.end())
         left_kw = ""
         m = re.compile(r"(LEFT|RIGHT|FULL|INNER)\b", re.IGNORECASE).match(s, i)
@@ -1321,7 +1293,6 @@ def _rewrite_asof_join(statement: str) -> str:
         if not mj:
             # ASOF used as an ordinary identifier (DuckDB keeps it
             # contextual) — not a join; skip this occurrence
-            scan_from = pos + 1
             continue
         i = _ws(s, mj.end())
         if s.startswith("(", i):
@@ -1379,9 +1350,8 @@ def _rewrite_asof_join(statement: str) -> str:
             f"WHERE {cond} ORDER BY {alias}.{asof_col} {direction} LIMIT 1) "
             f"{alias} ON true "
         )
-        statement = s[:pos] + replacement + s[cond_end:]
-        lex = _Lex(statement)
-    raise ValueError(f"transpile_duckdb: more than {_MAX_ASOF_JOINS} ASOF JOINs")
+        return s[:pos] + replacement + s[cond_end:]
+    return None
 
 
 def _ws(s: str, i: int) -> int:
@@ -1415,26 +1385,21 @@ def _ineq_on_alias(conj: str, alias: str) -> tuple[str, str] | None:
 _MAX_QUALIFY_CLAUSES = 32
 
 
-def _rewrite_qualify(statement: str) -> str:
-    """Rewrite every QUALIFY clause (any nesting depth, innermost scope
-    first) into the subquery form — Spark has no QUALIFY spelling."""
-    for _ in range(_MAX_QUALIFY_CLAUSES + 1):  # + the pass that finds none left
-        lex = _Lex(statement)
-        hit = next(lex.keywords("QUALIFY", top=False), None)
-        if hit is None:
-            return statement
-        open_idx = lex.enclosing(hit.start())
-        if open_idx is None:
-            statement = _rewrite_qualify_branch(lex, 0, len(statement))
-        else:
-            close = lex.partner(open_idx, _UNBALANCED)
-            statement = (
-                statement[: open_idx + 1]
-                + _rewrite_qualify_branch(lex, open_idx + 1, close)
-                + statement[close:]
-            )
-    raise ValueError(
-        f"transpile_duckdb: more than {_MAX_QUALIFY_CLAUSES} QUALIFY clauses"
+def _rewrite_qualify(lex: _Lex, n: int) -> str | None:
+    """Rewrite the first QUALIFY clause (any nesting depth, innermost
+    scope first) into the subquery form — Spark has no QUALIFY spelling."""
+    statement = lex.text
+    hit = next(lex.keywords("QUALIFY", top=False), None)
+    if hit is None:
+        return None
+    open_idx = lex.enclosing(hit.start())
+    if open_idx is None:
+        return _rewrite_qualify_branch(lex, 0, len(statement))
+    close = lex.partner(open_idx, _UNBALANCED)
+    return (
+        statement[: open_idx + 1]
+        + _rewrite_qualify_branch(lex, open_idx + 1, close)
+        + statement[close:]
     )
 
 
@@ -1541,17 +1506,55 @@ _FLOAT_LITERAL = re.compile(
     r"(?<![\w.])(\d+\.\d+)(?![\w.eE])"
 )
 
+# ------------------------------------------------------ the rewrite loop
+
+#: The rewrite passes, in the order they run: (step, the most rewrites one
+#: statement may need, what one rewrite is). A step reads one version of
+#: the text and returns the next, or None when it has nothing left to do.
+_PASSES: tuple[tuple[Callable[[_Lex, int], str | None], int, str], ...] = (
+    (_rewrite_brackets, 200, "bracket rewrites"),
+    (_rewrite_struct_literals, 100, "struct literals"),
+    (_rewrite_power, 100, "'**' operators"),
+    (_rewrite_lateral_unnest, 100, "lateral unnests"),
+    (_rewrite_cast_unnest, 100, "CAST(unnest(...)) casts"),
+    (_rewrite_param_interval, 100, "parameterized intervals"),
+    (
+        _hoist_hof_scalar_subqueries,
+        _MAX_HOF_SUBQUERIES,
+        "scalar subqueries inside higher-order-function arguments",
+    ),
+    (_rewrite_asof_join, _MAX_ASOF_JOINS, "ASOF JOINs"),
+    (_rewrite_qualify, _MAX_QUALIFY_CLAUSES, "QUALIFY clauses"),
+    (_rewrite_calls, 50, "call-rewriting passes"),
+)
+
+
+def _rewrite_each(statement: str, step: Callable[[_Lex, int], str | None],
+                  cap: int, what: str) -> str:
+    """Apply ``step`` to a fresh lexing of the text, with ``n`` counting
+    its rewrites from 0, until it returns None; a rewrite beyond ``cap``
+    raises."""
+    for n in range(cap + 1):  # + the step that finds none left
+        nxt = step(_Lex(statement), n)
+        if nxt is None:
+            return statement
+        statement = nxt
+    raise ValueError(f"transpile_duckdb: more than {cap} {what}")
+
 
 def transpile_duckdb(statement: str) -> str:
     """Rewrite a DuckDB-dialect (reference-dialect) SQL string to Spark SQL.
 
     Mechanics, in order:
 
-    1. bracket rewrites — ``TYPE[]`` → ``ARRAY<TYPE>``, list literals →
-       ``array(…)``, 1-based element access → ``try_element_at`` (also
-       1-based, also NULL out of bounds);
-    2. argument-shape rewrites (:data:`_ARG_REWRITERS`) — string_split,
-       list_sum, scalar range, encode, regexp flags, xor, date_diff …;
+    1. the :data:`_PASSES`, each to its end: brackets (``TYPE[]`` →
+       ``ARRAY<TYPE>``, list literals → ``array(…)``, 1-based element
+       access → ``try_element_at``, also 1-based and NULL out of bounds),
+       struct literals, ``**``, lateral and cast unnests, parameterized
+       intervals, HOF subquery hoists, ASOF JOINs, QUALIFY, and last the
+       argument-shape rewrites (:data:`_ARG_REWRITERS`: string_split,
+       list_sum, scalar range, encode, regexp flags, xor, date_diff …);
+    2. ``* EXCLUDE`` → ``* EXCEPT``;
     3. function-call renames found in :data:`DUCKDB_TO_SPARK_FN`
        (case-insensitive, word-boundary, call-position only — ``len(x)``
        rewrites, a column named ``len`` does not);
@@ -1567,17 +1570,9 @@ def transpile_duckdb(statement: str) -> str:
     classes throughout — a function name, ``//`` or apostrophe inside one
     never affects the code around it.
     """
-    statement = _rewrite_brackets(statement)
-    statement = _rewrite_struct_literals(statement)
-    statement = _rewrite_power(statement)
-    statement = _rewrite_lateral_unnest(statement)
-    statement = _rewrite_cast_unnest(statement)
-    statement = _rewrite_param_interval(statement)
-    statement = _hoist_hof_scalar_subqueries(statement)
-    statement = _rewrite_asof_join(statement)
-    statement = _rewrite_qualify(statement)
+    for step, cap, what in _PASSES:
+        statement = _rewrite_each(statement, step, cap, what)
     statement = _rewrite_exclude(statement)
-    statement = _rewrite_calls_fixpoint(statement)
 
     def _rename(m: re.Match) -> str:
         return DUCKDB_TO_SPARK_FN.get(m.group(0).lower(), m.group(0))

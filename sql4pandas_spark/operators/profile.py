@@ -123,10 +123,10 @@ def distribution_drift(
     snapshot_diff (row-level): this is the DISTRIBUTION-level check that
     catches "same row count, quietly different corpus".
 
-    [lo, hi] defaults to the OLD snapshot's min/max (a 1-row aggregate —
-    bounded metadata, like zorder's quantization bounds); out-of-range
-    new-side values clamp into the edge bins so a drifted tail is
-    counted, not dropped. Bin assignment is
+    [lo, hi] defaults to the OLD snapshot's non-NaN min/max (a 1-row
+    aggregate — bounded metadata, like zorder's quantization bounds);
+    out-of-range new-side values clamp into the edge bins so a drifted
+    tail is counted, not dropped. Bin assignment is
     :func:`~sql4pandas_spark.operators.sketches.grid_bin` — identical
     arithmetic in Spark and DuckDB, so the oracle replays bit-for-bit.
     NULLs and NaNs are excluded from both sides (they have no bin).
@@ -138,12 +138,13 @@ def distribution_drift(
     headline index.
     """
     if lo is None or hi is None:
-        b = old.agg(
-            F.min(F.col(col).cast("double")).alias("mn"),
-            F.max(F.col(col).cast("double")).alias("mx"),
-        ).collect()[0]
+        x = F.col(col).cast("double")
+        x = F.when(~F.isnan(x), x)  # Spark orders NaN above every number
+        b = old.agg(F.min(x).alias("mn"), F.max(x).alias("mx")).collect()[0]
         if b["mn"] is None:
-            raise ValueError(f"column {col!r} is entirely NULL in the old snapshot")
+            raise ValueError(
+                f"column {col!r} has no non-NULL, non-NaN value in the old snapshot"
+            )
         lo = b["mn"] if lo is None else lo
         hi = b["mx"] if hi is None else hi
     bin_ = grid_bin(col, lo, hi, n_bins).cast("int")

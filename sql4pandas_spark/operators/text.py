@@ -44,6 +44,10 @@ def tokens(text: Column | str) -> Column:
     return F.filter(F.split(F.lower(col), "\\s+"), lambda t: t != "")
 
 
+#: DuckDB spelling of :func:`tokens` over the ``text`` column, for oracles.
+DUCKDB_TOKENS_SQL = r"list_filter(regexp_split_to_array(lower(text), '\s+'), t -> t <> '')"
+
+
 def let_col(bound: Column, body) -> Column:
     """Row-local LET: evaluate ``body(x)`` with ``x`` bound ONCE per row.
 

@@ -184,9 +184,9 @@ def scrub_patterns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "chunk_documents_overlap",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
+      SELECT doc_id, {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     starts AS (
       SELECT doc_id, w, unnest([s FOR s IN range(1, len(w) + 1, 24)]) AS s1
@@ -238,11 +238,11 @@ def text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_quality_scores",
-    oracle="""
+    oracle=f"""
     WITH q AS (
       SELECT doc_id,
              CAST(length(text) AS INTEGER) AS n_chars_actual,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS toks,
+             {text.DUCKDB_TOKENS_SQL} AS toks,
              CAST(length(text) - length(translate(text, '.,!?;:''"', '')) AS INTEGER) AS n_punct
       FROM documents)
     SELECT doc_id, n_chars_actual,
@@ -284,10 +284,7 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared DuckDB CTE fragments for the text-pipeline oracles: whitespace
 # tokens (mirrors operators/text.tokens) and the md5-based 60-bit token hash
 # (mirrors operators/text.portable_hash60 — same value bit-for-bit).
-_TOKS_CTE = (
-    "SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),"
-    " t -> t <> '') AS w FROM documents"
-)
+_TOKS_CTE = f"SELECT doc_id, {text.DUCKDB_TOKENS_SQL} AS w FROM documents"
 _HASH60 = text.DUCKDB_HASH60_SQL.format(expr="t")
 
 
@@ -341,8 +338,7 @@ _LANG_VALUES = ", ".join(
 
 _LANG_ID_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, lang, list_filter(regexp_split_to_array(lower(text), '\\s+'),
-             t -> t <> '') AS w
+      SELECT doc_id, lang, {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     cand AS (SELECT * FROM (VALUES {_LANG_VALUES}) AS c(cl, stop)),
     scored AS (
@@ -373,8 +369,7 @@ def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     cand AS (SELECT * FROM (VALUES {{lang_values}}) AS c(cl, stop)),
     scored AS (
@@ -610,9 +605,7 @@ def _lsh_cal_oracle() -> str:
     return f"""
     WITH u AS ({_LSH_CAL_PLANTED_SQL}),
     w AS (SELECT doc_id, level, pid, side,
-                 list_distinct(list_filter(
-                   regexp_split_to_array(lower(text), '\\s+'),
-                   t -> t <> '')) AS words
+                 list_distinct({text.DUCKDB_TOKENS_SQL}) AS words
           FROM u),
     bse AS (SELECT doc_id, level, pid, side, words,
                    list_transform(words,
@@ -1393,7 +1386,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PIPELINE_E2E_ORACLE = f"""
     WITH toks AS (
       SELECT doc_id, lang, text,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     q AS (
       SELECT * FROM toks
@@ -1969,8 +1962,8 @@ def zorder_documents_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_repetition_documents",
-    oracle="""
-    WITH toks AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w FROM documents),
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {text.DUCKDB_TOKENS_SQL} AS w FROM documents),
     bg AS (SELECT doc_id, w,
                   CASE WHEN len(w) >= 2
                        THEN [array_to_string(list_slice(w, i, i + 1), ' ') FOR i IN range(1, len(w))]
@@ -2775,9 +2768,9 @@ def profile_documents_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tfidf_top_terms_documents",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
+      SELECT doc_id, {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     tc AS (SELECT doc_id, unnest(w) AS term FROM toks WHERE len(w) > 0),
     cnt AS (SELECT doc_id, term, count(*) AS tf FROM tc GROUP BY 1, 2),
@@ -2810,9 +2803,9 @@ def tfidf_top_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "top_bigrams_documents",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
+      SELECT {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     g AS (
       SELECT unnest(CASE WHEN len(w) >= 2
@@ -2895,8 +2888,7 @@ _DSIR_ID_HASH = text.DUCKDB_HASH60_SQL.format(
 _DSIR_ORACLE = f"""
     WITH tok AS (
       SELECT doc_id, lang = 'en' AS is_t,
-             unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                t -> t <> '')) AS w
+             unnest({text.DUCKDB_TOKENS_SQL}) AS w
       FROM documents),
     b AS (SELECT doc_id, is_t, ({_DSIR_TOK_HASH}) % 64 AS bucket FROM tok),
     stats AS (
@@ -2977,10 +2969,9 @@ def _doremi_ctes(rounds: int) -> list[str]:
     text.crossmodel_surprisal including its OOV arm (LEFT JOIN +
     coalesce to the ln(N+V) scalar)."""
     ctes = [
-        """toks AS (
+        f"""toks AS (
       SELECT doc_id, lang,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents)""",
         "ex AS (SELECT doc_id, lang, unnest(w) AS t FROM toks)",
         "c AS (SELECT t, count(*) AS c FROM ex WHERE lang = 'en' GROUP BY 1)",
@@ -3276,9 +3267,9 @@ all_docs AS (
   SELECT doc_id, text, CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 END AS b
   FROM documents
   UNION ALL SELECT doc_id, text, 1 FROM planted),""" + _NEAR_EDGES_CTES.format(
-    toks="""
+    toks=f"""
   SELECT doc_id, b,
-         list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
+         {text.DUCKDB_TOKENS_SQL} AS w
   FROM all_docs"""
 ) + """,
 """ + _ADMISSION_CTES.format(docs="all_docs") + """
@@ -3480,7 +3471,7 @@ _PASSAGE_SITES_SQL = f"""
 corpus AS ({_PASSAGE_CORPUS_SQL}),
 toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS w
+         {text.DUCKDB_TOKENS_SQL} AS w
   FROM corpus),
 sites AS (
   SELECT doc_id, s['pos'] AS pos, s['gram'] AS gram
@@ -3736,8 +3727,7 @@ def merge_upsert_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents)
     SELECT doc_id,
            CAST(len(w) AS BIGINT) AS n_tokens,
@@ -3778,8 +3768,7 @@ def classifier_scores_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents),
     toks AS (
       SELECT doc_id, in_b1,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM corpus),
     sites AS (
       SELECT doc_id, in_b1, s['pos'] AS pos, s['gram'] AS gram
@@ -4152,8 +4141,7 @@ def cohort_retention_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CLF_E6_CTES = f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     scored AS (
       SELECT doc_id, lang,
@@ -4770,8 +4758,7 @@ allb AS (
   SELECT 1, doc_id, text FROM plants),
 toks AS MATERIALIZED (
   SELECT b, doc_id, text,
-         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                     t -> t <> '') AS w
+         {text.DUCKDB_TOKENS_SQL} AS w
   FROM allb),
 gated AS MATERIALIZED (
   SELECT * FROM toks
@@ -5279,11 +5266,10 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lm_surprisal_documents",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     ex AS (SELECT doc_id, unnest(w) AS t FROM toks),
     c AS (SELECT t, count(*) AS c FROM ex GROUP BY 1),
@@ -6154,10 +6140,9 @@ def event_transitions_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "incr_heavy_hitters_tokens",
-    oracle="""
+    oracle=f"""
     WITH ex AS (
-      SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                t -> t <> '')) AS item
+      SELECT unnest({text.DUCKDB_TOKENS_SQL}) AS item
       FROM documents)
     SELECT item, count(*) AS n FROM ex
     GROUP BY 1 ORDER BY n DESC, item LIMIT 10
@@ -6199,11 +6184,10 @@ def incr_heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lexicon_tags_documents",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     h AS (
       SELECT doc_id,
@@ -6249,12 +6233,10 @@ def lexicon_tags_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pmi_pairs_documents",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             list_distinct(list_filter(
-               regexp_split_to_array(lower(text), '\\s+'), t -> t <> ''))
-               AS w
+             list_distinct({text.DUCKDB_TOKENS_SQL}) AS w
       FROM documents),
     n AS (SELECT count(*) AS n_docs FROM toks),
     ex AS (SELECT doc_id, unnest(w) AS t FROM toks),
@@ -6364,10 +6346,9 @@ def fuzzy_join_salted_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_heavy_hitters_tokens",
-    oracle="""
+    oracle=f"""
     WITH ex AS (
-      SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                t -> t <> '')) AS item
+      SELECT unnest({text.DUCKDB_TOKENS_SQL}) AS item
       FROM documents)
     SELECT item, CAST(count(*) AS BIGINT) AS n FROM ex
     GROUP BY 1 ORDER BY n DESC, item LIMIT 10
@@ -6670,8 +6651,7 @@ def _cms_oracle_sql(depth: int = 4, width: int = 256) -> str:
     )
     return f"""
     WITH ex AS (
-      SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                t -> t <> '')) AS item
+      SELECT unnest({text.DUCKDB_TOKENS_SQL}) AS item
       FROM documents),
     exact AS (SELECT item, count(*) AS exact_n FROM ex GROUP BY 1),
     h AS (SELECT item, exact_n, ({h60}) % {MERSENNE31} AS hm FROM exact),
@@ -9555,7 +9535,7 @@ def _bpe_oracle(n_merges: int = 3) -> str:
     ctes = [
         "t0 AS (SELECT list_filter("
         "regexp_split_to_array(lower(text), '\\s+'),"
-        " t -> regexp_matches(t, '^[a-z0-9]+$')) AS w FROM documents)"
+        f" t -> regexp_matches(t, '{text.BPE_ALNUM_RE}')) AS w FROM documents)"
     ]
     for k in range(1, n_merges + 1):
         prev = f"t{k - 1}"
@@ -9643,7 +9623,7 @@ def _bpe_chars_oracle(n_merges: int = 3) -> str:
         "v0 AS (SELECT word, count(*) AS cnt FROM ("
         "SELECT unnest(list_filter("
         "regexp_split_to_array(lower(text), '\\s+'),"
-        " t -> regexp_matches(t, '^[a-z0-9]+$'))) AS word"
+        f" t -> regexp_matches(t, '{text.BPE_ALNUM_RE}'))) AS word"
         " FROM documents) GROUP BY word)",
         "c0 AS (SELECT list_filter(regexp_split_to_array(word, ''),"
         " t -> t <> '') AS w, cnt FROM v0)",
@@ -9712,7 +9692,7 @@ def _bpe_compression_oracle(n_merges: int = 3) -> str:
         "v0 AS (SELECT lang, word, count(*) AS cnt FROM ("
         "SELECT lang, unnest(list_filter("
         "regexp_split_to_array(lower(text), '\\s+'),"
-        " t -> regexp_matches(t, '^[a-z0-9]+$'))) AS word"
+        f" t -> regexp_matches(t, '{text.BPE_ALNUM_RE}'))) AS word"
         " FROM documents) GROUP BY lang, word)",
         "c0 AS (SELECT lang, word, list_filter(regexp_split_to_array(word, ''),"
         " t -> t <> '') AS w, cnt FROM v0)",
@@ -9995,11 +9975,9 @@ def data_card_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vocab_coverage_by_lang",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-      SELECT lang, unnest(list_filter(
-               regexp_split_to_array(lower(text), '\\s+'),
-               t -> t <> '')) AS word
+      SELECT lang, unnest({text.DUCKDB_TOKENS_SQL}) AS word
       FROM documents),
     freq AS (SELECT word, count(*) AS n FROM w GROUP BY word),
     vocab AS (SELECT word FROM (
@@ -10504,11 +10482,10 @@ def incremental_boilerplate_batches(spark: SparkSession, sf_dir: str) -> DataFra
 
 @query(
     "diversity_distinct_n",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT lang,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     uni AS (
       SELECT lang, CAST(count(*) AS BIGINT) AS n_1grams,
@@ -10553,11 +10530,10 @@ def diversity_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "zipf_slope_by_lang",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT lang,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         t -> t <> '') AS w
+             {text.DUCKDB_TOKENS_SQL} AS w
       FROM documents),
     counts AS (
       SELECT lang, g AS t, CAST(count(*) AS BIGINT) AS c
@@ -10740,10 +10716,9 @@ def incr_join_view_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "truncation_loss_census",
-    oracle="""
+    oracle=f"""
     WITH n AS (
-      SELECT CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                  t -> t <> '')) AS BIGINT) AS nt
+      SELECT CAST(len({text.DUCKDB_TOKENS_SQL}) AS BIGINT) AS nt
       FROM documents),
     l AS (SELECT CAST(max_len AS BIGINT) AS max_len
           FROM (VALUES (128), (512), (2048)) AS t(max_len))

@@ -14,7 +14,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sql4pandas_spark.operators.text import DUCKDB_HASH60_SQL, GOPHER_STOPWORDS
+from sql4pandas_spark.operators.text import (
+    DUCKDB_HASH60_SQL,
+    DUCKDB_TOKENS_SQL,
+    GOPHER_STOPWORDS,
+)
 from sql4pandas_spark.operators.training import LR_NUM, SCALE
 from sql4pandas_spark.queries.catalog import query
 from sql4pandas_spark.sources.parquet import register_tables
@@ -31,8 +35,7 @@ def _logreg_oracle(rounds: int = _ROUNDS, n_buckets: int = _N_BUCKETS) -> str:
         f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                     t -> t <> '') AS w
+         {DUCKDB_TOKENS_SQL} AS w
   FROM documents),
 feat AS (
   SELECT doc_id,

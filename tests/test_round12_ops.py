@@ -1,7 +1,6 @@
-"""Round-12 pins: the four round-11 ADVICE transpiler divergences (empty
-ranges, 3-arg regexp_replace, 2-arg regexp_extract, fractional epoch), the
-fixpoint-shadowing fix that surfaced while closing them (an identity
-pass-through edit must not hide nested registered calls forever), the
+"""Round-12 pins: the empty-range transpiler divergence (round-11 ADVICE;
+the 3-arg regexp_replace, 2-arg regexp_extract, fractional epoch and
+fixpoint-shadowing pins live in tests/test_transpile.py), the
 extended PII classes (Luhn-gated cards, mod-97-gated IBANs, secrets), the
 list_reduce→aggregate mapping, the per-language bigram surprisal gate, the
 vacuum/crash-replay interlock on both versioned stores, the NULL
@@ -12,16 +11,10 @@ quality-rule and boilerplate-strip pins live in tests/test_text.py."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from sql4pandas_spark.functions.transpile import transpile_duckdb
-
-
-def _both(spark, stmt: str):
-    sp = [tuple(r) for r in spark.sql(transpile_duckdb(stmt)).collect()]
-    dk = duckdb.sql(stmt).fetchall()
-    return sp, dk
+from tests.test_transpile import _both
 
 
 # --------------------------------------------- empty-range trap (ADVICE #2)
@@ -75,80 +68,6 @@ def test_generate_series_interval_empty_spine_matches(spark):
 def test_generate_series_nonliteral_step_raises():
     with pytest.raises(ValueError, match="generate_series"):
         transpile_duckdb("SELECT generate_series(0, 9, n) AS r FROM t")
-
-
-# ------------------------------------- 3-arg regexp_replace (ADVICE #1)
-
-def test_regexp_replace_three_arg_raises_loudly():
-    with pytest.raises(ValueError, match="first-occurrence"):
-        transpile_duckdb("SELECT regexp_replace(s, 'a', 'X') AS x FROM t")
-
-
-def test_regexp_replace_three_arg_nested_still_raises():
-    with pytest.raises(ValueError, match="first-occurrence"):
-        transpile_duckdb(
-            "SELECT length(regexp_replace(s, 'a', 'X')) AS x FROM t"
-        )
-
-
-def test_regexp_replace_global_flag_still_rewrites(spark):
-    stmt = "SELECT regexp_replace('aaa', 'a', 'X', 'g') AS x"
-    assert "'g'" not in transpile_duckdb(stmt)
-    sp, dk = _both(spark, stmt)
-    assert sp == dk == [("XXX",)]
-
-
-# ---------------------------------------- 2-arg regexp_extract (ADVICE #3)
-
-def test_regexp_extract_two_arg_pins_group_zero(spark):
-    # DuckDB default group is 0 (whole match); Spark's is 1 — unpinned,
-    # this returned 'a' instead of 'ab'
-    stmt = "SELECT regexp_extract('xaby', 'a(b)') AS x"
-    sp, dk = _both(spark, stmt)
-    assert sp == dk == [("ab",)]
-
-
-def test_regexp_extract_explicit_group_untouched(spark):
-    stmt = "SELECT regexp_extract('xaby', 'a(b)', 1) AS x"
-    sp, dk = _both(spark, stmt)
-    assert sp == dk == [("b",)]
-
-
-# ------------------------------------------- fractional epoch (ADVICE #4)
-
-def test_epoch_preserves_subsecond_precision(spark):
-    stmt = "SELECT epoch(TIMESTAMP '2024-01-01 00:00:00.250') AS e"
-    sp, dk = _both(spark, stmt)
-    assert sp[0][0] == dk[0][0] == 1704067200.25
-
-
-def test_epoch_whole_second_unchanged(spark):
-    stmt = "SELECT epoch(TIMESTAMP '2024-06-15 12:30:00') AS e"
-    sp, dk = _both(spark, stmt)
-    assert float(sp[0][0]) == float(dk[0][0])
-
-
-# ------------------------------- fixpoint shadowing (found fixing #4)
-
-def test_nested_call_inside_passthrough_rewriter_is_rewritten(spark):
-    """epoch(…) nested in a pass-through-shaped registered call
-    (last_value without IGNORE NULLS) used to be shadowed by the outer
-    identity edit on every fixpoint pass and never rewritten."""
-    out = transpile_duckdb(
-        "SELECT last_value(epoch(ts)) OVER (ORDER BY ts) AS e FROM t"
-    )
-    assert "unix_micros" in out and "epoch(" not in out
-
-
-def test_nested_call_inside_ignore_nulls_struct_is_rewritten():
-    """The gapfill oracle shape that caught the bug in the parity sweep."""
-    out = transpile_duckdb(
-        "SELECT last_value(CASE WHEN v IS NOT NULL THEN "
-        "{'t': epoch(w), 'v': v} END IGNORE NULLS) OVER (ORDER BY w) AS x "
-        "FROM t"
-    )
-    assert "unix_micros" in out and "epoch(" not in out
-    assert out.count("IGNORE NULLS") == 1
 
 
 # --------------------------------------- extended PII classes (round 12)

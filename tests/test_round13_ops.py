@@ -43,30 +43,6 @@ def test_bpe_learn_merges_exact_round_count_ok(spark):
     assert merges == [("ab", "cd", 1)]
 
 
-# --------------------------------------- 3. chr() fold range validation
-
-
-def test_string_split_chr_out_of_range_is_descriptive():
-    from sql4pandas_spark.functions.transpile import transpile_duckdb
-
-    with pytest.raises(ValueError, match="outside the encodable Unicode"):
-        transpile_duckdb("SELECT string_split(x, chr(1114112)) FROM t")
-    with pytest.raises(ValueError, match="outside the encodable Unicode"):
-        transpile_duckdb("SELECT string_split(x, chr(99999999)) FROM t")
-    # surrogates pass chr() but can't be UTF-8-encoded — rejected HERE
-    # with the descriptive error, not later as an encode failure (r13
-    # advice fix)
-    with pytest.raises(ValueError, match="outside the encodable Unicode"):
-        transpile_duckdb("SELECT string_split(x, chr(55296)) FROM t")
-    with pytest.raises(ValueError, match="outside the encodable Unicode"):
-        transpile_duckdb("SELECT string_split(x, chr(57343)) FROM t")
-    # boundary values still fold
-    assert "split" in transpile_duckdb("SELECT string_split(x, chr(1114111)) FROM t")
-    assert "split" in transpile_duckdb("SELECT string_split(x, chr(0)) FROM t")
-    assert "split" in transpile_duckdb("SELECT string_split(x, chr(55295)) FROM t")
-    assert "split" in transpile_duckdb("SELECT string_split(x, chr(57344)) FROM t")
-
-
 # ------------------------------ character-level BPE on (word, count)
 
 

@@ -462,32 +462,6 @@ def test_data_card_columns_are_load_bearing(spark):
     assert all(r["n_langs"] >= 1 and r["top_lang"] for r in rows)
 
 
-# ---------------------- transpiler: index-lambda rejection
-
-
-def test_transpile_rejects_index_lambdas():
-    """(x, i) lambdas are 1-based in DuckDB, 0-based in Spark, and the
-    body passes through unchanged — a silent off-by-one. Rejected
-    loudly; single-arg lambdas and list_reduce's legitimate (acc, x)
-    fold lambda are untouched."""
-    import pytest as _pytest
-
-    from sql4pandas_spark.functions.transpile import transpile_duckdb
-
-    for sql in [
-        "SELECT list_transform(['a'], (x, i) -> x || CAST(i AS VARCHAR))",
-        "SELECT list_filter([1,2,3], (x, i) -> i % 2 = 1)",
-    ]:
-        with _pytest.raises(ValueError, match="index lambdas"):
-            transpile_duckdb(sql)
-    assert "transform" in transpile_duckdb(
-        "SELECT list_transform([1,2], x -> x + 1)"
-    )
-    assert "aggregate" in transpile_duckdb(
-        "SELECT list_reduce([1,2,3], (a, b) -> a + b)"
-    )
-
-
 # ---------------------- label propagation: communities vs components
 
 

@@ -403,9 +403,14 @@ def test_drift_psi_detects_shift_and_clamps_outliers(spark):
 def test_drift_psi_excludes_nulls_and_validates_bounds(spark):
     from sql4pandas_spark.operators.profile import distribution_drift
 
-    old = spark.createDataFrame([(1, 1.0), (2, None), (3, 2.0)], "id long, x double")
+    old = spark.createDataFrame(
+        [(1, 1.0), (2, None), (3, 2.0), (4, float("nan"))], "id long, x double"
+    )
     rows = distribution_drift(old, old, "x", n_bins=2).collect()
-    assert sum(r.n_old for r in rows) == 2  # NULL row not binned
+    assert sum(r.n_old for r in rows) == 2  # NULL and NaN rows not binned
+    no_value = spark.createDataFrame([(1, None), (2, float("nan"))], "id long, x double")
+    with pytest.raises(ValueError, match="no non-NULL, non-NaN value"):
+        distribution_drift(no_value, no_value, "x")
     with pytest.raises(ValueError):
         distribution_drift(old, old, "x", n_bins=0)
     with pytest.raises(ValueError):

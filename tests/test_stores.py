@@ -47,15 +47,18 @@ def test_drain_timeout_raises(spark, tmp_path):
     assert not spark.streams.active
 
 
-def test_throwaway_checkpoints_are_removed(spark, tmp_path):
+def test_throwaway_checkpoints_are_removed(spark, tmp_path, monkeypatch):
     """One-shot drains delete the checkpoint they created; a resumable
-    drain keeps the one it returns for the next drain."""
+    drain keeps the one it returns for the next drain. The temp dir is the
+    test's own, so another process's drains cannot show up in it."""
     from sql4pandas_spark.streaming import cdc
     from sql4pandas_spark.streaming.windows import (
         run_available_now,
         run_foreach_batch_parquet,
     )
 
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
     stream = _id_stream(spark, tmp_path)
     pattern = os.path.join(tempfile.gettempdir(), "s4ps_ckpt_*")
     before = set(glob.glob(pattern))

@@ -490,10 +490,25 @@ def _operator_calls():
                     yield rel, getattr(top, "name", None), pos, ast.unparse(node)
 
 
+#: the DuckDB replay of text.tokens, as text.DUCKDB_TOKENS_SQL spells it
+_DUCKDB_TOKENIZER = r"list_filter(regexp_split_to_array(lower(text), '\s+'), t -> t <> '')"
+
+
 def test_operators_spell_each_rule_once():
-    """One body per operator rule: the whitespace tokenizer is text.tokens,
-    the fixed-grid bin is one expression, shingle rows are exploded in
-    one place, and only the store module advances a versioned store."""
+    """One body per operator rule: the whitespace tokenizer is text.tokens
+    and its DuckDB replay text.DUCKDB_TOKENS_SQL, the fixed-grid bin is one
+    expression, shingle rows are exploded in one place, and only the store
+    module advances a versioned store."""
+    root = Path(__file__).resolve().parents[1] / "sql4pandas_spark"
+    tokenizer = "".join(_DUCKDB_TOKENIZER.split())
+    spelled = [
+        path.relative_to(root).as_posix()
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and tokenizer in "".join(node.value.split())
+    ]
+    assert spelled == ["operators/text.py"], f"DuckDB tokenizer spelled in {spelled}"
     calls = list(_operator_calls())
 
     def owners(prefix):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import ast
 import re
+from collections import Counter
 from pathlib import Path
 
 import duckdb
@@ -290,6 +291,42 @@ def test_protected_tokens_are_read_only_by_the_lexer():
     assert not offenders, f"protected-token patterns outside _Lex: {offenders}"
 
 
+# --------------------------------------------------- one rewrite loop
+
+_BOUND_WORDS = ("more than", "did not stabilize")
+
+
+def test_rewrite_passes_share_one_loop():
+    """Every rewrite pass is a step in functions/transpile.py's _PASSES
+    table, run by one loop: exactly one raise names a bound (the loop's),
+    and no step is referenced anywhere but the table."""
+    path = Path(__file__).resolve().parents[1] / "sql4pandas_spark/functions/transpile.py"
+    tree = ast.parse(path.read_text())
+    bound_raises = []
+    for top in tree.body:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Raise) and node.exc is not None:
+                words = " ".join(
+                    c.value for c in ast.walk(node.exc)
+                    if isinstance(c, ast.Constant) and isinstance(c.value, str)
+                )
+                if any(w in words for w in _BOUND_WORDS):
+                    bound_raises.append((getattr(top, "name", None), node.lineno))
+    assert [owner for owner, _ in bound_raises] == ["_rewrite_each"], bound_raises
+
+    table = next(
+        top.value for top in tree.body
+        if isinstance(top, (ast.Assign, ast.AnnAssign)) and any(
+            isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store) and n.id == "_PASSES"
+            for n in ast.walk(top)
+        )
+    )
+    steps = [row.elts[0].id for row in table.elts]
+    uses = Counter(n.id for n in ast.walk(tree) if isinstance(n, ast.Name))
+    elsewhere = {s: uses[s] - 1 for s in steps if uses[s] != 1}
+    assert not elsewhere, f"steps referenced outside _PASSES: {elsewhere}"
+
+
 # ------------------------------------------- catalog-wide, no Spark
 
 _BACKTICKED = re.compile(r"`(?:[^`]|``)*`")
@@ -392,6 +429,27 @@ def test_string_split_nested_and_protected_occurrences():
     assert "-- string_split(b, '.')" in out2
 
 
+def test_string_split_chr_out_of_range_is_descriptive():
+    from sql4pandas_spark.functions.transpile import transpile_duckdb
+
+    with pytest.raises(ValueError, match="outside the encodable Unicode"):
+        transpile_duckdb("SELECT string_split(x, chr(1114112)) FROM t")
+    with pytest.raises(ValueError, match="outside the encodable Unicode"):
+        transpile_duckdb("SELECT string_split(x, chr(99999999)) FROM t")
+    # surrogates pass chr() but can't be UTF-8-encoded — rejected HERE
+    # with the descriptive error, not later as an encode failure (r13
+    # advice fix)
+    with pytest.raises(ValueError, match="outside the encodable Unicode"):
+        transpile_duckdb("SELECT string_split(x, chr(55296)) FROM t")
+    with pytest.raises(ValueError, match="outside the encodable Unicode"):
+        transpile_duckdb("SELECT string_split(x, chr(57343)) FROM t")
+    # boundary values still fold
+    assert "split" in transpile_duckdb("SELECT string_split(x, chr(1114111)) FROM t")
+    assert "split" in transpile_duckdb("SELECT string_split(x, chr(0)) FROM t")
+    assert "split" in transpile_duckdb("SELECT string_split(x, chr(55295)) FROM t")
+    assert "split" in transpile_duckdb("SELECT string_split(x, chr(57344)) FROM t")
+
+
 # ------------------------------ comments, casts, intervals and brackets
 
 
@@ -464,6 +522,115 @@ def test_transpile_comparison_against_list_rejected_loudly():
     # the legitimate '>' base still works: DOUBLE[][] nests fine
     out = transpile_duckdb("SELECT CAST(e AS DOUBLE[][]) FROM t")
     assert "ARRAY<ARRAY<DOUBLE>>" in out
+
+
+# ------------------------------------------- same values as DuckDB
+
+
+def _both(spark, stmt: str):
+    sp = [tuple(r) for r in spark.sql(transpile_duckdb(stmt)).collect()]
+    dk = duckdb.sql(stmt).fetchall()
+    return sp, dk
+
+
+# ------------------------------------- 3-arg regexp_replace (ADVICE #1)
+
+def test_regexp_replace_three_arg_raises_loudly():
+    with pytest.raises(ValueError, match="first-occurrence"):
+        transpile_duckdb("SELECT regexp_replace(s, 'a', 'X') AS x FROM t")
+
+
+def test_regexp_replace_three_arg_nested_still_raises():
+    with pytest.raises(ValueError, match="first-occurrence"):
+        transpile_duckdb(
+            "SELECT length(regexp_replace(s, 'a', 'X')) AS x FROM t"
+        )
+
+
+def test_regexp_replace_global_flag_still_rewrites(spark):
+    stmt = "SELECT regexp_replace('aaa', 'a', 'X', 'g') AS x"
+    assert "'g'" not in transpile_duckdb(stmt)
+    sp, dk = _both(spark, stmt)
+    assert sp == dk == [("XXX",)]
+
+
+# ---------------------------------------- 2-arg regexp_extract (ADVICE #3)
+
+def test_regexp_extract_two_arg_pins_group_zero(spark):
+    # DuckDB default group is 0 (whole match); Spark's is 1 — unpinned,
+    # this returned 'a' instead of 'ab'
+    stmt = "SELECT regexp_extract('xaby', 'a(b)') AS x"
+    sp, dk = _both(spark, stmt)
+    assert sp == dk == [("ab",)]
+
+
+def test_regexp_extract_explicit_group_untouched(spark):
+    stmt = "SELECT regexp_extract('xaby', 'a(b)', 1) AS x"
+    sp, dk = _both(spark, stmt)
+    assert sp == dk == [("b",)]
+
+
+# ------------------------------------------- fractional epoch (ADVICE #4)
+
+def test_epoch_preserves_subsecond_precision(spark):
+    stmt = "SELECT epoch(TIMESTAMP '2024-01-01 00:00:00.250') AS e"
+    sp, dk = _both(spark, stmt)
+    assert sp[0][0] == dk[0][0] == 1704067200.25
+
+
+def test_epoch_whole_second_unchanged(spark):
+    stmt = "SELECT epoch(TIMESTAMP '2024-06-15 12:30:00') AS e"
+    sp, dk = _both(spark, stmt)
+    assert float(sp[0][0]) == float(dk[0][0])
+
+
+# ------------------------------- fixpoint shadowing (found fixing #4)
+
+def test_nested_call_inside_passthrough_rewriter_is_rewritten(spark):
+    """epoch(…) nested in a pass-through-shaped registered call
+    (last_value without IGNORE NULLS) used to be shadowed by the outer
+    identity edit on every fixpoint pass and never rewritten."""
+    out = transpile_duckdb(
+        "SELECT last_value(epoch(ts)) OVER (ORDER BY ts) AS e FROM t"
+    )
+    assert "unix_micros" in out and "epoch(" not in out
+
+
+def test_nested_call_inside_ignore_nulls_struct_is_rewritten():
+    """The gapfill oracle shape that caught the bug in the parity sweep."""
+    out = transpile_duckdb(
+        "SELECT last_value(CASE WHEN v IS NOT NULL THEN "
+        "{'t': epoch(w), 'v': v} END IGNORE NULLS) OVER (ORDER BY w) AS x "
+        "FROM t"
+    )
+    assert "unix_micros" in out and "epoch(" not in out
+    assert out.count("IGNORE NULLS") == 1
+
+
+# ------------------------------------------------------- index lambdas
+
+
+def test_transpile_rejects_index_lambdas():
+    """(x, i) lambdas are 1-based in DuckDB, 0-based in Spark, and the
+    body passes through unchanged — a silent off-by-one. Rejected
+    loudly; single-arg lambdas and list_reduce's legitimate (acc, x)
+    fold lambda are untouched."""
+    import pytest as _pytest
+
+    from sql4pandas_spark.functions.transpile import transpile_duckdb
+
+    for sql in [
+        "SELECT list_transform(['a'], (x, i) -> x || CAST(i AS VARCHAR))",
+        "SELECT list_filter([1,2,3], (x, i) -> i % 2 = 1)",
+    ]:
+        with _pytest.raises(ValueError, match="index lambdas"):
+            transpile_duckdb(sql)
+    assert "transform" in transpile_duckdb(
+        "SELECT list_transform([1,2], x -> x + 1)"
+    )
+    assert "aggregate" in transpile_duckdb(
+        "SELECT list_reduce([1,2,3], (a, b) -> a + b)"
+    )
 
 
 # ------------------------------------------------ plans like native SQL

@@ -659,6 +659,17 @@ _ARG_CALL = re.compile(
 _FROM_TAIL = re.compile(r"\b(?:FROM|JOIN)\s*$", re.IGNORECASE)
 
 
+def _in_from_position(statement: str, at: int) -> bool:
+    """Whether only whitespace separates a FROM or JOIN keyword from
+    ``at``. Reads back over that whitespace and the one four-letter word
+    before it, never the whole prefix (``\\b`` still sees the character
+    before the word)."""
+    end = at
+    while end and statement[end - 1].isspace():
+        end -= 1
+    return _FROM_TAIL.match(statement, max(end - 4, 0), at) is not None
+
+
 def _rewrite_calls(lex: _Lex, n: int) -> str | None:
     """One pass of :data:`_ARG_REWRITERS` over every unprotected call site,
     parsing balanced top-level argument lists (protected regions are
@@ -678,7 +689,7 @@ def _rewrite_calls(lex: _Lex, n: int) -> str | None:
         if lex.protected_at(m.start()):
             continue
         name = m.group(1).lower()
-        if name == "range" and _FROM_TAIL.search(statement[: m.start()]):
+        if name == "range" and _in_from_position(statement, m.start()):
             continue  # table-function position: Spark range TVF matches
         close = lex.partner(
             m.end() - 1,

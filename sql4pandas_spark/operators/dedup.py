@@ -28,6 +28,12 @@ Scale design:
   bit_count(xor). Token hashes use the
   md5-based portable_hash60 so DuckDB can replay the whole signature pipeline
   as a value-checked oracle.
+- Every similarity operator here and in ``similarity.ann_lsh_topk`` finds
+  its pairs by one candidate-pair join: :func:`key_pairs` self-joins rows
+  on a shared key (band key, shingle, prefix shingle, SimHash chunk, LSH
+  bucket) into ``(id_a, id_b)`` with ``id_a < id_b``, :func:`attach`
+  joins each end's payload onto the pair as ``<col>_a`` / ``<col>_b``,
+  and the caller verifies on those columns (Jaccard, Hamming, cosine).
 """
 
 from __future__ import annotations
@@ -232,6 +238,50 @@ def band_keys(
     return sigs.select("doc_id", F.explode(bands).alias("band_key"))
 
 
+def key_pairs(
+    rows: DataFrame, key: str, *carry: str, id_col: str = "doc_id"
+) -> DataFrame:
+    """The candidate-pair self-join: ``(id_a, id_b, <c>_a, <c>_b, …)``, one
+    row for each ``key`` value two rows of ``rows`` share, with ``id_a <
+    id_b``, each ``carry`` column taken from both rows. A pair sharing
+    several key values appears once per value; callers that want each
+    pair once take ``distinct()`` or aggregate."""
+    a, b = (
+        rows.select(
+            F.col(key).alias(f"{key}_{side}"),
+            F.col(id_col).alias(f"id_{side}"),
+            *[F.col(c).alias(f"{c}_{side}") for c in carry],
+        )
+        for side in "ab"
+    )
+    return a.join(
+        b, (F.col(f"{key}_a") == F.col(f"{key}_b")) & (F.col("id_a") < F.col("id_b"))
+    ).select("id_a", "id_b", *[f"{c}_{side}" for c in carry for side in "ab"])
+
+
+def attach(
+    pairs: DataFrame, side: str, frame: DataFrame, *cols: str, id_col: str = "doc_id"
+) -> DataFrame:
+    """``pairs`` with ``frame``'s ``cols`` joined onto ``id_<side>`` as
+    ``<c>_<side>`` — one end's payload for the verify step (an inner
+    join: a pair whose id ``frame`` lacks drops)."""
+    return pairs.join(
+        frame.select(
+            F.col(id_col).alias(f"id_{side}"),
+            *[F.col(c).alias(f"{c}_{side}") for c in cols],
+        ),
+        f"id_{side}",
+    )
+
+
+def _shingle_jaccard():
+    """Exact shingle-set Jaccard of two attached ``shingles`` ends,
+    rounded to 4 places."""
+    inter = F.size(F.array_intersect("shingles_a", "shingles_b")).cast("double")
+    union = F.size(F.array_union("shingles_a", "shingles_b")).cast("double")
+    return F.round(inter / union, 4)
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame, n_bands: int = 16, *, n_hashes: int = 64
 ) -> DataFrame:
@@ -240,14 +290,7 @@ def lsh_candidate_pairs(
     Output: distinct (id_a < id_b) candidate pairs. The band key is
     xxhash64(band_index, sig-slice), so the join/shuffle key is 8 bytes.
     """
-    banded = band_keys(sigs, n_bands, n_hashes=n_hashes)
-    left = banded.select(F.col("band_key"), F.col("doc_id").alias("id_a"))
-    right = banded.select(F.col("band_key").alias("bk2"), F.col("doc_id").alias("id_b"))
-    return (
-        left.join(right, (F.col("band_key") == F.col("bk2")) & (F.col("id_a") < F.col("id_b")))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return key_pairs(band_keys(sigs, n_bands, n_hashes=n_hashes), "band_key").distinct()
 
 
 def verified_near_pairs(
@@ -258,14 +301,9 @@ def verified_near_pairs(
     """Verify candidates with true shingle-set Jaccard (array_intersect/union
     on the already-computed distinct shingle arrays). Only candidate pairs —
     never all O(n²) pairs — reach this join."""
-    a = sigs.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sigs.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", F.round(inter / union, 4))
+        attach(attach(candidates, "a", sigs, "shingles"), "b", sigs, "shingles")
+        .withColumn("jaccard", _shingle_jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -518,21 +556,14 @@ def ngram_jaccard_pairs(
         )
         sh = sh.join(hot, "shingle", "left_anti")
     card = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
-    a = sh.select("shingle", F.col("doc_id").alias("id_a"))
-    b = sh.select(F.col("shingle").alias("sh2"), F.col("doc_id").alias("id_b"))
     inter = (
-        a.join(b, (F.col("shingle") == F.col("sh2")) & (F.col("id_a") < F.col("id_b")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("i"))
+        key_pairs(sh, "shingle").groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("i"))
     )
-    ca = card.select(F.col("doc_id").alias("id_a"), F.col("c").alias("ca"))
-    cb = card.select(F.col("doc_id").alias("id_b"), F.col("c").alias("cb"))
     # Filter on the UNROUNDED ratio: both engines derive it from identical
     # int64 counts, so the doubles are bit-identical — no boundary flakes.
-    jac = F.col("i").cast("double") / (F.col("ca") + F.col("cb") - F.col("i"))
+    jac = F.col("i").cast("double") / (F.col("c_a") + F.col("c_b") - F.col("i"))
     return (
-        inter.join(ca, "id_a")
-        .join(cb, "id_b")
+        attach(attach(inter, "a", card, "c"), "b", card, "c")
         .filter(jac >= threshold)
         .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
     )
@@ -607,28 +638,13 @@ def prefix_filter_jaccard_pairs(
     pref = docs.select(
         "doc_id", F.explode(F.slice("sset", F.lit(1), F.col("p"))).alias("shingle")
     )
-    cand = (
-        pref.select("shingle", F.col("doc_id").alias("id_a"))
-        .join(
-            pref.select(F.col("shingle").alias("sh2"), F.col("doc_id").alias("id_b")),
-            (F.col("shingle") == F.col("sh2")) & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    a = docs.select(
-        F.col("doc_id").alias("id_a"), F.col("sset").alias("sa"), F.col("c").alias("ca")
-    )
-    b = docs.select(
-        F.col("doc_id").alias("id_b"), F.col("sset").alias("sb"), F.col("c").alias("cb")
-    )
-    i = F.size(F.array_intersect("sa", "sb")).cast("long")
+    cand = key_pairs(pref, "shingle").distinct()
+    i = F.size(F.array_intersect("sset_a", "sset_b")).cast("long")
     # same unrounded int64-derived ratio as ngram_jaccard_pairs — the two
     # constructions (and the DuckDB oracle) produce bit-identical doubles
-    jac = let_col(i, lambda ic: ic.cast("double") / (F.col("ca") + F.col("cb") - ic))
+    jac = let_col(i, lambda ic: ic.cast("double") / (F.col("c_a") + F.col("c_b") - ic))
     return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
+        attach(attach(cand, "a", docs, "sset", "c"), "b", docs, "sset", "c")
         .filter(jac >= threshold)
         .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
     )
@@ -697,13 +713,10 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3) -> DataFrame:
         ]
     )
     banded = sim.select("doc_id", "simhash", F.explode(chunks).alias("chunk_key"))
-    left = banded.select(F.col("chunk_key"), F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"))
-    right = banded.select(
-        F.col("chunk_key").alias("ck2"), F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b")
-    )
+    xor = F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
     return (
-        left.join(right, (F.col("chunk_key") == F.col("ck2")) & (F.col("id_a") < F.col("id_b")))
-        .select("id_a", "id_b", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"))
+        key_pairs(banded, "chunk_key", "simhash")
+        .select("id_a", "id_b", F.bit_count(xor).alias("hamming"))
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
@@ -1027,26 +1040,18 @@ def incremental_near_dedup(
         survivors = sigs
         if store_bands is not None:
             store_sh = spark.read.parquet(sh_dir)
+            # two-sided (batch bands ⋈ store bands), so not key_pairs:
+            # side a is the batch document, side b the admitted one
             cand = (
                 band_keys(sigs, n_bands, n_hashes=n_hashes)
-                .join(
-                    store_bands.withColumnRenamed("doc_id", "adm_id"),
-                    "band_key",
-                )
-                .select("doc_id", "adm_id")
+                .join(store_bands.withColumnRenamed("doc_id", "id_b"), "band_key")
+                .select(F.col("doc_id").alias("id_a"), "id_b")
                 .distinct()
             )
-            new_sh = sigs.select("doc_id", F.col("shingles").alias("sh_new"))
-            adm_sh = store_sh.select(
-                F.col("doc_id").alias("adm_id"), F.col("shingles").alias("sh_adm")
-            )
-            inter = F.size(F.array_intersect("sh_new", "sh_adm")).cast("double")
-            union = F.size(F.array_union("sh_new", "sh_adm")).cast("double")
             rejected = (
-                cand.join(new_sh, "doc_id")
-                .join(adm_sh, "adm_id")
-                .filter(F.round(inter / union, 4) >= threshold)
-                .select("doc_id")
+                attach(attach(cand, "a", sigs, "shingles"), "b", store_sh, "shingles")
+                .filter(_shingle_jaccard() >= threshold)
+                .select(F.col("id_a").alias("doc_id"))
                 .distinct()
             )
             survivors = sigs.join(rejected, "doc_id", "left_anti")

@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sql4pandas_spark.operators.dedup import attach, key_pairs
+
 
 # -- the vector kernel ---------------------------------------------------------
 
@@ -151,6 +153,11 @@ def cosine_query_topk(
 BROADCAST_MAX_ROWS = 4_000_000
 
 
+class BroadcastCapExceeded(ValueError):
+    """An embedding table past the broadcast cap: the one error a caller
+    with a distributed path falls back on."""
+
+
 def _broadcast_embedding_matrix(
     emb: DataFrame,
     id_col: str,
@@ -161,14 +168,15 @@ def _broadcast_embedding_matrix(
     broadcast (ids, matrix) — the shared setup of every matmul-scored
     operator here. `normalize` L2-normalizes rows so dot == true cosine.
 
-    Guarded: raises ValueError when the table exceeds `max_rows` instead of
-    silently OOM-ing the driver. The guard is a `limit(max_rows + 1)` on the
-    collect itself — a bounded probe that costs zero extra Spark jobs (the
-    earlier `emb.count()` spelling re-ran the whole upstream plan before the
-    collect re-ran it again; measured +31% on cosine_top20_pairs)."""
+    Guarded: raises :class:`BroadcastCapExceeded` (a ValueError) when the
+    table exceeds `max_rows` instead of silently OOM-ing the driver. The
+    guard is a `limit(max_rows + 1)` on the collect itself — a bounded
+    probe that costs zero extra Spark jobs (the earlier `emb.count()`
+    spelling re-ran the whole upstream plan before the collect re-ran it
+    again; measured +31% on cosine_top20_pairs)."""
     rows = emb.select(id_col, "embedding").limit(max_rows + 1).toPandas()
     if len(rows) > max_rows:
-        raise ValueError(
+        raise BroadcastCapExceeded(
             f"embedding table exceeds broadcast cap {max_rows:,} rows; "
             "the broadcast-matmul plan collects one side driver-side — use "
             "the bucketed candidate path (similarity.ann_lsh_topk) and keep "
@@ -898,14 +906,16 @@ def ann_lsh_topk(
     collected on the driver — once, and the dimension is read off it.
     Precondition: ids are unique. The broadcast path checks it on the
     driver and raises, since a repeated id has no one row to score.
-    Beyond the cap the embeddings are joined onto the candidate pairs
-    instead (``score_attached``): fully distributed, with one ``first()``
-    job to learn the dimension, and the same rows as the broadcast path
-    (tests/test_similarity.py).
+    Beyond the cap (:class:`BroadcastCapExceeded`, and only then) the
+    embeddings are joined onto the candidate pairs instead
+    (``score_attached``): fully distributed, with one ``first()`` job to
+    learn the dimension, and the same rows as the broadcast path
+    (tests/test_similarity.py). Any other error of the collect, such as
+    vectors of unequal length, raises on the driver.
     """
     try:
         b_ids, b_mat = _broadcast_embedding_matrix(emb, id_col)
-    except ValueError:  # beyond the broadcast cap: stay fully distributed
+    except BroadcastCapExceeded:  # stay fully distributed; other errors raise
         b_ids = b_mat = None
         dim = len(emb.select("embedding").first()[0])  # over the cap: nonempty
     else:
@@ -931,19 +941,8 @@ def ann_lsh_topk(
             for t in range(n_tables)
         ]
     )
-    keyed = emb.select(F.col(id_col), "embedding", F.explode(keys).alias("bucket"))
-    a = keyed.select(
-        F.col("bucket"), F.col(id_col).alias("id_a"), F.col("embedding").alias("emb_a")
-    )
-    b = keyed.select(
-        F.col("bucket").alias("bucket_b"), F.col(id_col).alias("id_b"), F.col("embedding").alias("emb_b")
-    )
-
-    cand = (
-        a.join(b, (F.col("bucket") == F.col("bucket_b")) & (F.col("id_a") < F.col("id_b")))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    keyed = emb.select(F.col(id_col), F.explode(keys).alias("bucket"))
+    cand = key_pairs(keyed, "bucket", id_col=id_col).distinct()
 
     # Exact rescoring of the candidate pairs, vectorized (guide §4.2 + §8):
     # the previous per-pair zip_with/aggregate fold is a HIGHER-ORDER
@@ -982,18 +981,13 @@ def ann_lsh_topk(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                yield pair_sims(pdf, as_matrix(pdf["emb_a"]), as_matrix(pdf["emb_b"]))
+                yield pair_sims(
+                    pdf, as_matrix(pdf["embedding_a"]), as_matrix(pdf["embedding_b"])
+                )
 
-        scored = (
-            cand.join(
-                emb.select(F.col(id_col).alias("id_a"), F.col("embedding").alias("emb_a")),
-                "id_a",
-            )
-            .join(
-                emb.select(F.col(id_col).alias("id_b"), F.col("embedding").alias("emb_b")),
-                "id_b",
-            )
-            .mapInPandas(score_attached, schema="id_a long, id_b long, sim double")
+        pairs = attach(cand, "a", emb, "embedding", id_col=id_col)
+        scored = attach(pairs, "b", emb, "embedding", id_col=id_col).mapInPandas(
+            score_attached, schema="id_a long, id_b long, sim double"
         )
     return scored.orderBy(F.col("sim").desc(), "id_a", "id_b").limit(k)
 

@@ -805,3 +805,159 @@ def test_bloom_contamination_joins_benchmark_without_broadcast_hint(spark):
 
     assert hinted(dedup.contamination_overlap(cand, bench))
     assert not hinted(dedup.bloom_prefiltered_contamination(cand, bench))
+
+
+# ---------------------------------------------------------------------------
+# Incremental near-dedup against the admitted-docs store
+# ---------------------------------------------------------------------------
+
+
+def _near_batch(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_incremental_near_dedup_rejects_cross_batch_near_dups(spark, tmp_path):
+    from sql4pandas_spark.operators.dedup import incremental_near_dedup
+
+    store = str(tmp_path / "near_store")
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
+    b1 = _near_batch(spark, [(1, base), (2, "totally different words here now")])
+    kept1 = incremental_near_dedup(b1, store)
+    assert sorted(r.doc_id for r in kept1.collect()) == [1, 2]
+
+    b2 = _near_batch(
+        spark,
+        [
+            (10, base + " tail"),           # near-dup of admitted 1 → reject
+            # 11/12: many DISTINCT shingles + a 1-token edit → J ≈ 21/23 ≥ 0.7
+            (11, "ember quartz falcon meadow cobalt prism harbor lichen "
+                 "tundra mosaic cipher velvet saffron glacier nimbus "
+                 "ember quartz falcon meadow cobalt prism harbor"),
+            (12, "ember quartz falcon meadow cobalt prism harbor lichen "
+                 "tundra mosaic cipher velvet saffron glacier nimbus "
+                 "ember quartz falcon meadow cobalt prism harbor edited"),
+        ],
+    )
+    kept2 = sorted(r.doc_id for r in incremental_near_dedup(b2, store).collect())
+    assert kept2 == [11], kept2  # 10 rejected vs store; 12 loses to 11 in-batch
+
+
+def test_incremental_near_dedup_full_replay_is_idempotent(spark, tmp_path):
+    from sql4pandas_spark.operators.dedup import incremental_near_dedup
+
+    store = str(tmp_path / "near_store")
+    b1 = _near_batch(
+        spark, [(1, "one two three four five six seven eight nine ten " * 2)]
+    )
+    assert incremental_near_dedup(b1, store).count() == 1
+    # a FULL replay of the same batch: every doc is a (perfect) near-dup of
+    # its own admitted row, so nothing is re-admitted
+    assert incremental_near_dedup(b1, store).count() == 0
+
+
+def test_incremental_near_dedup_first_batch_self_dedups(spark, tmp_path):
+    from sql4pandas_spark.operators.dedup import incremental_near_dedup
+
+    store = str(tmp_path / "near_store")
+    txt = "red orange yellow green blue indigo violet crimson amber teal " * 2
+    b1 = _near_batch(spark, [(5, txt), (3, txt + " extra"), (9, "other thing entirely")])
+    kept = sorted(r.doc_id for r in incremental_near_dedup(b1, store).collect())
+    assert kept == [3, 9]  # 3 and 5 cluster; min id 3 represents; 9 novel
+
+
+def test_near_dedup_store_files_bounded(spark, tmp_path):
+    """Store appends must coalesce to ceil(rows / records-per-file-target)
+    files instead of inheriting the signature frame's compute width —
+    fixture-scale batches land in exactly ONE file per store per batch
+    (guide §6 small-files: the width-many near-empty part files previously
+    paid width write tasks per batch and a many-file listing on every
+    later batch's store read)."""
+    import glob
+
+    from sql4pandas_spark.operators.dedup import incremental_near_dedup
+
+    store = str(tmp_path / "near")
+    rows = [(i, f"document text number {i} with shared shingle words") for i in range(40)]
+    batch = spark.createDataFrame(rows, ["doc_id", "text"])
+    incremental_near_dedup(batch, store).collect()
+    for sub in ("shingles", "bands"):
+        files = glob.glob(f"{store}/{sub}/part-*.parquet")
+        assert len(files) == 1, (sub, files)
+
+
+# ---------------------------------------------------------------------------
+# Lint-style guard: one candidate-pair join
+# ---------------------------------------------------------------------------
+
+#: (operators/ file, top-level function) allowed to spell each pair-join
+#: piece. The ``id_a < id_b`` self-join belongs to ``key_pairs``. Columns
+#: are named as a pair side by ``key_pairs`` and ``attach``, by the one
+#: two-sided candidate join (batch bands ⋈ store bands), which is no
+#: self-join, and by ``connected_components``, which re-spells a pair's
+#: own two ends.
+_PAIR_COMPARERS = {("dedup.py", "key_pairs")}
+_PAIR_SIDE_NAMERS = _PAIR_COMPARERS | {
+    ("dedup.py", "attach"),
+    ("dedup.py", "incremental_near_dedup"),
+    ("dedup.py", "connected_components"),
+}
+#: Renaming calls, by the position of their first new-name argument.
+_RENAMES = {"alias": 0, "withColumnRenamed": 1, "toDF": 0}
+
+
+def _is_col(node: ast.AST, name: str) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "col"
+        and [getattr(a, "value", None) for a in node.args] == [name]
+    )
+
+
+def _is_side_name(node: ast.AST) -> bool:
+    """``"id_a"`` / ``"id_b"``, or an f-string that starts ``id_``."""
+    if isinstance(node, ast.Constant):
+        return node.value in ("id_a", "id_b")
+    return (
+        isinstance(node, ast.JoinedStr)
+        and isinstance(node.values[0], ast.Constant)
+        and node.values[0].value == "id_"
+    )
+
+
+def _pair_join_spellings(tree: ast.AST):
+    """(enclosing top-level function, line, kind) of each ``F.col("id_a") <
+    F.col("id_b")`` and each ``alias`` / ``withColumnRenamed`` / ``toDF``
+    that names a column ``id_a`` or ``id_b``."""
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Compare)
+                and isinstance(node.ops[0], ast.Lt)
+                and _is_col(node.left, "id_a")
+                and _is_col(node.comparators[0], "id_b")
+            ):
+                yield owner, node.lineno, "compare"
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _RENAMES
+                and any(map(_is_side_name, node.args[_RENAMES[node.func.attr] :]))
+            ):
+                yield owner, node.lineno, "side"
+
+
+def test_similarity_pairs_share_one_candidate_join():
+    """In operators/, the keyed self-join's ``id_a < id_b`` is spelled only
+    in ``dedup.key_pairs``, and a column is named as a pair side (``id_a``
+    / ``id_b``) only in ``key_pairs``, ``attach`` and the allowed
+    :data:`_PAIR_SIDE_NAMERS`."""
+    root = Path(__file__).resolve().parents[1] / "sql4pandas_spark" / "operators"
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        for owner, line, kind in _pair_join_spellings(ast.parse(path.read_text())):
+            allowed = _PAIR_COMPARERS if kind == "compare" else _PAIR_SIDE_NAMERS
+            if (path.name, owner) not in allowed:
+                offenders.append(f"{path.name}:{line} {kind} ({owner})")
+    assert not offenders, f"candidate-pair join spelled outside key_pairs/attach: {offenders}"

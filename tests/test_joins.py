@@ -223,3 +223,63 @@ def test_fuzzy_key_pairs_spread_follows_key_input_bytes(spark, tables):
     assert spreads(names) == []
     in_memory = spark.createDataFrame(names.collect(), "c_name string")
     assert spreads(in_memory) == [str(compute_width(spark))]
+
+
+# ---------------------------------------------------------------------------
+# Skew-salted fuzzy band join
+# ---------------------------------------------------------------------------
+
+
+def test_salted_fuzzy_pairs_identical_on_degenerate_keys(spark):
+    """The docstring's degenerate regime: serial IDs share nearly all
+    n-grams, collapsing LSH bands. Salting must spread the hot bands and
+    return the EXACT same pair set as the unsalted join."""
+    from sql4pandas_spark.operators.joins import fuzzy_key_pairs
+
+    clean = spark.createDataFrame(
+        [(f"Customer#{i:09d}",) for i in range(60)], ["name"]
+    )
+    # one char deleted mid-string for every 3rd key
+    dirty = spark.createDataFrame(
+        [(f"Customer#{i:09d}"[:11] + f"Customer#{i:09d}"[12:],)
+         for i in range(0, 60, 3)],
+        ["dname"],
+    )
+    base = {
+        (r["left_key_value"], r["right_key_value"], r["key_distance"])
+        for r in fuzzy_key_pairs(dirty, clean, "dname", "name").collect()
+    }
+    salted = {
+        (r["left_key_value"], r["right_key_value"], r["key_distance"])
+        for r in fuzzy_key_pairs(
+            dirty, clean, "dname", "name",
+            salt_hot_bands=4, hot_band_product=1,  # force EVERY band hot
+        ).collect()
+    }
+    assert salted == base and base  # identical and non-empty
+
+
+def test_salted_fuzzy_pairs_mixed_hot_cold(spark):
+    """Mid threshold: some bands salt, some don't — union still exact."""
+    from sql4pandas_spark.operators.joins import fuzzy_key_pairs
+
+    names = [f"Customer#{i:09d}" for i in range(40)] + [
+        "alice smith", "bob jones", "carol white", "dave black",
+    ]
+    clean = spark.createDataFrame([(n,) for n in names], ["name"])
+    dirty = spark.createDataFrame(
+        [(n[:3] + n[4:],) for n in names[::4]], ["dname"]
+    )
+    kw = dict(max_distance=2, n_hashes=24, n_bands=12)
+    base = {
+        tuple(r) for r in fuzzy_key_pairs(
+            dirty, clean, "dname", "name", **kw
+        ).collect()
+    }
+    salted = {
+        tuple(r) for r in fuzzy_key_pairs(
+            dirty, clean, "dname", "name", **kw,
+            salt_hot_bands=3, hot_band_product=25,
+        ).collect()
+    }
+    assert salted == base and base

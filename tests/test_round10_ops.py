@@ -1,7 +1,8 @@
 """Round-10 fixes: join_fanout multi-column keys, cache-leak removal
 (ReusedExchange instead of persist), top_movers calendar adjacency, and
 value_histogram NaN handling. The prefix-filter Jaccard and Bloom
-decontamination pins live in tests/test_dedup.py."""
+decontamination pins live in tests/test_dedup.py, the skew-salted fuzzy
+band join pins in tests/test_joins.py."""
 
 from __future__ import annotations
 
@@ -209,64 +210,6 @@ def test_engine_runs_reference_dialect_sql(spark):
     eng.register("t", pdf)
     got = [tuple(r) for r in eng.sql(stmt, dialect="duckdb").collect()]
     assert got == expected
-
-
-# ------------------------------------- skew-salted fuzzy band join
-
-
-def test_salted_fuzzy_pairs_identical_on_degenerate_keys(spark):
-    """The docstring's degenerate regime: serial IDs share nearly all
-    n-grams, collapsing LSH bands. Salting must spread the hot bands and
-    return the EXACT same pair set as the unsalted join."""
-    from sql4pandas_spark.operators.joins import fuzzy_key_pairs
-
-    clean = spark.createDataFrame(
-        [(f"Customer#{i:09d}",) for i in range(60)], ["name"]
-    )
-    # one char deleted mid-string for every 3rd key
-    dirty = spark.createDataFrame(
-        [(f"Customer#{i:09d}"[:11] + f"Customer#{i:09d}"[12:],)
-         for i in range(0, 60, 3)],
-        ["dname"],
-    )
-    base = {
-        (r["left_key_value"], r["right_key_value"], r["key_distance"])
-        for r in fuzzy_key_pairs(dirty, clean, "dname", "name").collect()
-    }
-    salted = {
-        (r["left_key_value"], r["right_key_value"], r["key_distance"])
-        for r in fuzzy_key_pairs(
-            dirty, clean, "dname", "name",
-            salt_hot_bands=4, hot_band_product=1,  # force EVERY band hot
-        ).collect()
-    }
-    assert salted == base and base  # identical and non-empty
-
-
-def test_salted_fuzzy_pairs_mixed_hot_cold(spark):
-    """Mid threshold: some bands salt, some don't — union still exact."""
-    from sql4pandas_spark.operators.joins import fuzzy_key_pairs
-
-    names = [f"Customer#{i:09d}" for i in range(40)] + [
-        "alice smith", "bob jones", "carol white", "dave black",
-    ]
-    clean = spark.createDataFrame([(n,) for n in names], ["name"])
-    dirty = spark.createDataFrame(
-        [(n[:3] + n[4:],) for n in names[::4]], ["dname"]
-    )
-    kw = dict(max_distance=2, n_hashes=24, n_bands=12)
-    base = {
-        tuple(r) for r in fuzzy_key_pairs(
-            dirty, clean, "dname", "name", **kw
-        ).collect()
-    }
-    salted = {
-        tuple(r) for r in fuzzy_key_pairs(
-            dirty, clean, "dname", "name", **kw,
-            salt_hot_bands=3, hot_band_product=25,
-        ).collect()
-    }
-    assert salted == base and base
 
 
 # ------------------------------------- streaming sketch-state maintenance

@@ -1,8 +1,9 @@
 """Round-15 optimization-phase focused tests: the spread_for_compute
 parallelism guard and the gopher_rules extra_cols collision validation.
 (The connected_components convergence-check tests live in
-tests/test_dedup.py, run on both components paths; the IVF save
-clustering test lives in tests/test_similarity.py.)"""
+tests/test_dedup.py, run on both components paths, with the near-dedup
+store file-sizing test; the IVF save clustering test lives in
+tests/test_similarity.py.)"""
 
 from __future__ import annotations
 
@@ -123,26 +124,3 @@ def test_pinned_width_drain_matches_batch(spark):
         tumbling_hourly(read_events_stream(spark, SF_SMALL)), mode="complete"
     ).toPandas()
     assert_frames_match(got, batch)
-
-
-# ---------------------- incremental near-dedup store file sizing
-
-
-def test_near_dedup_store_files_bounded(spark, tmp_path):
-    """Store appends must coalesce to ceil(rows / records-per-file-target)
-    files instead of inheriting the signature frame's compute width —
-    fixture-scale batches land in exactly ONE file per store per batch
-    (guide §6 small-files: the width-many near-empty part files previously
-    paid width write tasks per batch and a many-file listing on every
-    later batch's store read)."""
-    import glob
-
-    from sql4pandas_spark.operators.dedup import incremental_near_dedup
-
-    store = str(tmp_path / "near")
-    rows = [(i, f"document text number {i} with shared shingle words") for i in range(40)]
-    batch = spark.createDataFrame(rows, ["doc_id", "text"])
-    incremental_near_dedup(batch, store).collect()
-    for sub in ("shingles", "bands"):
-        files = glob.glob(f"{store}/{sub}/part-*.parquet")
-        assert len(files) == 1, (sub, files)

@@ -2,6 +2,7 @@
 full-vocabulary TF-IDF top terms, and global top n-grams. The catalog
 oracles cover the fixture paths; these pin the edges the fixtures don't
 reach (NULL-only columns, empty inputs, sub-n documents, tie-breaks).
+The incremental near-dedup tests live in tests/test_dedup.py.
 """
 
 from __future__ import annotations
@@ -109,62 +110,6 @@ def test_top_ngrams_trigrams_and_k_cut(spark):
     )
     got = [(r.ngram, r.n_occurrences) for r in top_ngrams(df, n=3, k=1).collect()]
     assert got == [("x y z", 2)]
-
-
-# ----------------------------------------------------- incremental near-dedup
-
-
-def _near_batch(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_incremental_near_dedup_rejects_cross_batch_near_dups(spark, tmp_path):
-    from sql4pandas_spark.operators.dedup import incremental_near_dedup
-
-    store = str(tmp_path / "near_store")
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
-    b1 = _near_batch(spark, [(1, base), (2, "totally different words here now")])
-    kept1 = incremental_near_dedup(b1, store)
-    assert sorted(r.doc_id for r in kept1.collect()) == [1, 2]
-
-    b2 = _near_batch(
-        spark,
-        [
-            (10, base + " tail"),           # near-dup of admitted 1 → reject
-            # 11/12: many DISTINCT shingles + a 1-token edit → J ≈ 21/23 ≥ 0.7
-            (11, "ember quartz falcon meadow cobalt prism harbor lichen "
-                 "tundra mosaic cipher velvet saffron glacier nimbus "
-                 "ember quartz falcon meadow cobalt prism harbor"),
-            (12, "ember quartz falcon meadow cobalt prism harbor lichen "
-                 "tundra mosaic cipher velvet saffron glacier nimbus "
-                 "ember quartz falcon meadow cobalt prism harbor edited"),
-        ],
-    )
-    kept2 = sorted(r.doc_id for r in incremental_near_dedup(b2, store).collect())
-    assert kept2 == [11], kept2  # 10 rejected vs store; 12 loses to 11 in-batch
-
-
-def test_incremental_near_dedup_full_replay_is_idempotent(spark, tmp_path):
-    from sql4pandas_spark.operators.dedup import incremental_near_dedup
-
-    store = str(tmp_path / "near_store")
-    b1 = _near_batch(
-        spark, [(1, "one two three four five six seven eight nine ten " * 2)]
-    )
-    assert incremental_near_dedup(b1, store).count() == 1
-    # a FULL replay of the same batch: every doc is a (perfect) near-dup of
-    # its own admitted row, so nothing is re-admitted
-    assert incremental_near_dedup(b1, store).count() == 0
-
-
-def test_incremental_near_dedup_first_batch_self_dedups(spark, tmp_path):
-    from sql4pandas_spark.operators.dedup import incremental_near_dedup
-
-    store = str(tmp_path / "near_store")
-    txt = "red orange yellow green blue indigo violet crimson amber teal " * 2
-    b1 = _near_batch(spark, [(5, txt), (3, txt + " extra"), (9, "other thing entirely")])
-    kept = sorted(r.doc_id for r in incremental_near_dedup(b1, store).collect())
-    assert kept == [3, 9]  # 3 and 5 cluster; min id 3 represents; 9 novel
 
 
 # -------------------------------------------------------------- snapshot diff

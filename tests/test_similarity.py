@@ -146,12 +146,26 @@ def test_ann_lsh_fallback_matches_broadcast_path(spark, emb, monkeypatch):
 
     def over_cap(*args, **kwargs):
         calls.append(args)
-        raise ValueError("embedding table exceeds broadcast cap 0 rows")
+        raise similarity.BroadcastCapExceeded("embedding table exceeds broadcast cap 0 rows")
 
     monkeypatch.setattr(similarity, "_broadcast_embedding_matrix", over_cap)
     fallback_rows = similarity.ann_lsh_topk(emb, k=40).collect()
     assert len(calls) == 1 and len(broadcast_rows) == 40
     assert [tuple(r) for r in fallback_rows] == [tuple(r) for r in broadcast_rows]
+
+
+def test_ann_lsh_ragged_embeddings_raise_without_fallback(spark):
+    """Only an exceeded broadcast cap takes the distributed fallback.
+    Vectors of unequal length fail the driver-side matrix build, and that
+    ValueError reaches the caller instead of sending the same input down
+    the fallback path, which would fail later inside a Python worker."""
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0]), (3, [0.6, 0.8, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="same shape") as err:
+        similarity.ann_lsh_topk(emb, k=5)
+    assert not isinstance(err.value, similarity.BroadcastCapExceeded)
 
 
 def test_ann_lsh_rejects_duplicate_ids_on_the_driver(spark):

@@ -41,18 +41,6 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def real_decode_stub(payload: bytes) -> np.ndarray:  # pragma: no cover
-    """Placeholder for the actual image decode (PIL.Image.open etc.).
-
-    Not implemented in this container — see `extract_features` for the
-    deterministic fake used to keep the distributed plumbing testable.
-    """
-    raise NotImplementedError(
-        "image/audio codecs are not installed in this environment; "
-        "swap this stub for PIL/torchvision/ffmpeg in production"
-    )
-
-
 #: Output contract of `sample_frames` — what a real ffmpeg frame sampler
 #: would emit per kept frame.
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes int, brightness double"
@@ -142,8 +130,7 @@ def extract_features(with_payload: DataFrame, n_features: int = 8) -> DataFrame:
     STUB decode: features are byte-histogram moments of the payload —
     deterministic, so tests can assert exact values. The mapInPandas batch
     shape (pandas DataFrame in, DataFrame out, iterator-chunked) is identical
-    to what a real decoder uses; swapping the body for `real_decode_stub`
-    output is a one-line change.
+    to what a real decoder uses.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

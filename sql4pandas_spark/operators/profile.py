@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sql4pandas_spark.operators.sketches import grid_bin
+from sql4pandas_spark.operators.sketches import grid_bin, value_histogram
 
 
 def profile_columns(
@@ -126,16 +126,17 @@ def distribution_drift(
     [lo, hi] defaults to the OLD snapshot's non-NaN min/max (a 1-row
     aggregate — bounded metadata, like zorder's quantization bounds);
     out-of-range new-side values clamp into the edge bins so a drifted
-    tail is counted, not dropped. Bin assignment is
-    :func:`~sql4pandas_spark.operators.sketches.grid_bin` — identical
-    arithmetic in Spark and DuckDB, so the oracle replays bit-for-bit.
+    tail is counted, not dropped. The gate IS
+    :func:`psi_from_histograms` over the two snapshots'
+    :func:`~sql4pandas_spark.operators.sketches.value_histogram` states,
+    so the raw-row and the streaming-store read-outs share one body; bin
+    assignment is ``grid_bin``, identical arithmetic in Spark and DuckDB.
     NULLs and NaNs are excluded from both sides (they have no bin).
 
     Scale shape: two map-combined groupBy(bin) count shuffles of
-    |bins|-sized output, one broadcast-sized join of the two histograms —
-    nothing else moves. Output: one row per bin
-    (bin, n_old, n_new, p, q, psi) + ordering by bin; sum(psi) is the
-    headline index.
+    |bins|-sized output, joined onto the dense bin spine — nothing else
+    moves. Output: one row per bin (bin int, n_old, n_new, p, q, psi)
+    ordered by bin; sum(psi) is the headline index.
     """
     if lo is None or hi is None:
         x = F.col(col).cast("double")
@@ -147,23 +148,11 @@ def distribution_drift(
             )
         lo = b["mn"] if lo is None else lo
         hi = b["mx"] if hi is None else hi
-    bin_ = grid_bin(col, lo, hi, n_bins).cast("int")
-
-    def hist(df: DataFrame, out: str) -> DataFrame:
-        return (
-            df.select(bin_.alias("bin"))
-            .dropna()
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias(out))
-        )
-
-    bins = old.sparkSession.range(n_bins).select(F.col("id").cast("int").alias("bin"))
-    h = (
-        bins.join(hist(old, "n_old"), "bin", "left")
-        .join(hist(new, "n_new"), "bin", "left")
-        .fillna(0, ["n_old", "n_new"])
-    )
-    return _psi_tail(h, "bin", n_bins)
+    return psi_from_histograms(
+        value_histogram(old, col, lo, hi, n_bins),
+        value_histogram(new, col, lo, hi, n_bins),
+        n_bins,
+    ).withColumn("bin", F.col("bin").cast("int"))
 
 
 def psi_from_histograms(
@@ -408,14 +397,15 @@ def mad_anomalies(
     (one huge spike inflates a stddev enough to hide itself; the MAD is
     breakdown-point-0.5 robust).
 
-    Scale shape: ONE map-combined groupBy(group, bucket) count is the only
-    pass over data rows; the |groups × buckets| counts frame (shuffle
-    reused across branches, never cached)
-    feeds the per-group median (|groups| rows, broadcast back), the
-    deviation column, and the per-group MAD (|groups| rows, broadcast
-    back) — three tiny aggregates/joins over bucket counts, nothing over
-    events. The distribution-level sibling of drift_timeline (which
-    compares value HISTOGRAMS per bucket; this flags VOLUME outliers).
+    The plan IS :func:`robust_outlier_rows` over the bucket-count frame:
+    ONE map-combined groupBy(group, bucket) count is the only pass over
+    data rows; the |groups × buckets| counts frame (shuffle reused across
+    branches, never cached) feeds the per-group median and MAD (|groups|
+    rows each, broadcast back) — tiny aggregates/joins over bucket
+    counts, nothing over events. The group joins are null-safe, so a NULL
+    group's buckets are scored as one group, not dropped. The
+    distribution-level sibling of drift_timeline (which compares value
+    HISTOGRAMS per bucket; this flags VOLUME outliers).
 
     Determinism: the median of integer counts is an exact half, so the
     group median is carried ×2 (``med_x2``, exact BIGINT), deviations ×2
@@ -426,36 +416,21 @@ def mad_anomalies(
     the anomalous buckets only,
     ``(group, bucket_ts, n_events, med_x2, mad_x4, dev_x2)``.
     """
-    # the counts frame feeds three consumers (median, deviations, MAD)
-    # all inside the ONE returned plan — AQE's ReusedExchange serves
-    # every branch from the first shuffle, so no persist (which would
+    # the counts frame feeds every branch of robust_outlier_rows (median,
+    # deviations, MAD) inside the ONE returned plan — AQE's ReusedExchange
+    # serves them all from the first shuffle, so no persist (which would
     # pin executor storage past the query with nobody to unpersist)
     counts = df.groupBy(
         F.col(group_col).alias("grp"),
         F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"),
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    med = counts.groupBy("grp").agg(
-        F.round(F.median("n_events") * 2).cast("long").alias("med_x2")
-    )
-    dev = counts.join(F.broadcast(med), "grp").withColumn(
-        "dev_x2", F.abs(F.col("n_events") * 2 - F.col("med_x2"))
-    )
-    mad = dev.groupBy("grp").agg(
-        # dev_x2 is integer, so its median is again an exact half; x2 once
-        # more lands on an exact integer = 4x the raw MAD
-        F.round(F.median("dev_x2") * 2).cast("long").alias("mad_x4")
-    )
-    return (
-        dev.join(F.broadcast(mad), "grp")
-        .filter(F.col("dev_x2") * 2 > F.lit(k) * F.col("mad_x4"))
-        .select(
-            F.col("grp").alias(group_col),
-            "bucket_ts",
-            "n_events",
-            "med_x2",
-            "mad_x4",
-            "dev_x2",
-        )
+    return robust_outlier_rows(counts, "n_events", "grp", k).select(
+        F.col("grp").alias(group_col),
+        "bucket_ts",
+        "n_events",
+        "med_x2",
+        "mad_x4",
+        "dev_x2",
     )
 
 

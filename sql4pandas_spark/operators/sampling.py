@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sql4pandas_spark.operators.text import portable_hash60, tokens
@@ -155,6 +155,30 @@ def temperature_sample(
     )
 
 
+def _hash_topk(
+    df: DataFrame, k: int, id_col: str, hashed: Column, key=None
+) -> DataFrame:
+    """The one hash-keyed top-k cut of the A-ES and Gumbel samples. Each
+    row's ``h`` is the portable 60-bit hash of ``hashed`` (the id, or the
+    salted id), its draw ``u = (h + 1) / 2^60`` lies in (0, 1], and
+    ``skey = key(u)``; with no ``key`` the rows already carry their skey
+    (merged states). The k rows first by (skey desc, h, id) are kept.
+    Per-batch samples and their merge cut in this one order, which is
+    what makes the merged sample exact."""
+    if k <= 0:
+        raise ValueError("k must be positive")
+    h = portable_hash60(hashed)
+    if key is not None:
+        u = (h + F.lit(1)).cast("double") / F.lit(_HASH_SPAN)
+        df = df.withColumn("skey", key(u))
+    return (
+        df.withColumn("_tb", h)
+        .orderBy(F.desc("skey"), F.col("_tb"), F.col(id_col))
+        .limit(k)
+        .drop("_tb")
+    )
+
+
 def weighted_sample_topk(
     df: DataFrame,
     weight_col: str,
@@ -186,18 +210,12 @@ def weighted_sample_topk(
     NULL or non-positive weight are excluded — they have no defined
     inclusion probability.
     """
-    if k <= 0:
-        raise ValueError("k must be positive")
-    h = portable_hash60(F.col(id_col).cast("string"))
-    u = (h + F.lit(1)).cast("double") / F.lit(_HASH_SPAN)
-    key = F.round(F.log(u) / F.col(weight_col).cast("double"), 6)
-    return (
-        df.filter(F.col(weight_col) > 0)
-        .withColumn("skey", key)
-        .withColumn("_tb", h)
-        .orderBy(F.desc("skey"), F.col("_tb"), F.col(id_col))
-        .limit(k)
-        .drop("_tb")
+    return _hash_topk(
+        df.filter(F.col(weight_col) > 0),
+        k,
+        id_col,
+        F.col(id_col).cast("string"),
+        lambda u: F.round(F.log(u) / F.col(weight_col).cast("double"), 6),
     )
 
 
@@ -223,8 +241,6 @@ def merge_weighted_samples(
     exactly-once NOT required here — re-merging the same batch state is
     idempotent, unlike the additive sketches).
     """
-    if k <= 0:
-        raise ValueError("k must be positive")
     if not states:
         raise ValueError("need at least one state")
     out = states[0]
@@ -245,14 +261,12 @@ def merge_weighted_samples(
     # equivalence.
     tiebreak = [F.col(c) for c in sorted(out.columns) if c not in (id_col, "skey")]
     w = Window.partitionBy(id_col).orderBy(F.desc("skey"), *tiebreak)
-    h = portable_hash60(F.col(id_col).cast("string"))
-    return (
+    survivors = (
         out.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .orderBy(F.desc("skey"), h, F.col(id_col))
-        .limit(k)
     )
+    return _hash_topk(survivors, k, id_col, F.col(id_col).cast("string"))
 
 
 def split_assign(
@@ -595,18 +609,12 @@ def gumbel_topk(
     +inf here where A-ES degrades gracefully — accepted: both engines
     produce the same infinity, and the next salt is one character away.
     """
-    if k <= 0:
-        raise ValueError("k must be positive")
-    h = portable_hash60(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    u = (h + F.lit(1)).cast("double") / F.lit(_HASH_SPAN)
-    key = F.round(F.col(logw_col) - F.log(-F.log(u)), 6)
-    return (
-        df.filter(F.col(logw_col).isNotNull())
-        .withColumn("skey", key)
-        .withColumn("_tb", h)
-        .orderBy(F.desc("skey"), F.col("_tb"), F.col(id_col))
-        .limit(k)
-        .drop("_tb")
+    return _hash_topk(
+        df.filter(F.col(logw_col).isNotNull()),
+        k,
+        id_col,
+        F.concat(F.lit(salt), F.col(id_col).cast("string")),
+        lambda u: F.round(F.col(logw_col) - F.log(-F.log(u)), 6),
     )
 
 

@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sql4pandas_spark.operators.dedup import attach, key_pairs
+from sql4pandas_spark.stores import read_batches, write_batch
 
 
 # -- the vector kernel ---------------------------------------------------------
@@ -430,6 +431,11 @@ def sq8_recon_topk(
     )
 
 
+#: The saved scales: one row holding the dim-sized vector. Read with the
+#: schema given, so loading it costs one job and no schema inference.
+_SQ8_SCALES_SCHEMA = "scales array<double>"
+
+
 def save_sq8_index(
     emb: DataFrame,
     index_root: str,
@@ -437,25 +443,31 @@ def save_sq8_index(
     vec_col: str = "embedding",
     scales: list[float] | None = None,
 ) -> list[float]:
-    """Persist an SQ8 index: int8 codes as parquet under
-    ``codes/batch=0`` plus a dim-sized ``scales.json`` sidecar — the
-    faiss-style train-once layout. Codes are 1 byte/dim on disk (4-8×
+    """Persist an SQ8 index: int8 codes as batch 0 of the batch-keyed
+    parquet store ``codes/`` plus the one-row ``scales/`` parquet frame —
+    the faiss-style train-once layout. Codes are 1 byte/dim on disk (4-8×
     smaller than the raw vectors), and the scan that serves queries
-    never touches the originals. Returns the trained scales."""
-    import json
+    never touches the originals. Every read and write goes through
+    Spark, so any Hadoop URI works as ``index_root``. Returns the
+    trained scales."""
     import os
 
     if scales is None:
         scales = sq8_scales(emb, vec_col)
-    os.makedirs(index_root, exist_ok=True)
-    with open(os.path.join(index_root, "scales.json"), "w") as f:
-        json.dump(scales, f)
-    emb.select(
-        id_col, sq8_code_col(F.col(vec_col), scales).alias("codes")
-    ).write.mode("overwrite").parquet(
-        os.path.join(index_root, "codes", "batch=0")
-    )
+    emb.sparkSession.createDataFrame(
+        [([float(s) for s in scales],)], _SQ8_SCALES_SCHEMA
+    ).write.mode("overwrite").parquet(os.path.join(index_root, "scales"))
+    codes = emb.select(id_col, sq8_code_col(F.col(vec_col), scales).alias("codes"))
+    write_batch(codes, os.path.join(index_root, "codes"), 0)
     return scales
+
+
+def _read_sq8_scales(spark, index_root: str) -> list[float]:
+    """A saved SQ8 index's scales, in dimension order."""
+    import os
+
+    path = os.path.join(index_root, "scales")
+    return list(spark.read.schema(_SQ8_SCALES_SCHEMA).parquet(path).first()["scales"])
 
 
 def add_to_sq8_index(
@@ -468,31 +480,23 @@ def add_to_sq8_index(
     """Append a batch with FROZEN scales (faiss ``add()`` semantics: the
     quantizer never retrains on add — re-quantizing history on every
     batch would be a full rewrite). A replayed batch overwrites its own
-    ``batch=N`` directory, so ingestion stays exactly-once."""
-    import json
+    ``batch_id`` partition (stores.write_batch), so ingestion stays
+    exactly-once."""
     import os
 
-    with open(os.path.join(index_root, "scales.json")) as f:
-        scales = json.load(f)
-    emb_new.select(
-        id_col, sq8_code_col(F.col(vec_col), scales).alias("codes")
-    ).write.mode("overwrite").parquet(
-        os.path.join(index_root, "codes", f"batch={batch_id}")
-    )
+    scales = _read_sq8_scales(emb_new.sparkSession, index_root)
+    codes = emb_new.select(id_col, sq8_code_col(F.col(vec_col), scales).alias("codes"))
+    write_batch(codes, os.path.join(index_root, "codes"), batch_id)
 
 
 def load_sq8_index(spark, index_root: str):
     """(codes frame, scales) from a persisted SQ8 index — the codes scan
-    reads every batch directory."""
-    import glob
-    import json
+    reads every batch."""
     import os
 
-    with open(os.path.join(index_root, "scales.json")) as f:
-        scales = json.load(f)
-    parts = sorted(glob.glob(os.path.join(index_root, "codes", "batch=*")))
-    codes = spark.read.parquet(*parts)
-    return codes, scales
+    scales = _read_sq8_scales(spark, index_root)
+    codes = read_batches(spark, os.path.join(index_root, "codes"))
+    return codes.drop("batch_id"), scales
 
 
 def _train_centroids(sample: np.ndarray, n_cells: int, iters: int = 8) -> np.ndarray:

@@ -8799,14 +8799,14 @@ def _crawl_chain_df(
 def ann_sq8_persistent_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQ8 index LIFECYCLE end-to-end (the faiss deployment shape,
     mirroring ann_ivf_persistent_top10): train scales on the first 250
-    vectors and save (int8 codes parquet + dim-sized scales sidecar,
-    operators/similarity.save_sq8_index) → add the rest with FROZEN
+    vectors and save (int8 codes in the batch-keyed parquet store + a
+    one-row scales frame, operators/similarity.save_sq8_index) → add the rest with FROZEN
     scales (add_to_sq8_index — the quantizer never retrains on add;
     out-of-range values saturate at ±127, and the oracle computing its
     scale CTE over vec_id < 250 only makes BOTH contracts load-bearing
     in the hash) → load → serve the query from STORED CODES alone
     (sq8_recon_topk — 1 byte/dim scans, raw vectors never touched on
-    the read path). Batch directories are overwrite-idempotent, so
+    the read path). Batch partitions are overwrite-idempotent, so
     ingestion replay is exactly-once."""
     t = register_tables(spark, sf_dir, ("embeddings",))
     emb = t["embeddings"]

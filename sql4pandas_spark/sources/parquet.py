@@ -77,6 +77,16 @@ def normalize_ntz(df: DataFrame) -> DataFrame:
     )
 
 
+def normalize_events(df: DataFrame) -> DataFrame:
+    """The events table's timestamps, batch or stream: a legacy
+    ns-as-long ``ts`` becomes a µs timestamp (``div`` keeps the math in
+    exact int64; a double round-trip can flip a µs near boundaries), then
+    :func:`normalize_ntz`."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return normalize_ntz(df)
+
+
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     per_session = _df_cache.setdefault(spark, {})
     key = (sf_dir, name)
@@ -84,11 +94,7 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # legacy ns-as-long input → µs timestamp; `div` keeps the math in
-        # exact int64 (a double round-trip can flip a µs near boundaries).
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    df = normalize_ntz(df)
+    df = normalize_events(df) if name == "events" else normalize_ntz(df)
     per_session[key] = df
     return df
 

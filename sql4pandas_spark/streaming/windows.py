@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql4pandas_spark.session import configure_session
-from sql4pandas_spark.sources.parquet import table
+from sql4pandas_spark.sources.parquet import normalize_events
 from sql4pandas_spark.stores import (  # noqa: F401 - re-exported
     _DEFAULT_STATE_PARTITIONS,
     STATE_PARTITIONS_CONF,
@@ -67,7 +67,8 @@ def _stream_dir(sf_dir: str) -> str:
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as an unbounded-style stream (schema from the batch
-    reader; ns-timestamp normalization matches sources/parquet.py).
+    reader; timestamps normalized by sources/parquet.normalize_events,
+    like the batch table).
 
     configure_session FIRST: on an externally-built session (the driver's),
     the ns-parquet workaround must be applied before the first events read —
@@ -76,13 +77,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_session(spark)
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     stream = spark.readStream.schema(batch.schema).parquet(_stream_dir(sf_dir))
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     # withWatermark hard-requires TIMESTAMP (LTZ); NTZ→LTZ is value-
     # preserving under the pinned UTC session timezone.
-    from sql4pandas_spark.sources.parquet import normalize_ntz
-
-    return normalize_ntz(stream)
+    return normalize_events(stream)
 
 
 def run_available_now(

@@ -2,7 +2,8 @@
 (ReusedExchange instead of persist), top_movers calendar adjacency, and
 value_histogram NaN handling. The prefix-filter Jaccard and Bloom
 decontamination pins live in tests/test_dedup.py, the skew-salted fuzzy
-band join pins in tests/test_joins.py."""
+band join pins in tests/test_joins.py, the streaming sketch-state, PSI
+read-out and MAD pins in tests/test_sketches.py."""
 
 from __future__ import annotations
 
@@ -125,21 +126,6 @@ def test_profile_operators_reuse_exchange_and_pin_no_cache(spark, build):
     )
 
 
-def test_mad_anomalies_values_survive_persist_removal(spark):
-    """Semantics check: same flags as a hand-computed MAD on a tiny
-    series (one spike among steady hourly counts)."""
-    from sql4pandas_spark.operators.profile import mad_anomalies
-
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    for h in range(8):
-        n = 50 if h == 3 else 4 + (h % 2)
-        rows += [("g", base + dt.timedelta(hours=h, seconds=s)) for s in range(n)]
-    df = spark.createDataFrame(rows, ["event_type", "ts"])
-    out = mad_anomalies(df, "ts", "event_type", bucket="hour", k=3).collect()
-    assert [(r["bucket_ts"].hour, r["n_events"]) for r in out] == [(3, 50)]
-
-
 # ------------------------------------- top_movers calendar adjacency
 
 
@@ -210,121 +196,6 @@ def test_engine_runs_reference_dialect_sql(spark):
     eng.register("t", pdf)
     got = [tuple(r) for r in eng.sql(stmt, dialect="duckdb").collect()]
     assert got == expected
-
-
-# ------------------------------------- streaming sketch-state maintenance
-
-
-def _land_one_file(df, landing_dir, fname):
-    import os
-    import shutil
-    import uuid as _uuid
-
-    stage = os.path.join(landing_dir, f"_stage_{_uuid.uuid4().hex[:8]}")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    (part,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
-    os.makedirs(landing_dir, exist_ok=True)
-    shutil.copyfile(os.path.join(stage, part), os.path.join(landing_dir, fname))
-    shutil.rmtree(stage, ignore_errors=True)
-
-
-def test_heavy_hitter_stream_matches_batch_recount(spark, tmp_path):
-    """Two drains over a shared checkpoint (resume), final state == exact
-    full recount (per-batch vocab under m ⇒ provably exact)."""
-    from sql4pandas_spark.streaming import sketches as sk
-
-    store = str(tmp_path / "store")
-    land = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    b1 = spark.createDataFrame(
-        [("a",)] * 5 + [("b",)] * 3 + [("c",)] * 1, ["item"]
-    )
-    b2 = spark.createDataFrame(
-        [("a",)] * 2 + [("c",)] * 7 + [("d",)] * 4, ["item"]
-    )
-    sk.empty_state(spark, "item string, n long", store)
-
-    _land_one_file(b1, land, "batch_00.parquet")
-    stream = spark.readStream.schema(b1.schema).parquet(land)
-    sk.run_heavy_hitter_stream(stream, store, "item", m=8, checkpoint=ckpt)
-
-    _land_one_file(b2, land, "batch_01.parquet")
-    stream = spark.readStream.schema(b1.schema).parquet(land)
-    sk.run_heavy_hitter_stream(stream, store, "item", m=8, checkpoint=ckpt)
-
-    final = {r["item"]: r["n"] for r in sk.latest_state(spark, store).collect()}
-    assert final == {"a": 7, "b": 3, "c": 8, "d": 4}
-
-
-def test_histogram_stream_matches_batch_histogram(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.sketches import value_histogram
-    from sql4pandas_spark.streaming import sketches as sk
-
-    store = str(tmp_path / "store")
-    land = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    full = spark.range(1000).select((F.col("id") % 97).cast("double").alias("v"))
-    b1 = full.filter(F.col("v") < 50)
-    b2 = full.filter(F.col("v") >= 50)
-    sk.empty_state(spark, "bin long, n long", store)
-
-    _land_one_file(b1, land, "batch_00.parquet")
-    stream = spark.readStream.schema(b1.schema).parquet(land)
-    sk.run_histogram_stream(stream, store, "v", 0.0, 100.0, 20, checkpoint=ckpt)
-
-    _land_one_file(b2, land, "batch_01.parquet")
-    stream = spark.readStream.schema(b1.schema).parquet(land)
-    sk.run_histogram_stream(stream, store, "v", 0.0, 100.0, 20, checkpoint=ckpt)
-
-    got = {r["bin"]: r["n"] for r in sk.latest_state(spark, store).collect()}
-    want = {
-        r["bin"]: r["n"]
-        for r in value_histogram(full, "v", 0.0, 100.0, 20).collect()
-    }
-    assert got == want
-
-
-def test_psi_from_histograms_equals_distribution_drift(spark):
-    """The histogram-state PSI read-out must reproduce the raw-row drift
-    gate on the same fixed grid (streaming monitoring == batch gate)."""
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.profile import (
-        distribution_drift,
-        psi_from_histograms,
-    )
-    from sql4pandas_spark.operators.sketches import value_histogram
-
-    full = spark.range(2000).select(
-        (F.col("id") % 37).cast("double").alias("v"),
-        (F.col("id") % 2).alias("half"),
-    )
-
-    def frame(values):
-        return spark.createDataFrame([(float(v),) for v in values], "v double")
-
-    cases = [
-        (full.filter("half = 0"), full.filter("half = 1"), 0.0, 40.0, 8),
-        # NaN has no bin on either path: both drop the four NaNs
-        (frame(range(1, 9)), frame([1, 2, 3, 4] + [float("nan")] * 4), 0.0, 10.0, 4),
-    ]
-    for old, new, lo, hi, n_bins in cases:
-        raw = {
-            r["bin"]: (r["n_old"], r["n_new"], r["p"], r["q"], r["psi"])
-            for r in distribution_drift(
-                old, new, "v", n_bins=n_bins, lo=lo, hi=hi
-            ).collect()
-        }
-        grid = dict(value_col="v", lo=lo, hi=hi, n_bins=n_bins)
-        st = {
-            r["bin"]: (r["n_old"], r["n_new"], r["p"], r["q"], r["psi"])
-            for r in psi_from_histograms(
-                value_histogram(old, **grid), value_histogram(new, **grid), n_bins
-            ).collect()
-        }
-        assert st == raw, (lo, hi, n_bins)
 
 
 # ------------------------------------- count-min sketch
@@ -485,33 +356,6 @@ def test_set_signatures_null_items_and_empty(spark):
     assert set(out) == {"a"} and len(out["a"]) == 8
     empty = spark.createDataFrame([], "key string, item long")
     assert minhash_set_signatures(empty, "key", "item", 8).collect() == []
-
-
-def test_cms_stream_matches_batch_build(spark, tmp_path):
-    """Streaming CMS: two resume-checkpoint drains fold to exactly the
-    global-build state (per-cell sums of batch counts == global cells)."""
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.sketches import count_min_state
-    from sql4pandas_spark.streaming import sketches as sk
-
-    store = str(tmp_path / "store")
-    land = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    full = spark.range(800).select((F.col("id") % 37).cast("string").alias("item"))
-    b1 = full.filter(F.length("item") == 1)
-    b2 = full.filter(F.length("item") > 1)
-    sk.empty_state(spark, "row int, col int, n long", store)
-    for i, b in enumerate((b1, b2)):
-        _land_one_file(b, land, f"batch_{i:02d}.parquet")
-        stream = spark.readStream.schema(b.schema).parquet(land)
-        sk.run_cms_stream(stream, store, "item", depth=3, width=32, checkpoint=ckpt)
-    got = {(r.row, r.col): r.n for r in sk.latest_state(spark, store).collect()}
-    want = {
-        (r.row, r.col): r.n
-        for r in count_min_state(full, "item", depth=3, width=32).collect()
-    }
-    assert got == want
 
 
 # ------------------------------------- Bloom-prefiltered decontamination

@@ -3,7 +3,8 @@
 Each test pins behavior the round-14 catalog entries rely on, in the
 same known-value style as the earlier round files. The PSL
 wildcard/exception and cross-model surprisal pins live in
-tests/test_text.py."""
+tests/test_text.py, the incremental DSIR stats pins in
+tests/test_sketches.py."""
 
 from __future__ import annotations
 
@@ -703,90 +704,6 @@ def test_langid_confusion_exposes_collapse(spark):
         lang != "en" and all(c["lang_pred"] != lang for c in cells)
         for lang, cells in by_lang.items()
     )
-
-
-# ---------------------- incremental DSIR stats
-
-
-def test_merge_dsir_stats_equals_global(spark):
-    """Counter mergeability: per-batch bucket stats re-aggregated equal
-    the from-scratch global stats frame exactly; empty input raises."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.sampling import (
-        dsir_bucket_stats,
-        dsir_bucket_tokens,
-        merge_dsir_stats,
-    )
-    from sql4pandas_spark.sources.parquet import table
-
-    d = table(spark, "/root/testdata/sf0.001", "documents")
-    is_t = F.col("lang") == "en"
-    parts = [
-        dsir_bucket_stats(
-            dsir_bucket_tokens(d.filter(F.col("doc_id") % 3 == b), is_t)
-        )
-        for b in range(3)
-    ]
-    merged = {
-        r["_b"]: (r["_t_cnt"], r["_r_cnt"])
-        for r in merge_dsir_stats(parts).collect()
-    }
-    want = {
-        r["_b"]: (r["_t_cnt"], r["_r_cnt"])
-        for r in dsir_bucket_stats(dsir_bucket_tokens(d, is_t)).collect()
-    }
-    assert merged == want
-    with _pytest.raises(ValueError):
-        merge_dsir_stats([])
-
-
-def test_stream_dsir_store_matches_global_stats(spark, tmp_path):
-    """The stream-maintained DSIR store equals the from-scratch global
-    bucket stats after two drains, and a replay of the LAST batch (the
-    crash case) is idempotent rather than double-counting."""
-    from pyspark.sql import functions as F
-
-    from sql4pandas_spark.operators.sampling import (
-        dsir_bucket_stats,
-        dsir_bucket_tokens,
-    )
-    from sql4pandas_spark.sources.parquet import table
-    from sql4pandas_spark.streaming import sketches as sk
-
-    d = table(spark, "/root/testdata/sf0.001", "documents")
-    is_t = F.col("lang") == "en"
-    root = str(tmp_path / "store")
-    sk.empty_state(spark, "_b long, _t_cnt long, _r_cnt long", root)
-    b0 = dsir_bucket_stats(dsir_bucket_tokens(d.filter(F.col("doc_id") % 2 == 0), is_t))
-    b1 = dsir_bucket_stats(dsir_bucket_tokens(d.filter(F.col("doc_id") % 2 == 1), is_t))
-    sk.sketch_apply_batch(b0, root, _dsir_merge(), 0)
-    sk.sketch_apply_batch(b1, root, _dsir_merge(), 1)
-    # crash replay of batch 1: same input version, same rows — idempotent
-    sk.sketch_apply_batch(b1, root, _dsir_merge(), 1)
-    got = {
-        r["_b"]: (r["_t_cnt"], r["_r_cnt"])
-        for r in sk.latest_state(spark, root).collect()
-    }
-    want = {
-        r["_b"]: (r["_t_cnt"], r["_r_cnt"])
-        for r in dsir_bucket_stats(dsir_bucket_tokens(d, is_t)).collect()
-    }
-    assert got == want
-
-
-def _dsir_merge():
-    from pyspark.sql import functions as F
-
-    def merge(prev, cur):
-        return (
-            prev.unionByName(cur)
-            .groupBy("_b")
-            .agg(F.sum("_t_cnt").alias("_t_cnt"), F.sum("_r_cnt").alias("_r_cnt"))
-        )
-
-    return merge
 
 
 def test_doremi_mix_apply_quotas_and_membership(spark):

@@ -452,12 +452,14 @@ def test_sq8_topk_close_to_exact(spark):
     assert len({r["vec_id"] for r in out} & exact) >= 8
 
 
-def test_sq8_persistent_lifecycle_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("uri", ["", "file://"], ids=["path", "file_uri"])
+def test_sq8_persistent_lifecycle_roundtrip(spark, tmp_path, monkeypatch, uri):
     """save -> frozen-scale add -> load -> codes-path query: codes are
     tinyint on disk, a replayed add batch is idempotent (overwrite of its
     own batch dir), out-of-range add vectors saturate at ±127, and the
     codes-path ranking equals the direct raw-vector ranking when both
-    use the same scales."""
+    use the same scales. A ``file://`` root works too: the index is read
+    and written through Spark alone, never as a cwd-relative path."""
     from pyspark.sql import functions as F
 
     from sql4pandas_spark.operators import similarity
@@ -470,7 +472,8 @@ def test_sq8_persistent_lifecycle_roundtrip(spark, tmp_path):
         [(4, [2.0, 0.1]), (5, [0.1, 0.05])],  # 2.0 exceeds trained scale
         "vec_id long, embedding array<double>",
     )
-    root = str(tmp_path / "sq8")
+    monkeypatch.chdir(tmp_path)
+    root = uri + str(tmp_path / "sq8")
     scales = similarity.save_sq8_index(base, root)
     assert scales == [1.0, 0.4]
     similarity.add_to_sq8_index(extra, root, batch_id=1)

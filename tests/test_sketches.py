@@ -7,6 +7,10 @@ batch's top-M."""
 
 from __future__ import annotations
 
+import ast
+import datetime as dt
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from sql4pandas_spark.operators.sketches import heavy_hitters_topk
@@ -137,7 +141,8 @@ def test_mad_anomalies_hand_computed(spark):
     [5,5,6,6,7,7,500] give med=6 (med_x2=12), dev_x2=[2,2,0,0,2,2,988],
     MAD=1 (mad_x4=4) -> only the spike satisfies 2*dev_x2 > 3*mad_x4 ...
     along with the honest near-tie buckets: 2*2=4 > 3*4=12 is FALSE, so
-    exactly the spike flags. A steady group flags nothing."""
+    exactly the spike flags. A steady group flags nothing, and a NULL
+    group is a group: its copy of the spiky series flags the same way."""
     import datetime as dt
 
     from sql4pandas_spark.operators.profile import mad_anomalies
@@ -147,13 +152,14 @@ def test_mad_anomalies_hand_computed(spark):
     for h, n in counts.items():
         t0 = dt.datetime(2024, 3, 1, h, 0, 0)
         rows += [("spiky", t0 + dt.timedelta(seconds=i)) for i in range(n)]
+        rows += [(None, t0 + dt.timedelta(seconds=i)) for i in range(n)]
         rows += [("steady", t0 + dt.timedelta(seconds=i)) for i in range(6)]
     df = spark.createDataFrame(rows, "g string, ts timestamp")
     got = {
         (r.g, r.bucket_ts.hour): (r.n_events, r.med_x2, r.mad_x4, r.dev_x2)
         for r in mad_anomalies(df, "ts", "g", bucket="hour", k=3).collect()
     }
-    assert got == {("spiky", 6): (500, 12, 4, 988)}
+    assert got == {("spiky", 6): (500, 12, 4, 988), (None, 6): (500, 12, 4, 988)}
 
 
 def test_mad_flags_spike_a_stddev_zscore_hides(spark):
@@ -245,3 +251,303 @@ def test_robust_outlier_rows_null_group_and_approx_path(spark):
     assert [(r.grp, r.x) for r in exact] == [(None, 500)]
     approx = robust_outlier_rows(df, "x", "grp", k=3, exact=False).collect()
     assert [(r.grp, r.x) for r in approx] == [(None, 500)]
+
+
+# ---------------------------------------------------------------------------
+# MAD volume anomalies and PSI over histogram states (round 10)
+# ---------------------------------------------------------------------------
+
+
+def test_mad_anomalies_values_survive_persist_removal(spark):
+    """Semantics check: same flags as a hand-computed MAD on a tiny
+    series (one spike among steady hourly counts)."""
+    from sql4pandas_spark.operators.profile import mad_anomalies
+
+    base = dt.datetime(2024, 1, 1)
+    rows = []
+    for h in range(8):
+        n = 50 if h == 3 else 4 + (h % 2)
+        rows += [("g", base + dt.timedelta(hours=h, seconds=s)) for s in range(n)]
+    df = spark.createDataFrame(rows, ["event_type", "ts"])
+    out = mad_anomalies(df, "ts", "event_type", bucket="hour", k=3).collect()
+    assert [(r["bucket_ts"].hour, r["n_events"]) for r in out] == [(3, 50)]
+
+
+def test_psi_from_histograms_equals_distribution_drift(spark):
+    """The histogram-state PSI read-out must reproduce the raw-row drift
+    gate on the same fixed grid (streaming monitoring == batch gate)."""
+    from pyspark.sql import functions as F
+
+    from sql4pandas_spark.operators.profile import (
+        distribution_drift,
+        psi_from_histograms,
+    )
+    from sql4pandas_spark.operators.sketches import value_histogram
+
+    full = spark.range(2000).select(
+        (F.col("id") % 37).cast("double").alias("v"),
+        (F.col("id") % 2).alias("half"),
+    )
+
+    def frame(values):
+        return spark.createDataFrame([(float(v),) for v in values], "v double")
+
+    cases = [
+        (full.filter("half = 0"), full.filter("half = 1"), 0.0, 40.0, 8),
+        # NaN has no bin on either path: both drop the four NaNs
+        (frame(range(1, 9)), frame([1, 2, 3, 4] + [float("nan")] * 4), 0.0, 10.0, 4),
+    ]
+    for old, new, lo, hi, n_bins in cases:
+        raw = {
+            r["bin"]: (r["n_old"], r["n_new"], r["p"], r["q"], r["psi"])
+            for r in distribution_drift(
+                old, new, "v", n_bins=n_bins, lo=lo, hi=hi
+            ).collect()
+        }
+        grid = dict(value_col="v", lo=lo, hi=hi, n_bins=n_bins)
+        st = {
+            r["bin"]: (r["n_old"], r["n_new"], r["p"], r["q"], r["psi"])
+            for r in psi_from_histograms(
+                value_histogram(old, **grid), value_histogram(new, **grid), n_bins
+            ).collect()
+        }
+        assert st == raw, (lo, hi, n_bins)
+
+
+# ---------------------------------------------------------------------------
+# streaming sketch-state maintenance (round 10)
+# ---------------------------------------------------------------------------
+
+
+def _land_one_file(df, landing_dir, fname):
+    import os
+    import shutil
+    import uuid as _uuid
+
+    stage = os.path.join(landing_dir, f"_stage_{_uuid.uuid4().hex[:8]}")
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    (part,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+    os.makedirs(landing_dir, exist_ok=True)
+    shutil.copyfile(os.path.join(stage, part), os.path.join(landing_dir, fname))
+    shutil.rmtree(stage, ignore_errors=True)
+
+
+def test_heavy_hitter_stream_matches_batch_recount(spark, tmp_path):
+    """Two drains over a shared checkpoint (resume), final state == exact
+    full recount (per-batch vocab under m ⇒ provably exact)."""
+    from sql4pandas_spark.streaming import sketches as sk
+
+    store = str(tmp_path / "store")
+    land = str(tmp_path / "landing")
+    ckpt = str(tmp_path / "ckpt")
+    b1 = spark.createDataFrame(
+        [("a",)] * 5 + [("b",)] * 3 + [("c",)] * 1, ["item"]
+    )
+    b2 = spark.createDataFrame(
+        [("a",)] * 2 + [("c",)] * 7 + [("d",)] * 4, ["item"]
+    )
+    sk.empty_state(spark, "item string, n long", store)
+
+    _land_one_file(b1, land, "batch_00.parquet")
+    stream = spark.readStream.schema(b1.schema).parquet(land)
+    sk.run_heavy_hitter_stream(stream, store, "item", m=8, checkpoint=ckpt)
+
+    _land_one_file(b2, land, "batch_01.parquet")
+    stream = spark.readStream.schema(b1.schema).parquet(land)
+    sk.run_heavy_hitter_stream(stream, store, "item", m=8, checkpoint=ckpt)
+
+    final = {r["item"]: r["n"] for r in sk.latest_state(spark, store).collect()}
+    assert final == {"a": 7, "b": 3, "c": 8, "d": 4}
+
+
+def test_histogram_stream_matches_batch_histogram(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from sql4pandas_spark.operators.sketches import value_histogram
+    from sql4pandas_spark.streaming import sketches as sk
+
+    store = str(tmp_path / "store")
+    land = str(tmp_path / "landing")
+    ckpt = str(tmp_path / "ckpt")
+    full = spark.range(1000).select((F.col("id") % 97).cast("double").alias("v"))
+    b1 = full.filter(F.col("v") < 50)
+    b2 = full.filter(F.col("v") >= 50)
+    sk.empty_state(spark, "bin long, n long", store)
+
+    _land_one_file(b1, land, "batch_00.parquet")
+    stream = spark.readStream.schema(b1.schema).parquet(land)
+    sk.run_histogram_stream(stream, store, "v", 0.0, 100.0, 20, checkpoint=ckpt)
+
+    _land_one_file(b2, land, "batch_01.parquet")
+    stream = spark.readStream.schema(b1.schema).parquet(land)
+    sk.run_histogram_stream(stream, store, "v", 0.0, 100.0, 20, checkpoint=ckpt)
+
+    got = {r["bin"]: r["n"] for r in sk.latest_state(spark, store).collect()}
+    want = {
+        r["bin"]: r["n"]
+        for r in value_histogram(full, "v", 0.0, 100.0, 20).collect()
+    }
+    assert got == want
+
+
+def test_cms_stream_matches_batch_build(spark, tmp_path):
+    """Streaming CMS: two resume-checkpoint drains fold to exactly the
+    global-build state (per-cell sums of batch counts == global cells)."""
+    from pyspark.sql import functions as F
+
+    from sql4pandas_spark.operators.sketches import count_min_state
+    from sql4pandas_spark.streaming import sketches as sk
+
+    store = str(tmp_path / "store")
+    land = str(tmp_path / "landing")
+    ckpt = str(tmp_path / "ckpt")
+    full = spark.range(800).select((F.col("id") % 37).cast("string").alias("item"))
+    b1 = full.filter(F.length("item") == 1)
+    b2 = full.filter(F.length("item") > 1)
+    sk.empty_state(spark, "row int, col int, n long", store)
+    for i, b in enumerate((b1, b2)):
+        _land_one_file(b, land, f"batch_{i:02d}.parquet")
+        stream = spark.readStream.schema(b.schema).parquet(land)
+        sk.run_cms_stream(stream, store, "item", depth=3, width=32, checkpoint=ckpt)
+    got = {(r.row, r.col): r.n for r in sk.latest_state(spark, store).collect()}
+    want = {
+        (r.row, r.col): r.n
+        for r in count_min_state(full, "item", depth=3, width=32).collect()
+    }
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# incremental DSIR stats (round 14)
+# ---------------------------------------------------------------------------
+
+
+def test_merge_dsir_stats_equals_global(spark):
+    """Counter mergeability: per-batch bucket stats re-aggregated equal
+    the from-scratch global stats frame exactly; empty input raises."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from sql4pandas_spark.operators.sampling import (
+        dsir_bucket_stats,
+        dsir_bucket_tokens,
+        merge_dsir_stats,
+    )
+    from sql4pandas_spark.sources.parquet import table
+
+    d = table(spark, "/root/testdata/sf0.001", "documents")
+    is_t = F.col("lang") == "en"
+    parts = [
+        dsir_bucket_stats(
+            dsir_bucket_tokens(d.filter(F.col("doc_id") % 3 == b), is_t)
+        )
+        for b in range(3)
+    ]
+    merged = {
+        r["_b"]: (r["_t_cnt"], r["_r_cnt"])
+        for r in merge_dsir_stats(parts).collect()
+    }
+    want = {
+        r["_b"]: (r["_t_cnt"], r["_r_cnt"])
+        for r in dsir_bucket_stats(dsir_bucket_tokens(d, is_t)).collect()
+    }
+    assert merged == want
+    with _pytest.raises(ValueError):
+        merge_dsir_stats([])
+
+
+def test_stream_dsir_store_matches_global_stats(spark, tmp_path):
+    """The stream-maintained DSIR store equals the from-scratch global
+    bucket stats after two drains, and a replay of the LAST batch (the
+    crash case) is idempotent rather than double-counting."""
+    from pyspark.sql import functions as F
+
+    from sql4pandas_spark.operators.sampling import (
+        dsir_bucket_stats,
+        dsir_bucket_tokens,
+    )
+    from sql4pandas_spark.sources.parquet import table
+    from sql4pandas_spark.streaming import sketches as sk
+
+    d = table(spark, "/root/testdata/sf0.001", "documents")
+    is_t = F.col("lang") == "en"
+    root = str(tmp_path / "store")
+    sk.empty_state(spark, "_b long, _t_cnt long, _r_cnt long", root)
+    b0 = dsir_bucket_stats(dsir_bucket_tokens(d.filter(F.col("doc_id") % 2 == 0), is_t))
+    b1 = dsir_bucket_stats(dsir_bucket_tokens(d.filter(F.col("doc_id") % 2 == 1), is_t))
+    sk.sketch_apply_batch(b0, root, _dsir_merge(), 0)
+    sk.sketch_apply_batch(b1, root, _dsir_merge(), 1)
+    # crash replay of batch 1: same input version, same rows — idempotent
+    sk.sketch_apply_batch(b1, root, _dsir_merge(), 1)
+    got = {
+        r["_b"]: (r["_t_cnt"], r["_r_cnt"])
+        for r in sk.latest_state(spark, root).collect()
+    }
+    want = {
+        r["_b"]: (r["_t_cnt"], r["_r_cnt"])
+        for r in dsir_bucket_stats(dsir_bucket_tokens(d, is_t)).collect()
+    }
+    assert got == want
+
+
+def _dsir_merge():
+    from pyspark.sql import functions as F
+
+    def merge(prev, cur):
+        return (
+            prev.unionByName(cur)
+            .groupBy("_b")
+            .agg(F.sum("_t_cnt").alias("_t_cnt"), F.sum("_r_cnt").alias("_r_cnt"))
+        )
+
+    return merge
+
+
+# ---------------------------------------------------------------------------
+# one body per statistical rule
+# ---------------------------------------------------------------------------
+
+
+def _operator_call_sites(match) -> list[tuple[str, str | None]]:
+    """(file, top-level owner) of each call in sql4pandas_spark/operators
+    that ``match`` accepts, one entry per call site."""
+    root = Path(__file__).resolve().parents[1] / "sql4pandas_spark" / "operators"
+    return sorted(
+        (path.name, getattr(top, "name", None))
+        for path in sorted(root.glob("*.py"))
+        for top in ast.parse(path.read_text()).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call) and match(node)
+    )
+
+
+def _is_skey_topk_cut(node: ast.Call) -> bool:
+    """``<frame>.orderBy(F.desc("skey"), ...).limit(...)``."""
+    func = node.func
+    return (
+        isinstance(func, ast.Attribute)
+        and func.attr == "limit"
+        and isinstance(order := func.value, ast.Call)
+        and isinstance(order.func, ast.Attribute)
+        and order.func.attr == "orderBy"
+        and bool(order.args)
+        and ast.unparse(order.args[0]) == "F.desc('skey')"
+    )
+
+
+def test_statistical_rules_spelled_once():
+    """The integer MAD's median is taken only in robust_outlier_rows, the
+    fixed-grid bin feeds only value_histogram (every PSI gate) and
+    drift_timeline (its own e6 quantization), and the hash-keyed
+    weighted top-k is cut only in sampling._hash_topk."""
+    median = _operator_call_sites(lambda n: ast.unparse(n.func) == "F.median")
+    assert median == [("profile.py", "robust_outlier_rows")], median
+    grid = _operator_call_sites(
+        lambda n: ast.unparse(n.func).split(".")[-1] == "grid_bin"
+    )
+    assert grid == [
+        ("profile.py", "drift_timeline"),
+        ("sketches.py", "value_histogram"),
+    ], grid
+    cuts = _operator_call_sites(_is_skey_topk_cut)
+    assert cuts == [("sampling.py", "_hash_topk")], cuts
